@@ -32,6 +32,8 @@ import pandas as pd  # noqa: F401  (module-top import: pandas_udf hint rule)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chatdata_spark.session import local_frame
+
 _MIND2_UDFS: dict = {}  # centers-matrix key -> UDF (CLAUDE.md memoization
 # rule: identical centers must produce CacheManager-equal plans)
 
@@ -96,9 +98,7 @@ def kcenter_greedy(
             )
             selected.append((r, nxt[id_col], int(nxt["d2"])))
             centers.append(tuple(nxt["a4"]))
-        return spark.createDataFrame(
-            selected, f"rank int, {id_col} long, d2_prev long"
-        )
+        return local_frame(spark, selected, f"rank int, {id_col} long, d2_prev long")
     finally:
         base.unpersist()
 

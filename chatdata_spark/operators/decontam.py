@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from chatdata_spark.operators.dedup import _memo_put, _with_shingle_hashes, shingle_hashes_udf
+from chatdata_spark.session import local_frame
 
 
 def benchmark_ngram_set(bench: DataFrame, text_col: str = "text", n: int = 13) -> DataFrame:
@@ -182,7 +183,8 @@ def embedding_decontaminate(
         )
     e = np.array([r["__ev"] for r in rows], dtype=np.float64)
     id_type = eval_df.schema[eval_id_col].dataType
-    mapping = corpus.sparkSession.createDataFrame(
+    mapping = local_frame(
+        corpus.sparkSession,
         [(i, r["__eid"], [float(x) for x in r["__ev"]]) for i, r in enumerate(rows)],
         T.StructType(
             [

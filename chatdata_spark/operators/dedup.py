@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from chatdata_spark.session import local_frame
+
 LONG_MAX = 9223372036854775807
 
 
@@ -147,7 +149,7 @@ def _split_stop_tokens(base: DataFrame, tokens: DataFrame, stops: list[int]):
         return nonstop, docs
     spark = base.sparkSession
     stop_df = F.broadcast(
-        spark.createDataFrame([(int(s),) for s in stops], schema="shingle bigint")
+        local_frame(spark, [(int(s),) for s in stops], "shingle bigint")
     )
     nonstop = tokens.join(stop_df, "shingle", "left_anti")
     stop_arrs = (

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chatdata_spark.operators.knn import knn
+from chatdata_spark.session import local_frame
 
 
 def mmr_greedy(
@@ -100,8 +101,8 @@ def mmr_select(
     ids = [r[id_col] for r in rows]
     vecs = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
     chosen = mmr_greedy(ids, vecs, qvec, k, lam)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(i, rank, score) for rank, (i, score) in enumerate(chosen)],
         f"{id_col} long, mmr_rank int, mmr_score double",
     )

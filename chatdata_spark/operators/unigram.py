@@ -35,6 +35,8 @@ import pandas as pd  # noqa: F401  (module-top import: pandas_udf hint rule)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chatdata_spark.session import local_frame
+
 
 def viterbi_pieces(word: str, logp: dict, max_len: int) -> list:
     """Single best segmentation of ``word`` under piece log-probs —
@@ -158,7 +160,7 @@ def train_unigram_vocab(
 
     wf.unpersist()
     rows = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-    return spark.createDataFrame(rows, "piece string, cnt bigint")
+    return local_frame(spark, rows, "piece string, cnt bigint")
 
 
 def train_unigram_reference(word_freqs: dict, vocab_size: int = 400,

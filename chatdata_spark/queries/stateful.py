@@ -11,6 +11,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from chatdata_spark.registry import query
+from chatdata_spark.session import local_frame
 
 _TS = datetime.datetime(2023, 6, 1)
 
@@ -425,8 +426,8 @@ def streaming_sessionize(spark, sf_dir):
     ev.filter(F.col("ts") <= mid).coalesce(1).write.mode("append").parquet(ind)
     ev.filter(F.col("ts") > mid).coalesce(1).write.mode("append").parquet(ind)
     # watermark-advancing sentinel: closes every real session via timeout
-    spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=2))], "user_id long, ts timestamp"
+    local_frame(
+        spark, [(-1, mx + datetime.timedelta(hours=2))], "user_id long, ts timestamp"
     ).coalesce(1).write.mode("append").parquet(ind)
     stream_sessionize(
         spark, ind, outd, ckpt, "user_id", "ts", "user_id long, ts timestamp",
@@ -1031,7 +1032,7 @@ def store_cdc_changes(spark, sf_dir):
         F.col("r_regionkey") == 0, {"r_name": F.lit("AFRICA (REVISED)")}
     )  # v2
     store.append(
-        spark.createDataFrame([(5, "ATLANTIS")], "r_regionkey int, r_name string")
+        local_frame(spark, [(5, "ATLANTIS")], "r_regionkey int, r_name string")
     )  # v3
     store.delete_where(F.col("r_regionkey") == 3)  # v4
     return (

@@ -18,6 +18,7 @@ from chatdata_spark.functions.text import (
     stopword_hits_from_dwords,
 )
 from chatdata_spark.registry import query
+from chatdata_spark.session import local_frame
 
 
 def _profile_frame(spark, sf_dir):
@@ -501,7 +502,8 @@ def bpe_learn_merges_docs(spark, sf_dir):
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     merges = learn_bpe_merges(d, "text", n_merges=30, min_pair_count=2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
         "rank long, left_sym string, right_sym string, pair_count long",
     ).orderBy("rank")

@@ -10,13 +10,21 @@ Single place where engine-level performance knobs live so every entry point
   sized so a partition stays well under executor memory).
 - parquet pushdown/pruning left at defaults (on) — queries are written so
   filters and projections reach the scan (verified in tests/test_plans.py).
+- generated-code cache sized to the working set (see ``get_spark``).
+
+``local_frame`` is the one way library code turns driver-side rows into a
+DataFrame (see its docstring for why not ``createDataFrame(list)``).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier, _parse_datatype_string
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -53,6 +61,14 @@ def get_spark(
         # at this partition size the hash-table build costs what the
         # sort saves. Left at the default (off).
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark caches 100 generated classes by default; one warm rag_serve
+        # cycle (perfbench, local[4]) generates ~150, so the second cycle
+        # recompiled MORE classes (176) than the first (156) and the JIT
+        # re-warmed each one. Measured working set: ~250 classes for
+        # rag_serve set-up + 2 cycles, ~220 for one curation pass. At 2000
+        # the second cycle compiled 58 classes and Metaspace stayed at
+        # 181 MB. Static conf: only a fresh session picks it up.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # local[32] single-JVM: storage+execution share this heap; 8g made
         # persisted signature tables thrash against 32 concurrent shuffle
         # tasks (observed: cached-plan queries 3× slower under bench load).
@@ -63,3 +79,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: str | StructType) -> DataFrame:
+    """DataFrame over a few driver-side ``rows`` (tuples) typed by
+    ``schema`` (a DDL string or a ``StructType``).
+
+    ``spark.createDataFrame(list, schema)`` is planned as a ``PythonRDD``:
+    every evaluation starts a Python-worker job (one task per core) just to
+    unpickle a handful of rows — on a chat write or an MMR page that job
+    was most of the request. An Arrow table instead becomes a
+    ``LocalRelation``: the rows ship with the plan, nothing runs until the
+    consumer's own job, and no Python worker is involved.
+
+    Same rows and schema as the classic call: each row goes through the
+    classic type verifier (a wrong-typed value raises ``TypeError`` /
+    ``ValueError`` here, on the driver) and ``StructType.toInternal``, so a
+    naive ``datetime`` becomes the same epoch micros (the driver process's
+    local time) before Arrow sees it."""
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    if not isinstance(struct, StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {struct.simpleString()}")
+    verify = _make_type_verifier(struct)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(struct.toInternal(r))
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chatdata_spark.operators.upsert import delete_where, keep_latest, update_where
+from chatdata_spark.session import local_frame
 
 
 class VersionedParquetStore:
@@ -151,6 +152,10 @@ class VersionedParquetStore:
         return self.write(df)
 
     def upsert(self, rows: DataFrame, key_cols: list[str], version_col: str) -> int:
+        # NOTE (measured and rejected): upserting through a broadcast key
+        # semi/anti join against ``rows`` instead of one keep_latest over
+        # the union was worse: a rag_serve KB upload went 0.96 -> 1.31 CPU-s
+        # at local[4].
         df = self.read().unionByName(rows) if self.exists() else rows
         return self.write(keep_latest(df, key_cols, version_col))
 
@@ -223,8 +228,8 @@ class SessionStore:
         import datetime
 
         create_by = create_by or datetime.datetime.utcnow()
-        row = self.spark.createDataFrame(
-            [(user_id, session_id, system_prompt, create_by, "{}")], self.SCHEMA
+        row = local_frame(
+            self.spark, [(user_id, session_id, system_prompt, create_by, "{}")], self.SCHEMA
         )
         if self.store.exists():
             self.store.upsert(row, ["session_id"], "create_by")
@@ -263,8 +268,10 @@ class ChatMemoryStore:
         ts = ts if ts is not None else time.time()
         user_id = session_id.split("?")[0]  # reference convention, message_converter.py:46
         msg_id = _sha256(session_id, message, repr(ts))
-        row = self.spark.createDataFrame(
-            [(float(ts), session_id, user_id, msg_id, msg_type, "{}", message)], self.SCHEMA
+        row = local_frame(
+            self.spark,
+            [(float(ts), session_id, user_id, msg_id, msg_type, "{}", message)],
+            self.SCHEMA,
         )
         # PK msg_id: idempotent re-append (upsert, not blind append)
         if self.store.exists():
@@ -301,7 +308,7 @@ class PrivateKBStore:
         rows = [
             (_sha256(file_name, t), file_name, t, user_id, created_by, embed(t)) for t in texts
         ]
-        df = self.spark.createDataFrame(rows, self.KB_SCHEMA)
+        df = local_frame(self.spark, rows, self.KB_SCHEMA)
         if self.kb.exists():
             self.kb.upsert(df, ["entity_id"], "created_by")
         else:
@@ -324,7 +331,8 @@ class PrivateKBStore:
         import datetime
 
         created_by = created_by or datetime.datetime.utcnow()
-        row = self.spark.createDataFrame(
+        row = local_frame(
+            self.spark,
             [(_sha256(user_id, tool_name), tool_name, file_names, user_id, created_by, description)],
             self.TOOL_SCHEMA,
         )

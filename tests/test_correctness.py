@@ -33,6 +33,7 @@ suspected interaction.
 from __future__ import annotations
 
 import os
+import traceback
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -107,7 +108,8 @@ def test_query_matches_oracle(spark, warm_shared_caches, batch):
             try:
                 f.result()
             except Exception as exc:  # noqa: BLE001 — collect, then fail with all names
-                errs.append(f"{n}: {type(exc).__name__}: {exc}")
+                frames = traceback.format_list(traceback.extract_tb(exc.__traceback__)[-3:])
+                errs.append(f"{n}: {type(exc).__name__}: {exc}\n" + "".join(frames))
     assert not errs, f"{len(errs)} quer{'y' if len(errs) == 1 else 'ies'} failed:\n" + "\n".join(sorted(errs))
 
 
