@@ -20,6 +20,32 @@ def _t(i):
     return _TS + datetime.timedelta(minutes=i)
 
 
+def _drain_two_waves(spark, prefix, rows, first_wave, drain):
+    """The streaming-merge queries' shared scaffold: the ``first_wave``
+    rows land as one file and drain, then the rest (``~first_wave``) land
+    AFTER that drain finished and drain again under the same checkpoint
+    into the same fresh versioned store, which is returned.
+    ``drain(input_dir, store, checkpoint_dir)`` runs one drain."""
+    import os
+
+    from chatdata_spark.stores.state import VersionedParquetStore
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    ind, ckpt = f"{root}/in", f"{root}/ck"
+    os.makedirs(ind)
+    store = VersionedParquetStore(spark, f"{root}/store")
+    for wave in (first_wave, ~first_wave):
+        rows.filter(wave).coalesce(1).write.mode("append").parquet(ind)
+        drain(ind, store, ckpt)
+    return store
+
+
+def _median_split(df, col):
+    """First-wave predicate: ``col`` at or below its approximate median."""
+    mid = df.agg(F.expr(f"percentile_approx({col}, 0.5)")).collect()[0][0]
+    return F.col(col) <= mid
+
+
 @query(
     "store_session_lifecycle",
     oracle="""
@@ -671,28 +697,20 @@ def streaming_cms_user_frequency(spark, sf_dir):
     exact equality proves both the merge law under real micro-batch
     splits and the checkpoint's exactly-once file accounting (a dropped
     or double-counted file shifts every affected cell)."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.cms import cms_estimate
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_cms_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_scms_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     ev = (
         load_events(spark, sf_dir)
         .filter(F.col("user_id") < 30)
         .select("event_id", "user_id")
     )
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, user_id long"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_cms_merge(spark, ind, store, ckpt, "user_id", schema)
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_cms_merge(spark, ind, store, ckpt, "user_id", schema)
+    store = _drain_two_waves(
+        spark, "chatdata_scms_q_", ev, _median_split(ev, "event_id"),
+        lambda ind, st, ck: stream_cms_merge(spark, ind, st, ck, "user_id", schema),
+    )
     top = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("true_cnt"))
@@ -728,8 +746,6 @@ def streaming_drift_psi(spark, sf_dir):
     psi_from_counts arithmetic as the batch query. The oracle is the
     batch PSI oracle verbatim, so exact equality proves the merge law
     under real micro-batch splits AND the replay accounting."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.drift import (
         fixed_bin_edges,
@@ -737,7 +753,6 @@ def streaming_drift_psi(spark, sf_dir):
         psi_from_counts,
     )
     from chatdata_spark.queries.quality import _PSI_BINS, _PSI_SPLIT
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_histogram_merge
 
     e = load_events(spark, sf_dir)
@@ -750,16 +765,11 @@ def streaming_drift_psi(spark, sf_dir):
     ).collect()[0]
     edges = fixed_bin_edges(row.lo, row.hi, _PSI_BINS)
 
-    root = tempfile.mkdtemp(prefix="chatdata_sdrift_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, value double"
-    mid = cur.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    cur.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_histogram_merge(spark, ind, store, ckpt, "value", schema, edges)
-    cur.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_histogram_merge(spark, ind, store, ckpt, "value", schema, edges)
+    store = _drain_two_waves(
+        spark, "chatdata_sdrift_q_", cur, _median_split(cur, "event_id"),
+        lambda ind, st, ck: stream_histogram_merge(spark, ind, st, ck, "value", schema, edges),
+    )
 
     rc = hist_counts(ref, "value", edges, out="n_ref")
     cc = store.read().select("bin", F.col("n").alias("n_cur"))
@@ -789,28 +799,18 @@ def streaming_quantile_sketch(spark, sf_dir):
     exactly — proving the merge law under real micro-batch splits AND the
     checkpoint's exactly-once file accounting (a dropped file shifts the
     sample; a replayed one is absorbed)."""
-    import os
-
     from chatdata_spark.operators.quantsketch import sketch_quantiles
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_quantile_sample_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_sqsk_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
     )
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "o_orderpriority string, o_orderkey long, o_totalprice double"
-    mid = o.agg(F.expr("percentile_approx(o_orderkey, 0.5)")).collect()[0][0]
-    o.filter(F.col("o_orderkey") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_quantile_sample_merge(
-        spark, ind, store, ckpt, ["o_orderpriority"], "o_totalprice", "o_orderkey", schema
-    )
-    o.filter(F.col("o_orderkey") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_quantile_sample_merge(
-        spark, ind, store, ckpt, ["o_orderpriority"], "o_totalprice", "o_orderkey", schema
+    store = _drain_two_waves(
+        spark, "chatdata_sqsk_q_", o, _median_split(o, "o_orderkey"),
+        lambda ind, st, ck: stream_quantile_sample_merge(
+            spark, ind, st, ck, ["o_orderpriority"], "o_totalprice", "o_orderkey", schema
+        ),
     )
     return sketch_quantiles(
         store.read(), ["o_orderpriority"], [0.25, 0.5, 0.75, 0.95]
@@ -847,23 +847,17 @@ def streaming_heavy_hitter_tokens(spark, sf_dir):
     merge bound under real micro-batch splits AND the checkpoint's
     exactly-once accounting (a dropped file deflates a count below 300;
     a double-counted one inflates a tail token above it)."""
-    import os
-
     from chatdata_spark.operators.heavyhitters import token_stream
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_mg_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_smg_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "doc_id long, text string"
-    mid = d.agg(F.expr("percentile_approx(doc_id, 0.5)")).collect()[0][0]
-    d.filter(F.col("doc_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, lambda b: token_stream(b, "text"), schema)
-    d.filter(F.col("doc_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, lambda b: token_stream(b, "text"), schema)
+    store = _drain_two_waves(
+        spark, "chatdata_smg_q_", d, _median_split(d, "doc_id"),
+        lambda ind, st, ck: stream_mg_merge(
+            spark, ind, st, ck, lambda b: token_stream(b, "text"), schema
+        ),
+    )
     cands = store.read().select("item")
     toks = token_stream(d, "text")
     return (
@@ -898,18 +892,11 @@ def streaming_heavy_hitter_revenue(spark, sf_dir):
     the exact decimal candidate recount. Batch-parity with the exact
     GROUP BY proves the weighted merge bound under real micro-batch
     splits AND exactly-once file accounting."""
-    import os
-
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_mg_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_swmg_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_extendedprice", "l_discount"
     )
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "l_orderkey long, l_partkey long, l_extendedprice double, l_discount double"
 
     def rev_items(b):
@@ -919,11 +906,12 @@ def streaming_heavy_hitter_revenue(spark, sf_dir):
             .filter(F.col("__w").isNotNull() & (F.col("__w") >= 0))
         )
 
-    mid = li.agg(F.expr("percentile_approx(l_orderkey, 0.5)")).collect()[0][0]
-    li.filter(F.col("l_orderkey") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, rev_items, schema, k=4096, weighted=True)
-    li.filter(F.col("l_orderkey") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, rev_items, schema, k=4096, weighted=True)
+    store = _drain_two_waves(
+        spark, "chatdata_swmg_q_", li, _median_split(li, "l_orderkey"),
+        lambda ind, st, ck: stream_mg_merge(
+            spark, ind, st, ck, rev_items, schema, k=4096, weighted=True
+        ),
+    )
     cands = store.read().select("item")
     rev = rev_items(li)
     return (
@@ -961,31 +949,21 @@ def streaming_zscore_anomaly(spark, sf_dir):
     outliers with the all-integer predicate, so exact equality with the
     batch oracle proves the merge law under real micro-batch splits AND
     the checkpoint's exactly-once file accounting."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.moments import zscore_report
     from chatdata_spark.queries.quality import _zscore_v100
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_moments_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_szs_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("value").isNotNull() & F.col("event_type").isNotNull()
     )
     ev = e.select("event_id", "event_type", "value")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, value double"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_moments_merge(
-        spark, ind, store, ckpt, ["event_type"], _zscore_v100, schema
-    )
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_moments_merge(
-        spark, ind, store, ckpt, ["event_type"], _zscore_v100, schema
+    store = _drain_two_waves(
+        spark, "chatdata_szs_q_", ev, _median_split(ev, "event_id"),
+        lambda ind, st, ck: stream_moments_merge(
+            spark, ind, st, ck, ["event_type"], _zscore_v100, schema
+        ),
     )
     return zscore_report(
         e,
@@ -993,7 +971,7 @@ def streaming_zscore_anomaly(spark, sf_dir):
         _zscore_v100(e),
         scale=100,
         z=3,
-        moments=store.read().drop("last_batch"),
+        moments=store.read(),
     ).orderBy("event_type")
 
 
@@ -1065,23 +1043,16 @@ def streaming_trend_ols(spark, sf_dir):
     checkpoint's exactly-once file accounting. The trending-metric
     monitor this enables never rescans history: day N's answer costs one
     micro-batch aggregate."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.timeseries import ols_from_moments
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_ols_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_strend_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("value").isNotNull()
         & F.col("event_type").isNotNull()
         & F.col("ts").isNotNull()
     )
     ev = e.select("event_id", "event_type", F.to_date("ts").alias("d"), "value")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, d date, value double"
 
     def xy(bdf):
@@ -1090,14 +1061,11 @@ def streaming_trend_ols(spark, sf_dir):
             (F.col("value").cast("decimal(18,2)") * F.lit(100)).cast("bigint"),
         )
 
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_ols_merge(spark, ind, store, ckpt, ["event_type"], xy, schema)
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_ols_merge(spark, ind, store, ckpt, ["event_type"], xy, schema)
-    return ols_from_moments(store.read().drop("last_batch"), y_scale=100).orderBy(
-        "event_type"
+    store = _drain_two_waves(
+        spark, "chatdata_strend_q_", ev, _median_split(ev, "event_id"),
+        lambda ind, st, ck: stream_ols_merge(spark, ind, st, ck, ["event_type"], xy, schema),
     )
+    return ols_from_moments(store.read(), y_scale=100).orderBy("event_type")
 
 
 def _shared_hll_oracle() -> str:
@@ -1123,28 +1091,21 @@ def streaming_hll_distinct(spark, sf_dir):
     AND the estimate: the streaming distinct-count whose answer is
     bit-identical to the batch one, at 2^p rows of state per group
     forever."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.hll import hll_estimate
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_hll_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_shll_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
     ev = e.select("event_id", "event_type", "user_id")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, user_id long"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_hll_merge(spark, ind, store, ckpt, ["event_type"], "user_id", schema, p=8, salt="hllu")
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_hll_merge(spark, ind, store, ckpt, ["event_type"], "user_id", schema, p=8, salt="hllu")
-
+    store = _drain_two_waves(
+        spark, "chatdata_shll_q_", ev, _median_split(ev, "event_id"),
+        lambda ind, st, ck: stream_hll_merge(
+            spark, ind, st, ck, ["event_type"], "user_id", schema, p=8, salt="hllu"
+        ),
+    )
     sk = hll_estimate(store.read(), ["event_type"], p=8, linear_correction=True)
     sk = sk.withColumn("hll_est", F.round("hll_est", 6))
     ex = (
@@ -1179,25 +1140,17 @@ def streaming_scd2_history(spark, sf_dir):
     the one-shot batch oracle proves the incremental-merge law under
     real micro-batch splits: the dimension-history table that never
     rescans its full changelog."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.queries.quality import _PSI_SPLIT
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_scd2_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_sscd_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "user_id long, event_type string, ts timestamp, event_id long"
-    split = F.lit(_PSI_SPLIT).cast("timestamp")
     args = (["user_id"], "ts", ["event_type"], ["event_id"])
-    e.filter(F.col("ts") < split).coalesce(1).write.mode("append").parquet(ind)
-    stream_scd2_merge(spark, ind, store, ckpt, *args, schema)
-    e.filter(F.col("ts") >= split).coalesce(1).write.mode("append").parquet(ind)
-    stream_scd2_merge(spark, ind, store, ckpt, *args, schema)
+    store = _drain_two_waves(
+        spark, "chatdata_sscd_q_", e, F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp"),
+        lambda ind, st, ck: stream_scd2_merge(spark, ind, st, ck, *args, schema),
+    )
     return store.read().orderBy("user_id", "valid_from", "event_id")
 
 
@@ -1257,28 +1210,21 @@ def streaming_kmv_overlap(spark, sf_dir):
     |sketch| (n_distinct is consumed only through (n > k) comparisons),
     so the streamed which-audiences-overlap matrix is bit-identical to
     the batch sketch build the oracle replays in SQL."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.kmv import kmv_pairwise_overlap
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_kmv_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_skmv_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
     ev = e.select("event_id", "event_type", "user_id")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, user_id long"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_kmv_merge(spark, ind, store, ckpt, "event_type", "user_id", schema, k=64, salt="kmvu")
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_kmv_merge(spark, ind, store, ckpt, "event_type", "user_id", schema, k=64, salt="kmvu")
-
+    store = _drain_two_waves(
+        spark, "chatdata_skmv_q_", ev, _median_split(ev, "event_id"),
+        lambda ind, st, ck: stream_kmv_merge(
+            spark, ind, st, ck, "event_type", "user_id", schema, k=64, salt="kmvu"
+        ),
+    )
     st = store.read()
     sk = st.groupBy("event_type").agg(
         F.array_sort(F.collect_list("h")).alias("sketch"),

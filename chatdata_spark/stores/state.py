@@ -231,10 +231,7 @@ class SessionStore:
         row = local_frame(
             self.spark, [(user_id, session_id, system_prompt, create_by, "{}")], self.SCHEMA
         )
-        if self.store.exists():
-            self.store.upsert(row, ["session_id"], "create_by")
-        else:
-            self.store.write(row)
+        self.store.upsert(row, ["session_id"], "create_by")
 
     def list_sessions(self, user_id: str) -> DataFrame:
         return (
@@ -274,10 +271,7 @@ class ChatMemoryStore:
             self.SCHEMA,
         )
         # PK msg_id: idempotent re-append (upsert, not blind append)
-        if self.store.exists():
-            self.store.upsert(row, ["msg_id"], "id")
-        else:
-            self.store.write(row)
+        self.store.upsert(row, ["msg_id"], "id")
 
     def history(self, session_id: str) -> DataFrame:
         return (
@@ -309,10 +303,7 @@ class PrivateKBStore:
             (_sha256(file_name, t), file_name, t, user_id, created_by, embed(t)) for t in texts
         ]
         df = local_frame(self.spark, rows, self.KB_SCHEMA)
-        if self.kb.exists():
-            self.kb.upsert(df, ["entity_id"], "created_by")
-        else:
-            self.kb.write(keep_latest(df, ["entity_id"], "created_by"))
+        self.kb.upsert(df, ["entity_id"], "created_by")
 
     def user_files(self, user_id: str) -> DataFrame:
         """A1-A3 file listing (private_knowledge_base.py:73-79)."""
@@ -336,10 +327,7 @@ class PrivateKBStore:
             [(_sha256(user_id, tool_name), tool_name, file_names, user_id, created_by, description)],
             self.TOOL_SCHEMA,
         )
-        if self.tools.exists():
-            self.tools.upsert(row, ["tool_id"], "created_by")
-        else:
-            self.tools.write(row)
+        self.tools.upsert(row, ["tool_id"], "created_by")
 
     def tool_paragraphs(self, user_id: str, tool_name: str) -> DataFrame:
         """J1: paragraphs scoped to a tool's file list — LEFT SEMI join

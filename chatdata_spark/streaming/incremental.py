@@ -7,7 +7,9 @@ Pattern: file-source stream over an ingest directory → validate → embed
 ``Trigger.AvailableNow`` drains the backlog then stops, which is both the
 deterministic test mode and the sane production batch-cadence mode (cron a
 drain instead of keeping executors hot). A watermarked windowed count
-shows the late-data-tolerant stats path for event streams.
+shows the late-data-tolerant stats path for event streams. Every sink and
+every state merge here runs through streaming/runner.py: each
+``stream_*_merge`` is one ``fold`` plus its replay class.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from chatdata_spark.functions.vector import make_embed_text_udf
+from chatdata_spark.streaming.runner import _available_now, _parquet, drain, drain_merge
 
 
 def incremental_embed(
@@ -32,14 +35,7 @@ def incremental_embed(
     embedded = stream.filter(F.col("text").isNotNull()).withColumn(
         "vector", make_embed_text_udf(dim)(F.col("text"))
     )
-    (
-        embedded.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _available_now(embedded, checkpoint_dir, _parquet(output_dir))
 
 
 def stream_upsert_into_store(
@@ -55,26 +51,15 @@ def stream_upsert_into_store(
     merged with keep-latest semantics into a VersionedParquetStore (the
     streaming twin of M1 — at warehouse scale the body becomes a Delta
     MERGE; the stream topology is unchanged). Checkpoint + versioned swap
-    give effectively-once application of each batch."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    give effectively-once application of each batch; keep-latest is
+    idempotent, so a replayed batch needs no batch_id guard."""
+    from chatdata_spark.operators.upsert import keep_latest
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if store.exists():
-            store.upsert(batch_df, key_cols, version_col)
-        else:
-            from chatdata_spark.operators.upsert import keep_latest
+    def fold(prev, batch_df):
+        rows = batch_df if prev is None else prev.unionByName(batch_df)
+        return keep_latest(rows, key_cols, version_col)
 
-            store.write(keep_latest(batch_df, key_cols, version_col))
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=False)
 
 
 def windowed_event_counts(
@@ -96,15 +81,7 @@ def windowed_event_counts(
         .agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("value").cast("decimal(27,6)")).cast("double").alias("total"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total")
     )
-    (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _available_now(agg, checkpoint_dir, _parquet(output_dir))
 
 
 def stream_stream_interval_join(
@@ -156,15 +133,7 @@ def stream_stream_interval_join(
         ],
         "inner",
     ).select(left["k"].alias(key_col), "l_ts", "l_value", "r_ts", "r_value")
-    (
-        joined.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _available_now(joined, checkpoint_dir, _parquet(output_dir))
 
 
 def stream_near_dup_pairs(
@@ -198,11 +167,8 @@ def stream_near_dup_pairs(
     against stored ids correctly no-ops it, and its pairs are already on
     disk. The streaming topology is the batch operator unchanged — the
     store IS the state, no applyInPandasWithState needed."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         seen = sig_store._stored_sigs()
         fresh = batch_df
         if seen is not None:
@@ -215,13 +181,7 @@ def stream_near_dup_pairs(
         pairs.write.mode("overwrite").parquet(f"{pairs_out_dir}/batch={b}")
         sig_store.commit_batch(b)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, apply_batch)
 
 
 def stream_cms_merge(
@@ -257,28 +217,11 @@ def stream_cms_merge(
     while the state itself was stale (ADVICE r8)."""
     from chatdata_spark.operators.cms import cms_build, cms_merge
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         sk = cms_build(batch_df, item_col, depth=depth, width=width)
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-merging would double-count
-            merged = cms_merge(store.read().drop("last_batch"), sk)
-        else:
-            merged = sk
-        store.write(merged, meta={"last_batch": batch_id})
+        return sk if prev is None else cms_merge(prev, sk)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=True)
 
 
 def stream_histogram_merge(
@@ -308,33 +251,13 @@ def stream_histogram_merge(
     batch is skipped."""
     from chatdata_spark.operators.drift import hist_counts
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         h = hist_counts(batch_df, value_col, edges, out="n")
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-merging double-counts
-            merged = (
-                store.read().drop("last_batch")
-                .unionByName(h)
-                .groupBy("bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = h
-        store.write(merged, meta={"last_batch": batch_id})
+        if prev is None:
+            return h
+        return prev.unionByName(h).groupBy("bin").agg(F.sum("n").alias("n"))
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=True)
 
 
 def stream_quantile_sample_merge(
@@ -363,23 +286,11 @@ def stream_quantile_sample_merge(
     exactly what the batch-parity oracle checks."""
     from chatdata_spark.operators.quantsketch import merge_samples, quantile_sample
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         sk = quantile_sample(batch_df, group_cols, value_col, key_col, k=k, salt=salt)
-        if store.exists():
-            sk = merge_samples([store.read(), sk], group_cols, k=k)
-        store.write(sk)
+        return sk if prev is None else merge_samples([prev, sk], group_cols, k=k)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=False)
 
 
 def stream_mg_merge(
@@ -417,11 +328,7 @@ def stream_mg_merge(
     the pointer swap, ADVICE r8) skips committed batches."""
     from pyspark.sql import Window
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         items = item_col_fn(batch_df)
         if weighted:
             bc = items.groupBy("item").agg(
@@ -429,11 +336,8 @@ def stream_mg_merge(
             )
         else:
             bc = items.groupBy("item").agg(F.count(F.lit(1)).alias("cnt"))
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-merging double-counts
-            prev = store.read().drop("last_batch")
+        merged = bc
+        if prev is not None:
             merged = (
                 prev
                 .unionByName(bc.withColumn("cnt", F.col("cnt").cast(dict(prev.dtypes)["cnt"])))
@@ -444,14 +348,12 @@ def stream_mg_merge(
                 # sum(decimal) widens precision each round — pin the store
                 # schema so round-N reads union cleanly with round-N+1 sums
                 merged = merged.withColumn("cnt", F.col("cnt").cast("decimal(27,6)"))
-        else:
-            merged = bc
         w = Window.orderBy(F.desc("cnt"), F.asc("item"))
         wall = Window.partitionBy()
         ranked = merged.select(
             "item", "cnt", F.row_number().over(w).alias("__rn")
         )
-        compressed = (
+        return (
             ranked.select(
                 "item",
                 "cnt",
@@ -465,15 +367,8 @@ def stream_mg_merge(
             )
             .filter(F.col("cnt") > 0)
         )
-        store.write(compressed, meta={"last_batch": batch_id})
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=True)
 
 
 def stream_moments_merge(
@@ -503,28 +398,11 @@ def stream_moments_merge(
     unlike worker closures)."""
     from chatdata_spark.operators.moments import exact_moments, merge_moments
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         bm = exact_moments(batch_df, group_cols, int_col_fn(batch_df))
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-adding double-counts
-            merged = merge_moments([store.read().drop("last_batch"), bm], group_cols)
-        else:
-            merged = bm
-        store.write(merged, meta={"last_batch": batch_id})
+        return bm if prev is None else merge_moments([prev, bm], group_cols)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=True)
 
 
 def stream_ols_merge(
@@ -549,29 +427,12 @@ def stream_ols_merge(
     integer-valued (runs driver-side in foreachBatch)."""
     from chatdata_spark.operators.timeseries import merge_ols_moments, ols_moments
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         x, y = xy_col_fn(batch_df)
         bm = ols_moments(batch_df, group_cols, x, y)
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-adding double-counts
-            merged = merge_ols_moments([store.read().drop("last_batch"), bm], group_cols)
-        else:
-            merged = bm
-        store.write(merged, meta={"last_batch": batch_id})
+        return bm if prev is None else merge_ols_moments([prev, bm], group_cols)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=True)
 
 
 def stream_hll_merge(
@@ -596,28 +457,17 @@ def stream_hll_merge(
     what the batch-parity oracle checks."""
     from chatdata_spark.operators.hll import hll_registers
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         regs = hll_registers(batch_df, group_cols, key_col, p=p, salt=salt)
-        if store.exists():
-            regs = (
-                store.read()
-                .unionByName(regs)
-                .groupBy(*group_cols, "bucket")
-                .agg(F.min("min_tail").alias("min_tail"))
-            )
-        store.write(regs)
+        if prev is None:
+            return regs
+        return (
+            prev.unionByName(regs)
+            .groupBy(*group_cols, "bucket")
+            .agg(F.min("min_tail").alias("min_tail"))
+        )
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=False)
 
 
 def stream_scd2_merge(
@@ -646,28 +496,12 @@ def stream_scd2_merge(
     the lattice merges (and unlike the additive moment/count states)."""
     from chatdata_spark.operators.scd import scd2_from_changelog, scd2_merge
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    def fold(prev, batch_df):
+        if prev is None:
+            return scd2_from_changelog(batch_df, key_cols, ts_col, tracked_cols, order_cols)
+        return scd2_merge(prev, batch_df, key_cols, ts_col, tracked_cols, order_cols)
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if store.exists():
-            merged = scd2_merge(
-                store.read(), batch_df, key_cols, ts_col, tracked_cols, order_cols
-            )
-        else:
-            merged = scd2_from_changelog(
-                batch_df, key_cols, ts_col, tracked_cols, order_cols
-            )
-        store.write(merged)
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=False)
 
 
 def stream_kmv_merge(
@@ -701,13 +535,11 @@ def stream_kmv_merge(
     surrogate and the streamed overlap matrix is bit-identical to the
     batch one (the batch-parity oracle's claim). State ≤ k rows/group
     forever; the per-batch exchange is the (group, hash) distinct."""
+    from pyspark.sql import Window
+
     from chatdata_spark.operators.sampling import hash_bucket
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(prev, batch_df):
         bh = (
             batch_df.select(
                 F.col(group_col), hash_bucket(F.col(elem_col), salt).alias("h")
@@ -715,10 +547,8 @@ def stream_kmv_merge(
             .distinct()
             .withColumn("sat", F.lit(False))
         )
-        if store.exists():
-            bh = store.read().unionByName(bh)
-        from pyspark.sql import Window
-
+        if prev is not None:
+            bh = prev.unionByName(bh)
         w = Window.partitionBy(group_col)
         merged = bh.groupBy(group_col, "h").agg(F.max("sat").alias("sat_row"))
         ranked = merged.select(
@@ -728,17 +558,10 @@ def stream_kmv_merge(
             F.count(F.lit(1)).over(w).alias("n"),
             F.max("sat_row").over(w).alias("sat_prev"),
         )
-        out = ranked.filter(F.col("rn") <= k).select(
+        return ranked.filter(F.col("rn") <= k).select(
             group_col,
             "h",
             (F.col("sat_prev") | (F.col("n") > k)).alias("sat"),
         )
-        store.write(out)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, fold, additive=False)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chatdata_spark.streaming.runner import _available_now, _parquet
+
 
 def purchase_click_attribution_join(
     clicks: DataFrame,
@@ -82,12 +84,5 @@ def stream_static_enrich(
     forever at constant memory."""
     src = spark.readStream.schema(schema).parquet(in_dir)
     dim = dim_df.select(F.col(on_right).alias(on_left), *dim_cols)
-    q = (
-        src.join(F.broadcast(dim), on_left, "inner")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    enriched = src.join(F.broadcast(dim), on_left, "inner")
+    _available_now(enriched, checkpoint, _parquet(out_dir))

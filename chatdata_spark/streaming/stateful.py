@@ -17,6 +17,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from chatdata_spark.streaming.runner import _available_now, _parquet
+
 
 def stream_distinct(
     spark: SparkSession,
@@ -86,15 +88,7 @@ def stream_distinct(
             GroupStateTimeout.EventTimeTimeout if use_ttl else GroupStateTimeout.NoTimeout
         ),
     )
-    (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _available_now(deduped, checkpoint_dir, _parquet(output_dir))
 
 
 def stream_sessionize(
@@ -185,12 +179,4 @@ def stream_sessionize(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _available_now(sessions, checkpoint_dir, _parquet(output_dir))

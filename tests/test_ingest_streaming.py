@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from chatdata_spark.sources.ingest import (
     embed_and_validate,
@@ -426,3 +427,172 @@ def test_stream_kmv_merge_incremental_and_replay_idempotent(spark, tmp_path):
         got2.setdefault(r.g, []).append(r.h)
         sat2[r.g] = r.sat
     assert {g: sorted(v) for g, v in got2.items()} == want and sat2 == sat
+
+
+# -- one drain: replay per state class, guard placement, static guard ------------
+
+_REPLAY_SCHEMA = "g string, item long, v long, ts timestamp, ver long"
+
+
+def _replay_waves(spark):
+    """Two event-time-ordered waves with overlapping keys: the second
+    wave re-labels items 20-29 (SCD2 changes, upsert overwrites)."""
+    import datetime
+
+    t0 = datetime.datetime(2023, 6, 1)
+
+    def rows(lo, hi, mod, dv, ver, t_off):
+        return [
+            ("x" if i % mod else "y", i, (i * dv) % 11, t0 + datetime.timedelta(minutes=t_off + i), ver)
+            for i in range(lo, hi)
+        ]
+
+    return (
+        spark.createDataFrame(rows(0, 30, 3, 7, 1, 0), _REPLAY_SCHEMA),
+        spark.createDataFrame(rows(20, 50, 2, 5, 2, 100), _REPLAY_SCHEMA),
+    )
+
+
+def _replay_cases():
+    """name -> (additive, drain(spark, input_dir, store, checkpoint_dir)):
+    all nine state merges plus the upsert, each over _REPLAY_SCHEMA."""
+    from chatdata_spark.operators.drift import fixed_bin_edges
+    from chatdata_spark.streaming import incremental as inc
+
+    s = _REPLAY_SCHEMA
+    edges = fixed_bin_edges(0.0, 11.0, 4)
+    return {
+        "cms": (True, lambda sp, i, st, c: inc.stream_cms_merge(sp, i, st, c, "item", s, depth=2, width=16)),
+        "histogram": (True, lambda sp, i, st, c: inc.stream_histogram_merge(sp, i, st, c, "v", s, edges)),
+        "mg": (True, lambda sp, i, st, c: inc.stream_mg_merge(
+            sp, i, st, c, lambda b: b.select(F.col("g").alias("item")), s, k=2)),
+        "moments": (True, lambda sp, i, st, c: inc.stream_moments_merge(
+            sp, i, st, c, ["g"], lambda b: F.col("v"), s)),
+        "ols": (True, lambda sp, i, st, c: inc.stream_ols_merge(
+            sp, i, st, c, ["g"], lambda b: (F.col("item"), F.col("v")), s)),
+        "quantile_sample": (False, lambda sp, i, st, c: inc.stream_quantile_sample_merge(
+            sp, i, st, c, ["g"], "v", "item", s, k=4)),
+        "hll": (False, lambda sp, i, st, c: inc.stream_hll_merge(sp, i, st, c, ["g"], "item", s, p=4)),
+        "kmv": (False, lambda sp, i, st, c: inc.stream_kmv_merge(sp, i, st, c, "g", "item", s, k=4)),
+        "scd2": (False, lambda sp, i, st, c: inc.stream_scd2_merge(
+            sp, i, st, c, ["item"], "ts", ["g"], ["ver"], s)),
+        "upsert": (False, lambda sp, i, st, c: inc.stream_upsert_into_store(
+            sp, i, st, ["item"], "ver", c, s)),
+    }
+
+
+def _state(store) -> list:
+    return sorted(tuple(r) for r in store.read().collect())
+
+
+@pytest.mark.parametrize("name", sorted(_replay_cases()))
+def test_drain_merge_replay_per_state_class(spark, tmp_path, name):
+    """Two waves drain, then a fresh checkpoint replays every file into
+    the same store. Additive states (counts, moments) must write NO new
+    version — the batch-id guard skips the committed batch; idempotent
+    states (lattice joins, SCD2, keep-latest upsert) fold it again and must
+    leave the state value unchanged. No drained store carries a
+    ``last_batch`` column: the guard lives in the sidecar meta only."""
+    from chatdata_spark.stores.state import VersionedParquetStore
+
+    additive, run = _replay_cases()[name]
+    ind = str(tmp_path / "in")
+    os.makedirs(ind)
+    store = VersionedParquetStore(spark, str(tmp_path / "store"))
+    for wave in _replay_waves(spark):
+        wave.coalesce(1).write.mode("append").parquet(ind)
+        run(spark, ind, store, str(tmp_path / "ck"))
+    assert "last_batch" not in store.read().columns
+    assert store.read_meta().get("last_batch") == (1 if additive else None)
+    v, before = store.current_version(), _state(store)
+
+    run(spark, ind, store, str(tmp_path / "ck_replay"))
+    if additive:
+        assert store.current_version() == v
+    else:
+        assert store.current_version() > v
+    assert "last_batch" not in store.read().columns
+    assert _state(store) == before
+
+
+def test_drain_merge_guard_runs_before_fold_and_empty_input_writes_nothing(spark, tmp_path):
+    """An additive replay is skipped before ``fold`` is called (no batch
+    summary is built for a batch that will not be applied), and an input
+    with no rows writes no version under either state class."""
+    from chatdata_spark.stores.state import VersionedParquetStore
+    from chatdata_spark.streaming.runner import drain_merge
+
+    calls = []
+
+    def fold(prev, batch_df):
+        calls.append(batch_df.count())
+        counts = batch_df.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+        if prev is None:
+            return counts
+        return prev.unionByName(counts).groupBy("g").agg(F.sum("n").alias("n"))
+
+    schema = "g string"
+    for additive in (True, False):
+        empty_in = str(tmp_path / f"empty_{additive}")
+        spark.createDataFrame([], schema).coalesce(1).write.parquet(empty_in)
+        store = VersionedParquetStore(spark, str(tmp_path / f"empty_store_{additive}"))
+        drain_merge(spark, empty_in, schema, str(tmp_path / f"empty_ck_{additive}"),
+                    store, fold, additive=additive)
+        assert store.current_version() == 0 and calls == []
+
+    ind = str(tmp_path / "in")
+    spark.createDataFrame([("a",), ("a",), ("b",)], schema).coalesce(1).write.parquet(ind)
+    store = VersionedParquetStore(spark, str(tmp_path / "store"))
+    drain_merge(spark, ind, schema, str(tmp_path / "ck"), store, fold, additive=True)
+    assert calls == [3] and store.current_version() == 1
+    drain_merge(spark, ind, schema, str(tmp_path / "ck2"), store, fold, additive=True)
+    assert calls == [3] and store.current_version() == 1
+    assert sorted(tuple(r) for r in store.read().collect()) == [("a", 2), ("b", 1)]
+
+
+_STREAM_SINK_OWNERS = {
+    "writeStream": ("chatdata_spark/streaming/runner.py", "_available_now"),
+    "availableNow": ("chatdata_spark/streaming/runner.py", "_available_now"),
+    "foreachBatch": ("chatdata_spark/streaming/runner.py", "drain"),
+}
+
+
+def _stream_sink_uses(path) -> list[tuple[str, int, str]]:
+    """(name, line, enclosing function) of every ``.writeStream`` /
+    ``.foreachBatch`` attribute and ``availableNow=`` keyword."""
+    import ast
+
+    out = []
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            if isinstance(child, ast.Attribute) and child.attr in ("writeStream", "foreachBatch"):
+                out.append((child.attr, child.lineno, fn))
+            if isinstance(child, ast.keyword) and child.arg == "availableNow":
+                out.append(("availableNow", child.value.lineno, fn))
+            walk(child, name)
+
+    walk(ast.parse(path.read_text(), filename=str(path)), "<module>")
+    return out
+
+
+def test_library_starts_streams_only_through_the_runner():
+    """Static guard: under chatdata_spark/, a stream is started in one
+    place (``runner._available_now``) and a foreachBatch body is installed
+    in one place (``runner.drain``). A hand-copied sink or merge drain
+    fails here; route it through the runner, ``drain`` or
+    ``drain_merge``."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "chatdata_spark"
+    offenders, seen = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg.parent).as_posix()
+        for name, line, fn in _stream_sink_uses(path):
+            if (rel, fn) == _STREAM_SINK_OWNERS[name]:
+                seen.add(name)
+            else:
+                offenders.append(f"{rel}:{line} {name} in {fn}()")
+    assert not offenders, "stream sink outside streaming/runner.py:\n" + "\n".join(offenders)
+    assert seen == set(_STREAM_SINK_OWNERS)
