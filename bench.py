@@ -22,7 +22,14 @@ fresh subprocess JVMs (<=SHARD_SIZE entries each) so late-suite GC/cache
 pressure can't inflate mid/late entries — every number is within the
 isolated-run methodology's noise. E2E entries (iterative operators whose
 work runs at plan-build time) are timed as one wall-clock span from
-invocation through the noop sink."""
+invocation through the noop sink.
+
+Other environment options: SPARK_GRAFT_BENCH_REPS (timed passes per
+entry, min taken; default 3), SPARK_GRAFT_BENCH_ONLY=a,b (time just these
+entries in-process, no BENCH_DETAIL.json write; any registered query name
+is accepted and timed as a steady-state entry — the sf1 probe path:
+SPARK_GRAFT_SF_DIR=/tmp/sf1 SPARK_GRAFT_BENCH_ONLY=q18_large_volume_customer
+python bench.py) and SPARK_GRAFT_BENCH_CHILD=1 (internal shard flag)."""
 
 from __future__ import annotations
 
@@ -135,10 +142,10 @@ HEADLINE = [
 # their work runs at plan-BUILD time (driver-looped rounds with eager
 # checkpoints, or bounded build-time collects), so the warm/timed
 # build-vs-execute split above would time an empty tail. E2E entries are
-# timed as ONE wall-clock span from fn() invocation through the noop sink
-# — the tools/sf_scale_probe.py methodology — so their numbers live in
-# the canonical artifact (BENCH_DETAIL.json "e2e" key) and regress
-# visibly instead of only in PLANS.md prose (r6 verdict item 5).
+# timed as ONE wall-clock span from fn() invocation through the noop sink,
+# so their numbers live in the canonical artifact (BENCH_DETAIL.json "e2e"
+# key) and regress visibly instead of only in PLANS.md prose (r6 verdict
+# item 5).
 E2E = [
     "bpe_learn_merges",             # vocabulary-collapse merge loop
     "graph_pagerank_transactions",  # integer fixed-point power iteration
@@ -183,8 +190,11 @@ E2E = [
     # Whole-invocation is the honest span for this shape; the old
     # steady-state numbers stay in BENCH_r11.json/BENCH_DETAIL history.
     "retrieval_funnel_docs",        # build-time page collect + checkpointed page
-    "retrieval_funnel_x10",         # 10x-corpus probe of the same shape (EXTRA fn)
+    "retrieval_funnel_x10",         # 10x-corpus probe of the same shape (E2E_EXTRA fn)
 ]
+
+# Entries per fresh-JVM shard of the full suite (see main).
+SHARD_SIZE = 10
 
 # The ≤15 per-query entries repeated on stdout (full map goes to
 # BENCH_DETAIL.json): one stable representative per load-bearing family,
@@ -567,6 +577,10 @@ def bench_retrieval_funnel_x10(spark, sf_dir):
     )
 
 
+# E2E entries that are bench functions rather than registry queries.
+E2E_EXTRA = {"retrieval_funnel_x10": bench_retrieval_funnel_x10}
+
+
 def bench_profile_approx(spark, sf_dir):
     """Table profiling in its 100 TB configuration: approx distinct counts
     fold into plain partial aggregation (no Expand row-multiply) — the
@@ -668,6 +682,19 @@ def bench_ann_ivfpq_search(spark, sf_dir):
     return idx.search(Q2, k=15, n_probe=4, refine=4, select=["vec_id", "label"])
 
 
+def _hot_user_events(spark, sf_dir):
+    """The adversarial-skew fixture the four hot-key entries share: events
+    with half of all rows (even event_id) remapped to ONE user (user 0)."""
+    import pyspark.sql.functions as F
+
+    from chatdata_spark.catalog import load_events
+
+    return load_events(spark, sf_dir).withColumn(
+        "user_id",
+        F.when(F.col("event_id") % 2 == 0, F.lit(0)).otherwise(F.col("user_id")),
+    )
+
+
 def bench_sessionize_hotkey(spark, sf_dir):
     """Sessionization under adversarial skew: half of all events remapped to
     ONE user. The plain per-user window would serialize that user onto a
@@ -677,13 +704,9 @@ def bench_sessionize_hotkey(spark, sf_dir):
     a small factor of it IS the escape-hatch proof at bench scale."""
     import pyspark.sql.functions as F
 
-    from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.timeseries import sessionize
 
-    e = load_events(spark, sf_dir).withColumn(
-        "user_id",
-        F.when(F.col("event_id") % 2 == 0, F.lit(0)).otherwise(F.col("user_id")),
-    )
+    e = _hot_user_events(spark, sf_dir)
     s = sessionize(e, "user_id", "ts", gap_minutes=30.0, order_tiebreak="event_id",
                    slice_width="auto")
     return s.groupBy("user_id", "session_idx").agg(
@@ -694,8 +717,6 @@ def bench_sessionize_hotkey(spark, sf_dir):
 
 
 def _fact_join_inputs(spark, sf_dir):
-    import pyspark.sql.functions as F  # noqa: F401
-
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").withColumnRenamed(
         "l_orderkey", "orderkey"
     )
@@ -819,13 +840,9 @@ def bench_asof_hotkey_sliced(spark, sf_dir):
     `asof_join_purchase_click_sliced`)."""
     import pyspark.sql.functions as F
 
-    from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.timeseries import asof_join
 
-    e = load_events(spark, sf_dir).withColumn(
-        "user_id",
-        F.when(F.col("event_id") % 2 == 0, F.lit(0)).otherwise(F.col("user_id")),
-    )
+    e = _hot_user_events(spark, sf_dir)
     purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = e.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id", "value")
     return asof_join(
@@ -847,13 +864,9 @@ def bench_range_join_hotkey(spark, sf_dir):
     plan is sub-linear in its output, which is the scale claim."""
     import pyspark.sql.functions as F
 
-    from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.timeseries import range_join_left
 
-    e = load_events(spark, sf_dir).withColumn(
-        "user_id",
-        F.when(F.col("event_id") % 2 == 0, F.lit(0)).otherwise(F.col("user_id")),
-    )
+    e = _hot_user_events(spark, sf_dir)
     purchases = (
         e.filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", F.unix_timestamp("ts").alias("p_ts"))
@@ -883,13 +896,9 @@ def bench_range_join_hotkey_bounded(spark, sf_dir):
     pairs; the per-(left,bucket) stage keeps the hot key spread)."""
     import pyspark.sql.functions as F
 
-    from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.timeseries import range_join_left
 
-    e = load_events(spark, sf_dir).withColumn(
-        "user_id",
-        F.when(F.col("event_id") % 2 == 0, F.lit(0)).otherwise(F.col("user_id")),
-    )
+    e = _hot_user_events(spark, sf_dir)
     purchases = (
         e.filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", F.unix_timestamp("ts").alias("p_ts"))
@@ -1027,14 +1036,32 @@ EXTRA = {
 }
 
 
+def _isolate(spark) -> None:
+    """Per-entry isolation: drop persisted tables and nudge a full GC so
+    later entries aren't taxed by earlier entries' cache residency (the
+    uniform r01→r02 drift)."""
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+
+
 def _run_shard(
-    spark, sf_dir: str, plans, e2e_names, reps: int, e2e_reps: int, isolate: bool
+    spark, sf_dir: str, names: list[str], reps: int
 ) -> tuple[dict[str, float], dict[str, float]]:
     """Time one shard's entries in THIS process. Steady-state entries get
     warm pass + min-of-reps execute-only timing; E2E entries get
-    whole-invocation wall-clock (build+execute), min over e2e_reps after
-    one untimed warm invocation."""
+    whole-invocation wall-clock (build+execute), min over reps after
+    one untimed warm invocation. Entries run in suite order; a registered
+    query outside HEADLINE/EXTRA/E2E is timed as a steady-state entry
+    after the suite's own (the sf1 probe path). JVM/codegen warmup and
+    the IVF index build run first, outside timing."""
     qs = queries()
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    bench_ann_ivf_pruned(spark, sf_dir).count()
+    keep = set(names)
+    suite = {*HEADLINE, *EXTRA, *E2E}
+    plans = [(n, qs[n]) for n in HEADLINE if n in keep]
+    plans += [(n, f) for n, f in EXTRA.items() if n in keep]
+    plans += [(n, qs[n]) for n in names if n not in suite and n in qs]
     per_query: dict[str, float] = {}
     for name, fn in plans:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
@@ -1048,87 +1075,52 @@ def _run_shard(
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         per_query[name] = round(best, 3)
-        if isolate:
-            # Per-query isolation: drop this query's persisted tables and nudge
-            # a full GC so later queries aren't taxed by earlier queries' cache
-            # residency (the uniform r01→r02 drift). Runs AFTER the timed pass,
-            # so each query still measures its own steady state (warm pass
-            # builds/persists, timed pass reuses).
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+        print(f"bench: {name} {best:.3f}s", file=sys.stderr)
+        # AFTER the timed passes, so each entry still measures its own
+        # steady state (warm pass builds/persists, timed passes reuse)
+        _isolate(spark)
     e2e: dict[str, float] = {}
-    for name in e2e_names:
-        # E2E names are registry queries, except the funnel x10 probe
-        # (EXTRA-only fn moved here in r12 with its registered twin)
-        fn = qs.get(name) or {"retrieval_funnel_x10": bench_retrieval_funnel_x10}[name]
+    for name in [n for n in E2E if n in keep]:
+        fn = qs.get(name) or E2E_EXTRA[name]
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
+        # same min-of-reps as the steady-state entries: min-of-2 left the
+        # whole-invocation entries exposed to single-GC-pause outliers
+        # (four ambient guard firings in r8, all dissolving under REPS=10)
         best = float("inf")
-        for _ in range(e2e_reps):
-            if isolate:
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
+        for _ in range(reps):
+            _isolate(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         e2e[name] = round(best, 3)
-        if isolate:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+        print(f"bench: {name} {best:.3f}s (e2e)", file=sys.stderr)
+        _isolate(spark)
     return per_query, e2e
-
-
-def _child_main(sf_dir: str, names: list[str], reps: int, e2e_reps: int, isolate: bool):
-    """Shard subprocess: time the named entries in a FRESH JVM and print
-    the partial result as one JSON line (captured by the orchestrator)."""
-    spark = get_spark(app_name="chatdata_spark_bench_shard")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = queries()
-    # JVM/codegen warmup + IVF index build outside timing
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    bench_ann_ivf_pruned(spark, sf_dir).count()
-    keep = set(names)
-    plans = [(n, qs[n]) for n in HEADLINE if n in keep]
-    plans += [(n, f) for n, f in EXTRA.items() if n in keep]
-    e2e_names = [n for n in E2E if n in keep]
-    # The ORDER knob must survive into the shard, or the order-sensitivity
-    # probe is inert in the default sharded path (ADVICE r7): children
-    # inherit the env, so reverse the within-shard plan order here too.
-    if os.environ.get("SPARK_GRAFT_BENCH_ORDER", "normal") == "reversed":
-        plans = plans[::-1]
-        e2e_names = e2e_names[::-1]
-    per_query, e2e = _run_shard(spark, sf_dir, plans, e2e_names, reps, e2e_reps, isolate)
-    print(json.dumps({"queries": per_query, "e2e": e2e}))
-    spark.stop()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    # Experiment knobs (PLANS.md "bench drift" note): ORDER=reversed re-runs
-    # the suite back-to-front; ONLY=a,b times just those queries (in-process,
-    # the fast iteration loop); ISOLATE=0 disables the between-query
-    # cache/GC reset; SHARD_SIZE=0 forces the old single-JVM in-process run.
-    order = os.environ.get("SPARK_GRAFT_BENCH_ORDER", "normal")
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    isolate = os.environ.get("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    # e2e default raised 2→3 in r9: min-of-2 left the whole-invocation
-    # entries exposed to single-GC-pause outliers (four ambient guard
-    # firings in r8, all dissolving under isolated REPS=10)
-    e2e_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_E2E_REPS", "3")))
-    shard_size = int(os.environ.get("SPARK_GRAFT_BENCH_SHARD_SIZE", "10"))
 
     if os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "1":
-        _child_main(sf_dir, (only or "").split(","), reps, e2e_reps, isolate)
+        # shard subprocess: time the named entries in a FRESH JVM and print
+        # the partial result as one JSON line (captured by the orchestrator)
+        spark = get_spark(app_name="chatdata_spark_bench_shard")
+        spark.sparkContext.setLogLevel("ERROR")
+        per_query, e2e = _run_shard(spark, sf_dir, (only or "").split(","), reps)
+        print(json.dumps({"queries": per_query, "e2e": e2e}))
+        spark.stop()
         return
 
     all_names = HEADLINE + list(EXTRA) + E2E
-    if order == "reversed":
-        all_names = all_names[::-1]
     if only:
-        keep = {s.strip() for s in only.split(",")}
-        all_names = [n for n in all_names if n in keep]
+        wanted = [s.strip() for s in only.split(",")]
+        unknown = [n for n in wanted if n not in all_names and n not in queries()]
+        if unknown:
+            print(f"bench: unknown entries skipped: {unknown}", file=sys.stderr)
+        all_names = [n for n in wanted if n not in unknown]
 
     # Guard baseline = the COMMITTED artifact (r11 verdict item 8): the
     # driver's post-close lower-core-count bench run overwrites the
@@ -1161,33 +1153,23 @@ def main() -> None:
     per_query: dict[str, float] = {}
     e2e: dict[str, float] = {}
     shard_ctx: list = []  # (label, median ratio vs committed, e2e names)
-    if only or shard_size <= 0 or len(all_names) <= shard_size:
+    if only or len(all_names) <= SHARD_SIZE:
         # in-process (iteration loop / tiny suites): one JVM, no sharding
         spark = get_spark(app_name="chatdata_spark_bench")
         spark.sparkContext.setLogLevel("ERROR")
-        qs = queries()
-        spark.range(1_000_000).selectExpr("sum(id)").collect()
-        bench_ann_ivf_pruned(spark, sf_dir).count()
-        keep = set(all_names)
-        plans = [(n, qs[n]) for n in HEADLINE if n in keep]
-        plans += [(n, f) for n, f in EXTRA.items() if n in keep]
-        if order == "reversed":
-            plans = plans[::-1]
-        per_query, e2e = _run_shard(
-            spark, sf_dir, plans, [n for n in E2E if n in keep], reps, e2e_reps, isolate
-        )
+        per_query, e2e = _run_shard(spark, sf_dir, all_names, reps)
         spark.stop()
     else:
         # Fresh-JVM sharding (r6 verdict item 2): at 90+ entries one JVM's
         # late-suite GC/cache pressure inflated mid/late timings 2-3x over
-        # isolated runs. Each shard of ≤shard_size entries runs in its own
+        # isolated runs. Each shard of ≤SHARD_SIZE entries runs in its own
         # subprocess JVM, so every entry measures within a short-lived,
         # freshly-warmed session — the isolated-min-of-3 methodology, paid
         # for with ~15 s JVM startup per shard.
         import subprocess
 
         shards = [
-            all_names[i : i + shard_size] for i in range(0, len(all_names), shard_size)
+            all_names[i : i + SHARD_SIZE] for i in range(0, len(all_names), SHARD_SIZE)
         ]
         failed_shards = []
         for shard in shards:
@@ -1236,8 +1218,8 @@ def main() -> None:
         "unit": "sec",
         "sf": sf,
         "reps": reps,
-        "e2e_reps": e2e_reps,
-        "shard_size": shard_size,
+        "e2e_reps": reps,
+        "shard_size": SHARD_SIZE,
         # provenance tag (r11 verdict item 8): identifies a stray
         # lower-core-count driver overwrite at a glance
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),

@@ -149,11 +149,16 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict
     }
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> None:
+def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
     """Register each test table as a temp view so ``spark.sql`` entry points
-    (Vector SQL dialect, plain SQL) see the same names DuckDB's oracle does."""
-    for n, df in load_tables(spark, sf_dir, names).items():
+    (Vector SQL dialect, plain SQL) see the same names DuckDB's oracle does.
+    The only place a fixture-table view is defined (a static test pins it),
+    so every query's ``events`` / ``documents`` / ... view is the same read.
+    Returns the registered frames."""
+    tables = load_tables(spark, sf_dir, names)
+    for n, df in tables.items():
         df.createOrReplaceTempView(n)
+    return tables
 
 
 # --- Reference-shaped table configs (SURVEY §1.2) ---------------------------

@@ -48,10 +48,6 @@ def embedder_udf(name: str, dim: int):
     return factory(dim)
 
 
-def registered() -> tuple[str, ...]:
-    return tuple(_EMBEDDERS)
-
-
 # UDF-object memoization (the CacheManager plan-equality rule, project
 # notes): a fresh @pandas_udf per call makes otherwise-identical plans
 # unequal, so persisted tables re-compute on every invocation.

@@ -2,11 +2,12 @@
 extension; the reference's only text processing is the ≥10-word
 NarrativeText filter at upload, tools.py:42 — covered in sources/ingest.py).
 
-Everything here is a plain Column expression (JVM-side, codegen-friendly,
-no UDF): language-ID by stopword intersection, quality scoring from
-length/punct/digit/stopword ratios, whitespace + BPE-ish token counting,
-and content fingerprints. Deterministic by construction — the DuckDB
-oracles recompute the identical arithmetic.
+Everything here is built from plain Column expressions (JVM-side,
+codegen-friendly, no UDF). :func:`text_features` is the one definition of
+the per-document profile: language-ID by stopword intersection, quality
+scoring from length/punct/digit/stopword ratios, whitespace + BPE-ish
+token counts and the sha256 content fingerprint. Deterministic by
+construction — the DuckDB oracles recompute the identical arithmetic.
 
 At 100 TB these run inside the scan stage as narrow projections: no
 shuffle, no Python workers, prunable to the text column alone.
@@ -15,7 +16,7 @@ shuffle, no Python workers, prunable to the text column alone.
 from __future__ import annotations
 
 import pandas as pd  # module-top: pandas_udf type hints resolve against it
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny fixed stopword lists — enough to separate the test corpus's languages;
@@ -44,24 +45,10 @@ def words(col) -> Column:
     return F.split(norm_text(col), " ")
 
 
-def token_count_ws(col) -> Column:
-    """Whitespace token count."""
-    return F.size(words(col))
-
-
 def token_count_bpe(col) -> Column:
     """BPE-ish token count via the pre-tokenizer regex."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(c, F.lit(BPE_PATTERN))
-
-
-def stopword_hits(col, lang: str) -> Column:
-    """Distinct stopwords of ``lang`` present in the text."""
-    return F.size(
-        F.array_intersect(
-            F.array_distinct(words(col)), F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        )
-    )
 
 
 def predict_lang_from_scores(scores: list[tuple[str, Column]]) -> Column:
@@ -85,62 +72,69 @@ def predict_lang_from_scores(scores: list[tuple[str, Column]]) -> Column:
     return expr.otherwise(F.lit("unknown"))
 
 
-def predict_lang(col) -> Column:
-    """Convenience inline form of :func:`predict_lang_from_scores`."""
-    return predict_lang_from_scores([(lang, stopword_hits(col, lang)) for lang in LANG_PRIORITY])
-
-
 def stopword_hits_from_dwords(dwords: Column, lang: str) -> Column:
     """Stopword hits from a materialized distinct-words array column."""
     return F.size(F.array_intersect(dwords, F.array(*[F.lit(w) for w in STOPWORDS[lang]])))
 
 
-def punct_ratio(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    removed = F.length(F.regexp_replace(c, PUNCT_CLASS, ""))
-    return F.when(n > 0, (n - removed) / n).otherwise(F.lit(0.0))
+def text_features(df: DataFrame) -> DataFrame:
+    """The per-document profile of ``df``'s ``text`` column as layered
+    projections: normalize once, split once, distinct once, then every
+    feature reads materialized columns — inline expressions would be
+    re-evaluated per reference in the langid CASE chain / quality formula
+    (same O(n²)-inlining trap as dedup shingling).
 
-
-def digit_ratio(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    removed = F.length(F.regexp_replace(c, r"[0-9]", ""))
-    return F.when(n > 0, (n - removed) / n).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col) -> Column:
-    """All-language stopword tokens / total tokens (a fluency proxy)."""
-    all_stops = sorted({w for ws in STOPWORDS.values() for w in ws})
-    hits = F.size(
-        F.filter(words(col), lambda w: w.isin(*all_stops))
-    )
-    return hits / token_count_ws(col)
-
-
-def quality_score(col, round_digits: int = 6) -> Column:
-    """Composite quality in [0,1]:
+    Adds ``pred_lang`` (stopword-intersection language ID,
+    :data:`LANG_PRIORITY` tie-break, 'unknown' with no hits),
+    ``quality`` (composite in [0,1]:
     0.3·min(n_words/100, 1) + 0.4·min(4·stop_ratio, 1)
-    + 0.2·(1-punct_ratio) + 0.1·(1-digit_ratio)
-    — fixed operand order so the oracle reproduces it bit-for-bit."""
-    nw = token_count_ws(col).cast("double")
-    length_term = F.least(nw / F.lit(100.0), F.lit(1.0))
-    stop_term = F.least(stopword_ratio(col) * F.lit(4.0), F.lit(1.0))
-    score = (
-        length_term * F.lit(0.3)
-        + stop_term * F.lit(0.4)
-        + (F.lit(1.0) - punct_ratio(col)) * F.lit(0.2)
-        + (F.lit(1.0) - digit_ratio(col)) * F.lit(0.1)
+    + 0.2·(1-punct_ratio) + 0.1·(1-digit_ratio), fixed operand order so
+    the oracle reproduces it bit-for-bit), ``fp`` (sha256 hex of the
+    normalized text — the reference's entity_id convention,
+    tools.py:35-37, applied to content) and the intermediate columns
+    ``__norm``, ``__w``, ``__dw``, ``__nw`` (whitespace token count),
+    ``__bpe`` (BPE-ish token count), ``__s_<lang>``, ``__stop_hits``,
+    ``__punct`` and ``__digit``."""
+    t = F.col("text")
+    prep = (
+        df.withColumn("__norm", norm_text(t))
+        .withColumn("__w", F.split("__norm", " "))
+        .withColumn("__dw", F.array_distinct("__w"))
+        .withColumn("__nw", F.size("__w"))
     )
-    # NULL/blank text must not score: least() IGNORES null operands
-    # (least(NULL, 1.0) = 1.0), which would give empty docs a perfect score.
-    return F.when(norm_text(col) != "", F.round(score, round_digits)).otherwise(F.lit(0.0))
-
-
-def fingerprint_sha256(col) -> Column:
-    """Content fingerprint: sha256 hex of the normalized text (the
-    reference's entity_id convention, tools.py:35-37, applied to content)."""
-    return F.sha2(norm_text(col), 256)
+    all_stops = sorted({w for ws in STOPWORDS.values() for w in ws})
+    feats = prep.withColumns(
+        {
+            **{f"__s_{lang}": stopword_hits_from_dwords(F.col("__dw"), lang) for lang in LANG_PRIORITY},
+            "__stop_hits": F.size(F.filter("__w", lambda w: w.isin(*all_stops))),
+            "__bpe": token_count_bpe(t),
+            "__punct": F.when(
+                F.length(t) > 0,
+                (F.length(t) - F.length(F.regexp_replace(t, PUNCT_CLASS, ""))) / F.length(t),
+            ).otherwise(F.lit(0.0)),
+            "__digit": F.when(
+                F.length(t) > 0,
+                (F.length(t) - F.length(F.regexp_replace(t, r"[0-9]", ""))) / F.length(t),
+            ).otherwise(F.lit(0.0)),
+        }
+    )
+    quality = (
+        F.least(F.col("__nw").cast("double") / F.lit(100.0), F.lit(1.0)) * F.lit(0.3)
+        + F.least((F.col("__stop_hits") / F.col("__nw")) * F.lit(4.0), F.lit(1.0)) * F.lit(0.4)
+        + (F.lit(1.0) - F.col("__punct")) * F.lit(0.2)
+        + (F.lit(1.0) - F.col("__digit")) * F.lit(0.1)
+    )
+    return feats.withColumns(
+        {
+            "pred_lang": predict_lang_from_scores(
+                [(lang, F.col(f"__s_{lang}")) for lang in LANG_PRIORITY]
+            ),
+            # NULL/blank text must not score: least() IGNORES null operands
+            # (least(NULL, 1.0) = 1.0), which would give empty docs a perfect score.
+            "quality": F.when(F.col("__norm") != "", F.round(quality, 6)).otherwise(F.lit(0.0)),
+            "fp": F.sha2("__norm", 256),
+        }
+    )
 
 
 def fingerprint_rolling64(col) -> Column:

@@ -68,15 +68,6 @@ def cosine_distance(a, b) -> Column:
     return F.lit(1.0) - dot_product(a, b) / (vector_norm(a) * nb)
 
 
-def cosine_similarity(a, b) -> Column:
-    """dot(a,b) / (|a|·|b|), float64 — computed DIRECTLY (not as
-    ``1 - cosine_distance``): the double subtraction ``1 - (1 - x)`` is not
-    bit-exact for all x, and oracle engines (DuckDB
-    ``list_cosine_similarity``) compute the direct form — same operand
-    order both sides is the repo's determinism rule."""
-    return dot_product(a, b) / (vector_norm(a) * vector_norm(b))
-
-
 def l2_distance(a, b) -> Column:
     a, b = _as_double_array(a), _as_double_array(b)
     return F.sqrt(

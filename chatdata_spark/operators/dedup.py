@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 
 from chatdata_spark.session import local_frame
 
-LONG_MAX = 9223372036854775807
-
 
 # --- building blocks ----------------------------------------------------------
 
@@ -83,8 +81,8 @@ def shingle_hashes_col(word_hashes, k: int = 3) -> Column:
 
 _SHINGLE_UDFS: dict[int, object] = {}
 
-# jaccard stop-set statistics, keyed (input semanticHash, k, max_df) — see
-# jaccard_similarity_join: repeated plan constructions reuse the collected set.
+# stop-set statistics, keyed (input semanticHash, k, max_df) — see
+# _stop_set: repeated plan constructions reuse the collected set.
 # STATIC-DATA ASSUMPTION: semanticHash covers the PLAN (paths, filters), not
 # file contents — if data under the same path changes mid-session, the stale
 # stop set silently persists. That matches the table-statistics contract
@@ -236,21 +234,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_signature(shingles, num_hashes: int = 128) -> Column:
-    """MinHash signature, all-JVM variant: per hash seed i, min over
-    shingles of xxhash64(i, shingle). Correct but interpreted (nested
-    higher-order lambdas don't codegen): O(H·S) lambda frames per row makes
-    it ~50× slower than :func:`minhash_band_keys_udf` — kept for reference
-    and tiny inputs; the LSH operator uses the vectorized path."""
-    sh = F.col(shingles) if isinstance(shingles, str) else shingles
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(num_hashes)),
-        lambda i: F.aggregate(
-            sh, F.lit(LONG_MAX), lambda acc, s: F.least(acc, F.xxhash64(i, s))
-        ),
-    )
-
-
 def minhash_band_keys_udf(num_hashes: int = 128, rows_per_band: int = 2):
     """Arrow-vectorized MinHash: token hashes (already xxhash64'd JVM-side)
     → H-permutation signature via a fixed universal hash family
@@ -344,23 +327,33 @@ def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str, keep: str = 
 
 # --- exact similarity join (inverted-index / token join) ------------------------
 
-def _stop_shingles(tokens: DataFrame, max_df: int | float, n_docs_df: DataFrame | None = None):
-    """Shingles whose document frequency exceeds ``max_df`` (absolute int,
-    or fraction of the corpus if float). Returns a 1-column DF of shingle
-    hashes — SMALL by construction (heavy hitters only), so it broadcasts;
-    the survivors (≈ the whole vocabulary) are never collected anywhere.
-    ``n_docs_df``: optional pre-computed 1-row ``__n_docs`` count (cheaper
-    than re-deriving it from the exploded token stream)."""
-    freq = tokens.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    if isinstance(max_df, float):
-        # lazy scalar: 1-row doc count broadcast-joined, no driver action
-        if n_docs_df is None:
-            n_docs_df = tokens.select("id").distinct().agg(F.count(F.lit(1)).alias("__n_docs"))
-        limit = F.greatest(F.ceil(F.lit(max_df) * F.col("__n_docs")), F.lit(2))
-        return (
-            freq.crossJoin(F.broadcast(n_docs_df)).filter(F.col("df") > limit).select("shingle")
-        )
-    return freq.filter(F.col("df") > max_df).select("shingle")
+def _stop_set(base: DataFrame, k: int, max_df: int | float) -> list[int]:
+    """Shingle hashes whose document frequency exceeds ``max_df`` (absolute
+    int, or fraction of the corpus if float, min 2 docs) over a
+    ``_with_shingle_hashes`` table — the stop set every stop-split join
+    uses. A bounded statistics pass collected driver-side (|stop| ≤
+    avg_doc_size/max_df, corpus-size-free), memoized per (input plan, k,
+    max_df) like the pandas UDFs, so repeated plan constructions over the
+    same input (warm+timed bench runs, driver compare) cost zero extra
+    jobs."""
+    stop_key = (base.semanticHash(), k, max_df)
+    stops = _STOP_SETS.get(stop_key)
+    if stops is None:
+        if isinstance(max_df, float):
+            cap = max(int(-(-max_df * base.count() // 1)), 2)  # ceil, min 2
+        else:
+            cap = max_df
+        stops = [
+            r[0]
+            for r in base.select(F.explode("shh").alias("shingle"))
+            .groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > cap)
+            .select("shingle")
+            .collect()
+        ]
+        _memo_put(_STOP_SETS, stop_key, stops)
+    return stops
 
 
 def jaccard_similarity_join(
@@ -415,30 +408,7 @@ def jaccard_similarity_join(
     base = _with_shingle_hashes(df, id_col, text_col, k, persist=True)
     tokens = base.select("id", F.explode("shh").alias("shingle"))
     tl = F.lit(float(threshold))
-    stops: list[int] = []
-    if max_df is not None:
-        # Memoized per (input plan, k, max_df): the statistics pass is a
-        # bounded two-job scan of the signature table — cache it like the
-        # pandas UDFs so repeated plan constructions over the same input
-        # (warm+timed bench runs, driver compare) cost zero extra jobs.
-        stop_key = (base.semanticHash(), k, max_df)
-        cached = _STOP_SETS.get(stop_key)
-        if cached is not None:
-            stops = cached
-        else:
-            if isinstance(max_df, float):
-                cap = max(int(-(-max_df * base.count() // 1)), 2)  # ceil, min 2
-            else:
-                cap = max_df
-            stops = [
-                r[0]
-                for r in tokens.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > cap)
-                .select("shingle")
-                .collect()
-            ]
-            _memo_put(_STOP_SETS, stop_key, stops)
+    stops = _stop_set(base, k, max_df) if max_df is not None else []
     # size-dispatched split: InSet below STOP_INSET_MAX, broadcast
     # anti/semi joins above (identical contents, flat plan at any |stop|)
     nonstop, docs = _split_stop_tokens(base, tokens, stops)
@@ -519,26 +489,7 @@ def containment_join(
     base = _with_shingle_hashes(df, id_col, text_col, k, persist=True)
     tokens = base.select("id", F.explode("shh").alias("shingle"))
     tl = F.lit(float(threshold))
-    stops: list[int] = []
-    if max_df is not None:
-        stop_key = (base.semanticHash(), k, max_df)
-        cached = _STOP_SETS.get(stop_key)
-        if cached is not None:
-            stops = cached
-        else:
-            if isinstance(max_df, float):
-                cap = max(int(-(-max_df * base.count() // 1)), 2)  # ceil, min 2
-            else:
-                cap = max_df
-            stops = [
-                r[0]
-                for r in tokens.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > cap)
-                .select("shingle")
-                .collect()
-            ]
-            _memo_put(_STOP_SETS, stop_key, stops)
+    stops = _stop_set(base, k, max_df) if max_df is not None else []
     nonstop, docs = _split_stop_tokens(base, tokens, stops)
     buckets = (
         nonstop.groupBy("shingle")
@@ -644,23 +595,7 @@ def prefix_filter_jaccard_join(
     tl = F.lit(float(threshold))
     plen = (F.col("sz") - F.ceil(tl * F.col("sz") - F.lit(1e-9)) + 1).cast("int")
     if order == "hash":
-        stop_key = (base.semanticHash(), k, max_df)
-        stops = _STOP_SETS.get(stop_key)
-        if stops is None:
-            if isinstance(max_df, float):
-                cap = max(int(-(-max_df * base.count() // 1)), 2)  # ceil, min 2
-            else:
-                cap = max_df
-            stops = [
-                r[0]
-                for r in base.select(F.explode("shh").alias("shingle"))
-                .groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > cap)
-                .select("shingle")
-                .collect()
-            ]
-            _memo_put(_STOP_SETS, stop_key, stops)
+        stops = _stop_set(base, k, max_df)
         if stops:
             # struct sort key (is_hot, hash): native struct ordering, the
             # InSet probe is the only per-element work. NB this arm keeps

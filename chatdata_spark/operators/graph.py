@@ -230,7 +230,6 @@ def random_walks(
     dst: str = "dst",
     steps: int = 6,
     salt: str = "walk",
-    prune_frontier: bool = False,
 ) -> DataFrame:
     """DeepWalk-style walk corpus → (walk_id, step, node): one walk per
     start node, ``steps`` uniform neighbor hops. The training-data op for
@@ -253,24 +252,16 @@ def random_walks(
     of the frontier on (node, idx) — frontier-sized, never corpus-sized,
     no per-walk driver state.
 
-    MEASURED posture (tools/walk_posture_probe.py, sf0.1, 1.17M edges):
-    wall-clock is ~flat in the start-set size — 32 starts 3.98 s, 1,000
-    starts 3.71 s, 15,999 starts 5.94 s (16x starts → 1.6x) — because the
-    per-hop edge pass dominates. Walking from EVERY node (the DeepWalk
-    corpus posture, Perozzi et al.) therefore amortizes it: per-walk cost
-    drops ~400x between the 32-start and all-node runs. The flip side is
-    that a SMALL seed set pays nearly the full corpus cost.
-    ``prune_frontier=True`` broadcast-semi-joins the indexed edge table
-    down to the frontier's sources before each hop, trading the per-hop
-    index SHUFFLE for an extra scan-stage pass over the checkpointed
-    index. Measured honestly at sf0.1 it does NOT pay (32 starts: 6.29 s
-    pruned vs 4.28 s plain — at 1.17M edges the shuffle it saves is
-    cheaper than the pass it adds); it is the right shape only where the
-    per-hop exchange dominates, i.e. edge tables orders of magnitude
-    past executor memory. Default off; output is bit-identical either
-    way (pinned by test_random_walks_prune_frontier_is_pure_optimization). Each frontier is PERSISTED (lazily): the
-    output union's step-k branch builds on the step-(k-1) cache instead
-    of re-running hops 1..k-1 — without it the union re-evaluates
+    MEASURED posture (PLANS.md "all-node random-walk posture", sf0.1,
+    1.17M edges): wall-clock is ~flat in the start-set size — 32 starts
+    3.98 s, 1,000 starts 3.71 s, 15,999 starts 5.94 s (16x starts → 1.6x)
+    — because the per-hop edge pass dominates. Walking from EVERY node
+    (the DeepWalk corpus posture, Perozzi et al.) therefore amortizes it:
+    per-walk cost drops ~400x between the 32-start and all-node runs. The
+    flip side is that a SMALL seed set pays nearly the full corpus cost.
+
+    Each frontier is PERSISTED (lazily): the output union's step-k branch
+    builds on the step-(k-1) cache instead of re-running hops 1..k-1 — without it the union re-evaluates
     O(steps²/2) hop joins and re-derives the start set once per branch.
     The whole corpus still materializes in one lazy job (no eager work at
     plan-build time beyond the one-time edge indexing). Per-hop cost is
@@ -316,13 +307,8 @@ def random_walks(
             ).cast("bigint")
             % F.col("deg")
         )
-        hop_edges = indexed
-        if prune_frontier:
-            hop_edges = indexed.join(
-                F.broadcast(cur.select(F.col("node").alias("src")).distinct()),
-                "src",
-                "left_semi",
-            )
+        # NOTE (measured-and-rejected): semi-joining the index to the frontier's
+        # sources before each hop cost 6.29 s vs 4.28 s plain (sf0.1, 32 starts).
         # NOTE (r11 optimization round, measured-and-rejected): resolving
         # the picked index against a degree view first and equi-joining on
         # (src, idx) — either sort-merge or shuffled-hash — measured 1.4-
@@ -330,7 +316,7 @@ def random_walks(
         # runs: the two-key join forces a per-hop sort/exchange of the
         # edge table, which costs more than the fan-out rows it avoids.
         cur = (
-            cur.join(hop_edges, F.col("node") == F.col("src"))
+            cur.join(indexed, F.col("node") == F.col("src"))
             .filter(F.col("idx") == pick)
             .select("walk_id", F.lit(k).alias("step"), F.col("dst").alias("node"))
             .persist(StorageLevel.MEMORY_AND_DISK)

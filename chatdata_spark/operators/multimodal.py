@@ -123,45 +123,6 @@ def extract_features(media_df: DataFrame, dim: int = FEAT_DIM, featurizer=None) 
     return media_df.mapInPandas(gen, "media_id bigint, features array<float>")
 
 
-def resize_stub(media_df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize plumbing: binary→binary pass-through with updated metadata
-    (a real impl re-encodes pixels; the schema contract is identical)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": pdf["content"],
-                    "media_type": pdf["media_type"],
-                    "width": np.full(len(pdf), target_w, dtype="int32"),
-                    "height": np.full(len(pdf), target_h, dtype="int32"),
-                }
-            )
-
-    return media_df.mapInPandas(
-        gen, "media_id bigint, content binary, media_type string, width int, height int"
-    )
-
-
-def frame_sample(media_df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame index —
-    a 1→N mapInPandas expansion (the real decoder yields frame bytes)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["content"].map(len).astype("int64")
-            rows = []
-            for mid, frames in zip(pdf["media_id"], 1 + n % 30):
-                for f in range(0, int(frames), every_n):
-                    rows.append((int(mid), f))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx"])
-
-    return media_df.filter(F.col("media_type") == "video").mapInPandas(
-        gen, "media_id bigint, frame_idx int"
-    )
-
-
 def docs_as_media(spark, sf_dir: str) -> DataFrame:
     """Adapter: treat the documents table's text bytes as opaque media
     binaries (deterministic test corpus for the pipeline — real deployments

@@ -42,16 +42,6 @@ def hist_counts(
     )
 
 
-def merge_hist(*hists: DataFrame) -> DataFrame:
-    """Union partial histograms (e.g. incremental refreshes) into one
-    mergeable state — counts simply add."""
-    out = hists[0]
-    for h in hists[1:]:
-        out = out.unionByName(h)
-    keys = [c for c in out.columns if c not in ("cnt",)]
-    return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
-
-
 def quantiles_from_hist(
     hist: DataFrame,
     group_cols: list[str],

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from chatdata_spark.catalog import AttributeInfo, load_events
+from chatdata_spark.catalog import AttributeInfo, load_events, register_views
 from chatdata_spark.functions.vector import hash_embed
 from chatdata_spark.operators.knn import knn
 from chatdata_spark.plans.self_query import SelfQueryCompiler, and_, eq, gt, like, or_
@@ -82,7 +82,7 @@ def dialect_order_alias(spark, sf_dir):
     """The reference's exact kNN template shape — alias defined inside
     ORDER BY (myscale_without_metadata.py:29-34) — hoisted into the SELECT
     list by the pre-pass."""
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").createOrReplaceTempView("embeddings")
+    register_views(spark, sf_dir, ["embeddings"])
     ch_sql = """
     SELECT vec_id, label FROM embeddings
     PREWHERE label != 7
@@ -106,7 +106,7 @@ def dialect_scalar_parity(spark, sf_dir):
     """§2.9 ClickHouse scalar parity via the rename pass: groupArray,
     arrayMax, JSONExtractString, toInt64, count() — executed as
     collect_list / array_max / get_json_object / CAST / count(*)."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_type,
            arrayMax(groupArray(toInt64(JSONExtractString(props, 'k')))) AS max_k,
@@ -131,7 +131,7 @@ def dialect_array_map(spark, sf_dir):
     arrayStringConcat. The final arrayStringConcat keeps the driver output
     list-free (its canonicalizer can't sort array cells); the raw arrayMap
     output is asserted in tests/test_vector_sql_dialect.py."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, ["documents"])
     ch_sql = """
     SELECT doc_id,
            arrayStringConcat(arrayMap(w -> upper(w), splitByChar(' ', text)), ' ') AS words_up,
@@ -199,7 +199,7 @@ def self_query_knn(spark, sf_dir):
 def dialect_array_functions(spark, sf_dir):
     """§2.9 parity sweep: arrayFilter, arraySum, lowerUTF8, notEmpty,
     toFloat64 — one canned ClickHouse query through the rename pass."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, ["documents"])
     ch_sql = """
     SELECT doc_id,
            toInt32(length(arrayFilter(w -> length(w) > 5, splitByChar(' ', lowerUTF8(text))))) AS n_long_words,
@@ -228,7 +228,7 @@ def dialect_parity_extended(spark, sf_dir):
     """§2.9 parity sweep #2: arrayCount/arrayExists (lambda-first arg
     order), arraySort/arrayDistinct/arraySlice, indexOf, position,
     replaceAll, startsWith — through the rename pass."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, ["documents"])
     ch_sql = """
     SELECT doc_id,
            toInt32(arrayCount(w -> startsWith(w, 't'), splitByChar(' ', text))) AS n_t_words,
@@ -256,7 +256,7 @@ def dialect_conditional_aggs(spark, sf_dir):
     """§2.9 parity sweep #3: countIf / sumIf / ifNull through the rename
     pass (sumIf through the exact-decimal convention so both engines sum
     identically)."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_type,
            countIf(value > 50.0) AS n_big,
@@ -285,8 +285,7 @@ def routed_index_knn(spark, sf_dir):
     from chatdata_spark.operators.ivf import build_or_load_ivf
     from chatdata_spark.plans.router import VectorQueryRouter
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    emb.createOrReplaceTempView("embeddings")
+    emb = register_views(spark, sf_dir, ["embeddings"])["embeddings"]
     from chatdata_spark.catalog import shared_cache_path
 
     idx = build_or_load_ivf(spark, emb, shared_cache_path("ivf", sf_dir, "k8"), "vec_id", "embedding", 8)
@@ -432,7 +431,7 @@ def dialect_parity_datetime_bits(spark, sf_dir):
     explicit mode 1 = ISO Monday-start) / leftPad / bitAnd / bitOr /
     bitXor / match / splitByString (literal delimiter regex-quoted for
     Spark's regex split) through the rename pass."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_id,
            toQuarter(ts) AS q,
@@ -485,7 +484,7 @@ def dialect_parity_sweep5(spark, sf_dir):
     JSONExtractString / JSONExtractInt / bitShiftLeft /
     bitShiftRight / multiIf, all through the rename pass over real event
     rows."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_id,
            toYYYYMM(ts) AS ym,
@@ -547,9 +546,7 @@ def dialect_parity_sweep6(spark, sf_dir):
     all through the rename pass over lineitem. Money-style sum goes
     through the exact DECIMAL convention; counts pinned BIGINT both
     sides (HUGEINT sweep guard)."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
-        "lineitem"
-    )
+    register_views(spark, sf_dir, ["lineitem"])
     ch_sql = """
     SELECT l_returnflag,
            minIf(l_quantity, l_discount > 0.05) AS min_q_disc,
@@ -595,7 +592,7 @@ def dialect_parity_sweep7(spark, sf_dir):
     toRelativeDayNum (whole-epoch integer division — the FLOOR(epoch)
     CLAUDE.md rule on the oracle side) / countMatches (regexp_count) /
     concatWithSeparator (concat_ws), over real event rows."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_id,
            formatDateTime(ts, '%Y-%m-%d %H:%i:%S') AS fmt_full,
@@ -656,7 +653,7 @@ def dialect_parity_sweep8(spark, sf_dir):
     driver-hashability rule); oracle array legs use closed forms over
     n = digit count (cumsum of [1..n-1,9] is triangular numbers;
     compact of [i div 2] is [0..n div 2])."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_id,
            toInt32(bitCount(event_id)) AS bits,
@@ -730,7 +727,7 @@ def dialect_parity_sweep9(spark, sf_dir):
     canonicalized with array_sort on both sides) / splitByWhitespace,
     over real event rows. Array outputs serialized per the sweep5
     driver-hashability rule."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_id,
            trimLeft(concat('  ', event_type)) AS tl,
@@ -855,7 +852,7 @@ def dialect_parity_sweep10(spark, sf_dir):
     addQuarters + subtractQuarters + subtractMinutes + subtractSeconds +
     subtractYears — ~26 more renames over real event rows; multiIf
     drives the float-classification branches."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    register_views(spark, sf_dir, ["events"])
     ch_sql = """
     SELECT event_id,
            toInt64(plus(multiply(event_id, 3), minus(event_id, 7))) AS ar,

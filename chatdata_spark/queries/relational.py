@@ -745,8 +745,9 @@ def cube_docs(spark, sf_dir):
 def correlated_subquery(spark, sf_dir):
     """Correlated scalar subquery through spark.sql — Catalyst decorrelates
     to an aggregate + outer join (SURVEY §4 'subquery decorrelation')."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    from chatdata_spark.catalog import register_views
+
+    register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(
         """
         SELECT c_custkey, c_name,

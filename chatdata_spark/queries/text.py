@@ -8,64 +8,24 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from chatdata_spark.functions.text import (
-    BPE_PATTERN,
-    PUNCT_CLASS,
     STOPWORDS,
     fingerprint_rolling64,
     fingerprint_rolling64_md5,
-    norm_text,
-    predict_lang_from_scores,
-    stopword_hits_from_dwords,
+    text_features,
 )
 from chatdata_spark.registry import query
 from chatdata_spark.session import local_frame
 
 
 def _profile_frame(spark, sf_dir):
-    """Layered projections: normalize once, split once, distinct once, then
-    every feature reads materialized columns — inline expressions would be
-    re-evaluated per reference in the langid CASE chain / quality formula
-    (same O(n²)-inlining trap as dedup shingling). Also spreads the
-    single-file local read across cores."""
+    """:func:`text_features` over the documents table, spread first so the
+    single-file local read uses every core."""
     from chatdata_spark.operators.dedup import _spread
 
-    d = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "source", "text"))
-    prep = (
-        d.withColumn("__norm", norm_text("text"))
-        .withColumn("__w", F.split("__norm", " "))
-        .withColumn("__dw", F.array_distinct("__w"))
-        .withColumn("__nw", F.size("__w"))
+    return text_features(
+        _spread(spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "source", "text"))
     )
-    all_stops = sorted({w for ws in STOPWORDS.values() for w in ws})
-    feats = prep.withColumns(
-        {
-            **{f"__s_{lang}": stopword_hits_from_dwords(F.col("__dw"), lang) for lang in STOPWORDS},
-            "__stop_hits": F.size(F.filter("__w", lambda w: w.isin(*all_stops))),
-            "__bpe": F.regexp_count("text", F.lit(BPE_PATTERN)),
-            "__punct": F.when(
-                F.length("text") > 0,
-                (F.length("text") - F.length(F.regexp_replace("text", PUNCT_CLASS, ""))) / F.length("text"),
-            ).otherwise(F.lit(0.0)),
-            "__digit": F.when(
-                F.length("text") > 0,
-                (F.length("text") - F.length(F.regexp_replace("text", r"[0-9]", ""))) / F.length("text"),
-            ).otherwise(F.lit(0.0)),
-        }
-    )
-    quality = (
-        F.least(F.col("__nw").cast("double") / F.lit(100.0), F.lit(1.0)) * F.lit(0.3)
-        + F.least((F.col("__stop_hits") / F.col("__nw")) * F.lit(4.0), F.lit(1.0)) * F.lit(0.4)
-        + (F.lit(1.0) - F.col("__punct")) * F.lit(0.2)
-        + (F.lit(1.0) - F.col("__digit")) * F.lit(0.1)
-    )
-    return feats.withColumns(
-        {
-            "pred_lang": predict_lang_from_scores(
-                [(lang, F.col(f"__s_{lang}")) for lang in STOPWORDS]
-            ),
-            "quality": F.when(F.col("__norm") != "", F.round(quality, 6)).otherwise(F.lit(0.0)),
-        }
-    )
+
 
 # ---- DuckDB building blocks (mirror functions/text.py) ----------------------
 
@@ -130,7 +90,7 @@ def text_profile(spark, sf_dir):
         F.col("__bpe").cast("int").alias("n_tokens"),
         "pred_lang",
         "quality",
-        F.sha2("__norm", 256).alias("fp"),
+        "fp",
     ).orderBy("doc_id")
 
 
@@ -372,7 +332,7 @@ def corpus_report_docs(spark, sf_dir):
             / F.count(F.lit(1))
         ).alias("avg_quality"),
         F.count_distinct("pred_lang").cast("double").alias("n_langs"),
-        (F.count(F.lit(1)) - F.count_distinct(F.sha2("__norm", 256)))
+        (F.count(F.lit(1)) - F.count_distinct("fp"))
         .cast("double")
         .alias("exact_dup_docs"),
         F.sum(F.when(F.length("text") < 120, 1).otherwise(0)).cast("double").alias("short_docs"),

@@ -268,6 +268,7 @@ def _funnel_page(spark, sf_dir):
     """Funnel stages 1-4 (routed ANN screen, BM25 screen, RRF fusion,
     rerank) → the ≤20-row (doc_id, rrf, rerank_score) page — the
     corpus-touching part of retrieval_funnel_docs, pre-checkpoint."""
+    from chatdata_spark.catalog import register_views, shared_cache_path
     from chatdata_spark.operators.ivf import build_or_load_ivf
     from chatdata_spark.operators.textsearch import rerank_topk
     from chatdata_spark.plans.router import VectorQueryRouter
@@ -275,12 +276,8 @@ def _funnel_page(spark, sf_dir):
 
     terms = FUNNEL_Q.split()
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
     # 1. routed ANN screen (same shared index the dialect queries build)
-    emb.createOrReplaceTempView("embeddings")
-    from chatdata_spark.catalog import shared_cache_path
-
+    emb = register_views(spark, sf_dir, ["embeddings"])["embeddings"]
     idx = build_or_load_ivf(
         spark, emb, shared_cache_path("ivf", sf_dir, "k8"), "vec_id", "embedding", 8
     )

@@ -17,7 +17,6 @@ real batch plumbing).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -59,19 +58,6 @@ def validate_vector_dim(df: DataFrame, vector_col: str, dim: int) -> tuple[DataF
 
 
 # --- S8: upload → parse → filter → id → embed --------------------------------
-
-def parse_elements_stub(content: bytes, file_name: str) -> list[dict]:
-    """Deterministic stand-in for the Unstructured API file parse
-    (tools.py:27-33). Splits on blank lines; alternates element types so the
-    NarrativeText filter has something to drop. Swap for the real HTTP call
-    in deployment — same (bytes, name) -> elements contract."""
-    text = content.decode("utf-8", errors="replace")
-    out = []
-    for i, para in enumerate(p.strip() for p in text.split("\n\n")):
-        if para:
-            out.append({"type": "NarrativeText" if i % 3 != 2 else "Title", "text": para})
-    return out
-
 
 def maybe_real_parser() -> Callable[[bytes, str], list[dict]] | None:
     """Env escape hatch mirroring the embedder's
@@ -116,8 +102,10 @@ def parse_uploads(
     words > min_words`` (tools.py:42) and derives the upsert key
     ``entity_id = sha256(file + text)`` (tools.py:35-37).
 
-    Default parser is an inline copy of :func:`parse_elements_stub` —
-    passing the module-level function as a default would pickle it by
+    The default parser is a deterministic stand-in for the Unstructured
+    API parse (tools.py:27-33): it splits on blank lines and alternates
+    element types so the NarrativeText filter has something to drop. It
+    is defined inline because a module-level function would pickle by
     reference and require the package on worker paths."""
     if parser is None:
         parser = maybe_real_parser()
@@ -169,10 +157,6 @@ def embed_and_validate(
     return valid
 
 
-def sha256_hex(s: str) -> str:
-    return hashlib.sha256(s.encode("utf-8")).hexdigest()
-
-
 def read_json_quarantine(
     spark: SparkSession, path_glob: str, schema: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -197,18 +181,6 @@ def read_json_quarantine(
     clean = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
     return clean, bad
-
-
-def evolve_union(*dfs: DataFrame) -> DataFrame:
-    """Schema-evolution union: rows from older files keep NULL for columns
-    they predate (Delta/Iceberg schema-evolution read semantics on plain
-    DataFrames). Column matching is BY NAME — positional union across
-    evolved schemas silently mis-assigns columns, which is the bug this
-    helper exists to prevent."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
 
 
 def parse_csv_typed(

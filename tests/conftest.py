@@ -114,6 +114,30 @@ def assert_driver_hashable_schema(spark_df, name: str = "?"):
     )
 
 
+def assert_no_duplicated_python_udf(spark_df, name: str = "?"):
+    """A Generate over a UDF-output column makes the optimizer infer
+    `size(col) > 0` (InferFiltersFromGenerate); predicate pushdown can
+    then drag that filter below the spread exchange WITH a second copy
+    of the UDF, re-running it over the whole input single-threaded
+    (caught live in decontaminate, r11). A real duplicate is the same
+    UDF call args appearing under two DIFFERENT output columns — a
+    persisted subtree merely reprints the same node (same output id)
+    under every InMemoryTableScan. The oracle sweep applies this to every
+    registered query."""
+    import re
+
+    mode = spark_df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = spark_df._jdf.queryExecution().explainString(mode.fromString("formatted"))
+    nodes = re.findall(
+        r"EvalPython\nInput.*?\nArguments: \[(.*?)\], \[(pythonUDF\d+#\d+)\]", plan
+    )
+    byargs: dict = {}
+    for args, out in nodes:
+        byargs.setdefault(args, set()).add(out)
+    dups = {a: o for a, o in byargs.items() if len(o) > 1}
+    assert not dups, f"[{name}] duplicated Python UDF eval nodes: {dups}"
+
+
 def assert_matches_oracle(spark_df, oracle: str, sf_dir: str, name: str = "?"):
     con = duck_con(sf_dir)
     rel = con.sql(oracle)

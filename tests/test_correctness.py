@@ -12,7 +12,8 @@ checking its slice through a small thread pool (guide §2.6: the Spark
 scheduler happily overlaps jobs submitted from driver threads; collect()
 and DuckDB both release the GIL). EVERY query is still checked with the
 SAME comparator — only the scheduling changed; a batch failure reports
-every offending query in its slice by name.
+every offending query in its slice by name. Each query's plan is also
+checked for a duplicated Python-UDF eval node on the same DataFrame.
 
 Thread-safety inventory (why in-batch concurrency is sound):
 - /tmp index caches (catalog.shared_cache_path): build_or_load_* is
@@ -43,6 +44,7 @@ from tests.conftest import (
     SF_ORACLE,
     assert_driver_hashable_schema,
     assert_matches_oracle,
+    assert_no_duplicated_python_udf,
 )
 
 _QUERIES = queries()
@@ -90,6 +92,7 @@ def warm_shared_caches(spark):
 def _check_one(name: str, spark) -> None:
     df = _QUERIES[name](spark, SF_ORACLE)
     assert_driver_hashable_schema(df, name=name)
+    assert_no_duplicated_python_udf(df, name=name)
     if name in _ORACLES:
         assert_matches_oracle(df, _ORACLES[name], SF_ORACLE, name=name)
     else:

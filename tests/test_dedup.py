@@ -7,7 +7,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from chatdata_spark.operators.dedup import (
-    _stop_shingles,
+    _split_stop_tokens,
+    _stop_set,
     _with_shingle_hashes,
     embedding_near_dup,
     embedding_near_dup_clustered,
@@ -149,11 +150,11 @@ def test_jaccard_default_skew_guard_bounds_buckets(spark):
     d = _skewed_corpus(spark)
     base = _with_shingle_hashes(d, "doc_id", "text", k=3, persist=False)
     tokens = base.select("id", F.explode("shh").alias("shingle"))
-    n_stop = _stop_shingles(tokens, 0.01).count()
-    assert n_stop >= 7, "corpus-wide boilerplate shingles must be stop-listed"
+    stops = _stop_set(base, 3, 0.01)  # the set jaccard_similarity_join splits on
+    assert len(stops) >= 7, "corpus-wide boilerplate shingles must be stop-listed"
+    nonstop, _ = _split_stop_tokens(base, tokens, stops)
     surviving_max_df = (
-        tokens.join(F.broadcast(_stop_shingles(tokens, 0.01)), "shingle", "left_anti")
-        .groupBy("shingle")
+        nonstop.groupBy("shingle")
         .count()
         .agg(F.max("count"))
         .collect()[0][0]

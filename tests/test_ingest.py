@@ -17,18 +17,6 @@ def test_read_json_quarantine_splits_bad_lines(spark, tmp_path):
     assert "not json" in bad.collect()[0]["_corrupt_record"]
 
 
-def test_evolve_union_by_name(spark):
-    from chatdata_spark.sources.ingest import evolve_union
-
-    old = spark.createDataFrame([(1, "a")], "id bigint, text string")
-    new = spark.createDataFrame(
-        [(2, "b", "en")], "id bigint, text string, lang string"
-    )
-    out = evolve_union(old, new)
-    rows = {r["id"]: (r["text"], r["lang"]) for r in out.collect()}
-    assert rows == {1: ("a", None), 2: ("b", "en")}
-
-
 def test_parse_csv_typed_quotes_types_and_quarantine(spark):
     from chatdata_spark.sources.ingest import parse_csv_typed
 

@@ -1487,24 +1487,3 @@ def test_label_propagation_separates_bridged_cliques(spark):
     # same graph, one component: LPA sees structure components cannot
     comp = connected_components(df, "src", "dst")
     assert comp.select("c").distinct().count() == 1
-
-
-def test_random_walks_prune_frontier_is_pure_optimization(spark):
-    """prune_frontier=True (the small-seed escape the posture probe
-    motivated) must change the PLAN only — identical walks out."""
-    from chatdata_spark.operators.graph import random_walks
-
-    edges = [(i, (i * 3 + j) % 40) for i in range(40) for j in range(3)]
-    df = spark.createDataFrame(edges, "src int, dst int")
-    starts = spark.createDataFrame([(i,) for i in range(5)], "node int")
-    plain = {
-        tuple(r)
-        for r in random_walks(df, starts, steps=4, salt="walk").collect()
-    }
-    pruned = {
-        tuple(r)
-        for r in random_walks(
-            df, starts, steps=4, salt="walk", prune_frontier=True
-        ).collect()
-    }
-    assert plain == pruned and len(plain) >= 5

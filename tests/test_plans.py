@@ -198,7 +198,7 @@ def test_substring_spans_plan_shape(spark):
 
     # the same cached ArrowEvalPython node reprints under each
     # InMemoryTableScan — a REAL duplicate (distinct output ids) is
-    # caught by test_no_duplicated_python_udf_eval_nodes below
+    # caught by conftest.assert_no_duplicated_python_udf in the oracle sweep
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", p):
         assert "text" not in m.group(1), f"text column shuffled: {m.group(0)}"
 
@@ -373,30 +373,3 @@ def test_sq8_rerank_screen_is_take_ordered(spark):
     p = _plan(_QS["sq8_rerank_knn"](spark, SF_ORACLE))
     assert "TakeOrderedAndProject" in p
     assert "BatchEvalPython" not in p
-
-
-def test_no_duplicated_python_udf_eval_nodes(spark):
-    """A Generate over a UDF-output column makes the optimizer infer
-    `size(col) > 0` (InferFiltersFromGenerate); predicate pushdown can
-    then drag that filter below the spread exchange WITH a second copy
-    of the UDF, re-running it over the whole input single-threaded
-    (caught live in decontaminate, r11). A real duplicate is the same
-    UDF call args appearing under two DIFFERENT output columns — a
-    persisted subtree merely reprints the same node (same output id)
-    under every InMemoryTableScan."""
-    import re
-
-    for name in ("decontam_docs", "dedup_substring_spans", "tfidf_top_terms",
-                  "heavy_hitter_tokens", "semantic_chunk_spans"):
-        df = _QS[name](spark, SF_ORACLE)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        nodes = re.findall(
-            r"EvalPython\nInput.*?\nArguments: \[(.*?)\], \[(pythonUDF\d+#\d+)\]", plan
-        )
-        byargs: dict = {}
-        for args, out in nodes:
-            byargs.setdefault(args, set()).add(out)
-        dups = {a: o for a, o in byargs.items() if len(o) > 1}
-        assert not dups, f"{name}: duplicated Python UDF eval nodes: {dups}"

@@ -327,13 +327,11 @@ def test_bench_suite_names_resolve():
     qs = queries()
     missing = [n for n in bench.HEADLINE if n not in qs]
     assert not missing, f"HEADLINE names not in registry: {missing}"
-    # E2E names are registry queries, plus the funnel x10 probe (the one
-    # EXTRA-style fn timed whole-invocation since r12 — _run_shard maps it)
-    missing_e2e = [
-        n for n in bench.E2E if n not in qs and n != "retrieval_funnel_x10"
-    ]
+    # E2E names are registry queries or bench fns listed in E2E_EXTRA
+    missing_e2e = [n for n in bench.E2E if n not in qs and n not in bench.E2E_EXTRA]
     assert not missing_e2e, f"E2E names not in registry: {missing_e2e}"
-    assert all(callable(f) for f in bench.EXTRA.values())
+    assert set(bench.E2E_EXTRA) <= set(bench.E2E)
+    assert all(callable(f) for f in [*bench.EXTRA.values(), *bench.E2E_EXTRA.values()])
     names = [*bench.HEADLINE, *bench.EXTRA, *bench.E2E]
     assert len(names) == len(set(names)), "duplicate bench keys"
     # stdout headline subset must resolve and stay bounded (driver capture)

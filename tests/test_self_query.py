@@ -12,6 +12,18 @@ from chatdata_spark.plans.self_query import (
     Comparison,
     Operation,
     SelfQueryCompiler,
+    and_,
+    eq,
+    gt,
+    gte,
+    in_,
+    like,
+    lt,
+    lte,
+    ne,
+    nin,
+    not_,
+    or_,
     python_eval,
 )
 from tests.conftest import SF_SMOKE
@@ -23,6 +35,12 @@ ATTRS = (
     AttributeInfo("n_words", "int", expr="size(split(text, ' '))"),  # computed attr
 )
 ATTR_MAP = {a.name: a for a in ATTRS}
+
+# the filter algebra's constructors, one per comparator name
+_CONSTRUCTORS = {
+    "eq": eq, "ne": ne, "gt": gt, "gte": gte, "lt": lt, "lte": lte,
+    "like": like, "in": in_, "nin": nin,
+}
 
 comparisons = st.one_of(
     st.tuples(
@@ -42,11 +60,11 @@ comparisons = st.one_of(
         st.sampled_from(["src1%", "%2", "%rc%", "src_", "src10"]),
     ),
     st.tuples(
-        st.just("in"),
+        st.sampled_from(["in", "nin"]),
         st.just("lang"),
         st.sampled_from([("en",), ("en", "de"), ("fr", "zh", "es")]),
     ),
-).map(lambda t: Comparison(t[0], t[1], t[2]))
+).map(lambda t: _CONSTRUCTORS[t[0]](t[1], t[2]))
 
 
 def trees(depth: int):
@@ -55,9 +73,9 @@ def trees(depth: int):
     sub = trees(depth - 1)
     return st.one_of(
         comparisons,
-        st.builds(lambda a, b: Operation("and", a, b), sub, sub),
-        st.builds(lambda a, b: Operation("or", a, b), sub, sub),
-        st.builds(lambda a: Operation("not", a), sub),
+        st.builds(and_, sub, sub),
+        st.builds(or_, sub, sub),
+        st.builds(not_, sub),
     )
 
 

@@ -1,0 +1,84 @@
+"""Static guards over the library source: no dead top-level code, and one
+definition per fixture-table temp view."""
+
+from __future__ import annotations
+
+import ast
+import collections
+import pathlib
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
+PKG = REPO / "chatdata_spark"
+
+
+def _library_files():
+    return sorted(PKG.rglob("*.py"))
+
+
+def _is_registered_query(node) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in node.decorator_list
+    )
+
+
+def test_every_library_def_is_referenced():
+    """A top-level function or class under chatdata_spark/ must be named
+    somewhere besides its own definition: in the library, tests/,
+    perfbench/, bench.py or tools/. ``@query``-registered functions are
+    reached through the registry and count as referenced. A helper with no
+    caller left fails here; delete it or give it one."""
+    sources = [
+        *_library_files(),
+        *(REPO / "tests").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        *(REPO / "tools").rglob("*.py"),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+    ]
+    refs: collections.Counter = collections.Counter()
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Name):
+                refs[node.id] += 1
+            elif isinstance(node, ast.Attribute):
+                refs[node.attr] += 1
+            elif isinstance(node, ast.alias):
+                refs[node.name.rsplit(".", 1)[-1]] += 1
+    dead = []
+    for path in _library_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if _is_registered_query(node) or refs[node.name]:
+                continue
+            dead.append(f"{path.relative_to(REPO).as_posix()}:{node.lineno} {node.name}")
+    assert not dead, "unreferenced library definitions:\n" + "\n".join(dead)
+
+
+def test_fixture_views_are_registered_only_in_catalog():
+    """A fixture-table temp view (``events``, ``documents``, ...) is created
+    only by ``catalog.register_views``, which reads each table through the
+    one ``load_tables`` definition. An inline
+    ``createOrReplaceTempView("<table>")`` elsewhere in the library could
+    drift from it (an ``events`` read that skips the nanos conversion)."""
+    from chatdata_spark.catalog import TESTDATA_TABLES
+
+    offenders = []
+    for path in _library_files():
+        if path == PKG / "catalog.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createOrReplaceTempView"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value in TESTDATA_TABLES
+            ):
+                offenders.append(f"{path.relative_to(REPO).as_posix()}:{node.lineno}")
+    assert not offenders, (
+        "fixture temp view defined outside catalog.register_views:\n" + "\n".join(offenders)
+    )

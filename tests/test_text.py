@@ -6,11 +6,8 @@ import pyspark.sql.functions as F
 
 from chatdata_spark.functions.text import (
     fingerprint_rolling64,
-    fingerprint_sha256,
-    predict_lang,
-    quality_score,
+    text_features,
     token_count_bpe,
-    token_count_ws,
 )
 
 
@@ -29,14 +26,14 @@ def test_predict_lang_on_clear_text(spark):
             "xyzzy plugh qwerty",
         ],
     )
-    got = [r.l for r in df.select(predict_lang("text").alias("l")).collect()]
+    got = [r.pred_lang for r in text_features(df).orderBy("id").select("pred_lang").collect()]
     assert got == ["en", "de", "fr", "es", "unknown"]
 
 
 def test_token_counts(spark):
     df = _df(spark, ["hello world", "a-b c3 d!", ""])
-    rows = df.select(
-        token_count_ws("text").alias("ws"), token_count_bpe("text").alias("bpe")
+    rows = text_features(df).orderBy("id").select(
+        F.col("__nw").alias("ws"), token_count_bpe("text").alias("bpe")
     ).collect()
     assert rows[0].ws == 2 and rows[0].bpe == 2
     # "a-b c3 d!" → a, -, b, c, 3, d, ! = 7 BPE-ish tokens, 3 ws tokens
@@ -47,7 +44,7 @@ def test_quality_score_bounds_and_ordering(spark):
     junk = "!!! 123 ??? 456 !!!"
     good = ("the quick brown fox jumps over the lazy dog and runs to the house in the field " * 8)
     df = _df(spark, [junk, good])
-    rows = df.select("id", quality_score("text").alias("q")).collect()
+    rows = text_features(df).select("id", F.col("quality").alias("q")).collect()
     q = {r.id: r.q for r in rows}
     assert 0.0 <= q[0] <= 1.0 and 0.0 <= q[1] <= 1.0
     assert q[1] > q[0]
@@ -55,8 +52,8 @@ def test_quality_score_bounds_and_ordering(spark):
 
 def test_fingerprints_normalize_whitespace_and_case(spark):
     df = _df(spark, ["Hello   World", "hello world", "world hello"])
-    rows = df.select(
-        fingerprint_sha256("text").alias("sha"), fingerprint_rolling64("text").alias("roll")
+    rows = text_features(df).orderBy("id").select(
+        F.col("fp").alias("sha"), fingerprint_rolling64("text").alias("roll")
     ).collect()
     assert rows[0].sha == rows[1].sha  # case/whitespace-insensitive
     assert rows[0].roll == rows[1].roll
