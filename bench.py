@@ -617,16 +617,10 @@ def bench_ann_pq_adc(spark, sf_dir):
     """Raw PQ/ADC compressed scan + exact rerank — the registered
     `ann_pq_adc` query now wraps the search in its soundness oracle, so
     the bench times the codes-only scan itself."""
-    from chatdata_spark.operators.pq import build_or_load_pq
-    from chatdata_spark.queries.vector import Q1
+    from chatdata_spark.queries.vector import Q1, _pq_index
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from chatdata_spark.catalog import shared_cache_path
-
-    idx = build_or_load_pq(
-        spark, e, shared_cache_path("pq", sf_dir, "m8"), "vec_id", "embedding", m=8
-    )
-    return idx.search(e, Q1, k=10, refine=4, select=["vec_id", "label"])
+    return _pq_index(spark, sf_dir).search(e, Q1, k=10, refine=4, select=["vec_id", "label"])
 
 
 def bench_ann_opq_adc(spark, sf_dir):
@@ -635,16 +629,10 @@ def bench_ann_opq_adc(spark, sf_dir):
     the driver-side query table), so any delta vs ann_pq_adc is noise,
     not the rotation; the bench pins that the rotated path keeps the
     codes-only scan cost."""
-    from chatdata_spark.operators.pq import build_or_load_pq
-    from chatdata_spark.queries.vector import Q1
+    from chatdata_spark.queries.vector import Q1, _pq_index
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from chatdata_spark.catalog import shared_cache_path
-
-    idx = build_or_load_pq(
-        spark, e, shared_cache_path("opq", sf_dir, "m8i6"), "vec_id", "embedding",
-        m=8, opq_iters=6,
-    )
+    idx = _pq_index(spark, sf_dir, opq_iters=6)
     return idx.search(e, Q1, k=10, refine=4, select=["vec_id", "label"])
 
 
@@ -653,15 +641,9 @@ def bench_ann_ivfpq_residual_search(spark, sf_dir):
     scan as bench_ann_ivfpq_search; the per-probed-cluster ADC tables
     are driver-side constants, so any delta vs the plain entry is the
     (B, m, 256) gather vs the (m, 256) lookup inside the Arrow pass."""
-    from chatdata_spark.catalog import shared_cache_path
-    from chatdata_spark.operators.ivfpq import build_or_load_ivfpq
-    from chatdata_spark.queries.vector import Q2, _ivf_index
+    from chatdata_spark.queries.vector import Q2, _ivfpq_index
 
-    ivf = _ivf_index(spark, sf_dir)
-    idx = build_or_load_ivfpq(
-        ivf, shared_cache_path("ivfpq", sf_dir, "k8m8r1o6"), m=8,
-        residual=True, opq_iters=6,
-    )
+    idx = _ivfpq_index(spark, sf_dir, residual=True, opq_iters=6)
     return idx.search(Q2, k=15, n_probe=4, refine=4, select=["vec_id"])
 
 
@@ -673,12 +655,9 @@ def bench_ann_ivfpq_search(spark, sf_dir):
     compressed funnel itself. Compare against `ann_ivf_pruned` (same
     routing, raw-vector scan) and `ann_pq_adc` (same compression, no
     routing): IVF-PQ should sit at or below both."""
-    from chatdata_spark.catalog import shared_cache_path
-    from chatdata_spark.operators.ivfpq import build_or_load_ivfpq
-    from chatdata_spark.queries.vector import Q2, _ivf_index
+    from chatdata_spark.queries.vector import Q2, _ivfpq_index
 
-    ivf = _ivf_index(spark, sf_dir)
-    idx = build_or_load_ivfpq(ivf, shared_cache_path("ivfpq", sf_dir, "k8m8"), m=8)
+    idx = _ivfpq_index(spark, sf_dir)
     return idx.search(Q2, k=15, n_probe=4, refine=4, select=["vec_id", "label"])
 
 

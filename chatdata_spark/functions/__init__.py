@@ -2,7 +2,6 @@
 
 from chatdata_spark.functions.vector import (  # noqa: F401
     cosine_distance,
-    cosine_distance_pandas,
     dot_product,
     hash_embed,
     l2_distance,

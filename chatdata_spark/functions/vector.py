@@ -8,15 +8,12 @@ vector_sql_output_parser.py:6-23).
 
 Design for scale:
 
-- The default distance implementations are **pure Spark higher-order
+- The distance implementations are **pure Spark higher-order
   functions** (``zip_with`` + ``aggregate``): they run JVM-side with no
   Python worker, no Arrow transfer, and survive whole-stage pipelines. On a
   1000-executor cluster the distance computation stays inside the scan
   stage and feeds ``TakeOrderedAndProject`` directly — no shuffle beyond
   the final top-k reduction.
-- A vectorized Arrow ``pandas_udf`` variant exists for wide vectors where
-  NumPy's SIMD dot product wins over the per-element lambda; pick per
-  benchmark, semantics are identical (float64 both paths).
 - All arithmetic is float64 regardless of storage dtype (parquet stores
   float32) so results are oracle-stable (SURVEY §5 determinism note).
 """
@@ -95,61 +92,6 @@ def cosine_distance_sql(col_expr: str, vec_expr: str, vec_norm: float | None = N
     na = f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
     nb = repr(float(vec_norm)) if vec_norm is not None else f"sqrt(aggregate({b}, 0D, (acc, x) -> acc + x * x))"
     return f"(1.0D - {dot} / ({na} * {nb}))"
-
-
-# --- Arrow-vectorized pandas UDF variants ------------------------------------
-
-def make_cosine_distance_pandas(query_vec: Sequence[float]):
-    """Arrow-batched NumPy cosine distance against a fixed query vector.
-
-    Faster than the higher-order-function path for wide vectors (768-d):
-    each Arrow batch becomes one (n, d) float64 matmul.
-    """
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    @F.pandas_udf(DoubleType())
-    def _cos(col: pd.Series) -> pd.Series:
-        m = np.array(col.tolist(), dtype=np.float64)
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1)
-        return pd.Series(1.0 - dots / (norms * qn))
-
-    return _cos
-
-
-def cosine_distance_pandas(col, query_vec: Sequence[float]) -> Column:
-    if isinstance(col, str):
-        col = F.col(col)
-    return make_cosine_distance_pandas(query_vec)(col)
-
-
-# --- Storage quantization -----------------------------------------------------
-
-def with_quantized_vector(df, vec_col: str, prefix: str = "q_"):
-    """Symmetric int8 quantization of a vector column: per-row
-    ``scale = max|x|/127``, ``q[i] = round(x[i]/scale)`` — 4× smaller than
-    float32 at ≤0.4% per-element error, the role of the reference index's
-    ``fp16_storage=1`` (myscale_tables.py:35: store compressed, compute on
-    reconstruction).
-
-    Output keeps ``{prefix}scale`` as a real column — it is referenced both
-    as output and inside the dequant lambda, which stops CollapseProject
-    from inlining the array_max back into the per-element loop."""
-    amax = F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x.cast("double"))))
-    scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(1.0))
-    out = df.withColumn(f"{prefix}scale", scale)
-    return out.withColumn(
-        f"{prefix}vec",
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") / F.col(f"{prefix}scale")).cast("tinyint")
-        ),
-    )
-
-
-def dequantized(qvec_col: str, scale_col: str) -> Column:
-    """Reconstruct array<double> from int8 codes + scale."""
-    return F.transform(F.col(qvec_col), lambda q: q.cast("double") * F.col(scale_col))
 
 
 # --- Deterministic stub embedder ---------------------------------------------

@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chatdata_spark.operators.knn import knn
+
 WORD_BITS = 32
 
 
@@ -87,9 +89,7 @@ def binary_knn(
     """Hamming top-k over sign signatures; ``rerank=None`` returns the pure
     binary ranking (exact under the quantization — the oracle config).
     ``rerank=m`` screens the top-m by Hamming then reranks by exact cosine
-    (the production funnel; recall pinned in tests)."""
-    from chatdata_spark.functions.vector import cosine_distance
-
+    through :func:`knn` (the production funnel; recall pinned in tests)."""
     qwords = _pack_query(qvec)
     sigged = df.withColumn("__sig", binary_signature(vec_col, dim))
     scored = sigged.withColumn("hamming", hamming_distance("__sig", qwords))
@@ -101,9 +101,4 @@ def binary_knn(
             .limit(k)
         )
     cand = scored.orderBy(F.asc("hamming"), F.asc(id_col)).limit(rerank)
-    return (
-        cand.withColumn("dist", F.round(cosine_distance(vec_col, qvec), 6))
-        .select(*cols, "dist")
-        .orderBy(F.asc("dist"), F.asc(id_col))
-        .limit(k)
-    )
+    return knn(cand, vec_col, qvec, k=k, select=cols, id_col=id_col)

@@ -39,12 +39,27 @@ from pyspark.sql import functions as F
 from chatdata_spark.operators.knn import knn
 
 
+def read_meta(path: str, name: str) -> dict:
+    """An index's JSON meta file (``ivf_meta.json``, ``pq_meta.json``,
+    ``ivfpq_meta.json``) under its directory."""
+    with open(os.path.join(path, name)) as f:
+        return json.load(f)
+
+
+def write_meta(path: str, name: str, meta: dict) -> None:
+    """Atomic meta commit: write a temp file, then ``os.replace`` — a
+    reader sees the old meta or the new one, never a torn file."""
+    tmp = os.path.join(path, name + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, os.path.join(path, name))
+
+
 class IVFIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, "ivf_meta.json")) as f:
-            meta = json.load(f)
+        meta = read_meta(path, "ivf_meta.json")
         self.id_col = meta["id_col"]
         self.vector_col = meta["vector_col"]
         self.metric = meta["metric"]
@@ -100,15 +115,8 @@ class IVFIndex:
             "centroids": [list(map(float, c)) for c in model.clusterCenters()],
             "cluster_ids": list(range(n_clusters)),
         }
-        IVFIndex._write_meta(path, meta)
+        write_meta(path, "ivf_meta.json", meta)
         return IVFIndex(df.sparkSession, path)
-
-    @staticmethod
-    def _write_meta(path: str, meta: dict) -> None:
-        tmp = os.path.join(path, "ivf_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(path, "ivf_meta.json"))
 
     # -- skew maintenance -------------------------------------------------------
     def split_skewed(self, max_rows: int, sub_k: int = 4) -> "IVFIndex":
@@ -174,7 +182,7 @@ class IVFIndex:
             cluster_ids.extend(sub_ids)
             centroids.extend([list(map(float, c)) for c in model.clusterCenters()])
             next_id += sub_k
-        self._write_meta(self.path, {
+        write_meta(self.path, "ivf_meta.json", {
             "id_col": self.id_col,
             "vector_col": self.vector_col,
             "n_clusters": len(cluster_ids),
@@ -316,7 +324,7 @@ class IVFIndex:
         for old in affected:
             new_ids.append(fresh_of[old])
             new_cents.append(fresh_cents[fresh_of[old]])
-        self._write_meta(self.path, {
+        write_meta(self.path, "ivf_meta.json", {
             "id_col": self.id_col,
             "vector_col": self.vector_col,
             "n_clusters": len(new_ids),
@@ -442,7 +450,7 @@ class IVFIndex:
                 "compact: every row of the index is tombstoned — an empty "
                 "index is unreadable; rebuild instead"
             )
-        self._write_meta(self.path, {
+        write_meta(self.path, "ivf_meta.json", {
             "id_col": self.id_col,
             "vector_col": self.vector_col,
             "n_clusters": len(self.cluster_ids),

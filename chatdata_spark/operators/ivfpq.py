@@ -32,7 +32,6 @@ compact) and invalidate the codes — rebuild, like any secondary index.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -40,9 +39,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chatdata_spark.functions.vector import cosine_distance
-from chatdata_spark.operators.ivf import IVFIndex
-from chatdata_spark.operators.pq import _kmeans_1d
+from chatdata_spark.operators.ivf import IVFIndex, read_meta, write_meta
+from chatdata_spark.operators.knn import knn
+from chatdata_spark.operators.pq import (
+    adc_scores,
+    adc_table,
+    codec_meta,
+    encode_codes,
+    load_codec,
+    train_codebooks,
+)
 
 
 def _centroid_lookup(ivf: IVFIndex) -> np.ndarray:
@@ -70,23 +76,12 @@ class IVFPQIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, "ivfpq_meta.json")) as f:
-            meta = json.load(f)
-        self.id_col = meta["id_col"]
-        self.vector_col = meta["vector_col"]
-        self.m = meta["m"]
-        self.dsub = meta["dsub"]
+        meta = read_meta(path, "ivfpq_meta.json")
+        load_codec(self, meta)
         self.ivf_path = meta["ivf_path"]
-        self.codebooks = np.array(meta["codebooks"], dtype=np.float64)
-        # OPQ rotation (d, d), or None for plain-PQ metas
-        rot = meta.get("rotation")
-        self.rotation = None if rot is None else np.array(rot, dtype=np.float64)
         # residual mode: codes quantize (x_norm - centroid[cluster])
         self.residual = bool(meta.get("residual", False))
         self.ivf = IVFIndex(spark, self.ivf_path)
-
-    def _centroid_lookup(self) -> np.ndarray:
-        return _centroid_lookup(self.ivf)
 
     @staticmethod
     def build(
@@ -113,83 +108,35 @@ class IVFPQIndex:
         ``(x_norm − centroid[cluster])`` instead of x_norm — the
         displacement WITHIN a cluster is far smaller than the sphere, so
         the same 256-entry budget covers it much more finely (composes
-        with OPQ: the rotation then trains on residuals)."""
+        with OPQ: the rotation then trains on residuals). Training and
+        encoding are operators/pq.py's codec (``train_codebooks``,
+        ``encode_codes``)."""
         data = ivf.spark.read.parquet(ivf._data_path())
         cl_lut = _centroid_lookup(ivf) if residual else None
         rows = (
             data.select(ivf.vector_col, "cluster_id").limit(train_rows).collect()
         )
         sample = np.array([r[0] for r in rows], dtype=np.float64)
-        sample /= np.linalg.norm(sample, axis=1, keepdims=True)
+        row_cents = None
         if residual:
-            sample = sample - cl_lut[np.array([r[1] for r in rows], dtype=np.int64)]
-        d = sample.shape[1]
-        assert d % m == 0, f"dim {d} not divisible by m={m}"
-        dsub = d // m
-        rotation = None
-        if opq_iters > 0:
-            from chatdata_spark.operators.pq import opq_train
-
-            rotation, books = opq_train(sample, m, iters=iters, seed=seed, opq_iters=opq_iters)
-        else:
-            books = np.stack(
-                [
-                    _kmeans_1d(sample[:, j * dsub : (j + 1) * dsub], 256, iters, seed + j)
-                    for j in range(m)
-                ]
-            )
-            if books.shape[1] < 256:
-                pad = np.repeat(books[:, :1, :], 256 - books.shape[1], axis=1)
-                books = np.concatenate([books, pad], axis=1)
-
-        bks, mm, dd, rot, lut = books, m, dsub, rotation, cl_lut
-
-        @F.pandas_udf("array<smallint>")
-        def _encode(vecs: pd.Series, cids: pd.Series) -> pd.Series:
-            x = np.array(vecs.tolist(), dtype=np.float64)
-            x /= np.linalg.norm(x, axis=1, keepdims=True)
-            if lut is not None:
-                x = x - lut[cids.to_numpy(dtype=np.int64)]
-            if rot is not None:
-                x = x @ rot
-            codes = np.empty((x.shape[0], mm), dtype=np.int64)
-            for j in range(mm):
-                sub = x[:, j * dd : (j + 1) * dd]
-                cb = bks[j]
-                d2 = -2.0 * (sub @ cb.T) + (cb**2).sum(axis=1)[None, :]
-                codes[:, j] = d2.argmin(axis=1)
-            return pd.Series([row.tolist() for row in codes])
-
+            row_cents = cl_lut[np.array([r[1] for r in rows], dtype=np.int64)]
+        books, rotation = train_codebooks(
+            sample, m, iters, seed, opq_iters, centroids=row_cents
+        )
+        codes = encode_codes(
+            F.col(ivf.vector_col), books, rotation, centroids=cl_lut, cluster=F.col("cluster_id")
+        )
         (
-            data.select(
-                F.col(ivf.id_col),
-                F.col("cluster_id"),
-                _encode(
-                    F.col(ivf.vector_col).cast("array<float>"),
-                    F.col("cluster_id").cast("long"),
-                ).alias("codes"),
-            )
+            data.select(F.col(ivf.id_col), F.col("cluster_id"), codes.alias("codes"))
             .repartition("cluster_id")
             .write.mode("overwrite")
             .partitionBy("cluster_id")
             .parquet(os.path.join(path, "codes"))
         )
-        meta = {
-            "id_col": ivf.id_col,
-            "vector_col": ivf.vector_col,
-            "m": m,
-            "dsub": dsub,
-            "ivf_path": ivf.path,
-            "codebooks": [[list(map(float, c)) for c in book] for book in books],
-            "rotation": None
-            if rotation is None
-            else [list(map(float, r)) for r in rotation],
-            "residual": bool(residual),
-        }
-        tmp = os.path.join(path, "ivfpq_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(path, "ivfpq_meta.json"))
+        meta = codec_meta(ivf.id_col, ivf.vector_col, books, rotation)
+        meta["ivf_path"] = ivf.path
+        meta["residual"] = bool(residual)
+        write_meta(path, "ivfpq_meta.json", meta)
         return IVFPQIndex(ivf.spark, path)
 
     def search(
@@ -208,7 +155,7 @@ class IVFPQIndex:
            (``cluster_id isin probes`` prunes parquet directories), score
            each row with m table lookups via one Arrow fancy-index pass;
         3. top ``k·refine`` by (adc, id) — a TakeOrderedAndProject heap —
-           then exact cosine rerank against the raw vectors read from the
+           then exact cosine rerank (:func:`knn`) against the raw vectors read from the
            IVF data tree pruned to the SAME probed clusters (candidates
            can only come from probed clusters, so the pruned rerank is
            exact; a full-table rerank scan would dominate the routed code
@@ -221,29 +168,18 @@ class IVFPQIndex:
         probes = self.ivf.rank_centroids(query_vec)[
             : max(1, min(n_probe, self.ivf.n_clusters))
         ]
-        mm, dsub = self.m, self.dsub
-
-        def _tab_for(qv: np.ndarray) -> np.ndarray:
-            return np.stack(
-                [
-                    ((qv[j * dsub : (j + 1) * dsub][None, :] - self.codebooks[j]) ** 2).sum(
-                        axis=1
-                    )
-                    for j in range(mm)
-                ]
-            )  # (m, 256)
 
         if self.residual:
             # per-probed-cluster tables: the code approximates the
             # residual, so the lookup target is (q − centroid[c]) —
             # n_probe × m × 256 driver-side floats, still tiny
-            lut = self._centroid_lookup()
-            tabs = np.zeros((max(probes) + 1, mm, 256), dtype=np.float64)
+            lut = _centroid_lookup(self.ivf)
+            tabs = np.zeros((max(probes) + 1, self.m, 256), dtype=np.float64)
             for c in probes:
                 qc = q - lut[c]
                 if self.rotation is not None:
                     qc = qc @ self.rotation
-                tabs[c] = _tab_for(qc)
+                tabs[c] = adc_table(qc, self.codebooks)
 
             @F.pandas_udf("double")
             def _adc(codes: pd.Series, cids: pd.Series) -> pd.Series:
@@ -258,14 +194,7 @@ class IVFPQIndex:
             # routing stays in the ORIGINAL space (centroids unrotated);
             # only the ADC table sees the rotated query
             qr = q if self.rotation is None else q @ self.rotation
-            tab = _tab_for(qr)
-
-            @F.pandas_udf("double")
-            def _adc(codes: pd.Series) -> pd.Series:
-                c = np.array(codes.tolist(), dtype=np.int64)
-                return pd.Series(tab[np.arange(mm)[None, :], c].sum(axis=1))
-
-            adc_expr = _adc("codes")
+            adc_expr = adc_scores(F.col("codes"), adc_table(qr, self.codebooks))
 
         codes = self.spark.read.parquet(os.path.join(self.path, "codes")).filter(
             F.col("cluster_id").isin(probes)
@@ -283,15 +212,8 @@ class IVFPQIndex:
             F.col("cluster_id").isin(probes)  # same directory pruning as the codes
         )
         rerank = raw.join(F.broadcast(cand), self.id_col, "left_semi")
-        out = rerank.withColumn(
-            "dist", F.round(cosine_distance(F.col(self.vector_col), [float(v) for v in q]), 6)
-        )
         cols = list(select) if select is not None else [self.id_col]
-        return (
-            out.orderBy(F.col("dist").asc(), F.col(self.id_col).asc())
-            .limit(int(k))
-            .select(*cols, "dist")
-        )
+        return knn(rerank, self.vector_col, q, k=int(k), select=cols, id_col=self.id_col)
 
 
 def build_or_load_ivfpq(

@@ -27,24 +27,37 @@ Search (asymmetric distance computation, ADC):
   2. Arrow scan over codes: dist ≈ Σ_j table[j, code_j] — numpy fancy
      indexing over the whole batch, no per-row Python;
   3. top ``k·refine`` candidates rerank EXACTLY on their original
-     vectors (tiny semi-join back to the table), tie-broken on id.
+     vectors (tiny semi-join back to the table) through ``knn()``,
+     tie-broken on id.
 
-Approximate by design (recall pinned in tests/test_pq.py); there is no
-exact configuration, so the registered query is rows-only, like
-``ann_lsh_probe``.
+This module is the one PQ codec: operators/ivfpq.py trains, encodes and
+scores its codes through ``train_codebooks``, ``encode_codes``,
+``adc_table``/``adc_scores`` and the ``codec_meta``/``load_codec`` meta
+pair. Approximate by design (recall pinned in tests/test_pq.py), so the
+registered queries check the soundness invariant
+(queries/vector.py::_ann_soundness) against a replay-derived oracle.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import sys
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import cloudpickle
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chatdata_spark.functions.vector import cosine_distance
+from chatdata_spark.operators.ivf import read_meta, write_meta
+from chatdata_spark.operators.knn import knn
+
+# The encode UDF calls _encode_np on the workers. cloudpickle pickles a
+# closure's module-level function refs BY NAME, and workers of a driver
+# running off the repo cwd cannot import chatdata_spark (CLAUDE.md), so
+# this module ships by value: one argmin expression serves the driver-side
+# OPQ alternation and the distributed encode alike.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _kmeans_1d(x: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
@@ -84,15 +97,16 @@ def _kmeans_gemm(x: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
     return cent
 
 
-def _train_books(sample: np.ndarray, m: int, iters: int, seed: int) -> np.ndarray:
+def _train_books(
+    sample: np.ndarray, m: int, iters: int, seed: int, kmeans=_kmeans_gemm
+) -> np.ndarray:
     """Per-subspace codebooks over ``sample`` (n, d) → (m, 256, dsub),
-    padded to a fixed 256 entries on tiny corpora."""
+    padded to a fixed 256 entries on tiny corpora. ``kmeans`` is
+    :func:`_kmeans_gemm` inside the OPQ alternation and :func:`_kmeans_1d`
+    for plain PQ codebooks."""
     dsub = sample.shape[1] // m
     books = np.stack(
-        [
-            _kmeans_gemm(sample[:, j * dsub : (j + 1) * dsub], 256, iters, seed + j)
-            for j in range(m)
-        ]
+        [kmeans(sample[:, j * dsub : (j + 1) * dsub], 256, iters, seed + j) for j in range(m)]
     )
     if books.shape[1] < 256:
         pad = np.repeat(books[:, :1, :], 256 - books.shape[1], axis=1)
@@ -156,21 +170,112 @@ def opq_train(
     return r_mat, books
 
 
+def train_codebooks(
+    vectors: np.ndarray,
+    m: int,
+    iters: int,
+    seed: int,
+    opq_iters: int = 0,
+    centroids: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """The one PQ training recipe, shared by :class:`PQIndex` and
+    operators/ivfpq.py: L2-normalize the driver-side sample (PQ over
+    normalized vectors makes squared-L2 ≡ 2·cosine-distance), subtract
+    the per-row ``centroids`` when the codes quantize IVF residuals, then
+    either train an OPQ rotation (``opq_iters > 0``, :func:`opq_train`)
+    or one :func:`_kmeans_1d` codebook per subspace. Returns
+    ``(books (m, 256, dsub), rotation (d, d) or None)``."""
+    sample = vectors / np.linalg.norm(vectors, axis=1, keepdims=True)
+    if centroids is not None:
+        sample = sample - centroids
+    d = sample.shape[1]
+    assert d % m == 0, f"dim {d} not divisible by m={m}"
+    if opq_iters > 0:
+        rotation, books = opq_train(sample, m, iters=iters, seed=seed, opq_iters=opq_iters)
+        return books, rotation
+    return _train_books(sample, m, iters, seed, kmeans=_kmeans_1d), None
+
+
+def encode_codes(
+    vec: Column,
+    books: np.ndarray,
+    rotation: np.ndarray | None,
+    centroids: np.ndarray | None = None,
+    cluster: Column | None = None,
+) -> Column:
+    """``array<smallint>`` PQ codes of ``vec`` — the one Arrow encode UDF:
+    normalize, subtract ``centroids[cluster]`` (residual IVF-PQ; the
+    lookup is id-indexed), rotate, then :func:`_encode_np` per batch (one
+    (batch, 256) GEMM per subspace). ``vec`` is cast to ``array<float>``
+    first, so codes are a function of the stored float32 values."""
+
+    @F.pandas_udf("array<smallint>")
+    def _encode(vecs: pd.Series, cids: pd.Series) -> pd.Series:
+        x = np.array(vecs.tolist(), dtype=np.float64)
+        x /= np.linalg.norm(x, axis=1, keepdims=True)
+        if centroids is not None:
+            x = x - centroids[cids.to_numpy(dtype=np.int64)]
+        if rotation is not None:
+            x = x @ rotation
+        return pd.Series([row.tolist() for row in _encode_np(x, books)])
+
+    cids = F.lit(0) if cluster is None else cluster
+    return _encode(vec.cast("array<float>"), cids.cast("long"))
+
+
+def adc_table(q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Asymmetric distance table (m, 256): exact squared distance of each
+    query subvector to every codebook entry, so Σ_j table[j, code_j] ≈
+    ||q - x̂||² = 2·cos_dist for a normalized (and rotated) query."""
+    m, _, dsub = books.shape
+    return np.stack(
+        [((q[j * dsub : (j + 1) * dsub][None, :] - books[j]) ** 2).sum(axis=1) for j in range(m)]
+    )
+
+
+def adc_scores(codes: Column, table: np.ndarray) -> Column:
+    """Σ_j table[j, code_j] per row — one numpy fancy-index pass per Arrow
+    batch, no per-row Python."""
+    mm = table.shape[0]
+
+    @F.pandas_udf("double")
+    def _adc(c: pd.Series) -> pd.Series:
+        c = np.array(c.tolist(), dtype=np.int64)
+        return pd.Series(table[np.arange(mm)[None, :], c].sum(axis=1))
+
+    return _adc(codes)
+
+
+def codec_meta(id_col: str, vector_col: str, books: np.ndarray, rotation) -> dict:
+    """The codec half of a PQ/IVF-PQ meta file (JSON lists of floats)."""
+    return {
+        "id_col": id_col,
+        "vector_col": vector_col,
+        "m": int(books.shape[0]),
+        "dsub": int(books.shape[2]),
+        "codebooks": [[list(map(float, c)) for c in book] for book in books],
+        "rotation": None if rotation is None else [list(map(float, r)) for r in rotation],
+    }
+
+
+def load_codec(index, meta: dict) -> None:
+    """Set the codec attributes a PQ/IVF-PQ index reads from its meta:
+    ``codebooks`` (m, 256, dsub) float64 and ``rotation`` (d, d), or None
+    for plain-PQ metas."""
+    index.id_col = meta["id_col"]
+    index.vector_col = meta["vector_col"]
+    index.m = meta["m"]
+    index.dsub = meta["dsub"]
+    index.codebooks = np.array(meta["codebooks"], dtype=np.float64)
+    rot = meta.get("rotation")
+    index.rotation = None if rot is None else np.array(rot, dtype=np.float64)
+
+
 class PQIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, "pq_meta.json")) as f:
-            meta = json.load(f)
-        self.id_col = meta["id_col"]
-        self.vector_col = meta["vector_col"]
-        self.m = meta["m"]
-        self.dsub = meta["dsub"]
-        # (m, 256, dsub) float64
-        self.codebooks = np.array(meta["codebooks"], dtype=np.float64)
-        # OPQ rotation (d, d), or None for plain PQ metas
-        rot = meta.get("rotation")
-        self.rotation = None if rot is None else np.array(rot, dtype=np.float64)
+        load_codec(self, read_meta(path, "pq_meta.json"))
 
     @staticmethod
     def build(
@@ -191,60 +296,13 @@ class PQIndex:
             [r[0] for r in df.select(vector_col).limit(train_rows).collect()],
             dtype=np.float64,
         )
-        sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-        d = sample.shape[1]
-        assert d % m == 0, f"dim {d} not divisible by m={m}"
-        dsub = d // m
-        rotation = None
-        if opq_iters > 0:
-            rotation, books = opq_train(sample, m, iters=iters, seed=seed, opq_iters=opq_iters)
-        else:
-            books = np.stack(
-                [
-                    _kmeans_1d(sample[:, j * dsub : (j + 1) * dsub], 256, iters, seed + j)
-                    for j in range(m)
-                ]
-            )  # (m, k, dsub); k may be < 256 on tiny corpora — pad for a fixed shape
-            if books.shape[1] < 256:
-                pad = np.repeat(books[:, :1, :], 256 - books.shape[1], axis=1)
-                books = np.concatenate([books, pad], axis=1)
-
-        bks, mm, dd, rot = books, m, dsub, rotation
-
-        @F.pandas_udf("array<smallint>")
-        def _encode(vecs: pd.Series) -> pd.Series:
-            x = np.array(vecs.tolist(), dtype=np.float64)
-            x /= np.linalg.norm(x, axis=1, keepdims=True)
-            if rot is not None:
-                x = x @ rot
-            codes = np.empty((x.shape[0], mm), dtype=np.int64)
-            for j in range(mm):
-                sub = x[:, j * dd : (j + 1) * dd]
-                # ||sub - c||² = ||sub||² - 2 sub·c + ||c||²; row term constant
-                cb = bks[j]
-                d2 = -2.0 * (sub @ cb.T) + (cb**2).sum(axis=1)[None, :]
-                codes[:, j] = d2.argmin(axis=1)
-            return pd.Series([row.tolist() for row in codes])
-
+        books, rotation = train_codebooks(sample, m, iters, seed, opq_iters)
         (
-            df.select(F.col(id_col), _encode(F.col(vector_col).cast("array<float>")).alias("codes"))
+            df.select(F.col(id_col), encode_codes(F.col(vector_col), books, rotation).alias("codes"))
             .write.mode("overwrite")
             .parquet(os.path.join(path, "codes"))
         )
-        meta = {
-            "id_col": id_col,
-            "vector_col": vector_col,
-            "m": m,
-            "dsub": dsub,
-            "codebooks": [[list(map(float, c)) for c in book] for book in books],
-            "rotation": None
-            if rotation is None
-            else [list(map(float, r)) for r in rotation],
-        }
-        tmp = os.path.join(path, "pq_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(path, "pq_meta.json"))
+        write_meta(path, "pq_meta.json", codec_meta(id_col, vector_col, books, rotation))
         return PQIndex(df.sparkSession, path)
 
     def search(
@@ -256,44 +314,22 @@ class PQIndex:
         select=None,
     ) -> DataFrame:
         """ADC scan over codes → top k·refine candidates → exact cosine
-        rerank against ``source_df``'s raw vectors (semi-joined by id)."""
+        rerank (:func:`knn`) against ``source_df``'s raw vectors
+        (semi-joined by id)."""
         q = np.asarray(query_vec, dtype=np.float64)
         q = q / np.linalg.norm(q)
         qr = q if self.rotation is None else q @ self.rotation
-        # asymmetric table: exact distance of the query subvector to every
-        # codebook entry; Σ_j table[j, code_j] ≈ ||q - x̂||² = 2·cos_dist
-        table = np.stack(
-            [
-                ((qr[j * self.dsub : (j + 1) * self.dsub][None, :] - self.codebooks[j]) ** 2).sum(
-                    axis=1
-                )
-                for j in range(self.m)
-            ]
-        )  # (m, 256)
-        tab, mm = table, self.m
-
-        @F.pandas_udf("double")
-        def _adc(codes: pd.Series) -> pd.Series:
-            c = np.array(codes.tolist(), dtype=np.int64)
-            return pd.Series(tab[np.arange(mm)[None, :], c].sum(axis=1))
-
+        adc = adc_scores(F.col("codes"), adc_table(qr, self.codebooks))
         codes = self.spark.read.parquet(os.path.join(self.path, "codes"))
         cand = (
-            codes.select(self.id_col, _adc("codes").alias("__adc"))
+            codes.select(self.id_col, adc.alias("__adc"))
             .orderBy(F.col("__adc").asc(), F.col(self.id_col).asc())
             .limit(int(k) * int(refine))
             .select(self.id_col)
         )
         rerank = source_df.join(F.broadcast(cand), self.id_col, "left_semi")
-        out = rerank.withColumn(
-            "dist", F.round(cosine_distance(F.col(self.vector_col), [float(v) for v in q]), 6)
-        )
         cols = list(select) if select is not None else [self.id_col]
-        return (
-            out.orderBy(F.col("dist").asc(), F.col(self.id_col).asc())
-            .limit(int(k))
-            .select(*cols, "dist")
-        )
+        return knn(rerank, self.vector_col, q, k=int(k), select=cols, id_col=self.id_col)
 
 
 def build_or_load_pq(

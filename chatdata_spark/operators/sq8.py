@@ -43,6 +43,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chatdata_spark.operators.knn import knn
+
 LEVELS = 255
 
 
@@ -155,13 +157,11 @@ def sq8_knn(
 ) -> DataFrame:
     """Top-k by symmetric SQ8 distance; ``rerank=None`` returns the pure
     quantized ranking (exact under the quantization — the oracle config),
-    ``rerank=m`` screens the top-m then reranks by exact cosine (the
-    production funnel, the binary_knn convention; recall pinned in
+    ``rerank=m`` screens the top-m then reranks by exact cosine through
+    :func:`knn` (the production funnel, the binary_knn convention; recall pinned in
     tests). Calibration defaults to the input corpus; pass a frozen
     (los, steps) for the production posture where the grid is calibrated
     once with the index build."""
-    from chatdata_spark.functions.vector import cosine_distance
-
     los, steps = calibration or sq8_calibrate(df, vec_col, dim)
     qcodes = sq8_code_query(qvec, los, steps)
     enc = sq8_encode(df, vec_col, los, steps, out="__sq8")
@@ -183,10 +183,5 @@ def sq8_knn(
         out = scored.orderBy(F.asc("sq8_dist"), F.asc(id_col)).limit(int(k))
         return out.drop(id_col) if drop_id else out
     cand = scored.orderBy(F.asc("sq8_dist"), F.asc(id_col)).limit(int(rerank))
-    out = (
-        cand.withColumn("dist", F.round(cosine_distance(vec_col, qvec), 6))
-        .select(*cols, "dist")
-        .orderBy(F.asc("dist"), F.asc(id_col))
-        .limit(int(k))
-    )
+    out = knn(cand, vec_col, qvec, k=int(k), select=cols, id_col=id_col)
     return out.drop(id_col) if drop_id else out

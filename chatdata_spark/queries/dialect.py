@@ -20,6 +20,7 @@ Q3 = hash_embed("dialect question", DIM)
 
 
 def _duck_vec(vec) -> str:
+    """Float64 DuckDB list literal for oracle SQL (shared by the query modules)."""
     return "CAST([" + ",".join(repr(float(x)) for x in vec) + "] AS DOUBLE[])"
 
 

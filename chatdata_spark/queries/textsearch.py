@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from chatdata_spark.functions.vector import hash_embed
 from chatdata_spark.operators.knn import knn
 from chatdata_spark.operators.textsearch import bm25_topk, rrf_fuse, with_rank
+from chatdata_spark.queries.dialect import _duck_vec
 from chatdata_spark.registry import query
 
 TERMS = ["vector", "join", "stream"]
@@ -85,10 +86,6 @@ def bm25_text_search(spark, sf_dir):
     ranking lives here)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return bm25_topk(d, "doc_id", "text", TERMS, k=20, k1=K1, b=B, idf="rational")
-
-
-def _duck_vec(vec) -> str:
-    return "CAST([" + ",".join(repr(float(x)) for x in vec) + "] AS DOUBLE[])"
 
 
 @query(

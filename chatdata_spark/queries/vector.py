@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from chatdata_spark.functions.vector import hash_embed, vector_literal_sql
 from chatdata_spark.operators.knn import knn
+from chatdata_spark.queries.dialect import _duck_vec
 from chatdata_spark.registry import query
 
 DIM = 64
@@ -46,10 +47,6 @@ def _oracle_sf_dir() -> str:
     from chatdata_spark.catalog import oracle_sf_dir
 
     return oracle_sf_dir()
-
-
-def _duck_vec(vec) -> str:
-    return "CAST([" + ",".join(repr(float(x)) for x in vec) + "] AS DOUBLE[])"
 
 
 def _duck_cos(col: str, vec) -> str:
@@ -119,6 +116,99 @@ def _ivf_index(spark, sf_dir, n_clusters=8):
     return build_or_load_ivf(spark, emb, path, "vec_id", "embedding", n_clusters=n_clusters)
 
 
+def _pq_index(spark, sf_dir, opq_iters=0):
+    """The m=8 PQ index (``opq_iters > 0``: OPQ) over the embeddings,
+    built once into the shared cache (``pq/..._m8`` or ``opq/..._m8i6``)."""
+    from chatdata_spark.catalog import shared_cache_path
+    from chatdata_spark.operators.pq import build_or_load_pq
+
+    kind, tag = ("opq", f"m8i{opq_iters}") if opq_iters else ("pq", "m8")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return build_or_load_pq(
+        spark, emb, shared_cache_path(kind, sf_dir, tag), "vec_id", "embedding",
+        m=8, opq_iters=opq_iters,
+    )
+
+
+def _ivfpq_index(spark, sf_dir, residual=False, opq_iters=0):
+    """The m=8 IVF-PQ index over ``_ivf_index``'s k=8 layout, built once
+    into the shared cache (``ivfpq/..._k8m8``; residual + OPQ adds
+    ``r1o{opq_iters}``)."""
+    from chatdata_spark.catalog import shared_cache_path
+    from chatdata_spark.operators.ivfpq import build_or_load_ivfpq
+
+    tag = "k8m8" + ("r1" if residual else "") + (f"o{opq_iters}" if opq_iters else "")
+    return build_or_load_ivfpq(
+        _ivf_index(spark, sf_dir), shared_cache_path("ivfpq", sf_dir, tag), m=8,
+        residual=residual, opq_iters=opq_iters,
+    )
+
+
+def _ann_soundness(res, emb, q, margin):
+    """The soundness invariant every approximate-search query reports, one
+    row: ``n_results``; ``n_in_top{margin}``, how many results sit in the
+    exact top-``margin`` (a full-scan :func:`knn` semi-joined — the count
+    drops if the screen lets a far row through); ``min_dist``, the best
+    returned distance; and ``found_true_nn``, whether that equals the
+    exact minimum over ``emb``. Approximate results have no exact id set
+    to compare, so the oracles pin these stats instead."""
+    topm = knn(emb, "embedding", q, k=margin, select=["vec_id"], id_col="vec_id")
+    n_in = f"n_in_top{margin}"
+    stats = res.agg(
+        F.count(F.lit(1)).alias("n_results"), F.min("dist").cast("double").alias("min_dist")
+    )
+    contained = (
+        res.join(F.broadcast(topm.select("vec_id")), "vec_id", "left_semi")
+        .agg(F.count(F.lit(1)).alias(n_in))
+    )
+    exact_min = topm.agg(F.min("dist").alias("exact_min"))
+    return (
+        stats.join(F.broadcast(contained))
+        .join(F.broadcast(exact_min))
+        .select(
+            "n_results", n_in, "min_dist",
+            (F.col("min_dist") == F.col("exact_min")).alias("found_true_nn"),
+        )
+    )
+
+
+def _ann_soundness_literal(q, k, margin) -> str:
+    """Oracle of :func:`_ann_soundness` for a search whose page is always
+    full and inside the exact top-``margin`` with the true NN found."""
+    return f"""
+    SELECT CAST({k} AS BIGINT) AS n_results,
+           CAST({k} AS BIGINT) AS n_in_top{margin},
+           CAST(MIN({_duck_cos('embedding', q)}) AS DOUBLE) AS min_dist,
+           TRUE AS found_true_nn
+    FROM embeddings
+    """
+
+
+def _ann_soundness_replayed(cand_ids, q, k, margin) -> str:
+    """Oracle of :func:`_ann_soundness` from a replayed candidate id set:
+    the exact top-``k`` of the candidates, ranked by DuckDB's own cosine,
+    checked against DuckDB's exact top-``margin`` and global minimum. The
+    ids are integers, so no float crosses from the replay into the SQL."""
+    id_list = ",".join(str(int(i)) for i in sorted(cand_ids))
+    return f"""
+    WITH cand AS (
+        SELECT vec_id, {_duck_cos('embedding', q)} AS dist
+        FROM embeddings WHERE vec_id IN ({id_list})
+    ),
+    topk AS (SELECT vec_id, dist FROM cand ORDER BY dist ASC, vec_id ASC LIMIT {k}),
+    topm AS (SELECT vec_id FROM embeddings
+             ORDER BY {_duck_cos('embedding', q)} ASC, vec_id ASC
+             LIMIT {margin})
+    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM topk) AS n_results,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM topk t JOIN topm USING (vec_id))
+               AS n_in_top{margin},
+           (SELECT CAST(MIN(dist) AS DOUBLE) FROM topk) AS min_dist,
+           (SELECT MIN(dist) FROM topk)
+               = (SELECT MIN({_duck_cos('embedding', q)}) FROM embeddings)
+               AS found_true_nn
+    """
+
+
 @query(
     "knn_ip",
     oracle=f"""
@@ -155,37 +245,21 @@ def ann_ivf_full_probe(spark, sf_dir):
     return idx.search(Q2, k=15, n_probe=idx.n_clusters, select=["vec_id", "label"])
 
 
-@query(
-    "ann_ivf_pruned",
-    oracle=f"""
-    SELECT CAST(15 AS BIGINT) AS n_results,
-           CAST(15 AS BIGINT) AS n_in_top45,
-           CAST(MIN({_duck_cos('embedding', Q2)}) AS DOUBLE) AS min_dist
-    FROM embeddings
-    """,
-)
+@query("ann_ivf_pruned", oracle=_ann_soundness_literal(Q2, 15, 45))
 def ann_ivf_pruned(spark, sf_dir):
     """IVF pruned search (n_probe=4 of 8): reads only probed cluster
     partitions from disk; returned distances are exact, recall traded for
     scan fraction like MSTG's nprobe. Approximate by design, so the oracle
     checks SOUNDNESS invariants instead of the id set: 15 results, all
-    within the exact top-(k+30) (computed by a Spark full-scan kNN and
-    semi-joined — the literal 15s go red if pruning drops candidates or
-    mis-ranks), and the best returned distance equals the global exact
-    minimum (real SQL on the DuckDB side). Recall itself is pinned in
+    within the exact top-(k+30) (:func:`_ann_soundness` — the literal 15s
+    go red if pruning drops candidates or mis-ranks), and the best
+    returned distance equals the global exact minimum (real SQL on the
+    DuckDB side; ``found_true_nn`` TRUE). Recall itself is pinned in
     tests/test_ivf.py; the raw pruned-scan timing lives in bench.py."""
     idx = _ivf_index(spark, sf_dir)
     res = idx.search(Q2, k=15, n_probe=4, select=["vec_id"])
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    top45 = knn(emb, "embedding", Q2, k=45, select=["vec_id"], id_col="vec_id").select("vec_id")
-    stats = res.agg(
-        F.count(F.lit(1)).alias("n_results"), F.min("dist").cast("double").alias("min_dist")
-    )
-    in45 = (
-        res.join(F.broadcast(top45), "vec_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_in_top45"))
-    )
-    return stats.join(F.broadcast(in45)).select("n_results", "n_in_top45", "min_dist")
+    return _ann_soundness(res, emb, Q2, 45)
 
 
 @query(
@@ -272,23 +346,7 @@ def _lsh_probe_expected() -> str:
     keys = _pack_keys(bits, 16, 6)
     qk = set(query_keys(Q1, 16, 6, seed=7))
     cand = ids[np.array([any(int(k) in qk for k in row) for row in keys])]
-    id_list = ",".join(str(int(i)) for i in sorted(cand))
-    return f"""
-    WITH cand AS (
-        SELECT vec_id, {_duck_cos('embedding', Q1)} AS dist
-        FROM embeddings WHERE vec_id IN ({id_list})
-    ),
-    topk AS (SELECT vec_id, dist FROM cand ORDER BY dist ASC, vec_id ASC LIMIT 12),
-    topm AS (SELECT vec_id FROM embeddings
-             ORDER BY {_duck_cos('embedding', Q1)} ASC, vec_id ASC
-             LIMIT {LSH_PROBE_RANK_MARGIN})
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM topk) AS n_results,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM topk t JOIN topm USING (vec_id)) AS n_in_top90,
-           (SELECT CAST(MIN(dist) AS DOUBLE) FROM topk) AS min_dist,
-           (SELECT MIN(dist) FROM topk)
-               = (SELECT MIN({_duck_cos('embedding', Q1)}) FROM embeddings)
-               AS found_true_nn
-    """
+    return _ann_soundness_replayed(cand, Q1, 12, LSH_PROBE_RANK_MARGIN)
 
 
 @query("ann_lsh_probe", oracle=_lsh_probe_expected)
@@ -313,27 +371,7 @@ def ann_lsh_probe(spark, sf_dir):
     idx = _lsh_indexed(spark, sf_dir, n_tables=16, n_bits=6)
     res = lsh_search(idx, "embedding", Q1, k=12, n_tables=16, n_bits=6, select=["vec_id"])
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact1 = knn(emb, "embedding", Q1, k=1, select=["vec_id"], id_col="vec_id").select(
-        F.col("dist").alias("exact_min")
-    )
-    top90 = knn(
-        emb, "embedding", Q1, k=LSH_PROBE_RANK_MARGIN, select=["vec_id"], id_col="vec_id"
-    ).select("vec_id")
-    stats = res.agg(
-        F.count(F.lit(1)).alias("n_results"), F.min("dist").cast("double").alias("min_dist")
-    )
-    in90 = (
-        res.join(F.broadcast(top90), "vec_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_in_top90"))
-    )
-    return (
-        stats.join(F.broadcast(in90))
-        .join(F.broadcast(exact1))
-        .select(
-            "n_results", "n_in_top90", "min_dist",
-            (F.col("min_dist") == F.col("exact_min")).alias("found_true_nn"),
-        )
-    )
+    return _ann_soundness(res, emb, Q1, LSH_PROBE_RANK_MARGIN)
 
 
 def _embed_batch_expected() -> str:
@@ -540,7 +578,7 @@ def _pq_adc_expected() -> str:
         books = np.concatenate(
             [books, np.repeat(books[:, :1, :], 256 - books.shape[1], axis=1)], axis=1
         )
-    # encode (same expressions as PQIndex.build._encode, incl. the
+    # encode (same expressions as operators/pq.py::encode_codes, incl. the
     # float32 round-trip of the Spark cast)
     xe = x.astype(np.float32).astype(np.float64)
     xe /= np.linalg.norm(xe, axis=1, keepdims=True)
@@ -556,23 +594,7 @@ def _pq_adc_expected() -> str:
     )
     adc = table[np.arange(m)[None, :], codes].sum(axis=1)
     order = np.lexsort((ids, adc))[: k * refine]  # (__adc asc, vec_id asc)
-    id_list = ",".join(str(int(i)) for i in sorted(ids[order]))
-    return f"""
-    WITH cand AS (
-        SELECT vec_id, {_duck_cos('embedding', Q1)} AS dist
-        FROM embeddings WHERE vec_id IN ({id_list})
-    ),
-    topk AS (SELECT vec_id, dist FROM cand ORDER BY dist ASC, vec_id ASC LIMIT {k}),
-    topm AS (SELECT vec_id FROM embeddings
-             ORDER BY {_duck_cos('embedding', Q1)} ASC, vec_id ASC
-             LIMIT {PQ_ADC_RANK_MARGIN})
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM topk) AS n_results,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM topk t JOIN topm USING (vec_id)) AS n_in_top45,
-           (SELECT CAST(MIN(dist) AS DOUBLE) FROM topk) AS min_dist,
-           (SELECT MIN(dist) FROM topk)
-               = (SELECT MIN({_duck_cos('embedding', Q1)}) FROM embeddings)
-               AS found_true_nn
-    """
+    return _ann_soundness_replayed(ids[order], Q1, k, PQ_ADC_RANK_MARGIN)
 
 
 @query("ann_pq_adc", oracle=_pq_adc_expected)
@@ -593,36 +615,9 @@ def ann_pq_adc(spark, sf_dir):
     rerank sort key IS the exact distance). Recall and the 32x
     compression ratio are pinned in tests/test_pq.py; the raw
     compressed-scan timing lives in bench.py."""
-    from chatdata_spark.operators.pq import build_or_load_pq
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from chatdata_spark.catalog import shared_cache_path
-
-    idx = build_or_load_pq(
-        spark, e, shared_cache_path("pq", sf_dir, "m8"), "vec_id", "embedding", m=8
-    )
-    res = idx.search(e, Q1, k=10, refine=4, select=["vec_id"])
-    exact1 = knn(e, "embedding", Q1, k=1, select=["vec_id"], id_col="vec_id").select(
-        F.col("dist").alias("exact_min")
-    )
-    top45 = knn(
-        e, "embedding", Q1, k=PQ_ADC_RANK_MARGIN, select=["vec_id"], id_col="vec_id"
-    ).select("vec_id")
-    stats = res.agg(
-        F.count(F.lit(1)).alias("n_results"), F.min("dist").cast("double").alias("min_dist")
-    )
-    in45 = (
-        res.join(F.broadcast(top45), "vec_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_in_top45"))
-    )
-    return (
-        stats.join(F.broadcast(in45))
-        .join(F.broadcast(exact1))
-        .select(
-            "n_results", "n_in_top45", "min_dist",
-            (F.col("min_dist") == F.col("exact_min")).alias("found_true_nn"),
-        )
-    )
+    res = _pq_index(spark, sf_dir).search(e, Q1, k=10, refine=4, select=["vec_id"])
+    return _ann_soundness(res, e, Q1, PQ_ADC_RANK_MARGIN)
 
 
 def _opq_adc_expected() -> str:
@@ -646,7 +641,7 @@ def _opq_adc_expected() -> str:
     sample = x[:train_rows].copy()
     sample /= np.linalg.norm(sample, axis=1, keepdims=True)
     rot, books = opq_train(sample, m, iters=12, seed=42, opq_iters=6)
-    # encode (same expressions as PQIndex.build._encode with rotation,
+    # encode (same expressions as operators/pq.py::encode_codes with rotation,
     # incl. the float32 round-trip of the Spark cast)
     xe = x.astype(np.float32).astype(np.float64)
     xe /= np.linalg.norm(xe, axis=1, keepdims=True)
@@ -660,23 +655,7 @@ def _opq_adc_expected() -> str:
     )
     adc = table[np.arange(m)[None, :], codes].sum(axis=1)
     order = np.lexsort((ids, adc))[: k * refine]  # (__adc asc, vec_id asc)
-    id_list = ",".join(str(int(i)) for i in sorted(ids[order]))
-    return f"""
-    WITH cand AS (
-        SELECT vec_id, {_duck_cos('embedding', Q1)} AS dist
-        FROM embeddings WHERE vec_id IN ({id_list})
-    ),
-    topk AS (SELECT vec_id, dist FROM cand ORDER BY dist ASC, vec_id ASC LIMIT {k}),
-    topm AS (SELECT vec_id FROM embeddings
-             ORDER BY {_duck_cos('embedding', Q1)} ASC, vec_id ASC
-             LIMIT {OPQ_ADC_RANK_MARGIN})
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM topk) AS n_results,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM topk t JOIN topm USING (vec_id)) AS n_in_topm,
-           (SELECT CAST(MIN(dist) AS DOUBLE) FROM topk) AS min_dist,
-           (SELECT MIN(dist) FROM topk)
-               = (SELECT MIN({_duck_cos('embedding', Q1)}) FROM embeddings)
-               AS found_true_nn
-    """
+    return _ann_soundness_replayed(ids[order], Q1, k, OPQ_ADC_RANK_MARGIN)
 
 
 @query("ann_opq_adc", oracle=_opq_adc_expected)
@@ -693,48 +672,12 @@ def ann_opq_adc(spark, sf_dir):
     containment depth OPQ_ADC_RANK_MARGIN is the empirical knob.
     Rotation quality/orthonormality/determinism pinned in
     tests/test_pq.py."""
-    from chatdata_spark.operators.pq import build_or_load_pq
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from chatdata_spark.catalog import shared_cache_path
-
-    idx = build_or_load_pq(
-        spark, e, shared_cache_path("opq", sf_dir, "m8i6"), "vec_id", "embedding",
-        m=8, opq_iters=6,
-    )
-    res = idx.search(e, Q1, k=10, refine=4, select=["vec_id"])
-    exact1 = knn(e, "embedding", Q1, k=1, select=["vec_id"], id_col="vec_id").select(
-        F.col("dist").alias("exact_min")
-    )
-    topm = knn(
-        e, "embedding", Q1, k=OPQ_ADC_RANK_MARGIN, select=["vec_id"], id_col="vec_id"
-    ).select("vec_id")
-    stats = res.agg(
-        F.count(F.lit(1)).alias("n_results"), F.min("dist").cast("double").alias("min_dist")
-    )
-    inm = (
-        res.join(F.broadcast(topm), "vec_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_in_topm"))
-    )
-    return (
-        stats.join(F.broadcast(inm))
-        .join(F.broadcast(exact1))
-        .select(
-            "n_results", "n_in_topm", "min_dist",
-            (F.col("min_dist") == F.col("exact_min")).alias("found_true_nn"),
-        )
-    )
+    res = _pq_index(spark, sf_dir, opq_iters=6).search(e, Q1, k=10, refine=4, select=["vec_id"])
+    return _ann_soundness(res, e, Q1, OPQ_ADC_RANK_MARGIN)
 
 
-@query(
-    "ann_ivfpq_search",
-    oracle=f"""
-    SELECT CAST(15 AS BIGINT) AS n_results,
-           CAST(15 AS BIGINT) AS n_in_top60,
-           CAST(MIN({_duck_cos('embedding', Q2)}) AS DOUBLE) AS min_dist
-    FROM embeddings
-    """,
-)
+@query("ann_ivfpq_search", oracle=_ann_soundness_literal(Q2, 15, IVFPQ_RANK_MARGIN))
 def ann_ivfpq_search(spark, sf_dir):
     """IVF-PQ composed index (FAISS IVFPQ shape, Jégou et al. PAMI'11;
     the reference's MSTG couples routing with compressed storage the same
@@ -746,39 +689,19 @@ def ann_ivfpq_search(spark, sf_dir):
     all within the exact top-IVFPQ_RANK_MARGIN (computed by a Spark
     full-scan kNN and semi-joined — the literal 15s go red if routing or
     the ADC screen drops a top candidate), and the best returned distance
-    equal to the global exact minimum. The count/containment literals and
+    equal to the global exact minimum (``found_true_nn`` TRUE,
+    :func:`_ann_soundness`). The count/containment literals and
     the margin are fixture-empirical knobs (observed max exact rank ≤24
     at both compare scales) — on a testdata regeneration triage a red
     here as fixture drift first. Recall and the layout are pinned in
     tests/test_ivfpq.py; bench times the routed compressed scan."""
-    from chatdata_spark.catalog import shared_cache_path
-    from chatdata_spark.operators.ivfpq import build_or_load_ivfpq
-
-    ivf = _ivf_index(spark, sf_dir)
-    idx = build_or_load_ivfpq(ivf, shared_cache_path("ivfpq", sf_dir, "k8m8"), m=8)
+    res = _ivfpq_index(spark, sf_dir).search(Q2, k=15, n_probe=4, refine=4, select=["vec_id"])
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    res = idx.search(Q2, k=15, n_probe=4, refine=4, select=["vec_id"])
-    top60 = knn(
-        emb, "embedding", Q2, k=IVFPQ_RANK_MARGIN, select=["vec_id"], id_col="vec_id"
-    ).select("vec_id")
-    stats = res.agg(
-        F.count(F.lit(1)).alias("n_results"), F.min("dist").cast("double").alias("min_dist")
-    )
-    in60 = (
-        res.join(F.broadcast(top60), "vec_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_in_top60"))
-    )
-    return stats.join(F.broadcast(in60)).select("n_results", "n_in_top60", "min_dist")
+    return _ann_soundness(res, emb, Q2, IVFPQ_RANK_MARGIN)
 
 
 @query(
-    "ann_ivfpq_residual_search",
-    oracle=f"""
-    SELECT CAST(15 AS BIGINT) AS n_results,
-           CAST(15 AS BIGINT) AS n_in_top60,
-           CAST(MIN({_duck_cos('embedding', Q2)}) AS DOUBLE) AS min_dist
-    FROM embeddings
-    """,
+    "ann_ivfpq_residual_search", oracle=_ann_soundness_literal(Q2, 15, IVFPQ_RANK_MARGIN)
 )
 def ann_ivfpq_residual_search(spark, sf_dir):
     """Residual + OPQ IVF-PQ composed (the full FAISS IVFPQ training
@@ -788,30 +711,14 @@ def ann_ivfpq_residual_search(spark, sf_dir):
     as ann_ivfpq_search but the ADC screen reads one small per-probed-
     cluster table instead of a global one. Same soundness-invariant
     oracle (15 results, all within the exact top-IVFPQ_RANK_MARGIN,
-    best distance equal to the global exact minimum — observed max
+    best distance equal to the global exact minimum, ``found_true_nn``
+    TRUE — observed max
     exact rank 26 at both compare scales vs plain's 24). Quantization-
     error mechanics pinned in tests/test_ivfpq.py."""
-    from chatdata_spark.catalog import shared_cache_path
-    from chatdata_spark.operators.ivfpq import build_or_load_ivfpq
-
-    ivf = _ivf_index(spark, sf_dir)
-    idx = build_or_load_ivfpq(
-        ivf, shared_cache_path("ivfpq", sf_dir, "k8m8r1o6"), m=8,
-        residual=True, opq_iters=6,
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    idx = _ivfpq_index(spark, sf_dir, residual=True, opq_iters=6)
     res = idx.search(Q2, k=15, n_probe=4, refine=4, select=["vec_id"])
-    top60 = knn(
-        emb, "embedding", Q2, k=IVFPQ_RANK_MARGIN, select=["vec_id"], id_col="vec_id"
-    ).select("vec_id")
-    stats = res.agg(
-        F.count(F.lit(1)).alias("n_results"), F.min("dist").cast("double").alias("min_dist")
-    )
-    in60 = (
-        res.join(F.broadcast(top60), "vec_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_in_top60"))
-    )
-    return stats.join(F.broadcast(in60)).select("n_results", "n_in_top60", "min_dist")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return _ann_soundness(res, emb, Q2, IVFPQ_RANK_MARGIN)
 
 
 MQ = [hash_embed(f"mq{i}", DIM) for i in range(3)]

@@ -66,27 +66,12 @@ def warm_shared_caches(spark):
     build_or_load_* is check-then-build without a lock, so the first
     build must not race between batch threads. Idempotent — a warm /tmp
     makes this a five-stat no-op."""
-    from chatdata_spark.catalog import shared_cache_path
-    from chatdata_spark.operators.ivf import build_or_load_ivf
-    from chatdata_spark.operators.ivfpq import build_or_load_ivfpq
-    from chatdata_spark.operators.pq import build_or_load_pq
+    from chatdata_spark.queries.vector import _ivfpq_index, _pq_index
 
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    ivf = build_or_load_ivf(
-        spark, emb, shared_cache_path("ivf", SF_ORACLE, "k8"), "vec_id", "embedding", 8
-    )
-    build_or_load_pq(
-        spark, emb, shared_cache_path("pq", SF_ORACLE, "m8"), "vec_id", "embedding", m=8
-    )
-    build_or_load_pq(
-        spark, emb, shared_cache_path("opq", SF_ORACLE, "m8i6"), "vec_id", "embedding",
-        m=8, opq_iters=6,
-    )
-    build_or_load_ivfpq(ivf, shared_cache_path("ivfpq", SF_ORACLE, "k8m8"), m=8)
-    build_or_load_ivfpq(
-        ivf, shared_cache_path("ivfpq", SF_ORACLE, "k8m8r1o6"), m=8,
-        residual=True, opq_iters=6,
-    )
+    _pq_index(spark, SF_ORACLE)
+    _pq_index(spark, SF_ORACLE, opq_iters=6)
+    _ivfpq_index(spark, SF_ORACLE)  # builds the ivf k8 layout first
+    _ivfpq_index(spark, SF_ORACLE, residual=True, opq_iters=6)
 
 
 def _check_one(name: str, spark) -> None:

@@ -101,14 +101,10 @@ def sweep_lsh(spark, sf_dir, qvecs) -> list[dict]:
 
 
 def sweep_pq(spark, sf_dir, qvecs) -> list[dict]:
-    from chatdata_spark.operators.pq import build_or_load_pq
+    from chatdata_spark.queries.vector import _pq_index
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from chatdata_spark.catalog import shared_cache_path
-
-    idx = build_or_load_pq(
-        spark, emb, shared_cache_path("pq", sf_dir, "m8"), "vec_id", "embedding", m=8
-    )
+    idx = _pq_index(spark, sf_dir)
     out = []
     for refine in (1, 2, 4, 8):
         rec, dt = _run(
