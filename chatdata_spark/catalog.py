@@ -10,6 +10,9 @@ list the self-query compiler is allowed to filter on
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,8 +125,6 @@ def oracle_sf_dir() -> str:
     must read the SAME files. ONE definition so the override knob
     (tools/driver_replay.py REPLAY_SF pairs with it for the regeneration
     dry-run) cannot drift per-module."""
-    import os
-
     return os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
 
@@ -225,20 +226,36 @@ CHAT_MEMORY = TableConfig(
 )
 
 
+_OPERATORS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "operators")
+
+
+@functools.lru_cache(maxsize=None)
+def _builder_digest(operators_dir: str) -> str:
+    """md5 over the bytes of every ``operators/*.py`` — the code that
+    builds a cached index. Once per process: the digest describes the code
+    this interpreter imported, which is what builds and reads the caches."""
+    import pathlib
+
+    h = hashlib.md5()
+    for p in sorted(pathlib.Path(operators_dir).glob("*.py")):
+        h.update(p.name.encode() + b"\0" + p.read_bytes())
+    return h.hexdigest()
+
+
 def shared_cache_path(
     kind: str, sf_dir: str, suffix: str, source: str = "embeddings.parquet"
 ) -> str:
     """/tmp location for a one-time derived artifact (IVF/PQ layout,
     signature store) shared across sessions and rounds. The path embeds a
-    fingerprint of the SOURCE parquet (size + mtime), so a regenerated
-    testdata file can never silently serve a stale layout — the /tmp
+    fingerprint of the SOURCE parquet (size + mtime) AND of the operator
+    source that builds the artifact (:func:`_builder_digest`), so neither
+    a regenerated testdata file nor a changed build (PQ codebooks, IVF
+    KMeans, an encode UDF) can silently serve a stale layout — the /tmp
     caches follow the same static-data contract as the in-process plan
     memos (operators/dedup.py:_STOP_SETS), enforced by key instead of by
-    convention."""
-    import hashlib
-    import os
-
+    convention. Any edit under operators/ rebuilds every cache once."""
     st = os.stat(os.path.join(sf_dir, source))
-    fp = hashlib.md5(f"{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:10]
+    key = f"{st.st_size}:{st.st_mtime_ns}:{_builder_digest(_OPERATORS_DIR)}"
+    fp = hashlib.md5(key.encode()).hexdigest()[:10]
     safe = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     return f"/tmp/chatdata_spark_{kind}/{safe}_{suffix}_{fp}"

@@ -356,6 +356,94 @@ def _stop_set(base: DataFrame, k: int, max_df: int | float) -> list[int]:
     return stops
 
 
+# --- the shared filter-then-verify steps of every set-similarity join -----------
+
+def _bucket_pairs(keyed: DataFrame, key: str, member: str | Column) -> DataFrame:
+    """(a, b) for every two ``member`` values (a name or any column, e.g. a
+    struct) of one ``key`` bucket, once per bucket they share. The f²
+    expansion runs inside each bucket via chained JVM Generates — codegen
+    row expansion, not interpreted lambdas, not a self-join: ``keyed`` is
+    shuffled by ``key`` once. The caller bounds bucket sizes."""
+    buckets = (
+        keyed.groupBy(key).agg(F.collect_list(member).alias("docs")).filter(F.size("docs") >= 2)
+    )
+    return (
+        buckets.select("docs", F.posexplode("docs").alias("pa", "a"))
+        .select("a", F.expr("slice(docs, pa + 2, size(docs) - pa - 1)").alias("rest"))
+        .select("a", F.explode("rest").alias("b"))
+    )
+
+
+def _shared_counts(keyed: DataFrame, key: str, member: str) -> DataFrame:
+    """(i, j, n): member pairs sharing n ≥ 1 keys, i < j. Precondition:
+    distinct (key, member) rows — a repeated row would count its key twice
+    and pair the member with itself. NULL members never pair."""
+    return (
+        _bucket_pairs(keyed, key, member)
+        .select(F.least("a", "b").alias("i"), F.greatest("a", "b").alias("j"))
+        .groupBy("i", "j")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _verify_jaccard(
+    cands: DataFrame, sigs: DataFrame, threshold: float, round_digits: int
+) -> DataFrame:
+    """(i, j, jaccard ≥ threshold) for distinct candidate pairs (i, j): one
+    exact ``array_intersect`` per pair over a signature table (id, shh, sz)."""
+    lhs = sigs.select(F.col("id").alias("i"), F.col("shh").alias("sh_i"), F.col("sz").alias("sz_i"))
+    rhs = sigs.select(F.col("id").alias("j"), F.col("shh").alias("sh_j"), F.col("sz").alias("sz_j"))
+    return (
+        cands.join(lhs, "i")
+        .join(rhs, "j")
+        .withColumn("common", F.size(F.array_intersect("sh_i", "sh_j")))
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("common") / (F.col("sz_i") + F.col("sz_j") - F.col("common")), round_digits
+            ),
+        )
+        .filter(F.col("jaccard") >= float(threshold))
+        .select("i", "j", "jaccard")
+    )
+
+
+def _index_pairs(
+    df: DataFrame, id_col: str, text_col: str, k: int, max_df: int | float | None,
+    score: Callable[[Column], Column], threshold: float, round_digits: int,
+) -> DataFrame:
+    """Count-from-the-index core of :func:`jaccard_similarity_join` and
+    :func:`containment_join`: (i, j, sz_i, sz_j, common, ...) for pairs
+    sharing a non-stop shingle, ``common`` exact. ``score(common)`` is the
+    caller's measure, monotone in common; pairs whose score at the upper
+    bound common_ns + min(ns_i, ns_j) rounds below ``threshold`` are pruned
+    before the array intersect (round is monotone: no true pair is lost)."""
+    base = _with_shingle_hashes(df, id_col, text_col, k, persist=True)
+    tokens = base.select("id", F.explode("shh").alias("shingle"))
+    stops = _stop_set(base, k, max_df) if max_df is not None else []
+    # size-dispatched split: InSet below STOP_INSET_MAX, broadcast
+    # anti/semi joins above (identical contents, flat plan at any |stop|)
+    nonstop, docs = _split_stop_tokens(base, tokens, stops)
+    pairs = _shared_counts(nonstop, "shingle", "id").withColumnRenamed("n", "common_ns")
+    a = docs.select(
+        F.col("id").alias("i"), F.col("sz").alias("sz_i"),
+        F.col("n_stop").alias("ns_i"), F.col("stop_arr").alias("stop_i"),
+    )
+    b = docs.select(
+        F.col("id").alias("j"), F.col("sz").alias("sz_j"),
+        F.col("n_stop").alias("ns_j"), F.col("stop_arr").alias("stop_j"),
+    )
+    ub = F.col("common_ns") + F.least("ns_i", "ns_j")
+    return (
+        pairs.join(a, "i")
+        .join(b, "j")
+        .filter(F.round(score(ub), round_digits) >= F.lit(float(threshold)))
+        .withColumn(
+            "common", F.col("common_ns") + F.size(F.array_intersect("stop_i", "stop_j"))
+        )
+    )
+
+
 def jaccard_similarity_join(
     df: DataFrame,
     id_col: str,
@@ -405,54 +493,13 @@ def jaccard_similarity_join(
     on fixed-width longs. When the stop set is empty — the common case
     for non-boilerplate corpora — the plan collapses to index → pair
     count → size join → filter."""
-    base = _with_shingle_hashes(df, id_col, text_col, k, persist=True)
-    tokens = base.select("id", F.explode("shh").alias("shingle"))
-    tl = F.lit(float(threshold))
-    stops = _stop_set(base, k, max_df) if max_df is not None else []
-    # size-dispatched split: InSet below STOP_INSET_MAX, broadcast
-    # anti/semi joins above (identical contents, flat plan at any |stop|)
-    nonstop, docs = _split_stop_tokens(base, tokens, stops)
-    # f² pair expansion inside bounded buckets via chained Generates
-    # (codegen row expansion, not interpreted lambdas, not a self-join —
-    # the token index is shuffled by shingle exactly once)
-    buckets = (
-        nonstop.groupBy("shingle")
-        .agg(F.collect_list("id").alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    pairs = (
-        buckets.select("docs", F.posexplode("docs").alias("pa", "a"))
-        .select("a", F.expr("slice(docs, pa + 2, size(docs) - pa - 1)").alias("rest"))
-        .select("a", F.explode("rest").alias("b"))
-        .select(F.least("a", "b").alias("i"), F.greatest("a", "b").alias("j"))
-        .groupBy("i", "j")
-        .agg(F.count(F.lit(1)).alias("common_ns"))
-    )
-    a = docs.select(
-        F.col("id").alias("i"), F.col("sz").alias("sz_i"),
-        F.col("n_stop").alias("ns_i"), F.col("stop_arr").alias("stop_i"),
-    )
-    b = docs.select(
-        F.col("id").alias("j"), F.col("sz").alias("sz_j"),
-        F.col("n_stop").alias("ns_j"), F.col("stop_arr").alias("stop_j"),
-    )
-    ub = F.col("common_ns") + F.least("ns_i", "ns_j")
+
+    def jac(common: Column) -> Column:
+        return common / (F.col("sz_i") + F.col("sz_j") - common)
+
     return (
-        pairs.join(a, "i")
-        .join(b, "j")
-        # upper-bound prune BEFORE the array intersect: rounding matches
-        # the final filter, and jac_true ≤ jac_ub ⇒ round(jac_true) ≤
-        # round(jac_ub), so no true pair is dropped
-        .filter(F.round(ub / (F.col("sz_i") + F.col("sz_j") - ub), round_digits) >= tl)
-        .withColumn(
-            "common", F.col("common_ns") + F.size(F.array_intersect("stop_i", "stop_j"))
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("sz_i") + F.col("sz_j") - F.col("common")), round_digits
-            ),
-        )
+        _index_pairs(df, id_col, text_col, k, max_df, jac, threshold, round_digits)
+        .withColumn("jaccard", F.round(jac(F.col("common")), round_digits))
         .filter(F.col("jaccard") >= threshold)
         .select("i", "j", "jaccard")
     )
@@ -478,49 +525,19 @@ def containment_join(
     Same count-from-the-index plan as :func:`jaccard_similarity_join`
     (stop-split, bounded buckets, chained Generates, groupBy(i,j) count
     — the shuffles are tokens→buckets and the pair count, both on
-    longs); only the prune and the score differ: the upper bound is
-    (common_ns + min(ns))/min(sz) ≥ round-matched threshold, and the
-    output reports both directions plus the max. Exactness contract is
-    the jaccard one verbatim: values exact, candidate completeness
-    weakens only for pairs whose every shared shingle is stop-frequent.
+    longs, through :func:`_index_pairs`); only the score differs: the
+    prune scores common/min(sz) — the larger direction divides by the
+    SMALLER set — and the output reports both directions plus the max.
+    Exactness contract is the jaccard one verbatim: values exact,
+    candidate completeness weakens only for pairs whose every shared
+    shingle is stop-frequent.
 
     Output: (i, j, c_ij, c_ji, containment) with i < j,
     c_ij = common/|sh_i|, containment = max(c_ij, c_ji) ≥ threshold."""
-    base = _with_shingle_hashes(df, id_col, text_col, k, persist=True)
-    tokens = base.select("id", F.explode("shh").alias("shingle"))
-    tl = F.lit(float(threshold))
-    stops = _stop_set(base, k, max_df) if max_df is not None else []
-    nonstop, docs = _split_stop_tokens(base, tokens, stops)
-    buckets = (
-        nonstop.groupBy("shingle")
-        .agg(F.collect_list("id").alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    pairs = (
-        buckets.select("docs", F.posexplode("docs").alias("pa", "a"))
-        .select("a", F.expr("slice(docs, pa + 2, size(docs) - pa - 1)").alias("rest"))
-        .select("a", F.explode("rest").alias("b"))
-        .select(F.least("a", "b").alias("i"), F.greatest("a", "b").alias("j"))
-        .groupBy("i", "j")
-        .agg(F.count(F.lit(1)).alias("common_ns"))
-    )
-    a = docs.select(
-        F.col("id").alias("i"), F.col("sz").alias("sz_i"),
-        F.col("n_stop").alias("ns_i"), F.col("stop_arr").alias("stop_i"),
-    )
-    b = docs.select(
-        F.col("id").alias("j"), F.col("sz").alias("sz_j"),
-        F.col("n_stop").alias("ns_j"), F.col("stop_arr").alias("stop_j"),
-    )
-    ub = F.col("common_ns") + F.least("ns_i", "ns_j")
     return (
-        pairs.join(a, "i")
-        .join(b, "j")
-        # containment upper bound: common ≤ common_ns + min(ns), and the
-        # larger direction divides by the SMALLER set
-        .filter(F.round(ub / F.least("sz_i", "sz_j"), round_digits) >= tl)
-        .withColumn(
-            "common", F.col("common_ns") + F.size(F.array_intersect("stop_i", "stop_j"))
+        _index_pairs(
+            df, id_col, text_col, k, max_df,
+            lambda c: c / F.least("sz_i", "sz_j"), threshold, round_digits,
         )
         .withColumn("c_ij", F.round(F.col("common") / F.col("sz_i"), round_digits))
         .withColumn("c_ji", F.round(F.col("common") / F.col("sz_j"), round_digits))
@@ -536,8 +553,6 @@ def prefix_filter_jaccard_join(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.7,
-    max_df: int | float = 0.01,
-    order: str = "df",
     round_digits: int = 6,
 ) -> DataFrame:
     """Exact n-gram-Jaccard pairs (i < j, jac >= threshold) via **prefix
@@ -556,88 +571,44 @@ def prefix_filter_jaccard_join(
     ``max_df`` recall trade-off, the order choice here tunes bucket
     sizes, never the answer.
 
-    ``order="df"`` (default): exact rarest-first (ascending document
-    frequency, ties by hash) — two token-stream shuffles (df join +
-    per-doc rank window) buy the minimum candidate count, and no
-    stop-set heuristic is involved at all. ``order="hash"``: canonical
-    order (is_hot, hash) — the prefix is computed entirely in the SCAN
-    STAGE as ``slice(array_sort(...), 1, p)``, no df join, no per-doc
-    window shuffle; corpus-hot shingles (document frequency >
-    ``max_df``; the same driver-collected, provably-bounded stop set
-    the full index uses, shared via the ``_STOP_SETS`` memo) sort LAST
-    so boilerplate never seeds a bucket. Measured at sf0.1 (min-of-3,
-    single DAG): df 2.63 s / hash 3.01 s — the smaller candidate set
-    (df ~40% fewer) outweighs the rank plumbing here; hash is the
-    escape when the two extra token-stream shuffles dominate (very
-    wide documents, or a df-skew so broad the rank window itself
-    hot-spots).
+    The order is exact rarest-first (ascending document frequency, ties
+    by hash): two token-stream shuffles (df window + per-doc rank window)
+    buy the minimum candidate count, and no stop-set heuristic is
+    involved at all. A canonical hash order computed in the scan stage
+    (no df window, no rank shuffle) was measured slower at sf0.1
+    (min-of-3, single DAG: df 2.63 s / hash 3.01 s — df yields ~40% fewer
+    candidates) and was removed.
 
-    Candidate pruning before the distinct (both orders): the PPJoin
-    length filter (round(min_sz/max_sz) >= t — jac <= min/max and round
-    is monotone, so no rounds-up pair is lost) and the positional
-    filter: a shared token at positions (p_i, p_j) of the sorted sets
-    bounds common <= min(p_i-1, p_j-1) + 1 + min(sz_i-p_i, sz_j-p_j)
-    (common tokens sort identically in both sets), which must reach
-    ceil(t/(1+t)·(sz_i+sz_j)), the overlap jac >= t requires. Every
-    occurrence of a true pair passes (the bound is valid per
-    occurrence), so filter-then-distinct keeps completeness. Survivors
-    get ONE exact ``array_intersect`` verify against the persisted
-    signature table. Float guards: prefix length and required-overlap
-    ceils subtract 1e-9, so noise can only ADD candidates.
+    Candidate pruning before the distinct: the PPJoin length filter
+    (round(min_sz/max_sz) >= t — jac <= min/max and round is monotone,
+    so no rounds-up pair is lost) and the positional filter: a shared
+    token at positions (p_i, p_j) of the sorted sets bounds common <=
+    min(p_i-1, p_j-1) + 1 + min(sz_i-p_i, sz_j-p_j) (common tokens sort
+    identically in both sets), which must reach ceil(t/(1+t)·(sz_i+sz_j)),
+    the overlap jac >= t requires. Every occurrence of a true pair passes
+    (the bound is valid per occurrence), so filter-then-distinct keeps
+    completeness. Survivors get ONE exact ``array_intersect`` verify
+    (:func:`_verify_jaccard`) against the persisted signature table.
+    Float guards: prefix length and required-overlap ceils subtract 1e-9,
+    so noise can only ADD candidates.
 
-    Scale shape: every shuffle carries fixed-width longs — never text.
-    Shuffles (hash order): prefix tokens → buckets, candidate distinct,
-    two verify joins on ids. The stop-set statistics pass is a bounded
-    driver collect (|stop| <= avg_doc_sz/max_df, corpus-size-free)."""
-    if order not in ("hash", "df"):
-        raise ValueError(f"order must be 'hash' or 'df', got {order!r}")
+    Scale shape: every shuffle carries fixed-width longs — never text."""
     base = _with_shingle_hashes(df, id_col, text_col, k, persist=True)
     tl = F.lit(float(threshold))
     plen = (F.col("sz") - F.ceil(tl * F.col("sz") - F.lit(1e-9)) + 1).cast("int")
-    if order == "hash":
-        stops = _stop_set(base, k, max_df)
-        if stops:
-            # struct sort key (is_hot, hash): native struct ordering, the
-            # InSet probe is the only per-element work. NB this arm keeps
-            # the plan-literal InSet at any |stop| (a per-ELEMENT sort key
-            # has no join-shaped twin); corpora whose stop set outgrows
-            # STOP_INSET_MAX should use order="df" (the default), which
-            # involves no stop set at all and minimizes candidates anyway.
-            keyed = F.array_sort(
-                F.transform(
-                    "shh",
-                    lambda x: F.struct(x.isin(stops).cast("int").alias("h"), x.alias("v")),
-                )
-            )
-            pref = base.select(
-                "id", "sz", F.posexplode(F.slice(keyed, 1, plen)).alias("p0", "s")
-            ).select(
-                "id", "sz", (F.col("p0") + 1).alias("pos"), F.col("s.v").alias("shingle")
-            )
-        else:
-            pref = base.select(
-                "id", "sz",
-                F.posexplode(F.slice(F.array_sort("shh"), 1, plen)).alias("p0", "shingle"),
-            ).select("id", "sz", (F.col("p0") + 1).alias("pos"), "shingle")
-    else:
-        tokens = base.select("id", "sz", F.explode("shh").alias("shingle"))
-        # document frequency as an unordered count window: ONE shuffle of
-        # the token stream and ONE evaluation of the explode — the
-        # groupBy-count + join-back formulation shuffled the stream for
-        # the join AND ran a second aggregate pass over the persisted
-        # frame (the CLAUDE.md occurrence-count-filter pattern)
-        w_df = Window.partitionBy("shingle")
-        w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("shingle").asc())
-        pref = (
-            tokens.withColumn("df", F.count(F.lit(1)).over(w_df))
-            .withColumn("pos", F.row_number().over(w))
-            .filter(F.col("pos") <= plen)
-            .select("id", "sz", "pos", "shingle")
-        )
-    buckets = (
-        pref.groupBy("shingle")
-        .agg(F.collect_list(F.struct("id", "sz", "pos")).alias("docs"))
-        .filter(F.size("docs") >= 2)
+    tokens = base.select("id", "sz", F.explode("shh").alias("shingle"))
+    # document frequency as an unordered count window: ONE shuffle of
+    # the token stream and ONE evaluation of the explode — the
+    # groupBy-count + join-back formulation shuffled the stream for
+    # the join AND ran a second aggregate pass over the persisted
+    # frame (the occurrence-count-filter convention)
+    w_df = Window.partitionBy("shingle")
+    w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("shingle").asc())
+    pref = (
+        tokens.withColumn("df", F.count(F.lit(1)).over(w_df))
+        .withColumn("pos", F.row_number().over(w))
+        .filter(F.col("pos") <= plen)
+        .select("id", "sz", "pos", "shingle")
     )
     req = F.ceil(tl / (F.lit(1.0) + tl) * (F.col("a.sz") + F.col("b.sz")) - F.lit(1e-9))
     pos_ub = (
@@ -645,9 +616,7 @@ def prefix_filter_jaccard_join(
         + F.least(F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos"))
     )
     cands = (
-        buckets.select("docs", F.posexplode("docs").alias("pa", "a"))
-        .select("a", F.expr("slice(docs, pa + 2, size(docs) - pa - 1)").alias("rest"))
-        .select("a", F.explode("rest").alias("b"))
+        _bucket_pairs(pref, "shingle", F.struct("id", "sz", "pos"))
         .filter(
             F.round(F.least("a.sz", "b.sz") / F.greatest("a.sz", "b.sz"), round_digits) >= tl
         )
@@ -656,26 +625,7 @@ def prefix_filter_jaccard_join(
         .select(F.least("a.id", "b.id").alias("i"), F.greatest("a.id", "b.id").alias("j"))
         .distinct()
     )
-    a = base.select(
-        F.col("id").alias("i"), F.col("shh").alias("sh_i"), F.col("sz").alias("sz_i")
-    )
-    b = base.select(
-        F.col("id").alias("j"), F.col("shh").alias("sh_j"), F.col("sz").alias("sz_j")
-    )
-    return (
-        cands.join(a, "i")
-        .join(b, "j")
-        .withColumn("common", F.size(F.array_intersect("sh_i", "sh_j")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("sz_i") + F.col("sz_j") - F.col("common")),
-                round_digits,
-            ),
-        )
-        .filter(F.col("jaccard") >= tl)
-        .select("i", "j", "jaccard")
-    )
+    return _verify_jaccard(cands, base, threshold, round_digits)
 
 
 # --- MinHash LSH near-dup pairs --------------------------------------------------
@@ -767,22 +717,7 @@ def minhash_lsh_pairs(
     candidates = (
         l.join(r, ["band", "key"]).filter(F.col("i") < F.col("j")).select("i", "j").distinct()
     )
-    lhs = base.select(F.col("id").alias("i"), F.col("shh").alias("sh_i"), F.col("sz").alias("sz_i"))
-    rhs = base.select(F.col("id").alias("j"), F.col("shh").alias("sh_j"), F.col("sz").alias("sz_j"))
-    verified = (
-        candidates.join(lhs, "i")
-        .join(rhs, "j")
-        .withColumn("common", F.size(F.array_intersect("sh_i", "sh_j")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("sz_i") + F.col("sz_j") - F.col("common")), round_digits
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("i", "j", "jaccard")
-    )
-    return verified
+    return _verify_jaccard(candidates, base, threshold, round_digits)
 
 
 # --- SimHash near-dup pairs --------------------------------------------------------

@@ -62,6 +62,27 @@ from pyspark.sql import functions as F
 SCALE = 10**12
 
 
+def _edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The (src, dst) edge frame every graph operator starts from. NULL
+    endpoints are excluded up front: equi-joins drop NULL keys, so a NULL
+    node could never receive rank, a label or a walk step, yet would still
+    inflate n and out-degrees."""
+    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
+        F.col(src).isNotNull() & F.col(dst).isNotNull()
+    )
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """Distinct node set (one ``node`` column) of an :func:`_edges` frame,
+    checkpointed: every round joins against it."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
 def _seeded_pagerank(
     edges: DataFrame,
     src: str,
@@ -73,19 +94,9 @@ def _seeded_pagerank(
 ) -> DataFrame:
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
-    # NULL endpoints are excluded up front: equi-joins drop NULL keys, so a
-    # NULL node could never receive rank yet would still inflate n/outdeg
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
     # one-time layout: edges partitioned on src, reused every round
-    e = e.repartition("src").localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _edges(edges, src, dst).repartition("src").localCheckpoint()
+    nodes = _nodes(e)
     # consumed exactly once now (folded into the initial state below) —
     # no checkpoint needed; it is one pass over the checkpointed edges
     outdeg = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
@@ -272,9 +283,7 @@ def random_walks(
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
+    e = _edges(edges, src, dst)
     w = Window.partitionBy("src").orderBy("dst")
     indexed = (
         e.withColumn("idx", F.row_number().over(w) - 1)
@@ -390,16 +399,8 @@ def label_propagation(
     two map-side-combined aggregates on (node, lbl) / (node) — never the
     edge table. No driver-side graph state; localCheckpoint truncates the
     iterative lineage (constant-depth plan)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
-    e = e.repartition("src").localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _edges(edges, src, dst).repartition("src").localCheckpoint()
+    nodes = _nodes(e)
     labels = nodes.select("node", F.col("node").alias("lbl"))
     for _ in range(int(iterations)):
         nbr = (
@@ -464,17 +465,9 @@ def hits(
     node-sized score tables only. The quantizers are 1-row aggregates
     broadcast into the update (the benign broadcast-scalar pattern);
     localCheckpoint truncates lineage per round."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
-    e_src = e.repartition("src").localCheckpoint()
+    e_src = _edges(edges, src, dst).repartition("src").localCheckpoint()
     e_dst = e_src.repartition("dst").localCheckpoint()
-    nodes = (
-        e_src.select(F.col("src").alias("node"))
-        .union(e_src.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _nodes(e_src)
     h = nodes.select("node", F.lit(SCALE).cast("long").alias("h"))
     a = None
     # NOTE (r11 optimization round, measured-and-rejected): checkpointing
@@ -581,16 +574,8 @@ def harmonic_hyperball(
 
     w = 32 - p
     m = 1 << p
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
-    e_dst = e.repartition("dst").localCheckpoint()
-    nodes = (
-        e_dst.select(F.col("src").alias("node"))
-        .union(e_dst.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e_dst = _edges(edges, src, dst).repartition("dst").localCheckpoint()
+    nodes = _nodes(e_dst)
     tcols = [f"__t{j}" for j in range(m)]
     # layered select: hash computed once, then packed into m columns
     # (referencing the raw md5 expr in every branch would re-evaluate it

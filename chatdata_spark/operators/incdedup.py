@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chatdata_spark.operators.dedup import _with_shingle_hashes, minhash_band_keys_udf
+from chatdata_spark.operators.dedup import _verify_jaccard, _with_shingle_hashes, minhash_band_keys_udf
 
 
 class IncrementalMinHashStore:
@@ -132,7 +132,7 @@ class IncrementalMinHashStore:
         )
         old = self._stored_sigs()
         b = (max(self.batches()) + 1) if self.batches() else 0
-        # STATIC-DATA ASSUMPTION (as operators/dedup.py:86): semanticHash
+        # STATIC-DATA ASSUMPTION (as operators/dedup.py::_STOP_SETS): semanticHash
         # fingerprints the logical PLAN, not the data — re-staging a
         # plan-identical DataFrame whose underlying source files mutated
         # between calls passes as "same input". Callers that rewrite
@@ -176,23 +176,7 @@ class IncrementalMinHashStore:
         sigs = new.select("id", "shh", "sz")
         if old is not None:
             sigs = sigs.unionByName(old.select("id", "shh", "sz"))
-        lhs = sigs.select(F.col("id").alias("i"), F.col("shh").alias("sh_i"), F.col("sz").alias("sz_i"))
-        rhs = sigs.select(F.col("id").alias("j"), F.col("shh").alias("sh_j"), F.col("sz").alias("sz_j"))
-        pairs = (
-            cands.select("i", "j").distinct()
-            .join(lhs, "i")
-            .join(rhs, "j")
-            .withColumn("common", F.size(F.array_intersect("sh_i", "sh_j")))
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("common") / (F.col("sz_i") + F.col("sz_j") - F.col("common")),
-                    round_digits,
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("i", "j", "jaccard")
-        )
+        pairs = _verify_jaccard(cands.select("i", "j").distinct(), sigs, threshold, round_digits)
         return b, pairs
 
     def commit_batch(self, b: int) -> None:

@@ -55,7 +55,8 @@ def knn_join(
     (they ride through the Arrow group stage as int64)."""
     spark = ivf_index.spark
     # _data_path(), NOT '{path}/data': compact() swaps the committed tree
-    # to a versioned data_vN dir (see operators/dedup.py:593 twin fix)
+    # to a versioned data_vN dir (see the twin fix in
+    # operators/dedup.py::embedding_near_dup_clustered)
     base = spark.read.parquet(ivf_index._data_path()).select(
         F.col(ivf_index.id_col).alias("b_id"),
         F.col(ivf_index.vector_col).cast("array<double>").alias("bv"),

@@ -21,8 +21,8 @@ Scale shape (100 TB posture):
 - doc-frequency capping (``max_df``) uses an unordered count-over-window
   on the fingerprint (one shuffle, one evaluation — CLAUDE.md
   occurrence-count rule);
-- pair expansion runs inside bounded buckets via chained Generates (the
-  operators/dedup.py:384 pattern): with every bucket ≤ ``max_df`` docs
+- pair expansion runs inside bounded buckets via chained Generates
+  (operators/dedup.py::_bucket_pairs): with every bucket ≤ ``max_df`` docs
   the expansion is O(buckets · max_df²), never corpus-quadratic.
 
 Hashes are 60-bit truncations of md5 over the gram string — md5 (unlike
@@ -41,6 +41,8 @@ import numpy as np
 import pandas as pd  # module-top: pandas_udf type hints resolve against it
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from chatdata_spark.operators.dedup import _shared_counts
 
 # UDF-object memoization per (k, w) (CacheManager plan-equality rule)
 _WINNOW_UDFS: dict[tuple[int, int], object] = {}
@@ -132,15 +134,8 @@ def winnow_pairs(
     kept = fps.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("fp"))).filter(
         F.col("__df") <= max_df
     )
-    buckets = (
-        kept.groupBy("fp").agg(F.collect_list("__id").alias("docs")).filter(F.size("docs") >= 2)
-    )
     return (
-        buckets.select("docs", F.posexplode("docs").alias("pa", "a"))
-        .select("a", F.expr("slice(docs, pa + 2, size(docs) - pa - 1)").alias("rest"))
-        .select("a", F.explode("rest").alias("b"))
-        .select(F.least("a", "b").alias("id_a"), F.greatest("a", "b").alias("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        _shared_counts(kept, "fp", "__id")
+        .filter(F.col("n") >= min_shared)
+        .select(F.col("i").alias("id_a"), F.col("j").alias("id_b"), F.col("n").alias("n_shared"))
     )

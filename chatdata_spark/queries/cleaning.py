@@ -516,13 +516,14 @@ def _semantic_chunks_expected() -> str:
     import duckdb
     import numpy as np
 
+    from chatdata_spark.catalog import oracle_sf_dir
     from chatdata_spark.functions.vector import hash_embed
 
     W, DIM = 16, 64
     q6 = Decimal("0.000001")
     rows = duckdb.sql(
         "SELECT doc_id, text FROM read_parquet("
-        "'/root/testdata/sf0.01/documents.parquet') ORDER BY doc_id"
+        f"'{oracle_sf_dir()}/documents.parquet') ORDER BY doc_id"
     ).fetchall()
     values = []
     for doc_id, text in rows:
@@ -632,13 +633,14 @@ def _semantic_sentence_chunks_expected() -> str:
     import duckdb
     import numpy as np
 
+    from chatdata_spark.catalog import oracle_sf_dir
     from chatdata_spark.functions.vector import hash_embed
 
     W, DIM = 2, 64
     q6 = Decimal("0.000001")
     rows = duckdb.sql(
         "SELECT doc_id, text FROM read_parquet("
-        "'/root/testdata/sf0.01/documents.parquet') ORDER BY doc_id"
+        f"'{oracle_sf_dir()}/documents.parquet') ORDER BY doc_id"
     ).fetchall()
     values = []
     for doc_id, text in rows:

@@ -149,13 +149,14 @@ def _pack_bfd_expected() -> str:
     VALUES literal (the _semantic_chunks_expected convention)."""
     import duckdb
 
+    from chatdata_spark.catalog import oracle_sf_dir
     from chatdata_spark.operators.packing import bfd_pack
 
     budget = 96
     hb = _D_BUCKET.format(salt="bfd", key="doc_id")
     rows = duckdb.sql(
         f"SELECT doc_id, len(string_split(text, ' ')) AS t, ({hb}) % 8 AS shard "
-        "FROM read_parquet('/root/testdata/sf0.01/documents.parquet')"
+        f"FROM read_parquet('{oracle_sf_dir()}/documents.parquet')"
     ).fetchall()
     by_shard: dict = {}
     for doc_id, t, sh in rows:

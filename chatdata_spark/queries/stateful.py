@@ -272,10 +272,11 @@ def _stream_embed_expected() -> str:
     import duckdb
     import numpy as np
 
+    from chatdata_spark.catalog import oracle_sf_dir
     from chatdata_spark.functions.vector import hash_embed
 
     rows = duckdb.sql(
-        "SELECT doc_id, text FROM read_parquet('/root/testdata/sf0.01/documents.parquet') "
+        f"SELECT doc_id, text FROM read_parquet('{oracle_sf_dir()}/documents.parquet') "
         "WHERE doc_id < 60 AND text IS NOT NULL ORDER BY doc_id"
     ).fetchall()
     q6 = Decimal("0.000001")

@@ -186,11 +186,13 @@ def _funnel_expected() -> str:
 
     from chatdata_spark.operators.mmr import mmr_greedy
 
+    from chatdata_spark.catalog import oracle_sf_dir
+
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.01/{t}.parquet')"
+            f"read_parquet('{oracle_sf_dir()}/{t}.parquet')"
         )
     rows = con.execute(
         f"""
@@ -367,11 +369,13 @@ def _qa_context_expected() -> str:
 
     from chatdata_spark.operators.mmr import mmr_greedy
 
+    from chatdata_spark.catalog import oracle_sf_dir
+
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.01/{t}.parquet')"
+            f"read_parquet('{oracle_sf_dir()}/{t}.parquet')"
         )
     rows = con.execute(
         f"""

@@ -391,7 +391,7 @@ def _embed_batch_expected() -> str:
     from chatdata_spark.functions.vector import hash_embed
 
     rows = duckdb.sql(
-        "SELECT lang, text FROM read_parquet('/root/testdata/sf0.01/documents.parquet')"
+        f"SELECT lang, text FROM read_parquet('{_oracle_sf_dir()}/documents.parquet')"
     ).fetchall()
     per_lang: dict[str, list] = {}
     q6 = Decimal("0.000001")
@@ -941,7 +941,7 @@ def _dimred_expected() -> str:
 
     rows = duckdb.sql(
         "SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e "
-        "FROM read_parquet('/root/testdata/sf0.01/embeddings.parquet') ORDER BY vec_id"
+        f"FROM read_parquet('{_oracle_sf_dir()}/embeddings.parquet') ORDER BY vec_id"
     ).fetchall()
     mat = projection_matrix(DIM, 16, seed=7)
     x = np.array([r[2] for r in rows], dtype=np.float64) @ mat
@@ -1042,7 +1042,7 @@ def _mmr_expected() -> str:
     rows = duckdb.sql(
         f"""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        FROM read_parquet('/root/testdata/sf0.01/embeddings.parquet')
+        FROM read_parquet('{_oracle_sf_dir()}/embeddings.parquet')
         ORDER BY ROUND(1.0 - list_cosine_similarity(CAST(embedding AS DOUBLE[]), {_duck_vec(Q1)}), 6) ASC,
                  vec_id ASC
         LIMIT 100

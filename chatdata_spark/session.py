@@ -29,6 +29,20 @@ from pyspark.sql.types import StructType, _make_type_verifier, _parse_datatype_s
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    machine's physical memory, at most 24g, at least 1g. In local mode
+    storage and execution share this one heap; on a 128 GiB box 8g made
+    persisted signature tables thrash against 32 concurrent shuffle tasks
+    (cached-plan queries 3× slower under bench load), hence the 24g cap.
+    A fixed 24g on a 15.7 GiB box let the JVM grow until the kernel
+    OOM-killed it (11.7 GB resident during the test suite); half leaves
+    the rest to Python workers and the page cache. At cluster scale
+    executor memory governs."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1024, min(24 * 1024, total // 2**21))}m"
+
+
 def get_spark(
     app_name: str = "chatdata_spark",
     master: str | None = None,
@@ -69,11 +83,10 @@ def get_spark(
         # the second cycle compiled 58 classes and Metaspace stayed at
         # 181 MB. Static conf: only a fresh session picks it up.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # local[32] single-JVM: storage+execution share this heap; 8g made
-        # persisted signature tables thrash against 32 concurrent shuffle
-        # tasks (observed: cached-plan queries 3× slower under bench load).
-        # The box has 128 GiB; at cluster scale executor memory governs.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

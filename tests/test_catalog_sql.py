@@ -83,3 +83,28 @@ def test_salted_aggregate_matches_plain(spark):
         ).collect()
     }
     assert salted == plain
+
+
+def test_shared_cache_path_keys_builder_source(tmp_path, monkeypatch):
+    """The /tmp index-cache path fingerprints the operator source that
+    builds the index, not only the source parquet: the same bytes give the
+    same path wherever they live, and one changed builder file gives a new
+    path (a stale layout is never served after a build change)."""
+    import shutil
+
+    from chatdata_spark import catalog
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "embeddings.parquet").write_bytes(b"fixture")
+    real = catalog.shared_cache_path("ivf", str(sf), "k8")
+    ops = tmp_path / "ops"
+    shutil.copytree(catalog._OPERATORS_DIR, ops)
+    monkeypatch.setattr(catalog, "_OPERATORS_DIR", str(ops))
+    assert catalog.shared_cache_path("ivf", str(sf), "k8") == real
+    changed = tmp_path / "ops_changed"
+    shutil.copytree(ops, changed)
+    pq = changed / "pq.py"
+    pq.write_text(pq.read_text() + "\n# a changed codebook build\n")
+    monkeypatch.setattr(catalog, "_OPERATORS_DIR", str(changed))
+    assert catalog.shared_cache_path("ivf", str(sf), "k8") != real

@@ -67,23 +67,6 @@ def test_prefix_filter_monotone_in_threshold(spark):
     assert p8 <= p6
 
 
-def test_prefix_filter_orders_agree(spark):
-    """Both canonical orders are valid total orders, so hash (scan-stage)
-    and df (rarest-first) prefixes must produce the identical exact
-    answer — only the candidate sets differ."""
-    d = _docs(spark)
-    h = {
-        (r.i, r.j, r.jaccard)
-        for r in prefix_filter_jaccard_join(d, "doc_id", threshold=0.7, order="hash").collect()
-    }
-    f = {
-        (r.i, r.j, r.jaccard)
-        for r in prefix_filter_jaccard_join(d, "doc_id", threshold=0.7, order="df").collect()
-    }
-    assert h
-    assert h == f
-
-
 def test_simhash_finds_exact_copies(spark):
     """Re-ingested copies (identical token sets) have hamming 0 and must all
     surface even at max_hamming=0. (True near-dups of ~20-token docs can

@@ -8,7 +8,7 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pyspark.sql.functions as F
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 T0 = datetime(2024, 1, 1)
@@ -400,8 +400,8 @@ _corpus = st.lists(
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(corpus=_corpus, t=st.sampled_from([0.3, 0.5, 0.8]), order=st.sampled_from(["hash", "df"]))
-def test_prefix_filter_jaccard_matches_bruteforce(spark, corpus, t, order):
+@given(corpus=_corpus, t=st.sampled_from([0.3, 0.5, 0.8]))
+def test_prefix_filter_jaccard_matches_bruteforce(spark, corpus, t):
     """Prefix-filtered Jaccard self-join ≡ an all-pairs Python reference
     over the engine's shingle conventions (distinct word-3-grams, short
     docs padded to one whole-text shingle): prefix filtering must prune
@@ -429,9 +429,36 @@ def test_prefix_filter_jaccard_matches_bruteforce(spark, corpus, t, order):
                 want.add((i, j, jac))
     got = {
         (r.i, r.j, r.jaccard)
-        for r in prefix_filter_jaccard_join(cdf, "doc_id", threshold=t, order=order).collect()
+        for r in prefix_filter_jaccard_join(cdf, "doc_id", threshold=t).collect()
     }
     assert got == want
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.sets(st.tuples(st.integers(0, 3), st.none() | st.integers(0, 6)), max_size=16))
+@example(rows=set())
+@example(rows={(0, None), (0, 1), (0, 2), (1, None), (1, 2)})
+@example(rows={(5, m) for m in range(7)})
+def test_shared_counts_matches_combinations(spark, rows):
+    """The one bucket-pair count every set-similarity join uses equals a
+    per-key ``itertools.combinations`` reference over distinct (key,
+    member) rows: empty input, NULL members (never paired) and one key
+    holding every member included."""
+    import itertools
+    from collections import Counter
+
+    from chatdata_spark.operators.dedup import _shared_counts
+
+    by_key: dict = {}
+    for k, m in rows:
+        if m is not None:
+            by_key.setdefault(k, set()).add(m)
+    want = Counter(
+        pair for ms in by_key.values() for pair in itertools.combinations(sorted(ms), 2)
+    )
+    df = spark.createDataFrame(sorted(rows, key=str), "key long, member long")
+    got = {(r.i, r.j): r.n for r in _shared_counts(df, "key", "member").collect()}
+    assert got == dict(want)
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])

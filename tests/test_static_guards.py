@@ -88,3 +88,50 @@ def test_fixture_views_are_registered_only_in_catalog():
     assert not offenders, (
         "fixture temp view defined outside catalog.register_views:\n" + "\n".join(offenders)
     )
+
+
+def _def_span(path: pathlib.Path, name: str) -> range:
+    """Line numbers of the top-level function ``name`` in ``path``."""
+    for node in ast.parse(path.read_text(), filename=str(path)).body:
+        if isinstance(node, ast.FunctionDef) and node.name == name:
+            return range(node.lineno, node.end_lineno + 1)
+    raise AssertionError(f"{name} not found in {path}")
+
+
+def _occurrences(needle: str) -> list[tuple[pathlib.Path, int]]:
+    return [
+        (path, n)
+        for path in _library_files()
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if needle in line
+    ]
+
+
+def test_fixture_path_only_in_oracle_sf_dir():
+    """A lazy replay oracle reads the fixture tables through
+    ``catalog.oracle_sf_dir()``, which honours the fixture-dir override
+    (``SPARK_GRAFT_ORACLE_SF``). A literal ``testdata/sf0.01`` path
+    elsewhere in the library would silently ignore it."""
+    allowed = _def_span(PKG / "catalog.py", "oracle_sf_dir")
+    offenders = [
+        f"{path.relative_to(REPO).as_posix()}:{n}"
+        for path, n in _occurrences("testdata/sf0.01")
+        if not (path == PKG / "catalog.py" and n in allowed)
+    ]
+    assert not offenders, "literal fixture path outside oracle_sf_dir:\n" + "\n".join(offenders)
+
+
+def test_set_similarity_steps_written_once():
+    """Every set-similarity join expands shared-key buckets through
+    ``dedup._bucket_pairs`` and verifies candidates through
+    ``dedup._verify_jaccard``; a second copy of either step fails here."""
+    dedup = PKG / "operators" / "dedup.py"
+    for needle, home in (
+        ('array_intersect("sh_i", "sh_j")', "_verify_jaccard"),
+        ("slice(docs, pa + 2", "_bucket_pairs"),
+    ):
+        found = _occurrences(needle)
+        span = _def_span(dedup, home)
+        assert len(found) == 1 and found[0][0] == dedup and found[0][1] in span, (
+            f"{needle!r} must appear once, in dedup.{home}: {found}"
+        )
