@@ -68,7 +68,7 @@ def _edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     node could never receive rank, a label or a walk step, yet would still
     inflate n and out-degrees."""
     return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
 
 
@@ -469,7 +469,26 @@ def hits(
     e_dst = e_src.repartition("dst").localCheckpoint()
     nodes = _nodes(e_src)
     h = nodes.select("node", F.lit(SCALE).cast("long").alias("h"))
-    a = None
+
+    def half_round(e, scores, frm, to, out):
+        """Push ``scores`` (node, score) along ``e`` from ``frm`` to ``to``
+        and max-quantize the sums into the checkpointed (node, ``out``)."""
+        _, score = scores.columns
+        raw = (
+            e.join(scores.withColumnRenamed("node", frm), frm)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(score).alias("raw"))
+        )
+        q = raw.agg(
+            F.greatest(F.expr(f"max(raw) DIV {SCALE}"), F.lit(1).cast("long")).alias("q")
+        )
+        return (
+            nodes.join(raw, "node", "left")
+            .crossJoin(F.broadcast(q))
+            .select("node", F.expr("coalesce(raw, 0L) DIV q").alias(out))
+            .localCheckpoint()
+        )
+
     # NOTE (r11 optimization round, measured-and-rejected): checkpointing
     # the raw half-round aggregates so the edge join runs once per
     # half-round (instead of twice — the quantizer aggregate and the
@@ -478,38 +497,8 @@ def hits(
     # scores: the extra eager materialization jobs cost more than the
     # duplicated node-sized join they save at this shape.
     for _ in range(int(iterations)):
-        a_raw = (
-            e_src.join(h.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("h").alias("raw"))
-        )
-        qa = a_raw.agg(
-            F.greatest(F.expr(f"max(raw) DIV {SCALE}"), F.lit(1).cast("long")).alias("q")
-        )
-        a = (
-            nodes.join(a_raw, "node", "left")
-            .crossJoin(F.broadcast(qa))
-            .select(
-                "node", F.expr("coalesce(raw, 0L) DIV q").alias("a")
-            )
-            .localCheckpoint()
-        )
-        h_raw = (
-            e_dst.join(a.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("a").alias("raw"))
-        )
-        qh = h_raw.agg(
-            F.greatest(F.expr(f"max(raw) DIV {SCALE}"), F.lit(1).cast("long")).alias("q")
-        )
-        h = (
-            nodes.join(h_raw, "node", "left")
-            .crossJoin(F.broadcast(qh))
-            .select(
-                "node", F.expr("coalesce(raw, 0L) DIV q").alias("h")
-            )
-            .localCheckpoint()
-        )
+        a = half_round(e_src, h, "src", "dst", "a")
+        h = half_round(e_dst, a, "dst", "src", "h")
     return (
         nodes.join(a, "node")
         .join(h, "node")

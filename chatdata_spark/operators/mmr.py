@@ -17,14 +17,21 @@ Two-stage shape, honest about where each part runs:
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Sequence
 
 import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from chatdata_spark.operators.knn import knn
 from chatdata_spark.session import local_frame
+
+# mmr_select_distributed's worker closure calls mmr_greedy. cloudpickle
+# pickles a closure's module-level function refs BY NAME, and workers of a
+# driver running off the repo cwd cannot import chatdata_spark (CLAUDE.md),
+# so this module ships by value, as operators/pq.py does.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def mmr_greedy(
@@ -123,53 +130,23 @@ def mmr_select_distributed(
     can be 10⁴-10⁵ (bounded by one task's memory: fetch_n × dim floats;
     the greedy is O(k·fetch_n·dim) with the incremental penalty).
     Bit-identical to :func:`mmr_select` for the same inputs (asserted in
-    tests): the closure runs the SAME arithmetic as mmr_greedy — inlined,
-    not imported, per the worker-pickling rule (cloudpickle serializes a
-    module-function reference by NAME, which breaks when the driver's
-    replay runs off the repo cwd; see project notes)."""
+    tests): the task runs :func:`mmr_greedy` itself."""
     import pandas as pd
 
     q_list = [float(x) for x in qvec]
     kk, ll, idc, vc = int(k), float(lam), id_col, vec_col
 
     def greedy(batches):
-        import numpy as np
-        import pandas as pd
-
         pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            yield pd.DataFrame({idc: pd.Series([], dtype="int64"),
-                                "mmr_rank": pd.Series([], dtype="int32"),
-                                "mmr_score": pd.Series([], dtype="float64")})
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        ids = pdf[idc].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        v = np.array(pdf[vc].tolist(), dtype=np.float64)[order]
-        v = v / np.linalg.norm(v, axis=1, keepdims=True)
-        q = np.asarray(q_list, dtype=np.float64)
-        q = q / np.linalg.norm(q)
-        sorted_ids = ids[order]
-        rel = v @ q
-        n = len(ids)
-        # None-seeded penalty: same negative-max-preserving semantics as
-        # mmr_greedy (kept bit-identical by inlining, not importing)
-        penalty = None
-        active = np.ones(n, dtype=bool)
-        out_ids, out_scores = [], []
-        for _ in range(min(kk, n)):
-            score = ll * rel if penalty is None else ll * rel - (1.0 - ll) * penalty
-            score = np.where(active, score, -np.inf)
-            best = int(np.argmax(score))
-            out_ids.append(int(sorted_ids[best]))
-            out_scores.append(float(round(score[best], 6)))
-            active[best] = False
-            sim_best = v @ v[best]
-            penalty = sim_best if penalty is None else np.maximum(penalty, sim_best)
+        chosen = []
+        if pdfs:
+            pdf = pd.concat(pdfs, ignore_index=True)
+            vecs = np.array(pdf[vc].tolist(), dtype=np.float64)
+            chosen = mmr_greedy(pdf[idc].to_numpy(), vecs, q_list, kk, ll)
         yield pd.DataFrame({
-            idc: pd.Series(out_ids, dtype="int64"),
-            "mmr_rank": pd.Series(range(len(out_ids)), dtype="int32"),
-            "mmr_score": pd.Series(out_scores, dtype="float64"),
+            idc: pd.Series([i for i, _ in chosen], dtype="int64"),
+            "mmr_rank": pd.Series(range(len(chosen)), dtype="int32"),
+            "mmr_score": pd.Series([sc for _, sc in chosen], dtype="float64"),
         })
 
     cand = knn(df, vec_col, qvec, k=fetch_n, select=[id_col, vec_col], id_col=id_col)

@@ -317,50 +317,89 @@ def corr_quantity_price_by_flag(spark, sf_dir):
 
 # --- graph centrality ---------------------------------------------------------
 
-def _pagerank_oracle(iterations: int = 6, d_pct: int = 85, k: int = 20) -> str:
-    """Unrolled fixed-point PageRank in DuckDB SQL (aggregates over a
-    recursive reference are not allowed in a recursive CTE, so the k
-    iterations are generated as chained CTEs). `//` is floor division —
-    identical to Spark's DIV on the non-negative operands used here; SUMs
-    are cast back to BIGINT (DuckDB SUM(BIGINT) returns HUGEINT, which
-    pandas would materialize as float64 and break the driver hash)."""
+# The customer↔supplier transaction graph every centrality query reads:
+# distinct orders⋈lineitem pairs with 'c'/'s'-prefixed node ids, so the
+# two key spaces cannot collide. _PAIRS_SQL / _EDGES_SQL are the DuckDB
+# twins of _transaction_pairs / _both_ways.
+_PAIRS_SQL = """
+    SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
+                    's' || CAST(l_suppkey AS VARCHAR) AS s
+    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+"""
+_EDGES_SQL = "SELECT c AS src, s AS dst FROM pairs UNION ALL SELECT s AS src, c AS dst FROM pairs"
+
+
+def _transaction_pairs(spark, sf_dir):
+    """Distinct (c, s) customer→supplier pairs of orders⋈lineitem."""
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
+        )
+        .distinct()
+    )
+
+
+def _both_ways(pairs):
+    """The symmetric (src, dst) edge multiset of a (c, s) pair frame."""
+    return pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    )
+
+
+def _seeded_pagerank_oracle(seeds: str, iterations: int = 6, d_pct: int = 85, k: int = 20) -> str:
+    """Unrolled seeded PageRank over the symmetric transaction graph in
+    DuckDB SQL, mirroring operators/graph.py::_seeded_pagerank term for
+    term: initial mass, teleport and dangling redistribution land on the
+    seed set ``seeds`` (a SELECT of one ``node`` column) only. Plain
+    PageRank passes ``SELECT node FROM nodes``. Aggregates over a
+    recursive reference are not allowed in a recursive CTE, so the
+    iterations are chained CTEs; each level reads the previous one twice,
+    so every level is MATERIALIZED (inlined, they cost 2^iterations
+    evaluations). `//` is floor division — identical to Spark's DIV on the
+    non-negative operands used here; SUMs are cast back to BIGINT (DuckDB
+    SUM(BIGINT) returns HUGEINT, which pandas would materialize as float64
+    and break the driver hash)."""
     scale = 10**12
-    tele = f"(({100 - d_pct} * {scale} // 100) // nn.n)"
+    tele = f"(({100 - d_pct} * {scale} // 100) // ns.n)"
     its = []
     prev = "r0"
     for i in range(1, iterations + 1):
         its.append(f"""
-r{i} AS (
+r{i} AS MATERIALIZED (
     SELECT nd.node,
-           {tele} + ({d_pct} * (COALESCE(s.csum, 0) + dg.dm)) // 100 AS r
-    FROM nodes nd CROSS JOIN nn
+           CASE WHEN sm.node IS NOT NULL
+                THEN {tele} + ({d_pct} * (COALESCE(c.csum, 0) + dg.dms)) // 100
+                ELSE ({d_pct} * COALESCE(c.csum, 0)) // 100 END AS r
+    FROM nodes nd CROSS JOIN ns
     CROSS JOIN (
-        SELECT COALESCE(CAST(SUM(p.r) AS BIGINT), 0) // (SELECT n FROM nn) AS dm
+        SELECT COALESCE(CAST(SUM(p.r) AS BIGINT), 0) // (SELECT n FROM ns) AS dms
         FROM {prev} p LEFT JOIN deg d ON p.node = d.node WHERE d.node IS NULL
     ) dg
     LEFT JOIN (
         SELECT e.dst AS node, CAST(SUM(p.r // d.deg) AS BIGINT) AS csum
         FROM {prev} p JOIN deg d ON p.node = d.node JOIN edges e ON e.src = p.node
         GROUP BY e.dst
-    ) s ON s.node = nd.node
+    ) c ON c.node = nd.node
+    LEFT JOIN sn sm ON sm.node = nd.node
 )""")
         prev = f"r{i}"
     return f"""
-    WITH pairs AS (
-        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-                        's' || CAST(l_suppkey AS VARCHAR) AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+    WITH pairs AS ({_PAIRS_SQL}),
+    edges AS ({_EDGES_SQL}),
+    nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges
+                           UNION SELECT DISTINCT dst FROM edges),
+    deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src),
+    sn AS MATERIALIZED ({seeds}),
+    ns AS (SELECT COUNT(*) AS n FROM sn WHERE node IN (SELECT node FROM nodes)),
+    r0 AS MATERIALIZED (
+        SELECT nd.node,
+               CASE WHEN sm.node IS NOT NULL THEN ({scale} // ns.n) ELSE 0 END AS r
+        FROM nodes nd CROSS JOIN ns LEFT JOIN sn sm ON sm.node = nd.node
     ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
-    deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    r0 AS (SELECT node, ({scale} // nn.n) AS r FROM nodes CROSS JOIN nn),
     {','.join(its)}
     SELECT node, r AS rank_fp, CAST(r AS DOUBLE) / 1000000000000.0 AS rank
     FROM {prev}
@@ -368,7 +407,7 @@ r{i} AS (
     """
 
 
-@query("graph_pagerank_transactions", oracle=_pagerank_oracle())
+@query("graph_pagerank_transactions", oracle=_seeded_pagerank_oracle("SELECT node FROM nodes"))
 def graph_pagerank_transactions(spark, sf_dir):
     """PageRank over the customer↔supplier transaction graph (symmetric
     directed edges from distinct orders⋈lineitem pairs), top-20 entities.
@@ -381,20 +420,7 @@ def graph_pagerank_transactions(spark, sf_dir):
     no rounding or tolerance anywhere)."""
     from chatdata_spark.operators.graph import pagerank
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    pr = pagerank(edges, iterations=6, damping_pct=85)
+    pr = pagerank(_both_ways(_transaction_pairs(spark, sf_dir)), iterations=6, damping_pct=85)
     return pr.orderBy(F.desc("rank_fp"), "node").limit(20)
 
 
@@ -469,66 +495,13 @@ def cms_user_frequency(spark, sf_dir):
     )
 
 
-def _trustrank_oracle(iterations: int = 6, d_pct: int = 85, k: int = 20) -> str:
-    """Unrolled seeded (TrustRank) iterations: teleport, initial mass, and
-    dangling redistribution land on the seed set only — the restart-vector
-    formulation, mirrored term for term from operators/graph.py."""
-    scale = 10**12
-    tele = f"(({100 - d_pct} * {scale} // 100) // ns.n)"
-    its = []
-    prev = "r0"
-    for i in range(1, iterations + 1):
-        its.append(f"""
-r{i} AS (
-    SELECT nd.node,
-           CASE WHEN sm.node IS NOT NULL
-                THEN {tele} + ({d_pct} * (COALESCE(c.csum, 0) + dg.dms)) // 100
-                ELSE ({d_pct} * COALESCE(c.csum, 0)) // 100 END AS r
-    FROM nodes nd CROSS JOIN ns
-    CROSS JOIN (
-        SELECT COALESCE(CAST(SUM(p.r) AS BIGINT), 0) // (SELECT n FROM ns) AS dms
-        FROM {prev} p LEFT JOIN deg d ON p.node = d.node WHERE d.node IS NULL
-    ) dg
-    LEFT JOIN (
-        SELECT e.dst AS node, CAST(SUM(p.r // d.deg) AS BIGINT) AS csum
-        FROM {prev} p JOIN deg d ON p.node = d.node JOIN edges e ON e.src = p.node
-        GROUP BY e.dst
-    ) c ON c.node = nd.node
-    LEFT JOIN sn sm ON sm.node = nd.node
-)""")
-        prev = f"r{i}"
-    return f"""
-    WITH pairs AS (
-        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-                        's' || CAST(l_suppkey AS VARCHAR) AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+@query(
+    "graph_trustrank_suppliers",
+    oracle=_seeded_pagerank_oracle(
+        "SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR) AS node"
+        " FROM supplier WHERE s_nationkey < 5"
     ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
-    deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src),
-    sn AS (
-        SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR) AS node
-        FROM supplier WHERE s_nationkey < 5
-    ),
-    ns AS (SELECT COUNT(*) AS n FROM sn WHERE node IN (SELECT node FROM nodes)),
-    r0 AS (
-        SELECT nd.node,
-               CASE WHEN sm.node IS NOT NULL THEN ({scale} // ns.n) ELSE 0 END AS r
-        FROM nodes nd CROSS JOIN ns LEFT JOIN sn sm ON sm.node = nd.node
-    ),
-    {','.join(its)}
-    SELECT node, r AS rank_fp, CAST(r AS DOUBLE) / 1000000000000.0 AS rank
-    FROM {prev}
-    ORDER BY rank_fp DESC, node LIMIT {k}
-    """
-
-
-@query("graph_trustrank_suppliers", oracle=_trustrank_oracle())
+)
 def graph_trustrank_suppliers(spark, sf_dir):
     """TrustRank over the same transaction graph: the random jump lands
     only on a trusted seed set (suppliers from nations 0-4 standing in
@@ -540,24 +513,12 @@ def graph_trustrank_suppliers(spark, sf_dir):
     dangling redistribution."""
     from chatdata_spark.operators.graph import trustrank
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
     seeds = (
         _t(spark, sf_dir, "supplier")
         .filter(F.col("s_nationkey") < 5)
         .select(F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("node"))
     )
+    edges = _both_ways(_transaction_pairs(spark, sf_dir))
     tr = trustrank(edges, seeds, iterations=6, damping_pct=85)
     return tr.orderBy(F.desc("rank_fp"), "node").limit(20)
 
@@ -582,16 +543,8 @@ w{k} AS (
         prev = f"w{k}"
     union = "\nUNION ALL\n".join(f"SELECT * FROM w{k}" for k in range(steps + 1))
     return f"""
-    WITH pairs AS (
-        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-                        's' || CAST(l_suppkey AS VARCHAR) AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+    WITH pairs AS ({_PAIRS_SQL}),
+    edges AS ({_EDGES_SQL}),
     indexed AS (
         SELECT src, dst,
                row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS idx,
@@ -606,6 +559,16 @@ w{k} AS (
     """
 
 
+def _supplier_walks(spark, sf_dir):
+    """One 6-hop md5-salted walk from every supplier node of the
+    symmetric transaction graph (the corpus _walks_oracle replays)."""
+    from chatdata_spark.operators.graph import random_walks
+
+    pairs = _transaction_pairs(spark, sf_dir)
+    starts = pairs.select(F.col("s").alias("node"))
+    return random_walks(_both_ways(pairs), starts, steps=6, salt="walk")
+
+
 @query("graph_random_walks", oracle=_walks_oracle())
 def graph_random_walks(spark, sf_dir):
     """DeepWalk corpus generation: one 6-hop walk from every supplier node
@@ -615,24 +578,8 @@ def graph_random_walks(spark, sf_dir):
     (operators/graph.py::random_walks). Each step is one frontier-sized
     equi-join against the once-indexed edge table; the whole corpus is a
     single lazy plan."""
-    from chatdata_spark.operators.graph import random_walks
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    starts = pairs.select(F.col("s").alias("node"))
     return (
-        random_walks(edges, starts, steps=6, salt="walk")
+        _supplier_walks(spark, sf_dir)
         .select("walk_id", F.col("step").cast("long").alias("step"), "node")
         .orderBy("walk_id", "step")
     )
@@ -660,25 +607,10 @@ def graph_skipgram_pairs(spark, sf_dir):
     ≤ 2·window per position, never graph-sized
     (operators/graph.py::skipgram_pairs); the oracle replays walks AND
     windowing in SQL."""
-    from chatdata_spark.operators.graph import random_walks, skipgram_pairs
+    from chatdata_spark.operators.graph import skipgram_pairs
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    starts = pairs.select(F.col("s").alias("node"))
-    walks = random_walks(edges, starts, steps=6, salt="walk")
     return (
-        skipgram_pairs(walks, window=2)
+        skipgram_pairs(_supplier_walks(spark, sf_dir), window=2)
         .orderBy(F.desc("n_pairs"), "center", "context")
         .limit(50)
     )
@@ -686,7 +618,7 @@ def graph_skipgram_pairs(spark, sf_dir):
 
 def _lpa_oracle(iterations: int = 4, k: int = 20) -> str:
     """Unrolled deterministic label propagation in DuckDB SQL (same
-    chained-CTE scheme as _pagerank_oracle): each round re-derives every
+    chained-CTE scheme as _seeded_pagerank_oracle): each round re-derives every
     node's argmax-by-(count DESC, label ASC) over neighbor + self votes —
     integer counts and a total-order tie-break, so the labeling is exact
     on both engines with no tolerance."""
@@ -1075,7 +1007,7 @@ def morton3d_events_zvalues(spark, sf_dir):
 
 
 def _hits_oracle(iterations: int = 6, k: int = 10) -> str:
-    """Unrolled integer fixed-point HITS in DuckDB SQL (the _pagerank_oracle
+    """Unrolled integer fixed-point HITS in DuckDB SQL (the _seeded_pagerank_oracle
     convention: chained CTEs, `//` floor division ≡ Spark DIV on the
     non-negative operands, SUMs cast back to BIGINT against the HUGEINT
     promotion). Every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and
@@ -1109,11 +1041,7 @@ h{i} AS MATERIALIZED (
         prev_h = f"h{i}"
     last = iterations
     return f"""
-    WITH pairs AS (
-        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-                        's' || CAST(l_suppkey AS VARCHAR) AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
+    WITH pairs AS ({_PAIRS_SQL}),
     edges AS MATERIALIZED (SELECT c AS src, s AS dst FROM pairs),
     nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges
               UNION SELECT DISTINCT dst FROM edges),
@@ -1154,17 +1082,7 @@ def graph_hits_entities(spark, sf_dir):
     engines, replayed exactly by the unrolled DuckDB CTE oracle."""
     from chatdata_spark.operators.graph import hits
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    scored = hits(edges, iterations=6)
+    scored = hits(_transaction_pairs(spark, sf_dir), src="c", dst="s", iterations=6)
     auth_top = (
         scored.orderBy(F.desc("auth_fp"), "node")
         .limit(10)
@@ -1197,11 +1115,8 @@ def _hyperball_oracle() -> str:
 
     sf = oracle_sf_dir()
     pairs = duckdb.sql(
-        "SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR),"
-        " 's' || CAST(l_suppkey AS VARCHAR)"
-        f" FROM read_parquet('{sf}/orders.parquet') o"
-        f" JOIN read_parquet('{sf}/lineitem.parquet') l"
-        " ON o_orderkey = l_orderkey"
+        f"WITH orders AS (FROM read_parquet('{sf}/orders.parquet')),"
+        f" lineitem AS (FROM read_parquet('{sf}/lineitem.parquet')) {_PAIRS_SQL}"
     ).fetchall()
     edges = [(c, s) for c, s in pairs] + [(s, c) for c, s in pairs]
     nodes = sorted({n for e in edges for n in e})
@@ -1277,19 +1192,7 @@ def graph_harmonic_hyperball(spark, sf_dir):
     bit-identical, so even the top-20 CUT is tie-hazard-free."""
     from chatdata_spark.operators.graph import harmonic_hyperball
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = _both_ways(_transaction_pairs(spark, sf_dir))
     scored = harmonic_hyperball(edges, radius=4, p=4, salt="hb")
     return (
         scored.orderBy(F.desc("harmonic"), "node")

@@ -30,16 +30,44 @@ SELECT doc_id,
 FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM documents)
 """
 
-_DUCK_JACCARD_PAIRS = f"""
-WITH sh AS ({_DUCK_SHINGLES})
-SELECT a.doc_id AS i, b.doc_id AS j,
-       ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-             (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
+
+def _duck_jaccard_pairs(threshold: float) -> str:
+    """SELECT of the (i, j, jaccard) doc pairs of the CTE ``sh`` (doc_id,
+    shingle list) whose shingle Jaccard is >= ``threshold``, all-pairs."""
+    jac = (
+        "len(list_intersect(a.sh, b.sh)) * 1.0"
+        " / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))"
+    )
+    return f"""
+SELECT a.doc_id AS i, b.doc_id AS j, ROUND({jac}, 6) AS jaccard
 FROM sh a, sh b
-WHERE a.doc_id < b.doc_id
-  AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.4
-ORDER BY i, j
+WHERE a.doc_id < b.doc_id AND {jac} >= {threshold}
+"""
+
+
+def _duck_jaccard_oracle(threshold: float) -> str:
+    """Brute-force oracle of every exact Jaccard pair query."""
+    return f"WITH sh AS ({_DUCK_SHINGLES}) {_duck_jaccard_pairs(threshold)} ORDER BY i, j"
+
+
+def _duck_components(pairs: str) -> str:
+    """CTEs ``pairs`` (the SELECT ``pairs`` of (i, j) edges), ``edges``,
+    ``reach`` and ``comp`` (v, c): every vertex of a pair with its
+    component minimum, the recursive-CTE twin of operators/components.py.
+    ``pairs`` is MATERIALIZED because ``edges`` reads it twice and both
+    ``reach`` arms read ``edges``: inlined, the all-pairs similarity join
+    ran once per reference (~30 s vs ~10 s for the Jaccard closure at
+    sf0.01). The caller's WITH must be RECURSIVE and must not define these
+    names; the join alias ``nb`` stays clear of the callers' own CTEs."""
+    return f"""
+pairs AS MATERIALIZED ({pairs}),
+edges AS (SELECT i AS a, j AS b FROM pairs UNION SELECT j AS a, i AS b FROM pairs),
+reach(v, c) AS (
+    SELECT a AS v, a AS c FROM edges
+    UNION
+    SELECT nb.b AS v, r.c AS c FROM reach r JOIN edges nb ON r.v = nb.a
+),
+comp AS (SELECT v, MIN(c) AS c FROM reach GROUP BY v)
 """
 
 
@@ -66,7 +94,7 @@ def dedup_exact(spark, sf_dir):
     return exact_dedup(u, ["norm_text"], "doc_id", keep="min").select("doc_id").orderBy("doc_id")
 
 
-@query("dedup_jaccard_exact", oracle=_DUCK_JACCARD_PAIRS)
+@query("dedup_jaccard_exact", oracle=_duck_jaccard_oracle(0.4))
 def dedup_jaccard_exact(spark, sf_dir):
     """Exact n-gram-Jaccard near-dup pairs via inverted-index token join
     (shuffle on shingle, no all-pairs compare)."""
@@ -74,7 +102,7 @@ def dedup_jaccard_exact(spark, sf_dir):
     return jaccard_similarity_join(d, "doc_id", "text", k=3, threshold=0.4).orderBy("i", "j")
 
 
-@query("dedup_jaccard_prefix", oracle=_DUCK_JACCARD_PAIRS.replace("0.4", "0.7"))
+@query("dedup_jaccard_prefix", oracle=_duck_jaccard_oracle(0.7))
 def dedup_jaccard_prefix(spark, sf_dir):
     """Exact Jaccard pairs at a HIGH threshold via prefix filtering
     (PPJoin, Xiao et al. WWW'08): the inverted index covers only each
@@ -86,7 +114,7 @@ def dedup_jaccard_prefix(spark, sf_dir):
     return prefix_filter_jaccard_join(d, "doc_id", "text", k=3, threshold=0.7).orderBy("i", "j")
 
 
-@query("dedup_minhash_lsh", oracle=_DUCK_JACCARD_PAIRS)
+@query("dedup_minhash_lsh", oracle=_duck_jaccard_oracle(0.4))
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash(126) + 42-band LSH candidates, exact-Jaccard verified — same
     result set as the exact join at recall ≈ 1 for this corpus (all its
@@ -95,7 +123,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     return minhash_lsh_pairs(d, "doc_id", "text", k=3, threshold=0.4).orderBy("i", "j")
 
 
-@query("dedup_minhash_autoband", oracle=_DUCK_JACCARD_PAIRS.replace("0.4", "0.5"))
+@query("dedup_minhash_autoband", oracle=_duck_jaccard_oracle(0.5))
 def dedup_minhash_autoband(spark, sf_dir):
     """MinHash LSH with OPTIMIZER-DERIVED banding (rows_per_band="auto"):
     optimal_lsh_params minimizes the FP/FN S-curve integrals at the
@@ -180,26 +208,9 @@ def dedup_embedding(spark, sf_dir):
     ).orderBy("i", "j")
 
 
-_DUCK_COMPONENTS = f"""
+_DUCK_CANONICAL = f"""
 WITH RECURSIVE sh AS ({_DUCK_SHINGLES}),
-pairs AS (
-    SELECT a.doc_id AS i, b.doc_id AS j
-    FROM sh a, sh b
-    WHERE a.doc_id < b.doc_id
-      AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-          (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.4
-),
-edges AS (
-    SELECT i AS a, j AS b FROM pairs
-    UNION
-    SELECT j AS a, i AS b FROM pairs
-),
-reach(v, c) AS (
-    SELECT a AS v, a AS c FROM edges
-    UNION
-    SELECT e.b AS v, r.c AS c FROM reach r JOIN edges e ON r.v = e.a
-),
-comp AS (SELECT v, MIN(c) AS c FROM reach GROUP BY v)
+{_duck_components(_duck_jaccard_pairs(0.4))}
 SELECT d.doc_id,
        COALESCE(comp.c, d.doc_id) AS canonical_id,
        COALESCE(comp.c, d.doc_id) = d.doc_id AS keep
@@ -208,7 +219,7 @@ ORDER BY doc_id
 """
 
 
-@query("dedup_components", oracle=_DUCK_COMPONENTS)
+@query("dedup_components", oracle=_DUCK_CANONICAL)
 def dedup_components(spark, sf_dir):
     """Near-dup pairs → connected components → canonical assignment: the
     transitive-closure stage of corpus dedup (A~B, B~C collapse to one
@@ -222,7 +233,7 @@ def dedup_components(spark, sf_dir):
     return canonical_assignment(d, "doc_id", pairs).orderBy("doc_id")
 
 
-@query("dedup_components_star", oracle=_DUCK_COMPONENTS)
+@query("dedup_components_star", oracle=_DUCK_CANONICAL)
 def dedup_components_star(spark, sf_dir):
     """The SAME canonical assignment through the O(log n) large-star/
     small-star contraction (operators/components.py::
@@ -248,7 +259,7 @@ def dedup_components_star(spark, sf_dir):
     )
 
 
-@query("streaming_near_dup_docs", oracle=_DUCK_JACCARD_PAIRS)
+@query("streaming_near_dup_docs", oracle=_duck_jaccard_oracle(0.4))
 def streaming_near_dup_docs(spark, sf_dir):
     """§2.10 + incremental dedup composed, ORACLE-checked end to end: the
     corpus arrives as two micro-batch waves through the streaming wrapper
@@ -279,26 +290,11 @@ def streaming_near_dup_docs(spark, sf_dir):
 _V_HI = int(0.1 * (1 << 32))
 _T_HI = _V_HI + int(0.1 * (1 << 32))
 
-_DUCK_LEAKAGE_SPLIT = f"""
-WITH RECURSIVE sh AS ({{shingles}}),
-pairs AS (
-    SELECT a.doc_id AS i, b.doc_id AS j
-    FROM sh a, sh b
-    WHERE a.doc_id < b.doc_id
-      AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-          (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.4
-),
-edges AS (
-    SELECT i AS a, j AS b FROM pairs
-    UNION
-    SELECT j AS a, i AS b FROM pairs
-),
-reach(v, c) AS (
-    SELECT a AS v, a AS c FROM edges
-    UNION
-    SELECT e.b AS v, r.c AS c FROM reach r JOIN edges e ON r.v = e.a
-),
-comp AS (SELECT v, MIN(c) AS c FROM reach GROUP BY v),
+@query(
+    "leakage_safe_split_docs",
+    oracle=f"""
+WITH RECURSIVE sh AS ({_DUCK_SHINGLES}),
+{_duck_components(_duck_jaccard_pairs(0.4))},
 canon AS (
     SELECT d.doc_id, COALESCE(comp.c, d.doc_id) AS canonical_id
     FROM documents d LEFT JOIN comp ON d.doc_id = comp.v
@@ -308,12 +304,7 @@ SELECT doc_id, canonical_id,
             WHEN CAST(('0x' || substr(md5('split' || CAST(canonical_id AS VARCHAR)), 1, 8)) AS BIGINT) < {_T_HI} THEN 'test'
             ELSE 'train' END AS split
 FROM canon ORDER BY doc_id
-"""
-
-
-@query(
-    "leakage_safe_split_docs",
-    oracle=lambda: _DUCK_LEAKAGE_SPLIT.format(shingles=_DUCK_SHINGLES),
+""",
 )
 def leakage_safe_split_docs(spark, sf_dir):
     """Near-dup-aware eval split (operators/sampling.py:
@@ -358,7 +349,7 @@ def fuzzy_join_part_names(spark, sf_dir):
     )
 
 
-@query("dedup_incremental_batches", oracle=_DUCK_JACCARD_PAIRS)
+@query("dedup_incremental_batches", oracle=_duck_jaccard_oracle(0.4))
 def dedup_incremental_batches(spark, sf_dir):
     """Incremental dedup against the signature store: the corpus arrives as
     two batches; each add_batch compares only against stored signatures
@@ -501,21 +492,12 @@ def dedup_substring_removal(spark, sf_dir):
 
 @query(
     "semantic_dedup_keep",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    pairs AS (
-        SELECT a.vec_id AS i, b.vec_id AS j
-        FROM e a, e b
-        WHERE a.vec_id < b.vec_id
-          AND ROUND(list_cosine_similarity(a.v, b.v), 6) >= 0.4
-    ),
-    edges AS (SELECT i AS a, j AS b FROM pairs UNION SELECT j AS a, i AS b FROM pairs),
-    reach(v, c) AS (
-        SELECT a AS v, a AS c FROM edges
-        UNION
-        SELECT e2.b AS v, r.c AS c FROM reach r JOIN edges e2 ON r.v = e2.a
-    ),
-    comp AS (SELECT v, MIN(c) AS c FROM reach GROUP BY v),
+    {_duck_components(
+        'SELECT a.vec_id AS i, b.vec_id AS j FROM e a, e b WHERE a.vec_id < b.vec_id'
+        ' AND ROUND(list_cosine_similarity(a.v, b.v), 6) >= 0.4'
+    )},
     assign AS (
         SELECT emb.vec_id, emb.label,
                COALESCE(comp.c, emb.vec_id) AS canonical_id
@@ -544,7 +526,7 @@ def semantic_dedup_keep(spark, sf_dir):
     Group size is an unordered window count over the assignment (one
     shuffle — the CLAUDE.md count-window rule), and the oracle replays
     pairs, closure, sizing, and survivor selection in DuckDB
-    (recursive-CTE closure, the _DUCK_COMPONENTS pattern)."""
+    (recursive-CTE closure, _duck_components)."""
     from pyspark.sql import Window
 
     from chatdata_spark.catalog import shared_cache_path

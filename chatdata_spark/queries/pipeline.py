@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from chatdata_spark.queries.dedup import _duck_components, _duck_jaccard_pairs
 from chatdata_spark.queries.sampling import _D_BUCKET
 from chatdata_spark.queries.text import _D_QUALITY, _profile_frame
 from chatdata_spark.registry import query
@@ -39,22 +40,7 @@ sh AS (
                           for i in generate_series(1, greatest(len(w)-2, 1))]) AS sh
     FROM shw
 ),
-pairs AS (
-    SELECT a.doc_id AS i, b.doc_id AS j
-    FROM sh a, sh b
-    WHERE a.doc_id < b.doc_id
-      AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-          (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.4
-),
-edges AS (
-    SELECT i AS a, j AS b FROM pairs UNION SELECT j AS a, i AS b FROM pairs
-),
-reach(v, c) AS (
-    SELECT a AS v, a AS c FROM edges
-    UNION
-    SELECT e.b AS v, r.c AS c FROM reach r JOIN edges e ON r.v = e.a
-),
-comp AS (SELECT v, MIN(c) AS c FROM reach GROUP BY v),
+{_duck_components(_duck_jaccard_pairs(0.4))},
 canon AS (
     SELECT d.doc_id, d.text FROM ded d LEFT JOIN comp ON d.doc_id = comp.v
     WHERE COALESCE(comp.c, d.doc_id) = d.doc_id

@@ -91,9 +91,13 @@ def test_fixture_views_are_registered_only_in_catalog():
 
 
 def _def_span(path: pathlib.Path, name: str) -> range:
-    """Line numbers of the top-level function ``name`` in ``path``."""
+    """Line numbers of the top-level function or assignment ``name`` in
+    ``path``."""
     for node in ast.parse(path.read_text(), filename=str(path)).body:
-        if isinstance(node, ast.FunctionDef) and node.name == name:
+        if (isinstance(node, ast.FunctionDef) and node.name == name) or (
+            isinstance(node, ast.Assign)
+            and any(getattr(t, "id", None) == name for t in node.targets)
+        ):
             return range(node.lineno, node.end_lineno + 1)
     raise AssertionError(f"{name} not found in {path}")
 
@@ -135,3 +139,26 @@ def test_set_similarity_steps_written_once():
         assert len(found) == 1 and found[0][0] == dedup and found[0][1] in span, (
             f"{needle!r} must appear once, in dedup.{home}: {found}"
         )
+
+
+def test_graph_family_written_once():
+    """The customer↔supplier graph is built by ``_transaction_pairs`` on
+    the Spark side and ``_PAIRS_SQL`` on the DuckDB side, every
+    component-closure oracle runs ``dedup._duck_components``, and every
+    Jaccard-pair oracle filters through ``dedup._duck_jaccard_pairs``; a
+    second copy of any of them fails here."""
+    analytics = PKG / "queries" / "analytics.py"
+    dedup = PKG / "queries" / "dedup.py"
+    for needle, path, home in (
+        ("reach(v, c)", dedup, "_duck_components"),
+        ("'c' || CAST(o_custkey", analytics, "_PAIRS_SQL"),
+        ('F.lit("c"), F.col("o_custkey")', analytics, "_transaction_pairs"),
+        ("(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))", dedup, "_duck_jaccard_pairs"),
+    ):
+        found = _occurrences(needle)
+        span = _def_span(path, home)
+        assert len(found) == 1 and found[0][0] == path and found[0][1] in span, (
+            f"{needle!r} must appear once, in {path.name}::{home}: {found}"
+        )
+    # a textual threshold swap also rewrites any other "0.4" in the SQL
+    assert not _occurrences('.replace("0.4"'), _occurrences('.replace("0.4"')

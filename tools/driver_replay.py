@@ -1,18 +1,20 @@
 """Driver-replay verification (the verify skill's recipe, checked in).
 
-Replays the round driver's consumption path in THIS process: loads
-/root/repo/__spark_entry__.py by file path from a foreign cwd (catches
+Replays the round driver's consumption path in THIS process: loads this
+checkout's __spark_entry__.py by file path from a foreign cwd (catches
 sys.path / hardcoded-cwd / pickling-by-module-name bugs), builds the
 driver's PLAIN SparkSession (local[8], shuffle=8 — not our tuned factory),
 smoke-runs entry(), then runs each of the first 50 queries() at sf0.01 and
 compares to its oracle_sql() via DuckDB with columns sorted by name, rows
-sorted NULL-safely, exact equality.
+sorted NULL-safely, exact equality. Each query's line carries its Spark
+and oracle seconds; the five slowest oracles are listed at the end.
 
-Usage: cd /tmp && python /root/repo/tools/driver_replay.py
+Usage: cd /tmp && python <checkout>/tools/driver_replay.py
 Exit 0 = all green; nonzero lists failures."""
-import importlib.util, sys, os
+import importlib.util, sys, os, time
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 os.chdir("/tmp")
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(ROOT, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
@@ -67,7 +69,10 @@ elif os.environ.get("REPLAY_ALL"):
 else:
     names = list(qs)[:50]
 fails = []
+oracle_s = {}
 for name in names:
+    spark_s = oracle_s[name] = 0.0
+    t0 = time.perf_counter()
     try:
         sdf = qs[name](spark, SF)
         # Driver-hashability gate: the REAL driver canonicalizes via pandas
@@ -85,10 +90,13 @@ for name in names:
             continue
         cols = sorted(sdf.columns)
         spark_rows = sorted((tuple(norm(row[c]) for c in cols) for row in sdf.collect()), key=skey)
+        spark_s = time.perf_counter() - t0
         if name not in osql:
-            print(f"{name}: rows-only, {len(spark_rows)} rows")
+            print(f"{name}: rows-only, {len(spark_rows)} rows (spark {spark_s:.1f}s)")
             continue
+        t0 = time.perf_counter()
         odf = con.execute(osql[name]).fetchdf()
+        oracle_s[name] = time.perf_counter() - t0
         ocols = sorted(odf.columns)
         if cols != ocols:
             fails.append((name, f"cols {cols} vs {ocols}")); continue
@@ -127,9 +135,15 @@ for name in names:
         if spark_rows != oracle_rows:
             bad = next(i for i,(a,b) in enumerate(zip(spark_rows, oracle_rows)) if a!=b)
             fails.append((name, f"values differ at sorted row {bad}: {spark_rows[bad]} vs {oracle_rows[bad]}")); continue
-        print(f"{name}: OK ({len(spark_rows)} rows)")
+        print(f"{name}: OK ({len(spark_rows)} rows, spark {spark_s:.1f}s, oracle {oracle_s[name]:.1f}s)")
     except Exception as e:
         fails.append((name, f"{type(e).__name__}: {str(e)[:300]}"))
+    finally:
+        if fails and fails[-1][0] == name:
+            print(f"{name}: FAIL (spark {spark_s:.1f}s, oracle {oracle_s[name]:.1f}s)")
+print("\n=== SLOWEST ORACLES:")
+for n in sorted(oracle_s, key=oracle_s.get, reverse=True)[:5]:
+    print(f"{oracle_s[n]:8.1f}s  {n}")
 print("\n=== FAILURES:", len(fails))
 for n, m in fails: print(n, "->", m)
 sys.exit(1 if fails else 0)
