@@ -19,4 +19,13 @@ Layering (see SURVEY.md §7):
 - ``streaming``  — incremental embedding refresh (Structured Streaming).
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Python workers of a driver running outside the repo cannot import this
+# package, so cloudpickle ships it by value: worker closures may call any
+# chatdata_spark function, and submodules are covered through this parent.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

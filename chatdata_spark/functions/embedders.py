@@ -12,8 +12,8 @@ hash-stub factory until a real one is registered; a deployment calls::
 once at startup and every TableConfig naming that model picks it up — the
 stub is a swappable default, not a hardcoded path. Factories return an
 Arrow pandas UDF ``(text column) -> array<float>``; anything they capture
-is pickled by value to workers (broadcast the model handle, never a
-module-global reference — see the pickling rule in project notes).
+is pickled by value to workers, so they capture a model name or a
+broadcast handle, never the model itself.
 """
 
 from __future__ import annotations
@@ -62,10 +62,10 @@ def make_sentence_transformer_factory(model_name: str) -> Callable[[int], object
     module itself — a true per-process singleton shared by every UDF that
     names the same model (sentence-transformers has no such cache of its
     own; without this the weights would reload on every Arrow batch).
-    The stash rides a third-party module importable by name on workers,
-    so the closure captures only the model-name string and pickles
-    cleanly with no package-level references (worker-pickling rule). The
-    returned UDF object is memoized per model name so repeated plan
+    The stash rides a third-party module that workers import by name, so
+    it is one cache per process; a dict in this package would ship by
+    value with every UDF. The closure captures only the model-name string.
+    The returned UDF object is memoized per model name so repeated plan
     constructions stay CacheManager-equal. ``dim`` is ignored: the
     model's own output width wins (callers store real vectors at the
     model's dimension)."""

@@ -125,10 +125,9 @@ def make_embed_text_udf(dim: int = 64):
     Memoized per ``dim`` — repeated calls return the SAME UDF object so
     plans built by independent callers stay CacheManager-equal.
 
-    The hashing logic is INLINED (not a call to the module-level
-    ``hash_embed``): closures pickle by value, but their references to
-    importable-module globals pickle by name — a ``hash_embed`` reference
-    would require ``chatdata_spark`` on every Python worker's path."""
+    The hashing logic is a batch-buffered twin of the module-level
+    ``hash_embed``, kept separate on purpose: the per-row function is the
+    reference the tests pin this UDF bit-identical to."""
     memo = _HASH_EMBED_UDFS.get(dim)
     if memo is not None:
         return memo

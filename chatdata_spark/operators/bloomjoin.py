@@ -28,6 +28,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _bloom_positions(h: np.ndarray, m: int, j: int) -> tuple[np.ndarray, np.ndarray]:
+    """The j positions of each int64 hash in ``h`` in an m-bit bloom, as
+    (j, rows) byte indices and (j, rows) uint8 bit masks:
+    pos_i = h1 + i·h2 mod m, h1 the low bits, h2 an odd stride."""
+    hv = h.view(np.uint64)
+    h1 = hv & np.uint64(m - 1)
+    h2 = ((hv >> np.uint64(32)) << np.uint64(1)) | np.uint64(1)
+    pos = (h1 + np.arange(j, dtype=np.uint64)[:, None] * h2) & np.uint64(m - 1)
+    return (pos >> np.uint64(3)).astype(np.int64), (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8)
+
+
 def build_bloom(df: DataFrame, key_col: str, n_bits: int = 1 << 20, n_hashes: int = 7) -> bytes:
     """Distributed bloom build over ``df[key_col]`` → m/8-byte bitmask."""
     assert n_bits & (n_bits - 1) == 0, "n_bits must be a power of two"
@@ -36,12 +47,7 @@ def build_bloom(df: DataFrame, key_col: str, n_bits: int = 1 << 20, n_hashes: in
     def accumulate(batches):
         mask = np.zeros(m >> 3, dtype=np.uint8)
         for pdf in batches:
-            h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            h1 = h & np.uint64(m - 1)
-            h2 = ((h >> np.uint64(32)) << np.uint64(1)) | np.uint64(1)  # odd stride
-            for i in range(j):
-                pos = (h1 + np.uint64(i) * h2) & np.uint64(m - 1)
-                np.bitwise_or.at(mask, (pos >> np.uint64(3)).astype(np.int64), (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8))
+            np.bitwise_or.at(mask, *_bloom_positions(pdf["h"].to_numpy(dtype=np.int64), m, j))
         yield pd.DataFrame({"mask": [mask.tobytes()]})
 
     parts = df.select(F.xxhash64(key_col).alias("h")).mapInPandas(accumulate, "mask binary").collect()
@@ -58,15 +64,8 @@ def bloom_might_contain(bloom: bytes, key_col: str, n_bits: int, n_hashes: int =
 
     @F.pandas_udf("boolean")
     def _test(h: pd.Series) -> pd.Series:
-        hv = h.to_numpy(dtype=np.int64).view(np.uint64)
-        h1 = hv & np.uint64(m - 1)
-        h2 = ((hv >> np.uint64(32)) << np.uint64(1)) | np.uint64(1)
-        ok = np.ones(len(hv), dtype=bool)
-        for i in range(j):
-            pos = (h1 + np.uint64(i) * h2) & np.uint64(m - 1)
-            bits = mask[(pos >> np.uint64(3)).astype(np.int64)]
-            ok &= (bits & (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8)) != 0
-        return pd.Series(ok)
+        byte, bit = _bloom_positions(h.to_numpy(dtype=np.int64), m, j)
+        return pd.Series(((mask[byte] & bit) != 0).all(axis=0))
 
     return _test(F.xxhash64(key_col))
 

@@ -22,8 +22,7 @@ Spark-first shape (100 TB posture):
 - per round: adjacent pairs via equal-length slice zip (JVM) → explode →
   groupBy(pair) sum(freq) → a SINGLE collected row (the argmax — the
   only driver traffic per round); the rewrite is one Arrow pandas UDF
-  over the symbol arrays (captures only the two merged symbols — the
-  worker-pickling rule);
+  over the symbol arrays (captures only the two merged symbols);
 - each round ends in localCheckpoint(): the lineage would otherwise grow
   by one UDF per round and replan the whole history every round (the
   components.py fixpoint discipline).
@@ -68,6 +67,20 @@ def _adjacent_pairs(sym_col):
         F.slice(sym_col, 2, n1),
         lambda a, b: F.struct(a.alias("l"), b.alias("r")),
     )
+
+
+def _merge_pair(syms: list, a: str, b: str) -> list:
+    """``syms`` with every left-to-right non-overlapping adjacent (a, b)
+    replaced by the merged symbol a + b — one BPE merge."""
+    i, out = 0, []
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
 
 # Learned-merge memo keyed on (plan hash, params): two queries in one
@@ -120,19 +133,7 @@ def learn_bpe_merges(
 
         @F.pandas_udf("array<string>")
         def _merge(syms: pd.Series) -> pd.Series:  # captures only a, b
-            out = []
-            for s in syms:
-                s = list(s)
-                i, res = 0, []
-                while i < len(s):
-                    if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                        res.append(a + b)
-                        i += 2
-                    else:
-                        res.append(s[i])
-                        i += 1
-                out.append(res)
-            return pd.Series(out)
+            return pd.Series([_merge_pair(list(s), a, b) for s in syms])
 
         vocab = vocab.select(_merge("syms").alias("syms"), "freq").localCheckpoint()
     _MERGE_MEMO[memo_key] = list(merges)
@@ -157,15 +158,7 @@ def apply_bpe(
             for w in re.findall("[a-z0-9]+", (t or "").lower()):
                 s = list(w) + [END]
                 for a, b in ranked:
-                    i, res = 0, []
-                    while i < len(s):
-                        if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                            res.append(a + b)
-                            i += 2
-                        else:
-                            res.append(s[i])
-                            i += 1
-                    s = res
+                    s = _merge_pair(s, a, b)
                 toks.extend(s)
             out.append(toks)
         return pd.Series(out)

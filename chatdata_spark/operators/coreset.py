@@ -45,7 +45,6 @@ def _mind2_udf(centers: tuple):
         @F.pandas_udf("long")
         def mind2(col: pd.Series) -> pd.Series:
             # exact int64 squared distances; min over the selected set.
-            # Captures only the numpy constant (cloudpickle by-name rule).
             x = np.stack(col.to_numpy())  # (batch, d) int64
             d2 = ((x[:, None, :] - c_mat[None, :, :]) ** 2).sum(axis=2)
             return pd.Series(d2.min(axis=1))

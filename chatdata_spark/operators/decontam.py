@@ -124,9 +124,8 @@ _SCREEN_UDFS: dict = {}
 
 def _eval_screen_udf(eval_mat: np.ndarray, threshold: float):
     """array<float> corpus vector → array<int> of eval-row indices whose
-    cosine similarity is ≥ threshold − 1e-5. The eval matrix and its norms
-    are numpy constants captured by value (repo pickling rule: worker
-    closures reference no package-level globals)."""
+    cosine similarity is ≥ threshold − 1e-5, against the captured eval
+    matrix and its norms."""
     e = np.asarray(eval_mat, dtype=np.float64)
     key = (e.shape, float(threshold), hash(e.tobytes()))
     if key in _SCREEN_UDFS:

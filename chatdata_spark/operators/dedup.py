@@ -176,8 +176,7 @@ def shingle_hashes_udf(k: int):
     element access (the O(n²) trap; Generate-node inlining bypasses the
     multi-reference guard that protects plain projections).
 
-    Closure captures only ``k`` and third-party modules (worker-pickling
-    rule: no package-global references). Memoized per ``k`` — identical
+    Memoized per ``k`` — identical
     UDF objects keep repeated plans equal, so CacheManager can serve a
     persisted signature table to later invocations."""
     if k in _SHINGLE_UDFS:
@@ -782,9 +781,8 @@ def simhash_pairs(
 
 def _probe_clusters_udf(centroids: np.ndarray, n_probe: int):
     """array<float> embedding → array<int> of its n_probe nearest centroid
-    ids (cosine), Arrow-batched: one (batch, k) matmul per batch. The
-    centroid matrix is captured by VALUE in the closure (a numpy constant —
-    safe under the repo's no-module-global-refs pickling rule)."""
+    ids (cosine), Arrow-batched: one (batch, k) matmul per batch against
+    the captured centroid matrix."""
     c = np.asarray(centroids, dtype=np.float64)
     cn = np.linalg.norm(c, axis=1)
     p = int(n_probe)
@@ -886,8 +884,6 @@ def embedding_near_dup_clustered(
         margin = threshold - 10.0 ** (-round_digits + 1)
 
         def _gemm_candidates(key, pdf):
-            # Inlined per the repo's worker-closure rule (no module-global
-            # function refs); captures only constants + numpy/pandas.
             m = np.array(pdf["v"].tolist(), dtype=np.float64)
             nrm = np.linalg.norm(m, axis=1)
             nrm[nrm == 0.0] = 1.0

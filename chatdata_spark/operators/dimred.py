@@ -7,10 +7,6 @@ L2 distances are preserved. Reduction runs as ONE Arrow pandas UDF doing a
 closure constant shipped once per executor, never a join or a shuffle, so
 the operator scales linearly with rows and is embarrassingly parallel.
 
-Worker-closure rule (CLAUDE.md): the UDF body references only numpy and
-the captured ndarray — no package-level functions — so cloudpickle ships
-it whole and the driver's foreign-cwd replay works.
-
 UDF objects are memoized on (in_dim, out_dim, seed): a fresh pandas_udf
 per call would make otherwise-identical plans unequal and defeat
 CacheManager reuse (CLAUDE.md gotcha).

@@ -25,11 +25,21 @@ Two passes, exact result:
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _mg_compress(counts: Counter, slots: int) -> Counter:
+    """Misra-Gries compression: subtract the (slots+1)-th largest count
+    (or mass) from every entry and drop the non-positive ones."""
+    if len(counts) <= slots:
+        return counts
+    m = sorted(counts.values(), reverse=True)[slots]
+    return Counter({it: c - m for it, c in counts.items() if c - m > 0})
 
 
 def heavy_hitters(
@@ -44,23 +54,13 @@ def heavy_hitters(
     k = int(k_counters)
 
     def mg_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-only logic (worker-pickling rule): Counter-based MG,
-        # compressed whenever the table exceeds 4k slots.
-        from collections import Counter
-
-        def compress(counts: Counter, slots: int) -> Counter:
-            if len(counts) <= slots:
-                return counts
-            vals = sorted(counts.values(), reverse=True)
-            m = vals[slots]  # (slots+1)-th largest
-            return Counter({it: c - m for it, c in counts.items() if c - m > 0})
-
+        # Counter-based MG, compressed whenever the table exceeds 4k slots.
         counts: Counter = Counter()
         for pdf in batches:
             counts.update(pdf[item_col].tolist())
             if len(counts) > 4 * k:
-                counts = compress(counts, k)
-        counts = compress(counts, k)
+                counts = _mg_compress(counts, k)
+        counts = _mg_compress(counts, k)
         yield pd.DataFrame({item_col: list(counts.keys())})
 
     # Cast up front so the Arrow candidate frame ('{col} string' schema)
@@ -120,24 +120,14 @@ def heavy_hitters_weighted(
     ).filter(w.isNotNull() & (w >= 0))
 
     def mg_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-only logic (worker-pickling rule): weighted MG over
-        # per-batch pre-aggregated masses.
-        from collections import Counter
-
-        def compress(counts: Counter, slots: int) -> Counter:
-            if len(counts) <= slots:
-                return counts
-            vals = sorted(counts.values(), reverse=True)
-            m = vals[slots]  # (slots+1)-th largest mass
-            return Counter({it: c - m for it, c in counts.items() if c - m > 0})
-
+        # weighted MG over per-batch pre-aggregated masses
         counts: Counter = Counter()
         for pdf in batches:
             agg = pdf.groupby(item_col, sort=False)["__w"].sum()
             counts.update(agg.to_dict())
             if len(counts) > 4 * k:
-                counts = compress(counts, k)
-        counts = compress(counts, k)
+                counts = _mg_compress(counts, k)
+        counts = _mg_compress(counts, k)
         yield pd.DataFrame({item_col: list(counts.keys())})
 
     cands = toks.mapInPandas(mg_partition, f"{item_col} string").distinct()

@@ -55,6 +55,20 @@ def write_meta(path: str, name: str, meta: dict) -> None:
     os.replace(tmp, os.path.join(path, name))
 
 
+def _nearest_udf(cents: np.ndarray, ids: np.ndarray, return_type: str):
+    """Arrow UDF: array<double> vector → ``ids[i]`` of its nearest row i of
+    the float64 ``cents`` (euclidean), one GEMM per batch:
+    ||x-c||² = ||x||² - 2x·c + ||c||², the row term constant per row."""
+    c_sq = (cents**2).sum(axis=1)
+
+    @F.pandas_udf(return_type)
+    def _nearest(vecs: pd.Series) -> pd.Series:
+        x = np.array(vecs.tolist(), dtype=np.float64)
+        return pd.Series(ids[(-2.0 * (x @ cents.T) + c_sq[None, :]).argmin(axis=1)])
+
+    return _nearest
+
+
 class IVFIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -248,15 +262,11 @@ class IVFIndex:
             if not thin:
                 return self
         pos_of = {c: i for i, c in enumerate(self.cluster_ids)}
-        keep_cents = self.centroids[[pos_of[c] for c in keep]]  # (|keep|, d)
-        k_sq = (keep_cents**2).sum(axis=1)
-        keep_ids = np.array(keep, dtype=np.int64)
-
-        @F.pandas_udf("long")
-        def _nearest_keep(vecs: pd.Series) -> pd.Series:
-            x = np.array(vecs.tolist(), dtype=np.float64)
-            d2 = -2.0 * (x @ keep_cents.T) + k_sq[None, :]
-            return pd.Series(keep_ids[d2.argmin(axis=1)])
+        _nearest_keep = _nearest_udf(
+            self.centroids[[pos_of[c] for c in keep]],
+            np.array(keep, dtype=np.int64),
+            "long",
+        )
 
         thin_with_rows = [c for c in thin if sizes.get(c, 0) > 0]
         affected: list[int] = []
@@ -353,16 +363,9 @@ class IVFIndex:
         partitioned write. Centroids drift as data grows; like any IVF,
         rebuild when appended volume ≫ built volume (recall soundness is
         unaffected — assignment and search use the same centroids)."""
-        cents = self.centroids  # (k, d) float64
-        c_sq = (cents**2).sum(axis=1)
-        ids = np.array(self.cluster_ids, dtype=np.int32)  # position -> cluster id
-
-        @F.pandas_udf("int")
-        def _assign(vecs: pd.Series) -> pd.Series:
-            x = np.array(vecs.tolist(), dtype=np.float64)
-            # ||x-c||² = ||x||² - 2x·c + ||c||²; row term constant per row
-            d2 = -2.0 * (x @ cents.T) + c_sq[None, :]
-            return pd.Series(ids[d2.argmin(axis=1)])
+        _assign = _nearest_udf(
+            self.centroids, np.array(self.cluster_ids, dtype=np.int32), "int"
+        )
 
         (
             new_df.withColumn(

@@ -90,7 +90,7 @@ def _quant_udf(qbits: int):
         def _quantize(vecs: pd.Series) -> pd.Series:
             x = np.vstack(vecs.to_numpy()).astype(np.float64)  # exact from float32
             q = np.floor(x * scale).astype(np.int64)
-            bound = int((float(2**61) / max(q.shape[1], 1)) ** 0.5)
+            bound = _overflow_bound(q.shape[1])
             if len(q) and int(np.abs(q).max()) > bound:
                 raise ValueError(
                     f"quantized magnitude {int(np.abs(q).max())} exceeds the "

@@ -86,8 +86,7 @@ def knn_join(
     def _local_topk(key, qpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
         # one GEMM per (cluster, salt): raw cosine screen, local top-k with
         # a margin so exact re-scoring can never lose a true neighbor to a
-        # last-place ulp difference. Inlined logic only (worker-pickling
-        # rule: no package-global function refs in the closure).
+        # last-place ulp difference.
         if qpdf.empty or bpdf.empty:
             return pd.DataFrame(
                 {

@@ -61,22 +61,13 @@ def _pack_keys(bits: np.ndarray, n_tables: int, n_bits: int) -> np.ndarray:
 
 def lsh_keys_udf(dim: int, n_tables: int = 8, n_bits: int = 12, seed: int = 7):
     """Arrow-batched signature UDF: array<float> vector -> array<bigint>
-    of n_tables table-tagged bucket keys. The closure captures only numpy
-    arrays/ints (worker-pickling rule: no package-global references)."""
+    of n_tables table-tagged bucket keys (one GEMM per batch)."""
     planes = _hyperplanes(dim, n_tables, n_bits, seed)
-    nt, nb = n_tables, n_bits
 
     @F.pandas_udf("array<bigint>")
     def _keys(vecs: pd.Series) -> pd.Series:
         m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (m @ planes.T) > 0.0 if nb else np.zeros((m.shape[0], nt), dtype=bool)
-        rows = m.shape[0]
-        if nb == 0:
-            keys = np.zeros((rows, nt), dtype=np.int64)
-        else:
-            weights = (1 << np.arange(nb, dtype=np.int64))[::-1]
-            keys = bits.reshape(rows, nt, nb).astype(np.int64) @ weights
-        keys = keys + (np.arange(nt, dtype=np.int64) << 48)[None, :]
+        keys = _pack_keys((m @ planes.T) > 0.0, n_tables, n_bits)
         return pd.Series([k.tolist() for k in keys])
 
     return _keys

@@ -17,21 +17,14 @@ Two-stage shape, honest about where each part runs:
 
 from __future__ import annotations
 
-import sys
 from collections.abc import Sequence
 
 import numpy as np
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 
 from chatdata_spark.operators.knn import knn
 from chatdata_spark.session import local_frame
 
-# mmr_select_distributed's worker closure calls mmr_greedy. cloudpickle
-# pickles a closure's module-level function refs BY NAME, and workers of a
-# driver running off the repo cwd cannot import chatdata_spark (CLAUDE.md),
-# so this module ships by value, as operators/pq.py does.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def mmr_greedy(

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from bisect import bisect_left, insort
 
-import pandas as pd  # noqa: F401  (pandas_udf type hints need module-top import)
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,7 +39,7 @@ def bfd_pack(items: list[tuple], budget: int) -> list[tuple]:
     ``(id, bin_id, tokens, truncated)``. Items longer than ``budget``
     get a bin of their own with ``truncated=True`` (the caller decides
     whether to split or drop them). Shared verbatim by the oracle replay
-    — any change here changes both sides."""
+    and the per-shard worker pass — any change here changes both sides."""
     order = sorted(items, key=lambda it: (-int(it[1]), it[0]))
     # sorted list of (remaining, bin_id): bisect finds the SMALLEST
     # remaining >= t; equal remainders tie-break on lowest bin_id
@@ -93,41 +93,13 @@ def pack_best_fit(
         f"{id_col} {id_type}, shard int, bin_id int, "
         "tokens bigint, truncated boolean"
     )
-    out_id = id_col  # plain string constant — safe to capture
 
     def _pack(pdf):
-        # BFD inlined (cloudpickle pickles module-global fn refs by NAME;
-        # workers can't import chatdata_spark when the driver runs off
-        # repo cwd) — mirror of bfd_pack, pinned equal by unit test
-        from bisect import bisect_left as _bl, insort as _ins
-
         shard = int(pdf["__shard"].iloc[0])
-        order = sorted(
-            zip(pdf["__id"].tolist(), pdf["__t"].tolist()),
-            key=lambda it: (-int(it[1]), it[0]),
-        )
-        open_bins = []
-        n_bins = 0
-        rows = []
-        for doc_id, t in order:
-            t = int(t)
-            if t > b:
-                rows.append((doc_id, shard, n_bins, t, True))
-                n_bins += 1
-                continue
-            i = _bl(open_bins, (t, -1))
-            if i < len(open_bins):
-                rem, bn = open_bins.pop(i)
-                _ins(open_bins, (rem - t, bn))
-                rows.append((doc_id, shard, bn, t, False))
-            else:
-                rows.append((doc_id, shard, n_bins, t, False))
-                _ins(open_bins, (b - t, n_bins))
-                n_bins += 1
-        import pandas as _pd
-
-        return _pd.DataFrame(
-            rows, columns=[out_id, "shard", "bin_id", "tokens", "truncated"]
+        rows = bfd_pack(list(zip(pdf["__id"].tolist(), pdf["__t"].tolist())), b)
+        return pd.DataFrame(
+            [(doc_id, shard, bin_id, t, trunc) for doc_id, bin_id, t, trunc in rows],
+            columns=[id_col, "shard", "bin_id", "tokens", "truncated"],
         )
 
     out = base.groupBy("__shard").applyInPandas(_pack, schema=schema)

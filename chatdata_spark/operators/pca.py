@@ -28,9 +28,8 @@ collect; d=64 → 2,145 scalars. Projection is one GEMM per Arrow batch
 (the dimred.py shape). Eigen-sign ambiguity is fixed by making each
 component's largest-|coefficient| entry positive (first index on ties).
 
-Worker-closure rule (CLAUDE.md): UDF/mapInPandas bodies reference only
-numpy/pandas/decimal and captured constants. Projection UDFs are memoized
-on the model bytes so repeated invocations stay plan-equal.
+Projection UDFs are memoized on the model bytes so repeated invocations
+stay plan-equal.
 """
 
 from __future__ import annotations

@@ -41,23 +41,15 @@ registered queries check the soundness invariant
 from __future__ import annotations
 
 import os
-import sys
 
 import numpy as np
 import pandas as pd
-from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chatdata_spark.operators.ivf import read_meta, write_meta
 from chatdata_spark.operators.knn import knn
 
-# The encode UDF calls _encode_np on the workers. cloudpickle pickles a
-# closure's module-level function refs BY NAME, and workers of a driver
-# running off the repo cwd cannot import chatdata_spark (CLAUDE.md), so
-# this module ships by value: one argmin expression serves the driver-side
-# OPQ alternation and the distributed encode alike.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _kmeans_1d(x: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:

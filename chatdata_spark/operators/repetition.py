@@ -38,7 +38,7 @@ caller's tiny group-by on the flag columns.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401  (module-top import: pandas_udf hint rule)
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -64,10 +64,8 @@ _STATS_SCHEMA = "struct<total: long, " + ", ".join(
 
 
 def repetition_stats_py(words: list) -> dict:
-    """Sequential reference for one document's repetition numerators —
-    the oracle replay twin of the Arrow pass in
-    :func:`ngram_repetition_stats` (which inlines the identical loops:
-    worker closures must not reference package functions, CLAUDE.md).
+    """One document's repetition numerators — the per-row body of the
+    Arrow pass in :func:`ngram_repetition_stats` and of its oracle replay.
     Returns {total, t2, t3, t4, d5..d10} as plain ints."""
     lens = [len(w) for w in words]
     out = {"total": sum(lens)}
@@ -108,41 +106,7 @@ def _repetition_stats_udf():
 
     @pandas_udf(_STATS_SCHEMA)
     def stats_udf(words: pd.Series) -> pd.DataFrame:
-        # repetition_stats_py inlined (cloudpickle by-name rule)
-        top_rules = (("t2", 2), ("t3", 3), ("t4", 4))
-        dup_rules = (
-            ("d5", 5), ("d6", 6), ("d7", 7), ("d8", 8), ("d9", 9), ("d10", 10),
-        )
-
-        def stats(ws):
-            ws = list(ws)
-            lens = [len(w) for w in ws]
-            out = {"total": sum(lens)}
-            for field, n in top_rules:
-                cnt = {}
-                for i in range(len(ws) - n + 1):
-                    g = "\x00".join(ws[i : i + n])
-                    cnt[g] = cnt.get(g, 0) + 1
-                best = 0
-                if cnt:
-                    bc = max(cnt.values())
-                    if bc >= 2:
-                        g = min(k for k, c in cnt.items() if c == bc)
-                        best = bc * (len(g) - (n - 1))
-                out[field] = best
-            for field, n in dup_rules:
-                cnt = {}
-                for i in range(len(ws) - n + 1):
-                    g = "\x00".join(ws[i : i + n])
-                    cnt[g] = cnt.get(g, 0) + 1
-                marked = bytearray(len(ws))
-                for i in range(len(ws) - n + 1):
-                    if cnt["\x00".join(ws[i : i + n])] >= 2:
-                        marked[i : i + n] = b"\x01" * n
-                out[field] = sum(l for l, m in zip(lens, marked) if m)
-            return out
-
-        return pd.DataFrame([stats(w) for w in words])
+        return pd.DataFrame([repetition_stats_py(list(w)) for w in words])
 
     _UDF_SINGLETON.append(stats_udf)
     return stats_udf

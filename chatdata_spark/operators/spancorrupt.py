@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd  # noqa: F401  (module-top import: pandas_udf hint rule)
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -42,9 +42,8 @@ MAX_SPAN = 5  # uniform 1..5, mean 3
 
 def corruption_plan_py(doc_id: int, words: list) -> tuple:
     """(n_tokens, n_spans, n_masked, preview) for one document — the
-    sequential oracle twin of the Arrow pass (which inlines the same
-    walk; cloudpickle by-name rule). ``preview`` is the first 3 spans as
-    'start:len' (1-based starts), comma-joined."""
+    per-row body of the Arrow pass and of its oracle replay. ``preview``
+    is the first 3 spans as 'start:len' (1-based starts), comma-joined."""
     n = len(words)
     spans = []
     masked = 0
@@ -73,42 +72,11 @@ def _plan_udf():
     if _UDF_SINGLETON:
         return _UDF_SINGLETON[0]
 
-    start_threshold = START_THRESHOLD
-    max_span = MAX_SPAN
-
     @pandas_udf("struct<nt: int, ns: int, nm: int, prev: string>")
     def plan(doc_ids: pd.Series, words: pd.Series) -> pd.DataFrame:
-        import hashlib as _hl  # stdlib, importable on any worker
-
-        def one(doc_id, ws):
-            n = len(ws)
-            spans = []
-            masked = 0
-            i = 0
-            while i < n:
-                h = int(
-                    _hl.md5(f"sc|{doc_id}|{i}".encode()).hexdigest()[:8], 16
-                )
-                if h < start_threshold:
-                    ln = 1 + int(
-                        _hl.md5(f"scl|{doc_id}|{i}".encode()).hexdigest()[:8],
-                        16,
-                    ) % max_span
-                    ln = min(ln, n - i)
-                    spans.append((i + 1, ln))
-                    masked += ln
-                    i += ln + 1
-                else:
-                    i += 1
-            return {
-                "nt": n,
-                "ns": len(spans),
-                "nm": masked,
-                "prev": ",".join(f"{s}:{l}" for s, l in spans[:3]),
-            }
-
         return pd.DataFrame(
-            [one(d, list(w)) for d, w in zip(doc_ids, words)]
+            [corruption_plan_py(d, list(w)) for d, w in zip(doc_ids, words)],
+            columns=["nt", "ns", "nm", "prev"],
         )
 
     _UDF_SINGLETON.append(plan)

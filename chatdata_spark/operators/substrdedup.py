@@ -65,8 +65,7 @@ def gram_hashes_udf(n: int):
     costs O(len·n) lambda frames per row ≈ 1 µs each — measured 10.7 s vs
     1.4 s at sf0.1 — and the Python eval node here is also the optimizer
     barrier that stops the downstream posexplode from re-inlining the
-    expression (the Generate-inlining trap). Closure captures only ``n``
-    and third-party modules (worker-pickling rule)."""
+    expression (the Generate-inlining trap)."""
     if n in _GRAM_UDFS:
         return _GRAM_UDFS[n]
 

@@ -246,10 +246,10 @@ def maybe_cross_encoder(query: str):
     scoring (query, text) pairs; None otherwise (overlap stub stays the
     default). The closure captures only the two name strings; the model
     loads once per worker PROCESS (not per Arrow batch) via a cache dict
-    stashed on the ``sentence_transformers`` module — shared with the
-    embedder seam and importable by name on workers, so no package-level
-    reference rides the pickle (worker-pickling rule). The UDF object
-    itself is memoized per (model, query)."""
+    stashed on the ``sentence_transformers`` module, which workers import
+    by name, so the cache is shared with the embedder seam instead of
+    shipping with each UDF. The UDF object itself is memoized per
+    (model, query)."""
     import os
 
     model_name = os.environ.get("SPARK_GRAFT_CROSS_ENCODER")

@@ -42,7 +42,7 @@ def viterbi_pieces(word: str, logp: dict, max_len: int) -> list:
     """Single best segmentation of ``word`` under piece log-probs —
     strict-improvement DP scanning piece lengths ASCENDING, so ties keep
     the shortest final piece (deterministic). Shared verbatim by the
-    oracle replay; the Arrow closure inlines the same loop."""
+    oracle replay and the Arrow passes."""
     n = len(word)
     best = [0.0] + [float("-inf")] * n
     back = [0] * (n + 1)
@@ -126,29 +126,7 @@ def train_unigram_vocab(
 
         @F.pandas_udf("array<string>")
         def _segment(words: pd.Series) -> pd.Series:
-            # viterbi_pieces inlined (cloudpickle by-name rule): strict
-            # improvement, lengths ascending — ties keep shortest piece
-            def seg(w):
-                n = len(w)
-                best = [0.0] + [float("-inf")] * n
-                back = [0] * (n + 1)
-                for i in range(1, n + 1):
-                    for length in range(1, min(L, i) + 1):
-                        lp = logp.get(w[i - length : i])
-                        if lp is None:
-                            continue
-                        s = best[i - length] + lp
-                        if s > best[i]:
-                            best[i] = s
-                            back[i] = length
-                out = []
-                i = n
-                while i > 0:
-                    out.append(w[i - back[i] : i])
-                    i -= back[i]
-                return out[::-1]
-
-            return words.map(seg)
+            return words.map(lambda w: viterbi_pieces(w, logp, L))
 
         new = (
             wf.select("freq", F.explode(_segment("word")).alias("piece"))
@@ -238,29 +216,7 @@ def unigram_piece_counts(df: DataFrame, text_col: str, counts: dict,
 
         @F.pandas_udf("int")
         def _npieces(words: pd.Series) -> pd.Series:
-            # viterbi_pieces inlined, counting pieces only (cloudpickle
-            # by-name rule: capture logp/L constants, no module fns)
-            def n_pieces(w):
-                n = len(w)
-                best = [0.0] + [float("-inf")] * n
-                back = [0] * (n + 1)
-                for i in range(1, n + 1):
-                    for length in range(1, min(L, i) + 1):
-                        lp = logp.get(w[i - length : i])
-                        if lp is None:
-                            continue
-                        s = best[i - length] + lp
-                        if s > best[i]:
-                            best[i] = s
-                            back[i] = length
-                k = 0
-                i = n
-                while i > 0:
-                    k += 1
-                    i -= back[i]
-                return k
-
-            return words.map(n_pieces).astype("int32")
+            return words.map(lambda w: len(viterbi_pieces(w, logp, L))).astype("int32")
 
         _NPIECES_UDFS[key] = _npieces
 

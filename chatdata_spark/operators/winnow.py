@@ -52,10 +52,9 @@ def winnow_udf(k: int, w: int):
     """array<string> words → array<struct<pos:int, fp:bigint>> selected
     fingerprints: 60-bit md5 gram hashes, 1-based gram start positions,
     rightmost-min tie rule per window, single window when a doc has fewer
-    than ``w`` grams. The closure captures only the two ints and
-    third-party modules (worker-pickling rule); md5-per-gram runs inside
-    the one Arrow pass (the only per-element Python in the operator — the
-    price of a driver-oracle-reproducible hash order)."""
+    than ``w`` grams. md5-per-gram runs inside the one Arrow pass (the
+    only per-element Python in the operator — the price of a
+    driver-oracle-reproducible hash order)."""
     if (k, w) in _WINNOW_UDFS:
         return _WINNOW_UDFS[(k, w)]
 

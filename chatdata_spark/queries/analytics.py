@@ -523,10 +523,10 @@ def graph_trustrank_suppliers(spark, sf_dir):
     return tr.orderBy(F.desc("rank_fp"), "node").limit(20)
 
 
-def _walks_oracle(steps: int = 6) -> str:
-    """Unrolled deterministic random-walk replay: per-src row_number
-    indexing + the md5 choice hash, step by step (same cross-engine hash
-    recipe as the sampling oracles)."""
+def _walks_sql(steps: int = 6) -> str:
+    """Unrolled deterministic random-walk replay, unordered (walk_id,
+    step, node) rows: per-src row_number indexing + the md5 choice hash,
+    step by step (same cross-engine hash recipe as the sampling oracles)."""
     pick = (
         "CAST(('0x' || substr(md5('walk' || CAST(c.walk_id AS VARCHAR) "
         "|| '#{k}'), 1, 8)) AS BIGINT) % i.deg"
@@ -555,13 +555,12 @@ w{k} AS (
     {','.join(its)}
     SELECT walk_id, CAST(step AS BIGINT) AS step, node
     FROM ({union})
-    ORDER BY walk_id, step
     """
 
 
 def _supplier_walks(spark, sf_dir):
     """One 6-hop md5-salted walk from every supplier node of the
-    symmetric transaction graph (the corpus _walks_oracle replays)."""
+    symmetric transaction graph (the corpus _walks_sql replays)."""
     from chatdata_spark.operators.graph import random_walks
 
     pairs = _transaction_pairs(spark, sf_dir)
@@ -569,7 +568,7 @@ def _supplier_walks(spark, sf_dir):
     return random_walks(_both_ways(pairs), starts, steps=6, salt="walk")
 
 
-@query("graph_random_walks", oracle=_walks_oracle())
+@query("graph_random_walks", oracle=_walks_sql() + "ORDER BY walk_id, step")
 def graph_random_walks(spark, sf_dir):
     """DeepWalk corpus generation: one 6-hop walk from every supplier node
     of the transaction graph, neighbor choices drawn from the
@@ -585,10 +584,12 @@ def graph_random_walks(spark, sf_dir):
     )
 
 
+# ``walks`` is MATERIALIZED: the self-join reads it twice, and inlined it
+# ran the six-hop replay once per reference.
 @query(
     "graph_skipgram_pairs",
     oracle=lambda: f"""
-    WITH walks AS ({_walks_oracle(steps=6).replace("ORDER BY walk_id, step", "")})
+    WITH walks AS MATERIALIZED ({_walks_sql()})
     SELECT a.node AS center, b.node AS context,
            COUNT(*) AS n_pairs
     FROM walks a JOIN walks b

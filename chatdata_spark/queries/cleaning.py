@@ -736,8 +736,8 @@ def semantic_chunk_sentences(spark, sf_dir):
 def _gopher_repetition_expected() -> str:
     """Lazy oracle for gopher_repetition_filter: sequential pure-Python
     replay of the A1.2 numerators (operators/repetition.py::
-    repetition_stats_py — the same integer count/marking algebra the
-    Arrow pass inlines) over the same tokenization and the same
+    repetition_stats_py, the per-row body of the Arrow pass) over the
+    same tokenization and the same
     deterministic prefix-repeat perturbation, aggregated per source."""
     import re
 

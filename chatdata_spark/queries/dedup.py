@@ -33,21 +33,26 @@ FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM docume
 
 def _duck_jaccard_pairs(threshold: float) -> str:
     """SELECT of the (i, j, jaccard) doc pairs of the CTE ``sh`` (doc_id,
-    shingle list) whose shingle Jaccard is >= ``threshold``, all-pairs."""
-    jac = (
-        "len(list_intersect(a.sh, b.sh)) * 1.0"
-        " / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))"
-    )
+    shingle list) whose shingle Jaccard is >= ``threshold``, all-pairs.
+    The intersection size ``n`` is computed once per pair and MATERIALIZED:
+    written into both the score and the filter, DuckDB evaluated
+    ``list_intersect`` four times per pair (~2x the oracle's time)."""
     return f"""
-SELECT a.doc_id AS i, b.doc_id AS j, ROUND({jac}, 6) AS jaccard
-FROM sh a, sh b
-WHERE a.doc_id < b.doc_id AND {jac} >= {threshold}
+WITH jp AS MATERIALIZED (
+    SELECT a.doc_id AS i, b.doc_id AS j, len(a.sh) + len(b.sh) AS l,
+           len(list_intersect(a.sh, b.sh)) AS n
+    FROM sh a, sh b
+    WHERE a.doc_id < b.doc_id
+)
+SELECT i, j, ROUND(n * 1.0 / (l - n), 6) AS jaccard
+FROM jp
+WHERE n * 1.0 / (l - n) >= {threshold}
 """
 
 
 def _duck_jaccard_oracle(threshold: float) -> str:
     """Brute-force oracle of every exact Jaccard pair query."""
-    return f"WITH sh AS ({_DUCK_SHINGLES}) {_duck_jaccard_pairs(threshold)} ORDER BY i, j"
+    return f"WITH sh AS ({_DUCK_SHINGLES}) SELECT * FROM ({_duck_jaccard_pairs(threshold)}) ORDER BY i, j"
 
 
 def _duck_components(pairs: str) -> str:

@@ -145,7 +145,7 @@ def pack_documents(spark, sf_dir):
 def _pack_bfd_expected() -> str:
     """Lazy replay oracle for pack_best_fit_docs: DuckDB recomputes
     (doc_id, tokens, shard) with the shared md5-bucket expression, then
-    the SAME bfd_pack the operator inlines runs per shard driver-side —
+    the SAME bfd_pack the operator runs per shard runs driver-side —
     VALUES literal (the _semantic_chunks_expected convention)."""
     import duckdb
 

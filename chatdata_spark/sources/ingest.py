@@ -104,9 +104,7 @@ def parse_uploads(
 
     The default parser is a deterministic stand-in for the Unstructured
     API parse (tools.py:27-33): it splits on blank lines and alternates
-    element types so the NarrativeText filter has something to drop. It
-    is defined inline because a module-level function would pickle by
-    reference and require the package on worker paths."""
+    element types so the NarrativeText filter has something to drop."""
     if parser is None:
         parser = maybe_real_parser()
     if parser is None:

@@ -42,12 +42,7 @@ def stream_distinct(
     O(keys-per-horizon), and a duplicate arriving AFTER its key's horizon
     re-emits (dedup-within-horizon, the same contract as Spark's built-in
     ``dropDuplicatesWithinWatermark``; daily-crawl pipelines pair this
-    with the batch signature store for the long tail).
-
-    The stateful function is a CLOSURE on purpose: cloudpickle serializes
-    closures by value, while a module-level function is pickled by
-    reference and would require ``chatdata_spark`` on every Python
-    worker's path (breaks when the caller runs from outside the repo)."""
+    with the batch signature store for the long tail)."""
     ttl_ms = int(ttl_minutes * 60_000) if ttl_minutes is not None else None
     use_ttl = ttl_ms is not None and ts_col is not None
 
@@ -116,8 +111,8 @@ def stream_sessionize(
     one row per ACTIVE user — the 100 TB-stream shape (compare: a batch
     window over all history re-reads everything per refresh).
 
-    Closure-only state fn (worker-pickling rule); timestamps ride as epoch
-    microseconds inside state to keep the state row fixed-width."""
+    Timestamps ride as epoch microseconds inside state to keep the state
+    row fixed-width."""
     gap_us = int(gap_minutes * 60_000_000)
 
     def update(key, batches: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:

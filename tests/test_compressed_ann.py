@@ -116,31 +116,3 @@ def test_shared_cache_indexes_hold_encode_np_codes(spark):
         _ivfpq_index(spark, SF_ORACLE, residual=True, opq_iters=6),
     ):
         _assert_ivfpq_codes_are_encode_np(spark, idx)
-
-
-def test_codec_pickles_by_value(tmp_path):
-    """The encode UDF calls _encode_np on the workers, whose Python path
-    need not hold chatdata_spark (a driver running off the repo cwd): the
-    codec must unpickle in an interpreter that cannot import the package."""
-    import subprocess
-    import sys
-
-    from pyspark import cloudpickle
-
-    probe = (
-        "import pickle, sys\n"
-        "import numpy as np\n"
-        "try:\n"
-        "    import chatdata_spark  # noqa: F401\n"
-        "    sys.exit('package importable: probe proves nothing')\n"
-        "except ImportError:\n"
-        "    pass\n"
-        "f = pickle.loads(sys.stdin.buffer.read())\n"
-        "print(f(np.eye(2, 8), np.zeros((1, 256, 8))).tolist())\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-I", "-c", probe],
-        input=cloudpickle.dumps(_encode_np), cwd=tmp_path, capture_output=True, timeout=60,
-    )
-    assert out.returncode == 0, out.stderr.decode()[-2000:]
-    assert out.stdout.decode().strip() == "[[0], [0]]"

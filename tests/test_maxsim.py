@@ -94,34 +94,3 @@ def test_mmr_distributed_matches_driver_greedy(spark):
     # and the scale path accepts a fetch_n the driver contract refuses
     big = mmr_select_distributed(emb, "embedding", q, k=5, id_col="vec_id", fetch_n=5000).collect()
     assert len(big) == 5
-
-
-def test_mmr_greedy_pickles_by_value(tmp_path):
-    """mmr_select_distributed's task calls mmr_greedy on the workers, whose
-    Python path need not hold chatdata_spark (a driver running off the
-    repo cwd): the greedy must unpickle in an interpreter that cannot
-    import the package."""
-    import subprocess
-    import sys
-
-    from pyspark import cloudpickle
-
-    from chatdata_spark.operators.mmr import mmr_greedy
-
-    probe = (
-        "import pickle, sys\n"
-        "import numpy as np\n"
-        "try:\n"
-        "    import chatdata_spark  # noqa: F401\n"
-        "    sys.exit('package importable: probe proves nothing')\n"
-        "except ImportError:\n"
-        "    pass\n"
-        "f = pickle.loads(sys.stdin.buffer.read())\n"
-        "print(f([7, 3], np.eye(2), [1.0, 0.0], 2, 0.5))\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-I", "-c", probe],
-        input=cloudpickle.dumps(mmr_greedy), cwd=tmp_path, capture_output=True, timeout=60,
-    )
-    assert out.returncode == 0, out.stderr.decode()[-2000:]
-    assert out.stdout.decode().strip() == "[(7, 0.5), (3, 0.0)]"

@@ -1,7 +1,7 @@
 """Best-fit-decreasing packing (operators/packing.py): exact-algorithm
 invariants, Spark-vs-driver-replay parity (the applyInPandas closure
-inlines bfd_pack — this pins them equal), and the fill advantage over
-the greedy cumulative packer."""
+runs bfd_pack per hash shard — this pins the sharding and the row
+mapping), and the fill advantage over the greedy cumulative packer."""
 
 from __future__ import annotations
 
@@ -42,8 +42,8 @@ def test_bfd_equal_sizes_tiebreak_on_id_and_bin():
 
 
 def test_spark_pack_matches_driver_replay(spark):
-    """The applyInPandas closure must reproduce bfd_pack exactly per
-    shard (it inlines the algorithm for the cloudpickle-by-name rule)."""
+    """The applyInPandas pass equals bfd_pack run on each hash shard's
+    (doc_id, tokens) rows on the driver."""
     d = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     toks = d.select("doc_id", F.size(F.split("text", " ")).alias("tokens"))
     got = {

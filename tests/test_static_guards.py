@@ -1,5 +1,5 @@
-"""Static guards over the library source: no dead top-level code, and one
-definition per fixture-table temp view."""
+"""Static guards over the library source: no dead top-level code, one
+definition per fixture-table temp view, and one copy of each shared step."""
 
 from __future__ import annotations
 
@@ -153,12 +153,48 @@ def test_graph_family_written_once():
         ("reach(v, c)", dedup, "_duck_components"),
         ("'c' || CAST(o_custkey", analytics, "_PAIRS_SQL"),
         ('F.lit("c"), F.col("o_custkey")', analytics, "_transaction_pairs"),
-        ("(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))", dedup, "_duck_jaccard_pairs"),
+        ("list_intersect(a.sh, b.sh)) AS n", dedup, "_duck_jaccard_pairs"),
     ):
         found = _occurrences(needle)
         span = _def_span(path, home)
         assert len(found) == 1 and found[0][0] == path and found[0][1] in span, (
             f"{needle!r} must appear once, in {path.name}::{home}: {found}"
         )
-    # a textual threshold swap also rewrites any other "0.4" in the SQL
-    assert not _occurrences('.replace("0.4"'), _occurrences('.replace("0.4"')
+    # a textual rewrite of an oracle also rewrites any other match in the
+    # SQL (a threshold swap hits every "0.4"); compose the SQL instead
+    for rewrite in ('.replace("0.4"', '.replace("ORDER BY'):
+        assert not _occurrences(rewrite), _occurrences(rewrite)
+
+
+def test_package_ships_by_value_from_init_only():
+    """``chatdata_spark/__init__.py`` registers the whole package for
+    by-value pickling; a second registration would mean a module that
+    still thinks it has to ship itself."""
+    found = _occurrences("register_pickle_by_value(")
+    assert [path for path, _ in found] == [PKG / "__init__.py"], found
+
+
+def test_worker_steps_written_once():
+    """Worker closures call the operator function that holds each step
+    instead of carrying a pasted copy of it; a second copy of any step
+    under ``operators/`` fails here. The independent oracle replays in
+    ``queries/`` are out of scope."""
+    ops = PKG / "operators"
+    for needle, module, home in (
+        ("open_bins.pop(i)", "packing", "bfd_pack"),
+        ('marked[i : i + n] = b"\\x01" * n', "repetition", "repetition_stats_py"),
+        ('best = [0.0] + [float("-inf")] * n', "unigram", "viterbi_pieces"),
+        ('f"sc|{doc_id}|{i}"', "spancorrupt", "corruption_plan_py"),
+        ("weights = (1 << np.arange(", "lsh", "_pack_keys"),
+        ("float(2**61)", "kmeans", "_overflow_bound"),
+        ("sorted(counts.values(), reverse=True)", "heavyhitters", "_mg_compress"),
+        ("[i] == a and ", "bpe", "_merge_pair"),
+        ("h2 = ((", "bloomjoin", "_bloom_positions"),
+        ("@ cents.T) + c_sq[None, :]", "ivf", "_nearest_udf"),
+    ):
+        path = ops / f"{module}.py"
+        found = [(p, n) for p, n in _occurrences(needle) if ops in p.parents]
+        span = _def_span(path, home)
+        assert len(found) == 1 and found[0][0] == path and found[0][1] in span, (
+            f"{needle!r} must appear once under operators/, in {module}.{home}: {found}"
+        )
