@@ -22,7 +22,9 @@ fresh subprocess JVMs (<=SHARD_SIZE entries each) so late-suite GC/cache
 pressure can't inflate mid/late entries — every number is within the
 isolated-run methodology's noise. E2E entries (iterative operators whose
 work runs at plan-build time) are timed as one wall-clock span from
-invocation through the noop sink.
+invocation through the noop sink. X10 entries run a registered query over
+the key-disjoint 10x copy of the fixture (tools/gen_sf10x.py), which the
+first warm invocation builds once under /tmp.
 
 Other environment options: SPARK_GRAFT_BENCH_REPS (timed passes per
 entry, min taken; default 3), SPARK_GRAFT_BENCH_ONLY=a,b (time just these
@@ -190,8 +192,25 @@ E2E = [
     # Whole-invocation is the honest span for this shape; the old
     # steady-state numbers stay in BENCH_r11.json/BENCH_DETAIL history.
     "retrieval_funnel_docs",        # build-time page collect + checkpointed page
-    "retrieval_funnel_x10",         # 10x-corpus probe of the same shape (E2E_EXTRA fn)
+    "retrieval_funnel_x10",         # the same query over the 10x fixture (X10)
 ]
+
+# Scale probes: each entry runs its registered query over the 10x fixture
+# (x10_fixture), one order of magnitude above the headline runs, catching
+# plans that only look fine at the 1x scale. Entries in E2E are timed
+# whole-invocation, the rest steady-state.
+X10 = {
+    "q5_x10_star_join": "q5_region_revenue",
+    "decontam_x10": "decontam_docs",
+    "dedup_minhash_x10": "dedup_minhash_lsh",
+    "dedup_jaccard_x10": "dedup_jaccard_exact",
+    "bm25_x10": "bm25_text_search",
+    "hybrid_rrf_x10": "hybrid_rrf_search",
+    "dedup_substring_x10": "dedup_substring_spans",
+    "knn_topk_x10": "knn_topk",
+    "binary_quant_x10": "binary_quant_knn",
+    "retrieval_funnel_x10": "retrieval_funnel_docs",
+}
 
 # Entries per fresh-JVM shard of the full suite (see main).
 SHARD_SIZE = 10
@@ -274,62 +293,22 @@ def guard_context_lines(per_query: dict, shard_ctx: list) -> list[str]:
     return out
 
 
-def _replicate(df, key_cols, reps=10):
-    """reps× fact-table scale-up with disjoint join keys per replica —
-    measures the same physical plan at 10× rows without new test data
-    (dims stay fixed, the realistic scale-up shape)."""
-    import pyspark.sql.functions as F
+def x10_fixture(spark, sf_dir: str) -> str:
+    """The key-disjoint 10x copy of ``sf_dir`` that tools/gen_sf10x.py
+    writes, built once under /tmp. The path keys on the source fixture,
+    the operator sources and the recipe's bytes; the first (untimed warm)
+    invocation of an entry that reads it pays the build."""
+    import hashlib
 
-    rep = F.explode(F.array(*[F.lit(i) for i in range(reps)])).alias("__rep")
-    out = df.select("*", rep)
-    for k in key_cols:
-        out = out.withColumn(k, F.col(k) + F.col("__rep").cast("long") * F.lit(2**33))
-    return out.drop("__rep")
+    from chatdata_spark.catalog import shared_cache_path
+    from tools import gen_sf10x
 
-
-def bench_q5_x10(spark, sf_dir):
-    """The q5 star join over 10×-replicated fact tables (≈ sf1 facts): one
-    order of magnitude above the headline runs, catching plans that only
-    look fine at sf0.1."""
-    import pyspark.sql.functions as F
-
-    li = _replicate(spark.read.parquet(f"{sf_dir}/lineitem.parquet"), ["l_orderkey"])
-    o = _replicate(
-        spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-            (F.col("o_orderdate") >= F.to_timestamp(F.lit("1996-01-01")))
-            & (F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01")))
-        ),
-        ["o_orderkey"],
-    )
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet").filter(F.col("r_name") == "ASIA")
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(c, (o.o_custkey == c.c_custkey) & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.sum(revenue).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
-    )
-
-
-def bench_decontam_x10(spark, sf_dir):
-    """Benchmark decontamination over a 10×-replicated corpus (~50k docs at
-    sf0.1): the broadcast-set design must scale linearly with corpus rows —
-    a super-linear time here means the bench set stopped broadcasting."""
-    import pyspark.sql.functions as F
-
-    from chatdata_spark.operators.decontam import decontaminate
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    d10 = _replicate(d, ["doc_id"])
-    bench = d.filter(F.col("doc_id") % 50 == 0)
-    return decontaminate(d10, bench, n=5)
+    with open(gen_sf10x.__file__, "rb") as f:
+        recipe = hashlib.md5(f.read()).hexdigest()[:8]
+    path = shared_cache_path("sf10x", sf_dir, recipe, source="documents.parquet")
+    if not os.path.isdir(path):
+        gen_sf10x.build(spark, sf_dir, path)
+    return path
 
 
 def bench_ann_ivf_pruned(spark, sf_dir):
@@ -342,92 +321,23 @@ def bench_ann_ivf_pruned(spark, sf_dir):
     return idx.search(Q2, k=15, n_probe=4, select=["vec_id", "label"])
 
 
-def _replicate_docs_perturbed(spark, sf_dir, reps=10):
-    """10× the documents table with per-replica word perturbation: every
-    word gets a '#<rep>' suffix, so replicas of one doc share no shingles
-    with other replicas (no cross-replica near-dup explosion) while each
-    replica preserves the original similarity structure EXACTLY — same
-    word count, same shingle multiset shape, same per-shingle document
-    frequencies within a replica. Pair count, bucket sizes, and index
-    size all scale linearly: the honest 10× shape for dedup. (Inserting
-    separator tokens instead would collapse 3-word shingles into
-    effective unigrams and explode bucket sizes super-linearly.)"""
-    import pyspark.sql.functions as F
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    rep = F.explode(F.array(*[F.lit(i) for i in range(reps)])).alias("__rep")
-    return (
-        d.select("*", rep)
-        .withColumn("doc_id", F.col("doc_id") + F.col("__rep").cast("long") * F.lit(2**33))
-        .withColumn(
-            "text",
-            F.expr(r"regexp_replace(text, '(\\S+)', concat('$1#', CAST(__rep AS STRING)))"),
-        )
-        .drop("__rep")
-    )
-
-
-def bench_minhash_x10(spark, sf_dir):
-    """MinHash+LSH near-dup over the perturbed 10× corpus: banded signature
-    join must scale ~linearly (bucket sizes stay bounded — replicas never
-    share bands)."""
-    from chatdata_spark.operators.dedup import minhash_lsh_pairs
-
-    d10 = _replicate_docs_perturbed(spark, sf_dir)
-    return minhash_lsh_pairs(d10, "doc_id", "text", k=3, threshold=0.4)
-
-
-def bench_jaccard_x10(spark, sf_dir):
-    """Inverted-index jaccard join over the perturbed 10× corpus: per-shingle
-    bucket sizes are unchanged (replicas share no shingles), so the f²
-    pair expansion must stay linear in corpus size."""
-    from chatdata_spark.operators.dedup import jaccard_similarity_join
-
-    d10 = _replicate_docs_perturbed(spark, sf_dir)
-    return jaccard_similarity_join(d10, "doc_id", "text", k=3, threshold=0.4)
-
-
 def bench_embedding_dedup_x10(spark, sf_dir):
-    """Embedding near-dup over a 10x corpus with cluster count scaled
-    ~sqrt(N) (8 → 80) — the documented IVF posture. Replication is
-    ISOMETRIC: each replica's vectors are sign-flipped per-dimension
-    (a seeded ±1 pattern), which preserves every intra-replica cosine
-    exactly while scrambling cross-replica similarity — the embedding
-    analog of the word-perturbation trick. Measured r4: 1.7x wall-clock
-    for 10x rows (and 37x the emitted pairs) at n_probe=1 — the
-    per-cluster GEMM stays sub-linear per pair when clusters scale."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from chatdata_spark.operators.dedup import embedding_near_dup_clustered
-    from chatdata_spark.operators.ivf import IVFIndex
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
-    rng = np.random.default_rng(11)
-    signs = [[1.0] * 64] + [list(rng.choice([-1.0, 1.0], 64)) for _ in range(9)]
-    parts = []
-    for r in range(10):
-        sarr = F.array(*[F.lit(float(x)) for x in signs[r]])
-        parts.append(
-            emb.select(
-                (F.col("vec_id") + F.lit(r * 2**33)).alias("vec_id"),
-                F.zip_with("embedding", sarr, lambda x, s: (x * s).cast("float")).alias(
-                    "embedding"
-                ),
-            )
-        )
-    d10 = parts[0]
-    for p in parts[1:]:
-        d10 = d10.unionByName(p)
+    """Embedding near-dup over the 10x fixture with cluster count scaled
+    ~sqrt(N) (8 → 80) — the documented IVF posture. The fixture's
+    sign-flipped replicas keep every intra-replica cosine exactly while
+    scrambling cross-replica similarity — the embedding analog of the
+    word perturbation. Measured r4: 1.7x wall-clock for 10x rows (and 37x
+    the emitted pairs) at n_probe=1 — the per-cluster GEMM stays
+    sub-linear per pair when clusters scale."""
     from chatdata_spark.catalog import shared_cache_path
+    from chatdata_spark.operators.dedup import embedding_near_dup_clustered
+    from chatdata_spark.operators.ivf import build_or_load_ivf
 
-    root = shared_cache_path("ivf_x10", sf_dir, "k80")
-    import os
-
-    if not os.path.exists(os.path.join(root, "ivf_meta.json")):  # one-time build
-        os.makedirs(root, exist_ok=True)
-        IVFIndex.build(d10, root, "vec_id", "embedding", n_clusters=80)
-    idx = IVFIndex(spark, root)
+    x10 = x10_fixture(spark, sf_dir)
+    emb = spark.read.parquet(f"{x10}/embeddings.parquet").select("vec_id", "embedding")
+    idx = build_or_load_ivf(
+        spark, emb, shared_cache_path("ivf", x10, "k80"), "vec_id", "embedding", 80
+    )
     return embedding_near_dup_clustered(idx, threshold=0.4, n_probe=1)
 
 
@@ -437,34 +347,10 @@ def bench_embedding_dedup_x10(spark, sf_dir):
 # similarity tracks vocabulary overlap, not shingle identity like
 # minhash/jaccard), and the run takes ~78 s — 7x the 1x time for 33x the
 # output, i.e. sub-linear per pair but output-bound. Keeping it out
-# preserves the suite as a fast feedback loop; the probe recipe lives here
-# if the operator changes. (The measurement also motivated moving the
+# preserves the suite as a fast feedback loop; to re-probe after an
+# operator change, run dedup_simhash over the tools/gen_sf10x.py fixture
+# (the README's sf1 probe line). (The measurement also motivated moving the
 # hamming verify BEFORE the distinct in operators/dedup.py:simhash_pairs.)
-
-
-def bench_bm25_x10(spark, sf_dir):
-    """BM25 top-20 over a verbatim 10× corpus (df and N scale together so
-    idf is unchanged): the broadcast corpus-stats design must hold —
-    super-linear time means the stats stopped broadcasting."""
-    import pyspark.sql.functions as F
-
-    from chatdata_spark.operators.textsearch import bm25_topk
-    from chatdata_spark.queries.textsearch import B, K1, TERMS
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    d10 = _replicate(d, ["doc_id"])
-    return bm25_topk(d10, "doc_id", "text", TERMS, k=20, k1=K1, b=B, idf="rational")
-
-
-def bench_substring_x10(spark, sf_dir):
-    """Duplicated-substring spans over the perturbed 10x corpus: the
-    '#<rep>' word suffixes keep replicas gram-disjoint, so dup-gram classes
-    and span counts scale exactly linearly — the probe pins that the
-    (id, pos, hash8) shuffle and the dup-hash join stay linear too."""
-    from chatdata_spark.operators.substrdedup import duplicated_ngram_spans
-
-    d10 = _replicate_docs_perturbed(spark, sf_dir)
-    return duplicated_ngram_spans(d10, "doc_id", "text", n=10, min_count=2)
 
 
 def bench_substring_x10_heldrate(spark, sf_dir):
@@ -500,85 +386,6 @@ def bench_substring_x10_heldrate(spark, sf_dir):
         F.when(F.col("__rep") == 0, F.col("text")).otherwise(unique_text).alias("text"),
     )
     return duplicated_ngram_spans(d10, "doc_id", "text", n=10, min_count=2)
-
-
-def bench_hybrid_rrf_x10(spark, sf_dir):
-    """Hybrid BM25+kNN RRF fusion over verbatim 10x docs AND 10x
-    embeddings: both screens are heap top-50s over their corpus, so the
-    fused page cost must scale ~linearly with the larger scans while the
-    fusion tail stays constant (it only ever sees 2x50 rows)."""
-    import pyspark.sql.functions as F
-
-    from chatdata_spark.operators.knn import knn
-    from chatdata_spark.operators.textsearch import bm25_topk, rrf_fuse, with_rank
-    from chatdata_spark.queries.textsearch import B, K1, QH, TERMS
-
-    d10 = _replicate(spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text"), ["doc_id"])
-    e10 = _replicate(spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding"), ["vec_id"])
-    bm = with_rank(
-        bm25_topk(d10, "doc_id", "text", TERMS, k=50, k1=K1, b=B, idf="rational"),
-        [F.desc("score"), F.asc("doc_id")],
-    )
-    kn = with_rank(
-        knn(e10, "embedding", QH, k=50, select=["vec_id"], id_col="vec_id").select(
-            F.col("vec_id").alias("doc_id"), "dist"
-        ),
-        [F.asc("dist"), F.asc("doc_id")],
-    )
-    return rrf_fuse([bm, kn], "doc_id", k0=60, k=20)
-
-
-def bench_retrieval_funnel_x10(spark, sf_dir):
-    """The FLAGSHIP's scale probe: the full 5-stage funnel over verbatim
-    10x docs + embeddings. The flagship's cost claim is that corpus-sized
-    work happens ONLY in the two screens (ANN + BM25 heap top-60s) while
-    the RRF → rerank → MMR tail runs on a <=60-row page — so 10x corpus
-    must cost ~the two screens' linear growth and nothing more. The ANN
-    screen uses the exact heap scan (the registered funnel's full-probe
-    router is plan-identical to it — asserted by ann_ivf_full_probe)."""
-    import pyspark.sql.functions as F
-
-    from chatdata_spark.operators.knn import knn
-    from chatdata_spark.operators.mmr import mmr_select
-    from chatdata_spark.operators.textsearch import bm25_topk, rerank_topk, rrf_fuse, with_rank
-    from chatdata_spark.queries.textsearch import B, DIM, FUNNEL_Q, K1
-    from chatdata_spark.functions.vector import hash_embed
-
-    qf = hash_embed(FUNNEL_Q, DIM)
-    d10 = _replicate(spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text"), ["doc_id"])
-    e10 = _replicate(spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding"), ["vec_id"])
-    kn = with_rank(
-        knn(e10, "embedding", qf, k=60, select=["vec_id"], id_col="vec_id").select(
-            F.col("vec_id").alias("doc_id"), "dist"
-        ),
-        [F.asc("dist"), F.asc("doc_id")],
-    )
-    bm = with_rank(
-        bm25_topk(d10, "doc_id", "text", FUNNEL_Q.split(), k=60, k1=K1, b=B, idf="rational"),
-        [F.desc("score"), F.asc("doc_id")],
-    )
-    fused = rrf_fuse([bm, kn], "doc_id", k0=60, k=30)
-    # broadcast the ≤30-row fused page, not the 10x corpus (r11 opt —
-    # mirrors the registered funnel's guide-§3.1 fix)
-    cand = F.broadcast(fused).join(d10.select("doc_id", "text"), "doc_id")
-    # checkpoint the ≤20-row page once (r12 — mirrors the registered
-    # funnel's one-pass fix; entry timed whole-invocation in E2E)
-    page = rerank_topk(cand, "doc_id", "text", FUNNEL_Q, k=20).select(
-        "doc_id", "rrf", "rerank_score"
-    ).localCheckpoint()
-    vecs = e10.select(F.col("vec_id").alias("doc_id"), "embedding").join(
-        F.broadcast(page.select("doc_id")), "doc_id"
-    )
-    mmr = mmr_select(vecs, "embedding", qf, k=10, id_col="doc_id", fetch_n=20, lam=0.5)
-    return (
-        mmr.join(F.broadcast(page), "doc_id")
-        .select("doc_id", "rrf", "rerank_score", "mmr_rank", "mmr_score")
-        .orderBy("mmr_rank")
-    )
-
-
-# E2E entries that are bench functions rather than registry queries.
-E2E_EXTRA = {"retrieval_funnel_x10": bench_retrieval_funnel_x10}
 
 
 def bench_profile_approx(spark, sf_dir):
@@ -759,7 +566,7 @@ def bench_fact_join_bucketed(spark, sf_dir):
 
 
 def bench_quantile_sketch_x10(spark, sf_dir):
-    """Bottom-256-by-hash quantile sketch over 10x-replicated orders
+    """Bottom-256-by-hash quantile sketch over the 10x fixture's orders
     (~1.5M rows at sf0.1): the sample stays k-bounded per group, so cost
     must track the SCAN (hash + window input), not the output — compare
     with `quantile_sketch_totalprice` (1x). The replicated keys stay
@@ -767,11 +574,8 @@ def bench_quantile_sketch_x10(spark, sf_dir):
     contract."""
     from chatdata_spark.operators.quantsketch import quantile_sketch
 
-    o10 = _replicate(
-        spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            "o_orderpriority", "o_orderkey", "o_totalprice"
-        ),
-        ["o_orderkey"],
+    o10 = spark.read.parquet(f"{x10_fixture(spark, sf_dir)}/orders.parquet").select(
+        "o_orderpriority", "o_orderkey", "o_totalprice"
     )
     # the documented scale path: scan-stage prefilter sized >=4k/n_min
     # (n/group ~300k here; 0.02*2^32 keeps ~6k/group, 23x the k=256 the
@@ -780,34 +584,6 @@ def bench_quantile_sketch_x10(spark, sf_dir):
         o10, ["o_orderpriority"], "o_totalprice", "o_orderkey", k=256,
         salt="qsk", prefilter_buckets=int(0.02 * (1 << 32)),
     ).orderBy("o_orderpriority")
-
-
-def bench_knn_topk_x10(spark, sf_dir):
-    """Exact cosine top-10 over 10x-replicated embeddings (~200k rows at
-    sf0.1): the scan+heap plan must scale linearly in rows — compare with
-    `knn_topk` (1x). Catches any plan that only looks flat because the 1x
-    table is small."""
-    from chatdata_spark.operators.knn import knn
-    from chatdata_spark.queries.vector import Q1
-
-    emb10 = _replicate(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), ["vec_id"]
-    )
-    return knn(emb10, "embedding", Q1, k=10, select=["vec_id", "label"], id_col="vec_id")
-
-
-def bench_binary_quant_x10(spark, sf_dir):
-    """Binary-Hamming ranking over the same 10x corpus: the all-integer
-    popcount-xor codegen path at 10x rows — compare with
-    `binary_quant_knn` (1x)."""
-    from chatdata_spark.operators.binquant import binary_knn
-    from chatdata_spark.queries.vector import DIM, Q1
-
-    emb10 = _replicate(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), ["vec_id"]
-    )
-    return binary_knn(emb10, "embedding", Q1, dim=DIM, k=12, id_col="vec_id",
-                      select=["vec_id", "label"])
 
 
 def bench_asof_hotkey_sliced(spark, sf_dir):
@@ -900,9 +676,10 @@ def bench_range_join_hotkey_bounded(spark, sf_dir):
 
 def _inc_store(spark, sf_dir, reps: int):
     """Idempotent one-time store build (like the IVF index): corpus =
-    originals (+ perturbed replicas for reps>1 — extra stored volume that
-    shares no shingles with the batch), so the 1x and 10x stores relate to
-    the probe batch IDENTICALLY and the only variable is corpus size."""
+    originals (+ the 10x fixture's perturbed replicas 1-9 for reps=10 —
+    extra stored volume that shares no shingles with the batch), so the 1x
+    and 10x stores relate to the probe batch IDENTICALLY and the only
+    variable is corpus size."""
     from chatdata_spark.operators.incdedup import IncrementalMinHashStore
 
     from chatdata_spark.catalog import shared_cache_path
@@ -915,8 +692,10 @@ def _inc_store(spark, sf_dir, reps: int):
 
         d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
         if reps > 1:
-            extra = _replicate_docs_perturbed(spark, sf_dir, reps=reps).filter(
-                F.col("doc_id") >= 2**33  # replicas 1..reps-1; rep 0 stays original
+            extra = (
+                spark.read.parquet(f"{x10_fixture(spark, sf_dir)}/documents.parquet")
+                .select("doc_id", "text")
+                .filter(F.col("doc_id") >= 2**33)  # replicas 1..9; rep 0 stays original
             )
             d = d.unionByName(extra)
         store.add_batch(d, "doc_id").write.format("noop").mode("overwrite").save()
@@ -969,16 +748,16 @@ def bench_sq8_knn_frozen(spark, sf_dir):
 
 
 def bench_containment_x10(spark, sf_dir):
-    """containment_join over the 10x word-perturbed corpus (the honest
-    dedup scale-up shape — per-replica shingle structure preserved
-    EXACTLY, and containment is a shingle-identity measure, so unlike
-    simhash the true pair count scales linearly). Same count-from-the-
-    index plan as the jaccard x10 probe; super-linear time here means
-    the stop-set split stopped bounding the bucket expansion."""
+    """containment_join over the 10x fixture's word-perturbed documents
+    (the honest dedup scale-up shape — per-replica shingle structure
+    preserved EXACTLY, and containment is a shingle-identity measure, so
+    unlike simhash the true pair count scales linearly). Same
+    count-from-the-index plan as dedup_jaccard_exact; super-linear time
+    here means the stop-set split stopped bounding the bucket expansion."""
     from chatdata_spark.operators.dedup import containment_join
 
-    d10 = _replicate_docs_perturbed(spark, sf_dir)
-    return containment_join(d10, "doc_id", "text", k=3, threshold=0.8)
+    d10 = spark.read.parquet(f"{x10_fixture(spark, sf_dir)}/documents.parquet")
+    return containment_join(d10.select("doc_id", "text"), "doc_id", "text", k=3, threshold=0.8)
 
 
 EXTRA = {
@@ -992,24 +771,14 @@ EXTRA = {
     "ann_ivfpq_residual_search": bench_ann_ivfpq_residual_search,
     "fact_join_shuffle": bench_fact_join_shuffle,
     "fact_join_bucketed": bench_fact_join_bucketed,
-    "knn_topk_x10": bench_knn_topk_x10,
     "quantile_sketch_x10": bench_quantile_sketch_x10,
-    "binary_quant_x10": bench_binary_quant_x10,
     "asof_join_hotkey_sliced": bench_asof_hotkey_sliced,
     "range_join_hotkey": bench_range_join_hotkey,
     "range_join_hotkey_bounded": bench_range_join_hotkey_bounded,
     "dedup_incremental_batch_1x": _bench_dedup_incremental(1),
     "dedup_incremental_batch_x10": _bench_dedup_incremental(10),
-    "q5_x10_star_join": bench_q5_x10,
-    "decontam_x10": bench_decontam_x10,
-    "dedup_minhash_x10": bench_minhash_x10,
-    "dedup_jaccard_x10": bench_jaccard_x10,
     "dedup_embedding_x10": bench_embedding_dedup_x10,
-    "bm25_x10": bench_bm25_x10,
-    "hybrid_rrf_x10": bench_hybrid_rrf_x10,
-    "dedup_substring_x10": bench_substring_x10,
     "dedup_substring_x10_heldrate": bench_substring_x10_heldrate,
-    # retrieval_funnel_x10 moved to E2E (r12): see the E2E list note
     "profile_orders_approx": bench_profile_approx,
     "sessionize_hotkey_sliced": bench_sessionize_hotkey,
 }
@@ -1030,19 +799,27 @@ def _run_shard(
     warm pass + min-of-reps execute-only timing; E2E entries get
     whole-invocation wall-clock (build+execute), min over reps after
     one untimed warm invocation. Entries run in suite order; a registered
-    query outside HEADLINE/EXTRA/E2E is timed as a steady-state entry
+    query outside HEADLINE/EXTRA/X10/E2E is timed as a steady-state entry
     after the suite's own (the sf1 probe path). JVM/codegen warmup and
-    the IVF index build run first, outside timing."""
+    the IVF index build run first, outside timing; the warm invocations
+    build the 10x fixture and its indexes."""
     qs = queries()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     bench_ann_ivf_pruned(spark, sf_dir).count()
+
+    def entry(name):
+        if name in X10:
+            q = qs[X10[name]]
+            return lambda spark, sf_dir: q(spark, x10_fixture(spark, sf_dir))
+        return EXTRA.get(name) or qs[name]
+
     keep = set(names)
-    suite = {*HEADLINE, *EXTRA, *E2E}
-    plans = [(n, qs[n]) for n in HEADLINE if n in keep]
-    plans += [(n, f) for n, f in EXTRA.items() if n in keep]
-    plans += [(n, qs[n]) for n in names if n not in suite and n in qs]
+    suite = {*HEADLINE, *EXTRA, *X10, *E2E}
+    steady = HEADLINE + list(EXTRA) + [n for n in X10 if n not in E2E]
+    steady += [n for n in names if n not in suite and n in qs]
     per_query: dict[str, float] = {}
-    for name, fn in plans:
+    for name in [n for n in steady if n in keep]:
+        fn = entry(name)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
         # min over `reps` timed passes: robust to ambient machine load and GC
         # pauses (the r02 drift — see PLANS.md "bench drift"), which only ever
@@ -1060,7 +837,7 @@ def _run_shard(
         _isolate(spark)
     e2e: dict[str, float] = {}
     for name in [n for n in E2E if n in keep]:
-        fn = qs.get(name) or E2E_EXTRA[name]
+        fn = entry(name)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
         # same min-of-reps as the steady-state entries: min-of-2 left the
         # whole-invocation entries exposed to single-GC-pause outliers
@@ -1093,7 +870,7 @@ def main() -> None:
         spark.stop()
         return
 
-    all_names = HEADLINE + list(EXTRA) + E2E
+    all_names = HEADLINE + list(EXTRA) + [n for n in X10 if n not in E2E] + E2E
     if only:
         wanted = [s.strip() for s in only.split(",")]
         unknown = [n for n in wanted if n not in all_names and n not in queries()]

@@ -500,16 +500,18 @@ def dedup_chunk_boilerplate(spark, sf_dir):
     )
 
 
-def _semantic_chunks_expected() -> str:
-    """Lazy oracle for semantic_chunk_spans (the embed_documents_batch /
-    dimred pattern): the whole pipeline — float32 hash embeddings, the
-    JVM's sequential float64 cosine folds, HALF_UP round-6, the boundary
-    rule — is deterministic, so a driver-side sequential recomputation
-    over the sf0.01 documents yields the exact expected table. Emulation
-    notes: python's str.split() equals Spark split(r'\\s+')+drop-empties
-    on any whitespace-run text; fold order is left-to-right (acc += x*y),
+def _drift_chunks_oracle(units_of, w: int, unit: str) -> str:
+    """Rows ``(doc_id, chunk_idx, start_<unit>, n_<unit>s, n_windows)`` of
+    the drift-boundary replay both semantic-chunk oracles share, as a
+    VALUES literal over the oracle fixture's documents: ``units_of(text)``
+    splits a document into units, each ``w``-unit window gets a float32
+    ``hash_embed``, and a chunk starts wherever the round-6 cosine of
+    consecutive windows goes negative. Emulation notes: python's
+    str.split() equals Spark split(r'\\s+')+drop-empties on any
+    whitespace-run text; fold order is left-to-right (acc += x*y),
     matching F.aggregate; Spark round(double, 6) goes through the
-    shortest-repr decimal (BigDecimal.valueOf) with HALF_UP."""
+    shortest-repr decimal (BigDecimal.valueOf) with HALF_UP. The replay
+    stays a separate reference from the operator."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -519,31 +521,31 @@ def _semantic_chunks_expected() -> str:
     from chatdata_spark.catalog import oracle_sf_dir
     from chatdata_spark.functions.vector import hash_embed
 
-    W, DIM = 16, 64
+    DIM = 64
     q6 = Decimal("0.000001")
     rows = duckdb.sql(
         "SELECT doc_id, text FROM read_parquet("
         f"'{oracle_sf_dir()}/documents.parquet') ORDER BY doc_id"
     ).fetchall()
+
+    def fold_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + float(x) * float(y)
+        return acc
+
     values = []
     for doc_id, text in rows:
-        ws = (text or "").split()
-        if not ws:
+        units = units_of(text or "")
+        if not units:
             continue
-        n = len(ws)
+        n = len(units)
         vecs = []
-        for i in range(-(-n // W)):
-            wtext = " ".join(ws[i * W : (i + 1) * W])
+        for i in range(-(-n // w)):
+            wtext = " ".join(units[i * w : (i + 1) * w])
             vecs.append(
                 np.array(hash_embed(wtext, DIM), dtype=np.float32).astype(np.float64)
             )
-
-        def fold_dot(a, b):
-            acc = 0.0
-            for x, y in zip(a, b):
-                acc = acc + float(x) * float(y)
-            return acc
-
         chunks = []  # list of [start_wi, n_windows]
         for i, v in enumerate(vecs):
             new = i == 0
@@ -560,20 +562,30 @@ def _semantic_chunks_expected() -> str:
                 chunks.append([i, 0])
             chunks[-1][1] += 1
         for cid, (start_wi, n_win) in enumerate(chunks):
-            n_words = sum(
-                min(W, n - wi * W) for wi in range(start_wi, start_wi + n_win)
+            n_units = sum(
+                min(w, n - wi * w) for wi in range(start_wi, start_wi + n_win)
             )
             values.append(
-                f"({doc_id}, {cid}, {start_wi * W + 1}, {n_words}, {n_win})"
+                f"({doc_id}, {cid}, {start_wi * w + 1}, {n_units}, {n_win})"
             )
     return (
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx, "
-        "CAST(start_word AS BIGINT) AS start_word, CAST(n_words AS BIGINT) AS n_words, "
+        f"CAST(start_{unit} AS BIGINT) AS start_{unit}, CAST(n_{unit}s AS BIGINT) AS n_{unit}s, "
         "CAST(n_windows AS BIGINT) AS n_windows FROM (VALUES "
         + ", ".join(values)
-        + ") AS t(doc_id, chunk_idx, start_word, n_words, n_windows) "
+        + f") AS t(doc_id, chunk_idx, start_{unit}, n_{unit}s, n_windows) "
         "ORDER BY doc_id, chunk_idx"
     )
+
+
+def _semantic_chunks_expected() -> str:
+    """Lazy oracle for semantic_chunk_spans (the embed_documents_batch /
+    dimred pattern): the whole pipeline — float32 hash embeddings, the
+    JVM's sequential float64 cosine folds, HALF_UP round-6, the boundary
+    rule — is deterministic, so a driver-side sequential recomputation
+    over the sf0.01 documents yields the exact expected table: the
+    drift replay over 16-word windows."""
+    return _drift_chunks_oracle(str.split, 16, "word")
 
 
 @query("semantic_chunk_spans", oracle=_semantic_chunks_expected)
@@ -622,83 +634,20 @@ def _prose_expr(words=None):
 
 def _semantic_sentence_chunks_expected() -> str:
     """Lazy oracle for semantic_chunk_sentences: replays prose synthesis
-    (7-word ./!/?-terminated sentences), the LOOKBEHIND sentence split,
-    2-sentence windowing, and the shared drift pipeline sequentially
-    (the _semantic_chunks_expected conventions: python split ≡ Spark
-    split+drop-empties, left-to-right float64 folds, HALF_UP round-6)."""
-    import math
+    (7-word ./!/?-terminated sentences) and the LOOKBEHIND sentence split,
+    then the drift replay over 2-sentence windows."""
     import re
-    from decimal import ROUND_HALF_UP, Decimal
 
-    import duckdb
-    import numpy as np
-
-    from chatdata_spark.catalog import oracle_sf_dir
-    from chatdata_spark.functions.vector import hash_embed
-
-    W, DIM = 2, 64
-    q6 = Decimal("0.000001")
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM read_parquet("
-        f"'{oracle_sf_dir()}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    values = []
-    for doc_id, text in rows:
-        ws = (text or "").split()
-        if not ws:
-            continue
+    def sentences(text):
+        ws = text.split()
         prose = " ".join(
             " ".join(ws[i * 7 : (i + 1) * 7]) + ".!?"[i % 3]
             for i in range(-(-len(ws) // 7))
         )
         units = [u.strip() for u in re.split(r"(?<=[.!?])\s+", prose)]
-        units = [u for u in units if u]
-        if not units:
-            continue
-        n = len(units)
-        vecs = []
-        for i in range(-(-n // W)):
-            wtext = " ".join(units[i * W : (i + 1) * W])
-            vecs.append(
-                np.array(hash_embed(wtext, DIM), dtype=np.float32).astype(np.float64)
-            )
+        return [u for u in units if u]
 
-        def fold_dot(a, b):
-            acc = 0.0
-            for x, y in zip(a, b):
-                acc = acc + float(x) * float(y)
-            return acc
-
-        chunks = []  # list of [start_wi, n_windows]
-        for i, v in enumerate(vecs):
-            new = i == 0
-            if not new:
-                p = vecs[i - 1]
-                dot = fold_dot(p, v)
-                na = math.sqrt(fold_dot(p, p))
-                nb = math.sqrt(fold_dot(v, v))
-                sim = float(
-                    Decimal(repr(dot / (na * nb))).quantize(q6, ROUND_HALF_UP)
-                )
-                new = sim < 0.0
-            if new:
-                chunks.append([i, 0])
-            chunks[-1][1] += 1
-        for cid, (start_wi, n_win) in enumerate(chunks):
-            n_sents = sum(
-                min(W, n - wi * W) for wi in range(start_wi, start_wi + n_win)
-            )
-            values.append(
-                f"({doc_id}, {cid}, {start_wi * W + 1}, {n_sents}, {n_win})"
-            )
-    return (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx, "
-        "CAST(start_sent AS BIGINT) AS start_sent, CAST(n_sents AS BIGINT) AS n_sents, "
-        "CAST(n_windows AS BIGINT) AS n_windows FROM (VALUES "
-        + ", ".join(values)
-        + ") AS t(doc_id, chunk_idx, start_sent, n_sents, n_windows) "
-        "ORDER BY doc_id, chunk_idx"
-    )
+    return _drift_chunks_oracle(sentences, 2, "sent")
 
 
 @query("semantic_chunk_sentences", oracle=_semantic_sentence_chunks_expected)

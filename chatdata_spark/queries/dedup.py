@@ -33,16 +33,23 @@ FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM docume
 
 def _duck_jaccard_pairs(threshold: float) -> str:
     """SELECT of the (i, j, jaccard) doc pairs of the CTE ``sh`` (doc_id,
-    shingle list) whose shingle Jaccard is >= ``threshold``, all-pairs.
-    The intersection size ``n`` is computed once per pair and MATERIALIZED:
-    written into both the score and the filter, DuckDB evaluated
-    ``list_intersect`` four times per pair (~2x the oracle's time)."""
+    shingle list) whose shingle Jaccard is >= ``threshold`` (> 0). Only
+    pairs sharing a shingle can pass, so the candidates come from an
+    equi-join on the unnested shingles instead of the all-pairs cross
+    product. The intersection size ``n`` is computed once per candidate
+    and MATERIALIZED: written into both the score and the filter, DuckDB
+    evaluated ``list_intersect`` four times per pair (~2x the oracle's
+    time)."""
     return f"""
-WITH jp AS MATERIALIZED (
-    SELECT a.doc_id AS i, b.doc_id AS j, len(a.sh) + len(b.sh) AS l,
+WITH g AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM sh),
+cand AS MATERIALIZED (
+    SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
+    FROM g a JOIN g b ON a.g = b.g AND a.doc_id < b.doc_id
+),
+jp AS MATERIALIZED (
+    SELECT c.i, c.j, len(a.sh) + len(b.sh) AS l,
            len(list_intersect(a.sh, b.sh)) AS n
-    FROM sh a, sh b
-    WHERE a.doc_id < b.doc_id
+    FROM cand c JOIN sh a ON a.doc_id = c.i JOIN sh b ON b.doc_id = c.j
 )
 SELECT i, j, ROUND(n * 1.0 / (l - n), 6) AS jaccard
 FROM jp

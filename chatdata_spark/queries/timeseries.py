@@ -11,9 +11,7 @@ from chatdata_spark.operators.timeseries import asof_join, sessionize
 from chatdata_spark.registry import query
 
 
-@query(
-    "asof_join_purchase_click",
-    oracle="""
+_ASOF_ORACLE = """
     WITH clicks AS (
         SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'click'
         QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1
@@ -25,12 +23,13 @@ from chatdata_spark.registry import query
     FROM purchases p
     ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND c.ts <= p.ts
     ORDER BY p.event_id
-    """,
-)
-def asof_join_purchase_click(spark, sf_dir):
-    """As-of join: each purchase paired with the user's latest prior (or
-    simultaneous) click — single-shuffle union+window merge formulation,
-    validated against DuckDB's native ASOF JOIN."""
+    """
+
+
+def _asof_purchase_click(spark, sf_dir, slice_width=None):
+    """Each purchase paired with the user's latest prior (or simultaneous)
+    click: the body of both as-of queries, which differ only in
+    ``slice_width``."""
     e = load_events(spark, sf_dir)
     purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = e.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id", "value")
@@ -41,6 +40,7 @@ def asof_join_purchase_click(spark, sf_dir):
         ts_col="ts",
         payload_cols=["event_id", "value"],
         tie_break="event_id",
+        slice_width=slice_width,
     )
     return joined.select(
         "event_id",
@@ -50,9 +50,15 @@ def asof_join_purchase_click(spark, sf_dir):
     ).orderBy("event_id")
 
 
-@query(
-    "sessionize_events",
-    oracle="""
+@query("asof_join_purchase_click", oracle=_ASOF_ORACLE)
+def asof_join_purchase_click(spark, sf_dir):
+    """As-of join: each purchase paired with the user's latest prior (or
+    simultaneous) click — single-shuffle union+window merge formulation,
+    validated against DuckDB's native ASOF JOIN."""
+    return _asof_purchase_click(spark, sf_dir)
+
+
+_SESSIONIZE_ORACLE = """
     WITH marked AS (
         SELECT user_id, ts, event_id,
                CASE WHEN lag(ts) OVER w IS NULL
@@ -70,13 +76,15 @@ def asof_join_purchase_click(spark, sf_dir):
            min(ts) AS session_start, max(ts) AS session_end
     FROM sessions GROUP BY user_id, session_idx
     ORDER BY user_id, session_idx
-    """,
-)
-def sessionize_events(spark, sf_dir):
-    """Gap sessionization (30-min): per-session event count + bounds —
-    the batch twin of a streaming session window."""
+"""
+
+
+def _session_counts(spark, sf_dir, slice_width=None):
+    """30-minute gap sessions with their event count and bounds: the body
+    of both sessionize queries, which differ only in ``slice_width``."""
     e = load_events(spark, sf_dir)
-    s = sessionize(e, "user_id", "ts", gap_minutes=30.0, order_tiebreak="event_id")
+    s = sessionize(e, "user_id", "ts", gap_minutes=30.0, order_tiebreak="event_id",
+                   slice_width=slice_width)
     return (
         s.groupBy("user_id", "session_idx")
         .agg(
@@ -86,6 +94,13 @@ def sessionize_events(spark, sf_dir):
         )
         .orderBy("user_id", "session_idx")
     )
+
+
+@query("sessionize_events", oracle=_SESSIONIZE_ORACLE)
+def sessionize_events(spark, sf_dir):
+    """Gap sessionization (30-min): per-session event count + bounds —
+    the batch twin of a streaming session window."""
+    return _session_counts(spark, sf_dir)
 
 
 @query(
@@ -550,27 +565,6 @@ def quantile_hist_value_by_type(spark, sf_dir):
     ).orderBy("event_type")
 
 
-_SESSIONIZE_ORACLE = """
-    WITH marked AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sessions AS (
-        SELECT user_id, ts, event_id,
-               CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS INT) AS session_idx
-        FROM marked
-    )
-    SELECT user_id, session_idx, COUNT(*) AS n_events,
-           min(ts) AS session_start, max(ts) AS session_end
-    FROM sessions GROUP BY user_id, session_idx
-    ORDER BY user_id, session_idx
-"""
-
-
 @query("sessionize_events_sliced", oracle=_SESSIONIZE_ORACLE)
 def sessionize_events_sliced(spark, sf_dir):
     """The hot-key escape hatch under the SAME oracle as sessionize_events:
@@ -580,59 +574,16 @@ def sessionize_events_sliced(spark, sf_dir):
     boundary pass restores exact gap semantics across slice edges — the
     green oracle row IS the sliced ≡ unsliced proof, through the driver
     path (operators/timeseries.py:sessionize)."""
-    e = load_events(spark, sf_dir)
-    s = sessionize(e, "user_id", "ts", gap_minutes=30.0, order_tiebreak="event_id",
-                   slice_width="auto")
-    return (
-        s.groupBy("user_id", "session_idx")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .orderBy("user_id", "session_idx")
-    )
+    return _session_counts(spark, sf_dir, slice_width="auto")
 
 
-@query(
-    "asof_join_purchase_click_sliced",
-    oracle="""
-    WITH clicks AS (
-        SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'click'
-        QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1
-    ),
-    purchases AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-    SELECT p.event_id, p.user_id,
-           c.event_id AS asof_event_id,
-           CAST(c.value AS DOUBLE) AS asof_value
-    FROM purchases p
-    ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND c.ts <= p.ts
-    ORDER BY p.event_id
-    """,
-)
+@query("asof_join_purchase_click_sliced", oracle=_ASOF_ORACLE)
 def asof_join_purchase_click_sliced(spark, sf_dir):
     """The as-of join's hot-key escape hatch under the SAME oracle as
     asof_join_purchase_click: slice_width='auto' windows on
     (user, time-slice) with a carry-in boundary pass — the green oracle row
     proves sliced ≡ unsliced through the driver path."""
-    e = load_events(spark, sf_dir)
-    purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = e.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id", "value")
-    joined = asof_join(
-        purchases,
-        clicks,
-        on="user_id",
-        ts_col="ts",
-        payload_cols=["event_id", "value"],
-        tie_break="event_id",
-        slice_width="auto",
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.col("asof_event_id"),
-        F.col("asof_value").cast("double"),
-    ).orderBy("event_id")
+    return _asof_purchase_click(spark, sf_dir, slice_width="auto")
 
 
 @query(

@@ -1,20 +1,9 @@
-"""Stream-stream event-time joins (north-star §2.10 extension; the
+"""Stream-static enrichment join (north-star §2.10 extension; the
 reference has no streaming — its ingest is batch INSERT...SELECT per
 upload, app/backend/chat_bot/tools.py:13-50).
 
-The attribution-window join: every purchase matched to the same user's
-clicks within the preceding ``window``. Both sides carry event-time
-watermarks, so Spark bounds the join state — click state older than
-(watermark + window) is evicted, purchase state after watermark. That is
-the property that lets this run forever on an unbounded stream; an
-unwatermarked stream-stream join accumulates state without bound and is
-refused by Spark for outer joins.
-
-At scale the join shuffles both streams on ``user_id`` once per
-micro-batch; state lives in the state store partitioned the same way (RocksDB
-provider in production). Late events beyond the watermark are dropped on
-arrival — the same contract as the watermarked windowed counts in
-streaming/incremental.py.
+The watermarked stream-stream interval join (click→purchase attribution)
+is streaming/incremental.py::stream_stream_interval_join.
 """
 
 from __future__ import annotations
@@ -23,40 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chatdata_spark.streaming.runner import _available_now, _parquet
-
-
-def purchase_click_attribution_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Pair each purchase with every click by the same user in
-    ``[purchase.ts - window, purchase.ts]``. Works identically on batch
-    DataFrames (no watermark applied) and streams (state bounded by the
-    watermarks); output columns: user_id, click_id, click_ts, purchase_id,
-    purchase_ts.
-
-    ``clicks`` needs (user_id, ts, event_id); ``purchases`` the same.
-    """
-    c = clicks.select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-    )
-    p = purchases.select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"), F.col("event_id").alias("purchase_id")
-    )
-    if clicks.isStreaming:
-        c = c.withWatermark("click_ts", watermark)
-    if purchases.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"interval {window}"))
-    )
-    return c.join(p, cond, "inner").select(
-        F.col("c_user").alias("user_id"), "click_id", "click_ts", "purchase_id", "purchase_ts"
-    )
 
 
 def stream_static_enrich(
@@ -71,8 +26,9 @@ def stream_static_enrich(
     dim_cols: list[str],
 ) -> None:
     """Stream-static dimension enrichment — the third §2.10 join shape
-    (alongside the stream-stream interval join above and the windowed
-    aggregations): a file stream inner-joined to a STATIC dimension frame.
+    (alongside the stream-stream interval join in streaming/incremental.py
+    and the windowed aggregations): a file stream inner-joined to a STATIC
+    dimension frame.
 
     Spark re-evaluates the static side on EVERY micro-batch, which is the
     operational point: a dimension backed by a versioned store pointer

@@ -92,3 +92,28 @@ def test_guard_context_lines_carry_sentinel_and_shard_medians():
     lines = b.guard_context_lines({}, [("a+0", None, [])])
     assert any("sentinel=n/a" in ln for ln in lines)
     assert any("median-vs-committed=n/a" in ln for ln in lines)
+
+
+def test_x10_fixture_replicates_jaccard_pairs_tenfold(spark, tmp_path):
+    """The 10x fixture (tools/gen_sf10x.py) is key-disjoint and
+    word-perturbed per replica, so ``dedup_jaccard_exact`` over it returns
+    each 1x pair once per replica: exactly 10x the pairs, both ends in one
+    replica (ids offset by rep * 2^33), each with its 1x score. The build
+    leaves no half-written sibling dir behind."""
+    from chatdata_spark.registry import queries
+    from tests.conftest import SF_SMOKE
+    from tools import gen_sf10x
+
+    dst = str(tmp_path / "x10")
+    gen_sf10x.build(spark, SF_SMOKE, dst)
+    assert sorted(os.listdir(tmp_path)) == ["x10"]
+
+    q = queries()["dedup_jaccard_exact"]
+    one = {(r.i, r.j): r.jaccard for r in q(spark, SF_SMOKE).collect()}
+    ten = [(r.i, r.j, r.jaccard) for r in q(spark, dst).collect()]
+    assert one and len(ten) == 10 * len(one)
+    mask = gen_sf10x.OFF - 1
+    for i, j, score in ten:
+        assert i >> 33 == j >> 33
+        assert one[(i & mask, j & mask)] == score
+    assert len({(i >> 33, i, j) for i, j, _ in ten}) == len(ten)

@@ -143,45 +143,56 @@ def test_stream_distinct_stateful_across_batches(spark, tmp_path):
     assert spark.read.parquet(outd).count() == 3
 
 
-def test_stream_stream_attribution_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream join (clicks x purchases within a 10-min
-    attribution window) drained with availableNow must produce exactly the
-    batch join's rows — and the streaming plan must carry watermarks on
-    both sides (bounded state: the unbounded-stream survival property)."""
+def test_stream_stream_attribution_join_matches_batch(spark, tmp_path, monkeypatch):
+    """Watermarked stream-stream join (each purchase x the same user's
+    clicks within the preceding 10 minutes) drained with availableNow must
+    produce exactly the batch join's rows — and the streaming plan must
+    carry watermarks on both sides (bounded state: the unbounded-stream
+    survival property). ``value`` carries each event's id, so a drained
+    row names its purchase and click."""
     from chatdata_spark.catalog import load_events
-    from chatdata_spark.streaming.joins import purchase_click_attribution_join
+    from chatdata_spark.streaming import incremental as inc
     from tests.conftest import SF_ORACLE
 
-    e = load_events(spark, SF_ORACLE).select("event_id", "ts", "user_id", "event_type")
+    e = load_events(spark, SF_ORACLE).select(
+        "user_id", "ts", F.col("event_id").cast("double").alias("value"), "event_type"
+    )
     clicks_dir, purch_dir = str(tmp_path / "clicks"), str(tmp_path / "purchases")
-    e.filter(F.col("event_type") == "click").write.parquet(clicks_dir)
-    e.filter(F.col("event_type") == "purchase").write.parquet(purch_dir)
+    clicks = e.filter(F.col("event_type") == "click").drop("event_type")
+    purchases = e.filter(F.col("event_type") == "purchase").drop("event_type")
+    clicks.write.parquet(clicks_dir)
+    purchases.write.parquet(purch_dir)
 
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    sc = spark.readStream.schema(schema).parquet(clicks_dir)
-    sp = spark.readStream.schema(schema).parquet(purch_dir)
-    joined = purchase_click_attribution_join(sc, sp)
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attrib")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.click_id, r.purchase_id)
-        for r in spark.table("attrib").collect()
-    }
+    streams = []
+    drain = inc._available_now
 
-    batch = purchase_click_attribution_join(
-        spark.read.parquet(clicks_dir), spark.read.parquet(purch_dir)
+    def capture(stream, checkpoint_dir, sink):
+        streams.append(stream)
+        drain(stream, checkpoint_dir, sink)
+
+    monkeypatch.setattr(inc, "_available_now", capture)
+    out = str(tmp_path / "out")
+    inc.stream_stream_interval_join(
+        spark, purch_dir, clicks_dir, out, str(tmp_path / "ckpt"), max_delay="10 minutes"
     )
-    want = {(r.user_id, r.click_id, r.purchase_id) for r in batch.collect()}
+    got = sorted(
+        (r.user_id, r.l_value, r.r_value) for r in spark.read.parquet(out).collect()
+    )
+
+    p, c = purchases.alias("p"), clicks.alias("c")
+    batch = p.join(
+        c,
+        (F.col("p.user_id") == F.col("c.user_id"))
+        & (F.col("c.ts") <= F.col("p.ts"))
+        & (F.col("c.ts") >= F.col("p.ts") - F.expr("INTERVAL 10 minutes")),
+    )
+    want = sorted(tuple(r) for r in batch.select("p.user_id", "p.value", "c.value").collect())
     assert got == want and len(want) > 0
 
-    # bounded-state proof: watermarks present on the streaming plan
-    assert "EventTimeWatermark" in joined._jdf.queryExecution().analyzed().toString()
+    # bounded-state proof: watermarks on both sides of the drained stream
+    (stream,) = streams
+    plan = stream._jdf.queryExecution().analyzed().toString()
+    assert plan.count("EventTimeWatermark") == 2
 
 
 def test_stream_sessionize_matches_batch(spark, tmp_path):

@@ -311,9 +311,11 @@ def test_coverage_window_column_consistent():
 
 
 def test_bench_suite_names_resolve():
-    """bench.py is driver-run per round: every HEADLINE name must resolve
-    in the registry and every EXTRA entry must be callable — a renamed
-    query must fail HERE, not in the driver's bench pass."""
+    """bench.py is driver-run per round: every HEADLINE name and every X10
+    target must resolve in the registry, every E2E name must be a
+    registered query or an X10 entry, and every EXTRA entry must be
+    callable — a renamed query must fail HERE, not in the driver's bench
+    pass."""
     import importlib.util
     import os
     import sys
@@ -325,14 +327,13 @@ def test_bench_suite_names_resolve():
     sys.modules["bench_mod"] = bench
     spec.loader.exec_module(bench)
     qs = queries()
-    missing = [n for n in bench.HEADLINE if n not in qs]
-    assert not missing, f"HEADLINE names not in registry: {missing}"
-    # E2E names are registry queries or bench fns listed in E2E_EXTRA
-    missing_e2e = [n for n in bench.E2E if n not in qs and n not in bench.E2E_EXTRA]
-    assert not missing_e2e, f"E2E names not in registry: {missing_e2e}"
-    assert set(bench.E2E_EXTRA) <= set(bench.E2E)
-    assert all(callable(f) for f in [*bench.EXTRA.values(), *bench.E2E_EXTRA.values()])
-    names = [*bench.HEADLINE, *bench.EXTRA, *bench.E2E]
+    missing = [n for n in [*bench.HEADLINE, *bench.X10.values()] if n not in qs]
+    assert not missing, f"HEADLINE names / X10 targets not in registry: {missing}"
+    missing_e2e = [n for n in bench.E2E if n not in qs and n not in bench.X10]
+    assert not missing_e2e, f"E2E names not in registry or X10: {missing_e2e}"
+    assert all(callable(f) for f in bench.EXTRA.values())
+    steady = [*bench.HEADLINE, *bench.EXTRA, *(n for n in bench.X10 if n not in bench.E2E)]
+    names = [*steady, *bench.E2E]
     assert len(names) == len(set(names)), "duplicate bench keys"
     # stdout headline subset must resolve and stay bounded (driver capture)
     pool = set(names)

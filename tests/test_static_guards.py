@@ -198,3 +198,19 @@ def test_worker_steps_written_once():
         assert len(found) == 1 and found[0][0] == path and found[0][1] in span, (
             f"{needle!r} must appear once under operators/, in {module}.{home}: {found}"
         )
+
+
+def test_x10_replication_recipe_written_once():
+    """The 10x scale-up (key offsets, the '#<rep>' word perturbation, the
+    embedding sign flips) lives in tools/gen_sf10x.py; bench.py's x10
+    entries read the fixture it writes. A second copy of the word
+    perturbation in bench.py, tools/ or the library fails here."""
+    needle = "concat('$1#'"
+    sources = [*_library_files(), *sorted((REPO / "tools").rglob("*.py")), REPO / "bench.py"]
+    found = [
+        (path, n)
+        for path in sources
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if needle in line
+    ]
+    assert len(found) == 1 and found[0][0] == REPO / "tools" / "gen_sf10x.py", found

@@ -1,7 +1,7 @@
 """Generate a 10x-scaled fixture dir from an existing testdata dir
-(sf0.1 -> ~sf1) for the one-off large-scale probe the r5 verdict asked for
-(What's missing #3): the first scale where multi-file parquet scans, real
-shuffle spill, and AQE skew handling actually engage.
+(sf0.1 -> ~sf1): the one replication recipe. bench.py's x10 entries run
+over it (``build`` into a derived /tmp dir, once per source), and the sf1
+probe path runs any registered query over it.
 
 Replication preserves the join/duplication structure EXACTLY — each replica
 is a key-disjoint copy of the source (every PK and FK offset by
@@ -10,16 +10,25 @@ are unchanged while totals scale 10x:
 
 - region/nation: copied verbatim (TPC-H dimension constants);
 - customer/supplier/part/orders/lineitem/events: key columns offset;
-- documents: doc_id offset + the '#<rep>' word perturbation (the honest
-  dedup shape from bench.py::_replicate_docs_perturbed — replicas share no
-  grams, so near-dup/substring structure scales linearly; NOTE it doubles
-  post-tokenization token count, so text operators see ~20x tokens);
-- embeddings: vec_id offset + per-replica isometric sign-flip (preserves
-  intra-replica cosines exactly, scrambles cross-replica similarity).
+- documents: doc_id offset + the '#<rep>' word perturbation: every word
+  of replica r gets a '#r' suffix, so replicas share no whitespace
+  shingles and near-dup structure scales linearly (pair count, bucket
+  sizes and index size too), while each replica keeps the original
+  shingle structure exactly. Inserting separator tokens instead would
+  collapse 3-word shingles into effective unigrams and explode bucket
+  sizes. NOTE operators that tokenize on [a-z0-9]+ split the suffix into
+  its own token: they see ~20x tokens, and a word n-gram there spans n/2
+  words, so substring spans grow faster than 10x (dedup_substring_spans:
+  477 -> 24,680 rows from sf0.1);
+- embeddings: vec_id offset + per-replica isometric sign-flip (a seeded
+  ±1 pattern per dimension: preserves intra-replica cosines exactly,
+  scrambles cross-replica similarity).
 
 Heavy tables are written with multiple files (Spark partitioned write), so
 downstream scans exercise multi-file planning instead of the single
-row-group the committed fixtures have.
+row-group the committed fixtures have. The tables are written into a
+sibling ``<dst>.building`` dir that is renamed to ``dst`` at the end, so a
+killed build never leaves a readable half-fixture.
 
 Usage: python tools/gen_sf10x.py [src_dir] [dst_dir]
        (defaults: /root/testdata/sf0.1 -> /tmp/sf1)
@@ -28,6 +37,7 @@ Usage: python tools/gen_sf10x.py [src_dir] [dst_dir]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -36,19 +46,16 @@ OFF = 2**33
 REPS = 10
 
 
-def main() -> None:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1"
-
+def build(spark, src: str, dst: str) -> None:
+    """Write the 10x copy of the fixture dir ``src`` to ``dst`` (replaced
+    if present)."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from chatdata_spark.catalog import load_events
-    from chatdata_spark.session import get_spark
 
-    spark = get_spark(app_name="gen_sf10x")
-    spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(dst, exist_ok=True)
+    tmp = dst.rstrip("/") + ".building"
+    shutil.rmtree(tmp, ignore_errors=True)
 
     def reps_col():
         return F.explode(F.array(*[F.lit(i) for i in range(REPS)])).alias("__rep")
@@ -60,8 +67,7 @@ def main() -> None:
         return out.drop("__rep").repartition(files)
 
     def write(df, name):
-        df.write.mode("overwrite").parquet(f"{dst}/{name}.parquet")
-        print(name, "written")
+        df.write.parquet(f"{tmp}/{name}.parquet")
 
     for name in ("region", "nation"):
         write(spark.read.parquet(f"{src}/{name}.parquet").repartition(1), name)
@@ -118,6 +124,20 @@ def main() -> None:
     for p in parts[1:]:
         e10 = e10.unionByName(p)
     write(e10.repartition(4), "embeddings")
+
+    shutil.rmtree(dst, ignore_errors=True)
+    os.rename(tmp, dst)
+
+
+def main() -> None:
+    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    dst = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1"
+
+    from chatdata_spark.session import get_spark
+
+    spark = get_spark(app_name="gen_sf10x")
+    spark.sparkContext.setLogLevel("ERROR")
+    build(spark, src, dst)
     print("done ->", dst)
 
 
