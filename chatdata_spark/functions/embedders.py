@@ -33,10 +33,6 @@ def register_embedder(name: str, factory: Callable[[int], object]) -> None:
     _EMBEDDERS[name] = factory
 
 
-def unregister_embedder(name: str) -> None:
-    _EMBEDDERS.pop(name, None)
-
-
 def embedder_udf(name: str, dim: int):
     """Resolve ``name`` to a UDF; unregistered names fall back to the
     env-gated real model when configured (:func:`maybe_real_embedder`),

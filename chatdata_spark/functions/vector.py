@@ -26,9 +26,8 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 
 def _as_double_array(v: Column | str | Sequence[float]) -> Column:
@@ -158,25 +157,6 @@ def make_embed_text_udf(dim: int = 64):
 
     _HASH_EMBED_UDFS[dim] = _embed
     return _embed
-
-
-def register_vector_sql_functions(spark: SparkSession, dim: int = 64) -> None:
-    """Register the Python-backed functions for spark.sql entry points.
-
-    ``DISTANCE`` in SQL strings is handled by the dialect pre-pass via
-    :func:`cosine_distance_sql` (JVM-side); these registrations add the
-    embedder + a convenience cosine UDF under stable names.
-    """
-    spark.udf.register("embed_text", make_embed_text_udf(dim))
-
-    @F.pandas_udf(DoubleType())
-    def _cos2(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.array(a.tolist(), dtype=np.float64)
-        mb = np.array(b.tolist(), dtype=np.float64)
-        dots = np.einsum("ij,ij->i", ma, mb)
-        return pd.Series(1.0 - dots / (np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)))
-
-    spark.udf.register("cosine_distance_py", _cos2)
 
 
 def cosine_distance_py(a: Sequence[float], b: Sequence[float]) -> float:

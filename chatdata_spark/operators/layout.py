@@ -1,145 +1,25 @@
-"""Sorted table layout — the MergeTree primary-key clustering parity
+"""Clustered table layout — the MergeTree primary-key clustering parity
 (`ENGINE = ReplacingMergeTree ORDER BY id`, `index_granularity = 8192`,
 /root/reference/README.md:88, docs/vector-sql.md:195).
 
 ClickHouse clusters rows by primary key and skips granules via sparse
 index; parquet's equivalent is **row-group / file min-max statistics**:
-write data range-partitioned + sorted on the key and every selective key
-predicate prunes files (and row groups inside them) at scan time —
-Catalyst's filter pushdown consumes the stats automatically.
+write data range-partitioned + sorted on a clustering key and every
+selective predicate on it prunes files (and row groups inside them) at
+scan time — Catalyst's filter pushdown consumes the stats automatically.
 
-``write_sorted``: repartitionByRange(key) → sortWithinPartitions(key) →
-parquet (optionally bounded file size as the granularity knob). The result:
-per-file key ranges are DISJOINT, so a point/range predicate touches
-O(files-in-range), not O(all files) — verified by reading footer stats in
-tests/test_layout.py.
+``zorder_write`` is the one layout writer: it interleaves the bits of two
+or more bucketed columns (:func:`morton_interleave`, :func:`morton_nd`,
+or the Hilbert index of :func:`with_hilbert`) into one z-key, so every
+clustered dimension has a bounded per-file span and a predicate on ANY
+of them prunes — where a single-key sort clusters only its leading key
+(that layout is ``VersionedParquetStore.compact(sort_cols=...)``). Footer
+ranges are checked in tests/test_layout.py.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    num_files: int = 8,
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    out = df.repartitionByRange(num_files, *sort_cols).sortWithinPartitions(*sort_cols)
-    writer = out.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def file_key_ranges(path: str, column: str) -> list[tuple]:
-    """(min, max) of ``column`` per parquet file from footer statistics —
-    what the scan's file/row-group pruning consumes."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for f in sorted(os.listdir(path)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            for c in range(md.num_columns):
-                col = md.row_group(rg).column(c)
-                if col.path_in_schema == column and col.statistics is not None:
-                    s = col.statistics
-                    lo = s.min if lo is None else min(lo, s.min)
-                    hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            ranges.append((lo, hi))
-    return ranges
-
-
-def zvalue_col(cols: list[str], bits: int = 12):
-    """Z-order (Morton) key over numeric BIN columns (already rank-binned
-    to ``bits`` bits by :func:`write_zorder`): pure JVM bit interleave —
-    the expression unrolls to bits x n_cols constant-shift or-terms
-    (ANSI-safe bit ops, no multiply overflow), no UDF, no shuffle."""
-    from pyspark.sql import functions as F
-
-    z = F.lit(0).cast("long")
-    n = len(cols)
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            bit = F.shiftrightunsigned(F.col(c).cast("long"), b).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, b * n + i))
-    return z
-
-
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    num_files: int = 8,
-    bits: int = 12,
-    mode: str = "overwrite",
-    relative_error: float = 1e-4,
-) -> None:
-    """Z-ordered table layout — multi-column data skipping (the Delta/
-    Iceberg OPTIMIZE ZORDER story, built from primitives: no Spark
-    built-in).
-
-    A single-column sort (write_sorted) prunes perfectly on that column
-    and not at all on others; Z-ORDER interleaves the bits of several
-    columns' RANKS so every file covers a small hyper-rectangle — a
-    selective predicate on ANY z-column then hits a bounded fraction of
-    files via footer min-max stats.
-
-    Rank-binning, scale-safely: per column, ``approxQuantile`` computes
-    2^bits equal-depth cut points driver-side (a bounded statistics pass,
-    like the IVF centroids — NOT a global sort and NOT a single-task
-    percent_rank window), and an Arrow ``searchsorted`` maps each value to
-    its bin. Equal-depth matters: Morton codes need uniformly spread
-    fixed-width ints, raw skewed values would collapse most rows onto a
-    few z-prefixes. The only shuffle is the final repartitionByRange on
-    the z-key — the same write-time cost as any sorted layout."""
-    from pyspark.sql import functions as F
-
-    n_bins = 1 << bits
-    probs = [i / n_bins for i in range(1, n_bins)]
-    ranked = df
-    rank_cols = []
-    for c in zorder_cols:
-        cuts = np.asarray(
-            df.select(F.col(c).cast("double").alias("v")).approxQuantile(
-                "v", probs, relative_error
-            ),
-            dtype=np.float64,
-        )
-
-        def _make_bin(cuts_arr):
-            @F.pandas_udf("long")
-            def _bin(v: pd.Series) -> pd.Series:
-                return pd.Series(
-                    np.searchsorted(cuts_arr, v.to_numpy(dtype=np.float64), side="right")
-                )
-
-            return _bin
-
-        rc = f"__r_{c}"
-        ranked = ranked.withColumn(rc, _make_bin(cuts)(F.col(c).cast("double")))
-        rank_cols.append(rc)
-    ranked = ranked.withColumn("__z", zvalue_col(rank_cols, bits=bits))
-    (
-        ranked.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", *rank_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
 
 # ---- Z-order (multi-dimensional) layout -------------------------------------
 
@@ -182,8 +62,7 @@ def morton_nd(cols, bits: int = ZBITS):
     each already bucketed to 0..2^bits-1: bit b of dimension i lands at
     position b·n + i. The 2-D magic-shift :func:`morton_interleave` is
     the fast special case; this general form unrolls to bits×n
-    constant-shift OR-terms (same expression family as
-    :func:`zvalue_col`, which rank-bins first) — whole-stage codegen,
+    constant-shift OR-terms — whole-stage codegen,
     ANSI-safe, and replayed bit-exactly in SQL by
     :func:`morton_nd_sql_expr`. Requires bits·n ≤ 63 (BIGINT); same
     0..2^bits-1 domain contract as morton_interleave (out-of-domain

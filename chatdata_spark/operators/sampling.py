@@ -159,24 +159,6 @@ def shard_assignment(df: DataFrame, key_col: str, n_shards: int, salt: str = "sh
     )
 
 
-def export_shards(
-    df: DataFrame, path: str, key_col: str, n_shards: int, salt: str = "shard"
-) -> None:
-    """Write ``n_shards`` balanced, deterministically-shuffled parquet
-    shards under ``path/shard=K/``. One shuffle (repartition on shard),
-    per-shard local sort by (shuffle_key, key) — no global sort, no
-    driver involvement; at 100 TB each shard is one task's sequential
-    write and shard count just scales with the cluster."""
-    out = shard_assignment(df, key_col, n_shards, salt)
-    (
-        out.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "shuffle_key", key_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
 def temperature_rates(
     counts: dict[str, int], alpha: float, target_total: int
 ) -> dict[str, float]:

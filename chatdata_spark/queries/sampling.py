@@ -255,9 +255,9 @@ def weighted_sample_by_length(spark, sf_dir):
 )
 def shard_assignment_docs(spark, sf_dir):
     """Training-export sharding: deterministic shard id (md5 bucket mod 16)
-    + within-shard shuffle key per document — the assignment half of
-    operators/sampling.py:export_shards, bit-identical on any engine (the
-    writer itself is pytest-covered: balance, determinism, roundtrip)."""
+    + within-shard shuffle key per document
+    (operators/sampling.py::shard_assignment), bit-identical on any
+    engine; a writer partitions by shard and sorts within it."""
     from chatdata_spark.operators.sampling import shard_assignment
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")

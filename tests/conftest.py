@@ -47,6 +47,29 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def file_key_ranges(path: str, column: str) -> list[tuple]:
+    """(min, max) of ``column`` per parquet file under ``path``, from footer
+    statistics — what the scan's file/row-group pruning consumes."""
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in sorted(os.listdir(path)):
+        if not f.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(path, f)).metadata
+        lo, hi = None, None
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                if col.path_in_schema == column and col.statistics is not None:
+                    s = col.statistics
+                    lo = s.min if lo is None else min(lo, s.min)
+                    hi = s.max if hi is None else max(hi, s.max)
+        if lo is not None:
+            ranges.append((lo, hi))
+    return ranges
+
+
 def _norm_cell(v):
     if isinstance(v, float):
         if math.isnan(v):

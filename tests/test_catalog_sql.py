@@ -1,13 +1,6 @@
-"""S5/S7 DDL surface (Spark SQL catalog tables), registered SQL UDFs
-(§2.11), skew-salted aggregation."""
+"""S5/S7 DDL surface (Spark SQL catalog tables) and the index-cache path."""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
-
-from chatdata_spark.functions.vector import hash_embed, register_vector_sql_functions
-from chatdata_spark.operators.skew import salted_aggregate
-from tests.conftest import SF_ORACLE
 
 
 def test_create_table_ddl_roundtrip(spark, tmp_path):
@@ -32,57 +25,6 @@ def test_create_table_ddl_roundtrip(spark, tmp_path):
     rows = spark.sql("SELECT entity_id, size(vector) AS d FROM private_kb_ddl").collect()
     assert [(r.entity_id, r.d) for r in rows] == [("e1", 2)]
     spark.sql("DROP TABLE private_kb_ddl")
-
-
-def test_registered_sql_udfs(spark):
-    """§2.11: embed_text + cosine_distance_py callable from SQL strings."""
-    register_vector_sql_functions(spark, dim=8)
-    row = spark.sql(
-        "SELECT size(embed_text('hello')) AS d, cosine_distance_py(embed_text('a'), embed_text('a')) AS self_dist"
-    ).collect()[0]
-    assert row.d == 8
-    assert abs(row.self_dist) < 1e-9
-    expected = hash_embed("hello", 8)
-    got = spark.sql("SELECT embed_text('hello') AS v").collect()[0].v
-    assert [round(float(x), 5) for x in got] == [round(float(x), 5) for x in expected]
-
-
-def test_salted_aggregate_matches_plain(spark):
-    """Salted two-phase agg ≡ plain groupBy (correctness under the skew
-    mitigation); COUNT/SUM/MAX merge rules."""
-    from chatdata_spark.catalog import load_events
-
-    e = load_events(spark, SF_ORACLE)
-    plain = {
-        r.event_type: (r.n, r.total, r.vmax)
-        for r in e.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(27,6)")).cast("double").alias("total"),
-            F.max("value").alias("vmax"),
-        )
-        .collect()
-    }
-    salted = {
-        r.event_type: (r.n, r.total, r.vmax)
-        for r in salted_aggregate(
-            e,
-            ["event_type"],
-            salt_from="event_id",
-            n_salts=16,
-            partial_aggs={
-                "n": lambda: F.count(F.lit(1)),
-                "total": lambda: F.sum(F.col("value").cast("decimal(27,6)")),
-                "vmax": lambda: F.max("value"),
-            },
-            final_aggs={
-                "n": lambda c: F.sum(c),
-                "total": lambda c: F.sum(c).cast("double"),
-                "vmax": lambda c: F.max(c),
-            },
-        ).collect()
-    }
-    assert salted == plain
 
 
 def test_shared_cache_path_keys_builder_source(tmp_path, monkeypatch):

@@ -1,22 +1,5 @@
 
 
-def test_read_json_quarantine_splits_bad_lines(spark, tmp_path):
-    from chatdata_spark.sources.ingest import read_json_quarantine
-
-    p = tmp_path / "in.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "ok"}\n'
-        "this is not json\n"
-        '{"doc_id": 2, "text": "fine"}\n'
-        '{"doc_id": "not_a_number", "text": "bad type is fine in permissive"}\n'
-    )
-    clean, bad = read_json_quarantine(spark, str(p), "doc_id bigint, text string")
-    ids = sorted(r["doc_id"] for r in clean.collect() if r["doc_id"] is not None)
-    assert ids == [1, 2]
-    assert bad.count() >= 1  # the non-JSON line is quarantined verbatim
-    assert "not json" in bad.collect()[0]["_corrupt_record"]
-
-
 def test_parse_csv_typed_quotes_types_and_quarantine(spark):
     from chatdata_spark.sources.ingest import parse_csv_typed
 

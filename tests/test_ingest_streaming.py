@@ -1,4 +1,4 @@
-"""Ingestion pipeline (S2/S8) and Structured Streaming tests."""
+"""Ingest-time validation and Structured Streaming tests."""
 
 from __future__ import annotations
 
@@ -7,51 +7,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from chatdata_spark.sources.ingest import (
-    embed_and_validate,
-    parse_uploads,
-    read_json_bulk,
-    validate_vector_dim,
-)
+from chatdata_spark.sources.ingest import validate_vector_dim
 from chatdata_spark.streaming.incremental import incremental_embed, windowed_event_counts
-
-
-def test_read_json_bulk_with_schema_and_compression(spark, tmp_path):
-    import gzip
-    import json
-
-    p = tmp_path / "in"
-    p.mkdir()
-    rows = [{"id": i, "t": f"text {i}"} for i in range(20)]
-    with gzip.open(p / "part0.json.gz", "wt") as f:
-        for r in rows[:10]:
-            f.write(json.dumps(r) + "\n")
-    with open(p / "part1.json", "w") as f:
-        for r in rows[10:]:
-            f.write(json.dumps(r) + "\n")
-    df = read_json_bulk(spark, str(p / "part*"), "id bigint, t string")
-    assert df.count() == 20 and dict(df.dtypes) == {"id": "bigint", "t": "string"}
-
-
-def test_upload_pipeline_end_to_end(spark, tmp_path):
-    """S8: binary files → parse (stub) → NarrativeText>10w filter →
-    entity_id → embed → dim-valid rows."""
-    p = tmp_path / "files"
-    p.mkdir()
-    long_para = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-    (p / "doc1.txt").write_text(f"{long_para}\n\nshort one\n\ntitle line that is long enough to pass ten words easily")
-    (p / "doc2.txt").write_text(f"{long_para} extra tokens here\n\n{long_para}")
-    files = spark.read.format("binaryFile").load(str(p))
-    parsed = parse_uploads(files)
-    rows = parsed.collect()
-    assert all(len(r.text.split(" ")) > 10 for r in rows)
-    assert all(len(r.entity_id) == 64 for r in rows)
-    embedded = embed_and_validate(parsed, "text", dim=16)
-    out = embedded.collect()
-    assert len(out) == len(rows) and all(len(r.vector) == 16 for r in out)
-    # re-parse is deterministic → same entity_ids (upsert-stable)
-    again = {r.entity_id for r in parse_uploads(files).collect()}
-    assert again == {r.entity_id for r in rows}
 
 
 def test_validate_vector_dim_split(spark):

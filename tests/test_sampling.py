@@ -72,45 +72,6 @@ def test_weighted_sample_topn_plan_no_global_sort(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_export_shards_balanced_deterministic_roundtrip(spark, tmp_path):
-    """export_shards: every shard dir exists, sizes are hash-balanced (no
-    shard > 2x the mean), the union of shards is exactly the input, the
-    within-shard order is the (shuffle_key, key) sort, and a second export
-    is byte-deterministic (same assignment, same order)."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from chatdata_spark.operators.sampling import export_shards, shard_assignment
-    from tests.conftest import SF_ORACLE
-
-    d = spark.read.parquet(f"{SF_ORACLE}/documents.parquet").select("doc_id", "lang")
-    n = 8
-    out = str(tmp_path / "shards")
-    export_shards(d, out, "doc_id", n)
-    dirs = sorted(p for p in os.listdir(out) if p.startswith("shard="))
-    assert len(dirs) == n
-    back = spark.read.parquet(out)
-    sizes = {r.shard: r.n for r in back.groupBy("shard").agg(F.count(F.lit(1)).alias("n")).collect()}
-    total = sum(sizes.values())
-    assert total == d.count()
-    assert max(sizes.values()) <= 2 * (total / n), f"unbalanced: {sizes}"
-    # union-of-shards == input, and assignment matches shard_assignment
-    assert back.select("doc_id").exceptAll(d.select("doc_id")).count() == 0
-    expect = {r.doc_id: r.shard for r in shard_assignment(d, "doc_id", n).collect()}
-    assert all(expect[r.doc_id] == r.shard for r in back.select("doc_id", "shard").collect())
-    # within-shard file order is the deterministic shuffle order
-    one = spark.read.parquet(os.path.join(out, "shard=0")).select("shuffle_key", "doc_id").collect()
-    keys = [(r.shuffle_key, r.doc_id) for r in one]
-    assert keys == sorted(keys)
-    # re-export -> identical content order (determinism across runs)
-    out2 = str(tmp_path / "shards2")
-    export_shards(d, out2, "doc_id", n)
-    a = spark.read.parquet(os.path.join(out, "shard=3")).collect()
-    b = spark.read.parquet(os.path.join(out2, "shard=3")).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 def test_leakage_safe_split_keeps_clusters_together(spark):
     """The guard property itself: every near-dup cluster lands wholly on
     one side, while the plain key-hash split demonstrably leaks (splits

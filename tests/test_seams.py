@@ -1,7 +1,8 @@
 """Injection-seam tests: every container-constrained stub (embedding
-model, upload parser, media decoder) must be swappable by config, with the
-reference-shaped pipeline unchanged around it — the stubs are defaults,
-not hardcoded paths (round-1 gap items 1/2 + multimodal seam)."""
+model, tokenizer, cross-encoder, media decoder) must be swappable by
+config, with the reference-shaped pipeline unchanged around it — the stubs
+are defaults, not hardcoded paths (round-1 gap items 1/2 + multimodal
+seam)."""
 
 from __future__ import annotations
 
@@ -10,17 +11,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from chatdata_spark.catalog import CHAT_ARXIV
-from chatdata_spark.functions.embedders import (
-    embedder_udf,
-    register_embedder,
-    unregister_embedder,
-)
+from chatdata_spark.functions import embedders
+from chatdata_spark.functions.embedders import embedder_udf, register_embedder
 from chatdata_spark.operators.multimodal import (
     decode_metadata,
     docs_as_media,
     extract_features,
 )
-from chatdata_spark.sources.ingest import embed_and_validate, parse_uploads
 from tests.conftest import SF_SMOKE
 
 
@@ -32,52 +29,25 @@ def _const_factory(dim):
     return _f
 
 
-def test_embedder_registry_per_table_binding(spark):
+def test_embedder_registry_per_table_binding(spark, monkeypatch):
     """Registering a factory under the model name a TableConfig declares
     must route that table's embed_udf through it — the reference's
-    per-table model binding (myscale_tables.py:90-92,117-120)."""
-    register_embedder("hkunlp/instructor-xl", _const_factory)
-    try:
-        df = spark.createDataFrame([("abcd",), ("xy",)], "abstract string")
-        out = df.withColumn("v", CHAT_ARXIV.embed_udf()(F.col("abstract"))).collect()
-        vecs = {r.abstract: r.v for r in out}
-        assert vecs["abcd"][0] == 4.0 and vecs["xy"][0] == 2.0
-        assert len(vecs["abcd"]) == CHAT_ARXIV.vector_dim
-    finally:
-        unregister_embedder("hkunlp/instructor-xl")
-    # after unregistration the name falls back to the deterministic stub
-    v1 = spark.range(1).select(embedder_udf("hkunlp/instructor-xl", 8)(F.lit("x"))).collect()
+    per-table model binding (myscale_tables.py:90-92,117-120). The
+    registry slot is scoped with monkeypatch, so teardown leaves the
+    module's registry as it found it."""
+    name = "hkunlp/instructor-xl"
+    monkeypatch.setitem(embedders._EMBEDDERS, name, None)
+    register_embedder(name, _const_factory)
+    df = spark.createDataFrame([("abcd",), ("xy",)], "abstract string")
+    out = df.withColumn("v", CHAT_ARXIV.embed_udf()(F.col("abstract"))).collect()
+    vecs = {r.abstract: r.v for r in out}
+    assert vecs["abcd"][0] == 4.0 and vecs["xy"][0] == 2.0
+    assert len(vecs["abcd"]) == CHAT_ARXIV.vector_dim
+    # an unregistered name falls back to the deterministic stub
+    monkeypatch.delitem(embedders._EMBEDDERS, name)
+    v1 = spark.range(1).select(embedder_udf(name, 8)(F.lit("x"))).collect()
     v2 = spark.range(1).select(embedder_udf("hash", 8)(F.lit("x"))).collect()
     assert v1[0][0] == v2[0][0]
-
-
-def test_embed_and_validate_uses_named_model(spark):
-    register_embedder("fake-test-model", _const_factory)
-    try:
-        d = spark.createDataFrame([("hello world",)], "text string")
-        out = embed_and_validate(d, "text", dim=4, embed_model="fake-test-model").collect()
-        assert out[0].vector == [11.0, 11.0, 11.0, 11.0]
-    finally:
-        unregister_embedder("fake-test-model")
-
-
-def test_parser_injection_through_parse_uploads(spark):
-    files = spark.createDataFrame(
-        [("/up/a.txt", bytearray(b"ignored bytes"))], "path string, content binary"
-    )
-
-    def parser(content: bytes, file_name: str):
-        body = f"from {file_name}: " + " ".join(["w"] * 15)
-        return [
-            {"type": "NarrativeText", "text": body},
-            {"type": "Title", "text": "dropped because title"},
-            {"type": "NarrativeText", "text": "too short"},
-        ]
-
-    rows = parse_uploads(files, parser=parser).collect()
-    assert len(rows) == 1
-    assert rows[0].file_name == "a.txt" and rows[0].text.startswith("from a.txt")
-    assert len(rows[0].entity_id) == 64
 
 
 def test_multimodal_injected_decoder_end_to_end(spark):
@@ -183,52 +153,6 @@ def test_env_gated_real_model_dispatch(spark, monkeypatch):
     assert [tuple(v) for v in got] == [(3.0, 17.0), (5.0, 17.0), (0.0, 17.0)]
 
 
-def test_env_gated_real_parser_dispatch(spark, monkeypatch):
-    """SPARK_GRAFT_UNSTRUCTURED_PARSE escape hatch, symmetric to the
-    embedder's: unset or unimportable -> None (stub default); set +
-    importable -> a parser producing the stub's element contract, which
-    parse_uploads consumes unchanged (fake module, driver-side call)."""
-    import sys
-    import types
-
-    from chatdata_spark.sources.ingest import maybe_real_parser
-
-    monkeypatch.delenv("SPARK_GRAFT_UNSTRUCTURED_PARSE", raising=False)
-    assert maybe_real_parser() is None
-
-    monkeypatch.setenv("SPARK_GRAFT_UNSTRUCTURED_PARSE", "1")
-    monkeypatch.setitem(sys.modules, "unstructured", None)
-    try:
-        assert maybe_real_parser() is None
-    finally:
-        sys.modules.pop("unstructured", None)
-
-    class _NarrativeText:
-        def __init__(self, text):
-            self._t = text
-
-        def __str__(self):
-            return self._t
-
-    def _partition(file=None, metadata_filename=None):
-        body = file.read().decode()
-        return [_NarrativeText(f"{metadata_filename}: {body}")]
-
-    pkg = types.ModuleType("unstructured")
-    pkg.__path__ = []
-    part = types.ModuleType("unstructured.partition")
-    part.__path__ = []
-    auto = types.ModuleType("unstructured.partition.auto")
-    auto.partition = _partition
-    monkeypatch.setitem(sys.modules, "unstructured", pkg)
-    monkeypatch.setitem(sys.modules, "unstructured.partition", part)
-    monkeypatch.setitem(sys.modules, "unstructured.partition.auto", auto)
-    parser = maybe_real_parser()
-    assert parser is not None
-    els = parser(b"hello world", "a.txt")
-    assert els == [{"type": "_NarrativeText", "text": "a.txt: hello world"}]
-
-
 def test_env_gated_tokenizer_dispatch(spark, monkeypatch):
     """SPARK_GRAFT_TOKENIZER escape hatch: unset or tiktoken unimportable
     -> None (JVM regex token_count_bpe stays the default); set + importable
@@ -332,8 +256,6 @@ def test_embedder_udf_identity_and_process_singleton(monkeypatch):
     """Repo UDF rules on the real-model seam: (a) repeated factory calls
     return the SAME UDF object (CacheManager plan equality), (b) the model
     constructs once per process, not once per Arrow batch."""
-    from chatdata_spark.functions import embedders
-
     counter = {}
     _install_fake_st(monkeypatch, counter)
     monkeypatch.setattr(embedders, "_ST_UDFS", {})

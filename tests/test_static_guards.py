@@ -1,10 +1,10 @@
-"""Static guards over the library source: no dead top-level code, one
-definition per fixture-table temp view, and one copy of each shared step."""
+"""Static guards over the library source: every def is reached by a query
+or a tool, one definition per fixture-table temp view, and one copy of each
+shared step."""
 
 from __future__ import annotations
 
 import ast
-import collections
 import pathlib
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
@@ -22,45 +22,165 @@ def _is_registered_query(node) -> bool:
     )
 
 
-def test_every_library_def_is_referenced():
-    """A top-level function or class under chatdata_spark/ must be named
-    somewhere besides its own definition: in the library, tests/,
-    perfbench/, bench.py or tools/. ``@query``-registered functions are
-    reached through the registry and count as referenced. A helper with no
-    caller left fails here; delete it or give it one. A re-export in a
-    package ``__init__.py`` is not a caller, so its import aliases are
-    not counted (a dead function re-exported there would otherwise
-    pass)."""
-    sources = [
-        *_library_files(),
-        *(REPO / "tests").rglob("*.py"),
-        *(REPO / "perfbench").rglob("*.py"),
-        *(REPO / "tools").rglob("*.py"),
+# Library defs that no root reaches, each kept for the reason given. An
+# entry must name a def that still exists, is still unreached, and is named
+# in tests/; anything else on this list fails the guard.
+_UNREACHED_OK = {
+    # reference twins: independent implementations the tests compare the
+    # Spark path against
+    "chatdata_spark/plans/self_query.py::python_eval": "reference twin: row-by-row filter evaluator",
+    "chatdata_spark/operators/layout.py::morton_interleave_py": "reference twin of morton_interleave",
+    "chatdata_spark/operators/layout.py::morton_nd_py": "reference twin of morton_nd",
+    "chatdata_spark/operators/layout.py::hilbert_py": "reference twin of with_hilbert",
+    "chatdata_spark/functions/vector.py::cosine_distance_py": "reference twin of cosine_distance",
+    "chatdata_spark/operators/dedup.py::embedding_near_dup": "reference twin: exact pairs for embedding_near_dup_clustered",
+    "chatdata_spark/operators/dedup.py::shingle_hashes_col": "reference twin: JVM form of shingle_hashes_udf",
+    # env-gated model seams: bind the reference's models (mpnet,
+    # instructor-xl, a cross-encoder, tiktoken), none installed here
+    "chatdata_spark/functions/embedders.py::register_embedder": "model seam: per-table embedder registry",
+    "chatdata_spark/functions/embedders.py::embedder_udf": "model seam: registry lookup with stub fallback",
+    "chatdata_spark/functions/embedders.py::make_sentence_transformer_factory": "model seam: sentence-transformers embedder",
+    "chatdata_spark/functions/embedders.py::maybe_real_embedder": "model seam: SPARK_GRAFT_EMBED_MODEL",
+    "chatdata_spark/catalog.py::TableConfig.embed_udf": "model seam: a table's bound embedder",
+    "chatdata_spark/functions/text.py::token_count_udf": "model seam: SPARK_GRAFT_TOKENIZER (tiktoken)",
+    "chatdata_spark/operators/textsearch.py::maybe_cross_encoder": "model seam: SPARK_GRAFT_CROSS_ENCODER",
+    # the LangChain comparator grammar the self-query parser accepts
+    "chatdata_spark/plans/self_query.py::ne": "comparator grammar: ne",
+    "chatdata_spark/plans/self_query.py::nin": "comparator grammar: nin",
+    "chatdata_spark/plans/self_query.py::contain": "comparator grammar: contain",
+    "chatdata_spark/plans/self_query.py::not_": "comparator grammar: not",
+    # maintenance ops kept until a query covers them
+    "chatdata_spark/operators/layout.py::zorder_write": "maintenance op: the one layout writer",
+    "chatdata_spark/operators/ivf.py::IVFIndex.split_skewed": "maintenance op: IVF skew split",
+    "chatdata_spark/stores/state.py::VersionedParquetStore.vacuum": "maintenance op: version retention",
+    "chatdata_spark/stores/state.py::SessionStore.list_sessions": "maintenance op: list a user's sessions",
+}
+
+
+def _names(tree, aliases: bool = True) -> set[str]:
+    """Every identifier ``tree`` names: bare names, attribute names and
+    (unless ``aliases`` is false) imported names."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif aliases and isinstance(node, ast.alias):
+            out.add(node.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+def unreached_defs(pkg: pathlib.Path, root_files) -> dict[str, int]:
+    """``path::name`` -> line of every top-level def and class method under
+    ``pkg`` that no root reaches.
+
+    Roots: ``@query`` functions (decorator arguments included), module-level
+    statements of ``pkg`` and every file in ``root_files``. A def is reached
+    when a root or a reached def names it; a method also needs its class
+    reached, and a class's dunder methods and class-level statements count
+    as the class. Import aliases in a package ``__init__.py`` are
+    re-exports, not callers, so they name nothing."""
+    defs = {}  # key -> (name, owner class key, subtrees scanned once reached, line)
+    seen = set()
+    for f in root_files:
+        seen |= _names(ast.parse(f.read_text(), filename=str(f)))
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg.parent).as_posix()
+        for node in ast.parse(path.read_text(), filename=str(path)).body:
+            key = f"{rel}::{getattr(node, 'name', '')}"
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[key] = (node.name, None, [node], node.lineno)
+                if _is_registered_query(node):
+                    seen.add(node.name)
+            elif isinstance(node, ast.ClassDef):
+                body = [*node.decorator_list, *node.bases, *node.keywords]
+                for st in node.body:
+                    if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)) and not _is_dunder(st.name):
+                        defs[f"{key}.{st.name}"] = (st.name, key, [st], st.lineno)
+                    else:
+                        body.append(st)
+                defs[key] = (node.name, None, body, node.lineno)
+            else:
+                seen |= _names(node, aliases=path.name != "__init__.py")
+    reached: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, (name, owner, body, _) in defs.items():
+            if key not in reached and name in seen and (owner is None or owner in reached):
+                reached.add(key)
+                for sub in body:
+                    seen |= _names(sub)
+                grew = True
+    return {key: d[3] for key, d in defs.items() if key not in reached}
+
+
+def reachability_problems(pkg, root_files, tests_dir, allow: dict[str, str]) -> list[str]:
+    """Unreached defs missing from ``allow``, plus every ``allow`` entry that
+    is stale: its def is gone or reached, or no file under ``tests_dir``
+    names it."""
+    dead = unreached_defs(pkg, root_files)
+    in_tests = set()
+    for f in sorted(pathlib.Path(tests_dir).rglob("*.py")):
+        in_tests |= _names(ast.parse(f.read_text(), filename=str(f)))
+    problems = [f"{key} (line {line}) is reached by no root" for key, line in dead.items() if key not in allow]
+    for key in allow:
+        if key not in dead:
+            problems.append(f"allowlist entry {key}: no such unreached def")
+        elif key.rsplit("::", 1)[-1].rsplit(".", 1)[-1] not in in_tests:
+            problems.append(f"allowlist entry {key}: not named in tests")
+    return problems
+
+
+def _root_files() -> list[pathlib.Path]:
+    return [
         REPO / "bench.py",
         REPO / "__spark_entry__.py",
+        *sorted((REPO / "tools").rglob("*.py")),
+        *sorted((REPO / "perfbench").rglob("*.py")),
     ]
-    refs: collections.Counter = collections.Counter()
-    for path in sources:
-        reexports = path.name == "__init__.py" and PKG in path.parents
-        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
-            if reexports and isinstance(node, ast.alias):
-                continue
-            if isinstance(node, ast.Name):
-                refs[node.id] += 1
-            elif isinstance(node, ast.Attribute):
-                refs[node.attr] += 1
-            elif isinstance(node, ast.alias):
-                refs[node.name.rsplit(".", 1)[-1]] += 1
-    dead = []
-    for path in _library_files():
-        tree = ast.parse(path.read_text(), filename=str(path))
-        for node in tree.body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            if _is_registered_query(node) or refs[node.name]:
-                continue
-            dead.append(f"{path.relative_to(REPO).as_posix()}:{node.lineno} {node.name}")
-    assert not dead, "unreferenced library definitions:\n" + "\n".join(dead)
+
+
+def test_every_library_def_is_reached():
+    """Every top-level def and class method under chatdata_spark/ is reached
+    from a ``@query`` function, library module-level code, bench.py,
+    tools/, perfbench/ or __spark_entry__.py, directly or through other
+    reached defs. tests/ is not a root: a def that only tests call (or
+    that only such a def calls) fails here unless ``_UNREACHED_OK`` keeps
+    it as a reference twin, an env-gated model seam, the comparator
+    grammar or a named maintenance op."""
+    problems = reachability_problems(PKG, _root_files(), REPO / "tests", _UNREACHED_OK)
+    assert not problems, "library reachability:\n" + "\n".join(problems)
+
+
+def test_reachability_reports_test_only_code_and_stale_entries(tmp_path):
+    """The guard's rule on a planted package: a def only a test names, a
+    helper only that def names, and a stale allowlist entry are all
+    reported; the query and its helper are not."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("from pkg.mod import only_tested  # noqa: F401\n")
+    (pkg / "mod.py").write_text(
+        "from pkg.registry import query\n\n"
+        "def used():\n    return 1\n\n"
+        "def helper():\n    return 2\n\n"
+        "def only_tested():\n    return helper()\n\n"
+        "@query('q')\ndef q():\n    return used()\n"
+    )
+    tests = tmp_path / "tests"
+    tests.mkdir()
+    (tests / "test_mod.py").write_text("from pkg.mod import only_tested\n\nonly_tested()\n")
+    allow = {"pkg/mod.py::gone": "stale"}
+    assert sorted(reachability_problems(pkg, [], tests, allow)) == [
+        "allowlist entry pkg/mod.py::gone: no such unreached def",
+        "pkg/mod.py::helper (line 6) is reached by no root",
+        "pkg/mod.py::only_tested (line 9) is reached by no root",
+    ]
 
 
 def test_fixture_views_are_registered_only_in_catalog():

@@ -143,7 +143,7 @@ def test_compact_reduces_files_preserves_rows_and_meta(spark, tmp_path):
     agg = lambda df: df.agg(F.sum("o_orderkey"), F.sum("o_custkey")).collect()
     assert agg(store.read()) == agg(o)
     # sorted rewrite restored min-max prunable layout
-    from chatdata_spark.operators.layout import file_key_ranges
+    from tests.conftest import file_key_ranges
 
     ranges = sorted(file_key_ranges(store._version_dir(v2), "o_orderkey"))
     assert ranges[0][1] < ranges[1][0]  # disjoint key ranges across files
