@@ -26,8 +26,8 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the end-to-end retrieval
-    funnel — routed ANN screen + BM25, RRF fusion, cross-encoder-seam
-    rerank, MMR diversification (the reference's whole user journey,
+    funnel — routed ANN screen + BM25, RRF fusion, overlap-scorer rerank,
+    MMR diversification (the reference's whole user journey,
     SURVEY §3.1/3.2, as one composed plan; queries/textsearch.py)."""
     return _registry.queries()["retrieval_funnel_docs"](spark, SMOKE_SF_DIR)
 

@@ -2,9 +2,9 @@
 
 Port of the reference's ``TableConfig`` dataclass
 (/root/reference/app/backend/types/table_config.py:8-25) plus loaders for the
-driver's parquet test tables (TESTDATA.md). A table is a parquet path with a
-declared schema, a designated text/vector/id column, and the typed attribute
-list the self-query compiler is allowed to filter on
+driver's parquet test tables (TESTDATA.md). A table config declares the
+designated text/vector/id columns, the must-have columns, and the typed
+attribute list the self-query compiler is allowed to filter on
 (/root/reference/app/backend/constants/myscale_tables.py:81-112).
 """
 
@@ -53,7 +53,6 @@ class TableConfig:
     """Declarative table description (reference table_config.py:8-25)."""
 
     name: str
-    path: str | None = None
     id_col: str = "id"
     text_col: str | None = None
     vector_col: str | None = None
@@ -65,57 +64,18 @@ class TableConfig:
     upsert_key: tuple[str, ...] = ()
     version_col: str | None = None
     partition_cols: tuple[str, ...] = field(default=())
-    # named embedding model for text_col → vector_col (the reference's
-    # per-table model binding, myscale_tables.py:90-92,117-120); resolved
-    # through functions/embedders.py — the hash stub unless a real factory
-    # was registered under this name.
-    embed_model: str = "hash"
-
-    def load(self, spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
-        path = self.path or (f"{sf_dir}/{self.name}.parquet" if sf_dir else None)
-        if path is None:
-            raise ValueError(f"no path for table {self.name}")
-        return spark.read.parquet(path)
-
-    def embed_udf(self):
-        """The table's embedding UDF (text → array<float>), resolved by
-        model name at call time so late registration wins."""
-        from chatdata_spark.functions.embedders import embedder_udf
-
-        return embedder_udf(self.embed_model, self.vector_dim or 64)
 
 
-def to_documents(
-    df: DataFrame,
-    text_col: str,
-    must_have_cols,
-    max_string_length: int | None = None,
-) -> DataFrame:
+def to_documents(df: DataFrame, text_col: str, must_have_cols) -> DataFrame:
     """S9 row→Document sink projection (reference
     myscale_without_metadata.py:42-48): ``page_content`` = the text column,
-    ``metadata`` = the must-have columns serialized to JSON (representation-
-    stable for comparisons). ``max_string_length`` mirrors the reference's
-    ``SQLDatabase(..., max_string_length=1024)`` truncation
-    (build_retrievers.py:109): string values longer than the limit are cut —
-    applied to ``page_content`` and to string-typed metadata columns given
-    by name (computed Column entries pass through untruncated)."""
+    ``metadata`` = the must-have columns (names or Columns) serialized to
+    JSON (representation-stable for comparisons)."""
     from pyspark.sql import functions as F
 
-    dtypes = dict(df.dtypes)
-    text = F.col(text_col)
-    if max_string_length is not None:
-        text = F.substring(text, 1, max_string_length)
-    meta = []
-    for c in must_have_cols:
-        if isinstance(c, str):
-            col = F.col(c)
-            if max_string_length is not None and dtypes.get(c) == "string":
-                col = F.substring(col, 1, max_string_length).alias(c)
-            meta.append(col)
-        else:
-            meta.append(c)
     return df.select(
-        text.alias("page_content"), F.to_json(F.struct(*meta)).alias("metadata")
+        F.col(text_col).alias("page_content"),
+        F.to_json(F.struct(*must_have_cols)).alias("metadata"),
     )
 
 
@@ -177,7 +137,6 @@ WIKIPEDIA = TableConfig(
         AttributeInfo("views", "float", "page view count"),
     ),
     upsert_key=("id",),
-    embed_model="paraphrase-multilingual-mpnet-base-v2",  # myscale_tables.py:90-92
 )
 
 CHAT_ARXIV = TableConfig(
@@ -196,7 +155,6 @@ CHAT_ARXIV = TableConfig(
                       expr="size(categories)"),
     ),
     upsert_key=("id",),
-    embed_model="hkunlp/instructor-xl",  # myscale_tables.py:117-120 (instruction prefix)
 )
 
 PRIVATE_KB = TableConfig(

@@ -15,7 +15,6 @@ shuffle, no Python workers, prunable to the text column alone.
 
 from __future__ import annotations
 
-import pandas as pd  # module-top: pandas_udf type hints resolve against it
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -168,44 +167,3 @@ def fingerprint_rolling64_md5(col) -> Column:
         .bitwiseOR(F.shiftrightunsigned(acc, 59))
         .bitwiseXOR(h),
     )
-
-
-# UDF-object memoization per encoding (CacheManager plan-equality rule).
-_TOKENIZER_UDFS: dict[str, object] = {}
-
-
-def token_count_udf(encoding: str | None = None):
-    """Real-tokenizer token counting, env-gated like the embedder/parser
-    seams: when ``SPARK_GRAFT_TOKENIZER`` (or ``encoding``) names a
-    tiktoken encoding AND tiktoken is importable, return an Arrow pandas
-    UDF counting true BPE tokens; otherwise None — callers fall back to
-    the JVM regex :func:`token_count_bpe` (the default: scan-stage, no
-    Python). The closure captures only the encoding-name string; tiktoken's
-    own registry caches the loaded encoding per worker process, so the
-    per-batch ``get_encoding`` is a dict hit, not a reload. The UDF object
-    is memoized per encoding so identical plans stay CacheManager-equal."""
-    import os
-
-    name = encoding or os.environ.get("SPARK_GRAFT_TOKENIZER")
-    if not name:
-        return None
-    try:
-        import tiktoken  # noqa: F401
-    except ImportError:
-        return None
-
-    cached = _TOKENIZER_UDFS.get(name)
-    if cached is not None:
-        return cached
-
-    @F.pandas_udf("int")
-    def _count(texts: pd.Series) -> pd.Series:
-        import tiktoken
-
-        enc = tiktoken.get_encoding(name)
-        return pd.Series(
-            [len(enc.encode(t)) if t is not None else 0 for t in texts], dtype="int32"
-        )
-
-    _TOKENIZER_UDFS[name] = _count
-    return _count

@@ -113,14 +113,14 @@ def hash_embed(text: str, dim: int = 64) -> list[float]:
 # UDF-object memoization (the CacheManager plan-equality rule, project
 # notes): a fresh @pandas_udf per call makes otherwise-identical plans
 # unequal, so persisted frames keyed on an embed plan cache-miss on every
-# invocation. Same pattern as embedders._ST_UDFS for the real-model path.
+# invocation.
 _HASH_EMBED_UDFS: dict[int, object] = {}
 
 
 def make_embed_text_udf(dim: int = 64):
     """Distributed batch embedding (V5, tools.py:53-59 shape): an Arrow
-    pandas UDF; a real deployment swaps ``hash_embed`` for a broadcast
-    sentence-transformers model, the Spark plumbing is identical.
+    pandas UDF over the ``hash_embed`` stub, the only embedder; it stands
+    in for the reference's sentence-transformers models.
     Memoized per ``dim`` — repeated calls return the SAME UDF object so
     plans built by independent callers stay CacheManager-equal.
 

@@ -52,16 +52,15 @@ def margin_mine(
     k: int = 4,
     threshold: float = 1.0,
     n_clusters: int = 8,
-    n_probe: int | None = None,
     index_root: str | None = None,
 ) -> DataFrame:
     """(a_id, b_id, sim, margin): mutual-argmax margin-scored pairs with
     margin ≥ ``threshold`` (1.0 = "closer than the neighborhood average",
-    the published operating region is ~1.04-1.2). ``n_probe`` defaults to
-    ``n_clusters`` (exact); prune it at scale exactly like any IVF
-    search. ``index_root``: directory for the two side indexes (a
-    tempdir when omitted — pass a shared cache path to amortize builds
-    across calls, the _ivf_index pattern). A cached index is validated
+    the published operating region is ~1.04-1.2). Both side searches probe
+    all ``n_clusters`` clusters, so they are exact. ``index_root``:
+    directory for the two side indexes (a tempdir when omitted — pass a
+    shared cache path to amortize builds across calls, the _ivf_index
+    pattern). A cached index is validated
     against the passed DataFrame (row count + order-free id XOR hash,
     one column-pruned pass over the side); a mismatch raises rather than
     silently mining wrong pairs from a stale cache. NB the tempdir
@@ -73,7 +72,6 @@ def margin_mine(
     from chatdata_spark.operators.knnjoin import knn_join
 
     root = index_root or tempfile.mkdtemp(prefix="chatdata_bitext_")
-    probe = n_clusters if n_probe is None else n_probe
 
     def _fingerprint(df: DataFrame) -> dict:
         # order-independent, overflow-free (XOR), pruned to id_col only
@@ -112,12 +110,12 @@ def margin_mine(
     idx_b = _side_index(b_df, "side_b")
 
     sim = (F.lit(1.0) - F.col("dist")).alias("sim")
-    fwd = knn_join(a_df, idx_b, id_col, vector_col, k=k, n_probe=probe).select(
+    fwd = knn_join(a_df, idx_b, id_col, vector_col, k=k, n_probe=n_clusters).select(
         F.col("q_id").alias("a_id"), F.col("b_id"), sim
     )
     # backward sweep: B rows are the QUERIES, A is the base — knn_join's
     # q_id is therefore the b_id of the pair and its b_id the a_id
-    bwd = knn_join(b_df, idx_a, id_col, vector_col, k=k, n_probe=probe).select(
+    bwd = knn_join(b_df, idx_a, id_col, vector_col, k=k, n_probe=n_clusters).select(
         F.col("b_id").alias("a_id"), F.col("q_id").alias("b_id"), sim
     )
     # exact-decimal neighborhood sums: round-6 sims are exact DECIMAL(18,6),

@@ -23,13 +23,9 @@ def write_bucketed(
     table_name: str,
     bucket_cols: list[str],
     num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
-    w = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
+    df.write.mode(mode).bucketBy(num_buckets, *bucket_cols).saveAsTable(table_name)
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner") -> DataFrame:

@@ -111,30 +111,26 @@ def psi_report(
     cur: DataFrame,
     value_col: str,
     n_bins: int = 10,
-    edges: list[float] | None = None,
 ) -> DataFrame:
     """(bin, n_ref, n_cur, psi_term) + total row (bin = -1): smoothed
     Population Stability Index between the reference and current
     snapshots of ``value_col``.
 
-    ``edges`` defaults to equal-width bins over the REFERENCE min/max
-    (one bounded 2-scalar collect); pass explicit edges to pin them
-    across runs (the production posture: edges are frozen with the
-    reference snapshot). Laplace-smoothed proportions
+    The bins are ``n_bins`` equal-width bins over the REFERENCE min/max
+    (one bounded 2-scalar collect). Laplace-smoothed proportions
     ``p = (c + 1) / (n + B)`` keep empty bins finite. NULL values are
     dropped (missing-value drift is a data-quality rule, not a
     distribution shift)."""
     r = ref.filter(F.col(value_col).isNotNull())
     c = cur.filter(F.col(value_col).isNotNull())
-    if edges is None:
-        row = r.agg(
-            F.min(F.col(value_col).cast("double")).alias("lo"),
-            F.max(F.col(value_col).cast("double")).alias("hi"),
-        ).collect()[0]
-        if row.lo is None:
-            raise ValueError("psi_report: empty reference snapshot")
-        # degenerate constant reference: one bin (everything drifts into it)
-        edges = fixed_bin_edges(row.lo, row.hi, n_bins) if row.hi > row.lo else []
+    row = r.agg(
+        F.min(F.col(value_col).cast("double")).alias("lo"),
+        F.max(F.col(value_col).cast("double")).alias("hi"),
+    ).collect()[0]
+    if row.lo is None:
+        raise ValueError("psi_report: empty reference snapshot")
+    # degenerate constant reference: one bin (everything drifts into it)
+    edges = fixed_bin_edges(row.lo, row.hi, n_bins) if row.hi > row.lo else []
     rc = hist_counts(r, value_col, edges, out="n_ref")
     cc = hist_counts(c, value_col, edges, out="n_cur")
     return psi_from_counts(rc, cc, len(edges))
@@ -144,7 +140,6 @@ def psi_categorical(
     ref: DataFrame,
     cur: DataFrame,
     cat_col: str,
-    n_smooth: int | None = None,
 ) -> DataFrame:
     """(category, n_ref, n_cur, psi_term) + total row (category = NULL):
     PSI over a CATEGORICAL column — the language/source-mix drift check,
@@ -152,10 +147,10 @@ def psi_categorical(
     Categories present in either snapshot participate (a category that
     appears or vanishes contributes its full smoothed term — exactly the
     drift being hunted); NULL category values are dropped like NULL
-    numerics. ``n_smooth`` is the Laplace denominator addend (defaults to
-    the observed category count, mirroring the numeric path's bin
-    count). Same shape as the numeric path: one map-side-combined count
-    per snapshot, a |categories|-row merge, exact-decimal total."""
+    numerics. The Laplace denominator addend is the observed category
+    count, mirroring the numeric path's bin count. Same shape as the
+    numeric path: one map-side-combined count per snapshot, a
+    |categories|-row merge, exact-decimal total."""
     rc = (
         ref.filter(F.col(cat_col).isNotNull())
         .groupBy(F.col(cat_col).alias("category"))
@@ -174,8 +169,7 @@ def psi_categorical(
             F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
         )
     )
-    if n_smooth is None:
-        n_smooth = base.count()  # bounded: the category-set size
+    n_smooth = base.count()  # bounded: the category-set size
     tot = base.agg(F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc"))
     merged = base.crossJoin(F.broadcast(tot))
     p = (F.col("n_ref") + F.lit(1.0)) / (F.col("tr") + F.lit(float(n_smooth)))

@@ -208,56 +208,22 @@ def _update_centroids(
     return new
 
 
-def _maximin_seeds(q_df: DataFrame, id_col: str, k: int) -> np.ndarray:
-    """Deterministic farthest-point (maximin) seeding — the RNG-free
-    classic behind k-means++: seed 1 is the smallest-id vector, each next
-    seed the point FARTHEST from its nearest chosen seed (tie-break
-    smallest id). Each round is one TakeOrdered job over the persisted
-    quantized frame reusing the assignment UDF (its dist2 IS the
-    min-distance-to-chosen), so seeding costs k-1 scans and stays exact
-    integer — the replay mirrors it bit-for-bit."""
-    first = q_df.orderBy(F.col(id_col).asc()).limit(1).collect()[0]
-    cents = np.array([first["q"]], dtype=np.int64)
-    for _ in range(k - 1):
-        scored = q_df.select(
-            F.col(id_col), "q", _assign_udf(cents, True)(F.col("q")).alias("__r")
-        )
-        far = (
-            scored.orderBy(F.col("__r.dist2").desc(), F.col(id_col).asc())
-            .limit(1)
-            .collect()[0]
-        )
-        cents = np.vstack([cents, np.array(far["q"], dtype=np.int64)])
-    return cents
-
-
 def kmeans_fixed_point(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     k: int = 8,
     n_iter: int = 4,
-    init: str = "first_ids",
 ) -> DataFrame:
-    """Lloyd's k-means: ``n_iter`` assign/update rounds from deterministic
-    seeds, then a final assignment. Returns
+    """Lloyd's k-means: ``n_iter`` assign/update rounds from the k
+    smallest-id vectors as seeds, then a final assignment. Returns
     ``(id_col, cluster_id int, dist2 long)`` — dist2 is the exact int64
-    squared distance in the quantized space (hash-stable, no floats).
-
-    ``init``: 'first_ids' (k smallest-id vectors — cheapest, the driver
-    query's choice) or 'maximin' (farthest-point traversal — the RNG-free
-    k-means++ analogue; one seed lands in every well-separated blob
-    regardless of id layout, at k-1 extra scans)."""
-    if init not in ("first_ids", "maximin"):
-        raise ValueError(f"unknown init {init!r}")
+    squared distance in the quantized space (hash-stable, no floats)."""
     base = df.select(F.col(id_col), F.col(vec_col)).filter(F.col(vec_col).isNotNull())
     q = quantize_vectors(base, vec_col).select(id_col, "q").persist()
 
-    if init == "maximin":
-        cents = _maximin_seeds(q, id_col, k)
-    else:
-        seeds = q.orderBy(F.col(id_col).asc()).limit(k).collect()
-        cents = np.array([r["q"] for r in seeds], dtype=np.int64)  # (k, d)
+    seeds = q.orderBy(F.col(id_col).asc()).limit(k).collect()
+    cents = np.array([r["q"] for r in seeds], dtype=np.int64)  # (k, d)
 
     for _ in range(n_iter):
         cents = _update_centroids(q, cents)
@@ -273,7 +239,7 @@ def kmeans_fixed_point(
     )
 
 
-def kmeans_replay(ids, vecs, k: int = 8, n_iter: int = 4, init: str = "first_ids"):
+def kmeans_replay(ids, vecs, k: int = 8, n_iter: int = 4):
     """Single-node numpy replay of the EXACT fixed-point recurrence — the
     independent oracle for the distributed path. ``ids`` must be sorted
     ascending (seed selection order — checked). Returns
@@ -291,16 +257,7 @@ def kmeans_replay(ids, vecs, k: int = 8, n_iter: int = 4, init: str = "first_ids
     def d2_matrix(c):
         return (q * q).sum(axis=1, keepdims=True) - 2 * (q @ c.T) + (c * c).sum(axis=1)[None, :]
 
-    if init == "maximin":
-        cents = q[:1].copy()
-        for _ in range(k - 1):
-            mind2 = d2_matrix(cents).min(axis=1)
-            # argmax first occurrence = smallest id (ids sorted ascending)
-            cents = np.vstack([cents, q[int(mind2.argmax())]])
-    elif init == "first_ids":
-        cents = q[:k].copy()
-    else:
-        raise ValueError(f"unknown init {init!r}")
+    cents = q[:k].copy()
 
     for _ in range(n_iter):
         a = d2_matrix(cents).argmin(axis=1)

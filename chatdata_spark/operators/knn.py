@@ -52,13 +52,11 @@ def knn(
     metric: str = "cosine",
     id_col: str | None = None,
     dist_col: str = "dist",
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Exact filtered top-k by vector distance (V3 + V1 + T1, default k per
-    build_retrievers.py:102 / myscale_without_metadata.py:38 is 4-10)."""
-    dist = _METRICS[metric](F.col(vector_col), list(query_vec))
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
+    build_retrievers.py:102 / myscale_without_metadata.py:38 is 4-10),
+    rounded to 6 digits (the V1 convention)."""
+    dist = F.round(_METRICS[metric](F.col(vector_col), list(query_vec)), 6)
     out = df
     if where is not None:
         out = out.filter(where)

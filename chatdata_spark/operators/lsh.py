@@ -34,7 +34,7 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chatdata_spark.operators.knn import knn
@@ -103,7 +103,6 @@ def lsh_search(
     n_bits: int = 12,
     seed: int = 7,
     keys_col: str = "lsh_keys",
-    where: Column | None = None,
     select: Sequence[str] | None = None,
     id_col: str = "vec_id",
     metric: str = "cosine",
@@ -111,5 +110,4 @@ def lsh_search(
     """Bucket-probe + exact rerank over a table carrying ``keys_col``."""
     qk = query_keys(query_vec, n_tables, n_bits, seed)
     probe = F.arrays_overlap(F.col(keys_col), F.array(*[F.lit(x).cast("long") for x in qk]))
-    cond = probe if where is None else (probe & where)
-    return knn(indexed, vector_col, query_vec, k=k, where=cond, select=select, metric=metric, id_col=id_col)
+    return knn(indexed, vector_col, query_vec, k=k, where=probe, select=select, metric=metric, id_col=id_col)

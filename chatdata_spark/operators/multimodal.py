@@ -2,12 +2,12 @@
 opaque ``binary`` columns with typed metadata structs, processed by
 Arrow-batched UDFs.
 
-The decode step is a STUB: real decoders (PIL/librosa/av) are not in this
-container. ``try: import PIL`` gates the real path; the fallback derives
-deterministic pseudo-metadata/features from the bytes so the Spark-side
-plumbing — schema, batch iteration, partitioning, UDF signatures — is real
-and testable end-to-end, and the arithmetic is simple enough for the DuckDB
-oracle to recompute.
+The decode and featurize steps are stubs standing in for real decoders
+(PIL/librosa/av) and an image model, and they are the only path: each
+derives deterministic pseudo-metadata/features from the bytes, so the
+Spark-side plumbing — schema, batch iteration, partitioning, UDF
+signatures — is real and testable end-to-end, and the arithmetic is simple
+enough for the DuckDB oracle to recompute.
 
 Scale shape: decode/feature-extract are ``mapInPandas`` passes (one Arrow
 batch of binaries in, one batch of structs/vectors out) — embarrassingly
@@ -24,13 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # pragma: no cover - decoders absent in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
 MEDIA_SCHEMA = "media_id bigint, content binary, media_type string"
 META_SCHEMA = "media_id bigint, media_type string, width int, height int, n_frames int, n_bytes int"
 
@@ -39,44 +32,10 @@ W_MULT, H_MULT, W_MOD, H_MOD, W_BASE, H_BASE = 7919, 104729, 448, 448, 64, 64
 FEAT_DIM, FEAT_MULTS = 8, (3, 5, 7, 11, 13, 17, 19, 23)
 
 
-def decode_metadata(media_df: DataFrame, decoder=None) -> DataFrame:
-    """'Decode' each binary into typed media metadata.
-
-    ``decoder``: injectable ``(content: bytes, media_type: str) ->
-    (width, height, n_frames)`` — a PIL-backed one is auto-wired when PIL
-    is importable, and tests inject fakes through the same seam (the
-    callable is pickled by value into the Arrow worker closure, so any
-    model/library handle it captures ships with it). ``None`` without PIL
-    falls back to deterministic byte-length arithmetic, keeping the
-    schema/batch plumbing identical and the values oracle-recomputable."""
-    if decoder is None and HAVE_PIL:  # pragma: no cover - PIL absent here
-
-        def decoder(content: bytes, media_type: str):
-            import io
-
-            from PIL import Image
-
-            im = Image.open(io.BytesIO(content))
-            return im.width, im.height, int(getattr(im, "n_frames", 1))
-
-    if decoder is not None:
-        dec = decoder
-
-        def gen_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                metas = [dec(bytes(c), t) for c, t in zip(pdf["content"], pdf["media_type"])]
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "media_type": pdf["media_type"],
-                        "width": pd.Series([m[0] for m in metas], dtype="int32"),
-                        "height": pd.Series([m[1] for m in metas], dtype="int32"),
-                        "n_frames": pd.Series([m[2] for m in metas], dtype="int32"),
-                        "n_bytes": pdf["content"].map(len).astype("int32"),
-                    }
-                )
-
-        return media_df.mapInPandas(gen_real, META_SCHEMA)
+def decode_metadata(media_df: DataFrame) -> DataFrame:
+    """'Decode' each binary into typed media metadata: (width, height,
+    n_frames) from deterministic byte-length arithmetic, so the values stay
+    oracle-recomputable."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -95,22 +54,10 @@ def decode_metadata(media_df: DataFrame, decoder=None) -> DataFrame:
     return media_df.mapInPandas(gen, META_SCHEMA)
 
 
-def extract_features(media_df: DataFrame, dim: int = FEAT_DIM, featurizer=None) -> DataFrame:
-    """Feature vectors from binaries (the embed step of an image pipeline).
-
-    ``featurizer``: injectable ``(content: bytes) -> list[float]`` (a model
-    forward pass in deployment — captured by value into the worker
-    closure). Default: dim scaled residues of the byte length — the
-    (binary batch → float vector batch) contract is the real one."""
-    if featurizer is not None:
-        feat = featurizer
-
-        def gen_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                feats = [[float(x) for x in feat(bytes(c))] for c in pdf["content"]]
-                yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
-
-        return media_df.mapInPandas(gen_real, "media_id bigint, features array<float>")
+def extract_features(media_df: DataFrame, dim: int = FEAT_DIM) -> DataFrame:
+    """Feature vectors from binaries (the embed step of an image pipeline):
+    dim scaled residues of the byte length. The (binary batch → float
+    vector batch) contract is the one a model forward pass would fill."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -119,7 +119,6 @@ def weighted_sample(
     weight_col: Column | str,
     n: int,
     salt: str = "w",
-    strata_cols: list[str] | None = None,
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis-Spirakis A-ES):
     row i gets exponential key ``e_i = -ln(u_i)/w_i`` with ``u_i``
@@ -128,17 +127,13 @@ def weighted_sample(
     weight, the quality-score-weighted corpus-selection primitive).
 
     Deterministic like every sampler here — same rows any run, engine, or
-    partition layout. Global form is a top-n (TakeOrderedAndProject: each
-    partition keeps its local n, never a global sort); stratified form is
-    one window per stratum. Rows with weight <= 0 are excluded (they have
-    no valid key)."""
+    partition layout. A top-n (TakeOrderedAndProject: each partition keeps
+    its local n, never a global sort). Rows with weight <= 0 are excluded
+    (they have no valid key)."""
     w = (F.col(weight_col) if isinstance(weight_col, str) else weight_col).cast("double")
     u = (hash_bucket(key_col, salt) + 1).cast("double") / F.lit(float(BUCKETS))
     e = -F.log(u) / w
     pos = df.filter(w > 0).withColumn("__e", e)
-    if strata_cols:
-        win = Window.partitionBy(*strata_cols).orderBy(F.col("__e").asc(), F.col(key_col).asc())
-        return pos.withColumn("__rn", F.row_number().over(win)).filter(F.col("__rn") <= n).drop("__rn", "__e")
     return pos.orderBy(F.col("__e").asc(), F.col(key_col).asc()).limit(int(n)).drop("__e")
 
 

@@ -25,7 +25,6 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-import pandas as pd  # module-top: pandas_udf type hints resolve against it
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -196,10 +195,10 @@ def proximity_match(
 
 def overlap_rerank_score(text_col, query: str) -> Column:
     """Deterministic stub reranker: distinct-token overlap fraction between
-    the query and the document (|q ∩ d| / |q|, normalized tokens) — the
-    same contract a neural cross-encoder fills (maybe_cross_encoder), kept
-    SQL-expressible so the rerank stage stays oracle-checkable. JVM-only:
-    one array_intersect over the scan."""
+    the query and the document (|q ∩ d| / |q|, normalized tokens). It
+    stands in for the reference's cross-encoder and is the only rerank
+    scorer; it stays SQL-expressible so the rerank stage is
+    oracle-checkable. JVM-only: one array_intersect over the scan."""
     qtoks = sorted({t for t in query.lower().split() if t})
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     from chatdata_spark.functions.text import words
@@ -214,74 +213,12 @@ def rerank_topk(
     text_col: str,
     query: str,
     k: int,
-    scorer=None,
 ) -> DataFrame:
     """Final rerank stage of the retrieval funnel: re-score an already
-    top-n-limited candidate frame (n ~ 10²) and keep the top k.
-
-    ``scorer``: optional Arrow pandas UDF ``(texts) -> float scores``
-    (e.g. from :func:`maybe_cross_encoder`); default is the JVM overlap
-    stub. Candidates are assumed pre-limited — a neural scorer on a
-    corpus-sized frame would be the bottleneck, which is exactly why the
-    funnel screens with BM25/ANN first."""
-    if scorer is not None:
-        scored = df.withColumn("rerank_score", scorer(F.col(text_col)))
-    else:
-        scored = df.withColumn("rerank_score", overlap_rerank_score(text_col, query))
+    top-n-limited candidate frame (n ~ 10²) with
+    :func:`overlap_rerank_score` and keep the top k."""
+    scored = df.withColumn("rerank_score", overlap_rerank_score(text_col, query))
     return scored.orderBy(F.desc("rerank_score"), F.asc(id_col)).limit(k)
-
-
-# UDF-object memoization keyed on (model, query) — the CacheManager
-# plan-equality rule (project notes): identical rerank plans must reuse
-# one UDF object or persisted candidate tables re-compute per call.
-# FIFO-bounded like dedup._STOP_SETS: a long-lived session serving many
-# distinct queries would otherwise grow this without bound.
-_CE_UDFS: dict[tuple[str, str], object] = {}
-
-
-def maybe_cross_encoder(query: str):
-    """Env escape hatch (the embedder/parser/tokenizer pattern): when
-    ``SPARK_GRAFT_CROSS_ENCODER`` names a sentence-transformers
-    CrossEncoder AND the package is importable, return an Arrow UDF
-    scoring (query, text) pairs; None otherwise (overlap stub stays the
-    default). The closure captures only the two name strings; the model
-    loads once per worker PROCESS (not per Arrow batch) via a cache dict
-    stashed on the ``sentence_transformers`` module, which workers import
-    by name, so the cache is shared with the embedder seam instead of
-    shipping with each UDF. The UDF object itself is memoized per
-    (model, query)."""
-    import os
-
-    model_name = os.environ.get("SPARK_GRAFT_CROSS_ENCODER")
-    if not model_name:
-        return None
-    try:
-        import sentence_transformers  # noqa: F401
-    except ImportError:
-        return None
-
-    cached = _CE_UDFS.get((model_name, query))
-    if cached is not None:
-        return cached
-
-    @F.pandas_udf("double")
-    def _score(texts: pd.Series) -> pd.Series:
-        import sentence_transformers
-        from sentence_transformers import CrossEncoder
-
-        models = sentence_transformers.__dict__.setdefault(
-            "_chatdata_spark_model_cache", {}
-        )
-        key = ("cross-encoder", model_name)
-        model = models.get(key)
-        if model is None:
-            model = models[key] = CrossEncoder(model_name)
-        return pd.Series([float(s) for s in model.predict([(query, t or "") for t in texts])])
-
-    from chatdata_spark.operators.dedup import _memo_put
-
-    _memo_put(_CE_UDFS, (model_name, query), _score)
-    return _score
 
 
 def stuff_context(
@@ -290,7 +227,6 @@ def stuff_context(
     order_cols: list[Column],
     max_tokens: int,
     sep: str = "\n\n",
-    token_count=None,
     doc_template: str = "{text}",
 ) -> DataFrame:
     """Stuff a retrieval page into ONE prompt context under a token budget
@@ -304,9 +240,8 @@ def stuff_context(
 
     Contract: ``df`` is an already top-k-limited results page (~10¹ rows)
     — the single-partition ordering window is deliberate, same as
-    :func:`with_rank`. ``token_count`` defaults to the scan-stage
-    whitespace-token count (mirrorable in SQL); pass the env-gated BPE UDF
-    (functions/text.py:token_count_udf) to budget in true LLM tokens.
+    :func:`with_rank`. Tokens are the scan-stage whitespace-token count
+    (mirrorable in SQL), the stand-in for the reference's LLM tokenizer.
     ``doc_template`` formats each doc with its page-order reference id —
     ``"Doc #{ref}: {text}"`` reproduces the reference's per-doc
     document_prompt + injected ref_id (stuff_documents.py:29-33), which
@@ -314,9 +249,7 @@ def stuff_context(
     budget counts RAW text tokens (the truncation chain trims before
     formatting). Returns one row: (context, n_docs, n_tokens)."""
     flat = F.regexp_replace(F.col(text_col), "\n", " ")
-    toks = token_count(flat) if token_count is not None else F.size(
-        F.regexp_extract_all(flat, F.lit(r"\S+"), 0)
-    )
+    toks = F.size(F.regexp_extract_all(flat, F.lit(r"\S+"), 0))
     w = Window.orderBy(*order_cols)
     staged = (
         df.withColumn("__txt", flat)

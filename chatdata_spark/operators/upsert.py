@@ -57,7 +57,6 @@ def merge_into(
     key_cols: list[str],
     when_matched_update: Mapping[str, Column] | None = None,
     when_matched_delete: Column | None = None,
-    insert_not_matched: bool = True,
 ) -> DataFrame:
     """Full MERGE INTO (Delta/Iceberg `MERGE` semantics) as one
     DataFrame transform over immutable inputs:
@@ -66,8 +65,7 @@ def merge_into(
     - matched otherwise → ``when_matched_update`` assignments applied
       (columns not assigned keep the TARGET's value);
     - unmatched target rows → unchanged;
-    - source rows with no target match → inserted (when
-      ``insert_not_matched``).
+    - source rows with no target match → inserted.
 
     One outer-join shuffle on the key; assignments may reference source
     columns as ``F.col("__src_<name>")``. Assumes source has at most one
@@ -87,12 +85,9 @@ def merge_into(
     upd = when_matched_update or {}
     for col_name, value in upd.items():
         out = out.withColumn(col_name, F.when(matched, value).otherwise(F.col(col_name)))
-    if insert_not_matched:
-        insert_only = F.col("__tgt_present").isNull()
-        for c in target.columns:
-            src_c = f"__src_{c}"
-            if c not in key_cols and src_c in out.columns:
-                out = out.withColumn(c, F.when(insert_only, F.col(src_c)).otherwise(F.col(c)))
-    else:
-        out = out.filter(F.col("__tgt_present").isNotNull())
+    insert_only = F.col("__tgt_present").isNull()
+    for c in target.columns:
+        src_c = f"__src_{c}"
+        if c not in key_cols and src_c in out.columns:
+            out = out.withColumn(c, F.when(insert_only, F.col(src_c)).otherwise(F.col(c)))
     return out.select(*target.columns)

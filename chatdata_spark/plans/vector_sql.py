@@ -776,9 +776,9 @@ class VectorSQLDialect:
         return sql
 
     # -- step 6: SELECT-list rewrite (P2) ----------------------------------------
-    def rewrite_select_list(self, sql: str, must_have_columns: Sequence[str], dist_col: str = "dist") -> str:
+    def rewrite_select_list(self, sql: str, must_have_columns: Sequence[str]) -> str:
         """Replace the projected columns with ``must_have_columns`` (+ the
-        distance alias if present) — the reference's
+        ``dist`` alias if present) — the reference's
         VectorSQLRetrieveOutputParser.parse (vector_sql_output_parser.py:16-23)."""
         m = re.search(r"\bSELECT\s+(DISTINCT\s+)?", sql, re.IGNORECASE)
         frm = re.search(r"\bFROM\b", sql, re.IGNORECASE)
@@ -786,16 +786,14 @@ class VectorSQLDialect:
             return sql
         body = sql[m.end() : frm.start()]
         cols = list(dict.fromkeys(must_have_columns))
-        if re.search(rf"\bAS\s+{dist_col}\b", body, re.IGNORECASE) or re.search(
-            rf"\b{dist_col}\b", body
-        ):
+        if re.search(r"\bAS\s+dist\b", body, re.IGNORECASE) or re.search(r"\bdist\b", body):
             # keep any distance alias expression
             for part in _split_args(body):
-                if re.search(rf"\bAS\s+{dist_col}\s*$", part.strip(), re.IGNORECASE):
+                if re.search(r"\bAS\s+dist\s*$", part.strip(), re.IGNORECASE):
                     cols.append(part.strip())
                     break
             else:
-                cols.append(dist_col)
+                cols.append("dist")
         return sql[: m.end()] + ", ".join(cols) + " " + sql[frm.start() :]
 
     # -- main ----------------------------------------------------------------------

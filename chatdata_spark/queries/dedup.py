@@ -111,7 +111,7 @@ def dedup_jaccard_exact(spark, sf_dir):
     """Exact n-gram-Jaccard near-dup pairs via inverted-index token join
     (shuffle on shingle, no all-pairs compare)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return jaccard_similarity_join(d, "doc_id", "text", k=3, threshold=0.4).orderBy("i", "j")
+    return jaccard_similarity_join(d, "doc_id", "text", k=3, threshold=0.4)
 
 
 @query("dedup_jaccard_prefix", oracle=_duck_jaccard_oracle(0.7))
@@ -123,7 +123,7 @@ def dedup_jaccard_prefix(spark, sf_dir):
     answer stays exact — same brute-force DuckDB oracle as
     dedup_jaccard_exact, at 0.7."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return prefix_filter_jaccard_join(d, "doc_id", "text", k=3, threshold=0.7).orderBy("i", "j")
+    return prefix_filter_jaccard_join(d, "doc_id", "text", k=3, threshold=0.7)
 
 
 @query("dedup_minhash_lsh", oracle=_duck_jaccard_oracle(0.4))
@@ -132,7 +132,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     result set as the exact join at recall ≈ 1 for this corpus (all its
     ≥0.4 pairs are ≥0.9; see operator docstring for the banding math)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return minhash_lsh_pairs(d, "doc_id", "text", k=3, threshold=0.4).orderBy("i", "j")
+    return minhash_lsh_pairs(d, "doc_id", "text", k=3, threshold=0.4)
 
 
 @query("dedup_minhash_autoband", oracle=_duck_jaccard_oracle(0.5))
@@ -145,9 +145,7 @@ def dedup_minhash_autoband(spark, sf_dir):
     j≥0.9 pairs (verified-LSH ≡ exact join at all three SFs, probed),
     so the exact Jaccard join's oracle applies at 0.5."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return minhash_lsh_pairs(
-        d, "doc_id", "text", k=3, threshold=0.5, rows_per_band="auto"
-    ).orderBy("i", "j")
+    return minhash_lsh_pairs(d, "doc_id", "text", k=3, threshold=0.5, rows_per_band="auto")
 
 
 @query(
@@ -185,9 +183,7 @@ def dedup_simhash(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     from chatdata_spark.operators.dedup import md5_hash60
 
-    return simhash_pairs(
-        d, "doc_id", "text", max_hamming=3, token_hash=md5_hash60, n_bits=60
-    ).orderBy("i", "j")
+    return simhash_pairs(d, "doc_id", "text", max_hamming=3, token_hash=md5_hash60, n_bits=60)
 
 
 @query(
@@ -215,9 +211,7 @@ def dedup_embedding(spark, sf_dir):
     idx = build_or_load_ivf(
         spark, e, shared_cache_path("ivf", sf_dir, "k8"), "vec_id", "embedding", n_clusters=8
     )
-    return embedding_near_dup_clustered(
-        idx, threshold=0.4, n_probe=idx.n_clusters
-    ).orderBy("i", "j")
+    return embedding_near_dup_clustered(idx, threshold=0.4, n_probe=idx.n_clusters)
 
 
 _DUCK_CANONICAL = f"""
@@ -296,7 +290,7 @@ def streaming_near_dup_docs(spark, sf_dir):
     stream_near_dup_pairs(spark, ind, store, outd, ckpt, schema)
     d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(ind)
     stream_near_dup_pairs(spark, ind, store, outd, ckpt, schema)
-    return spark.read.parquet(outd).select("i", "j", "jaccard").orderBy("i", "j")
+    return spark.read.parquet(outd).select("i", "j", "jaccard")
 
 
 _V_HI = int(0.1 * (1 << 32))
@@ -377,7 +371,7 @@ def dedup_incremental_batches(spark, sf_dir):
     store = IncrementalMinHashStore(spark, tempfile.mkdtemp(prefix="chatdata_incdedup_"))
     p1 = store.add_batch(d.filter(F.col("doc_id") % 3 != 0), "doc_id")
     p2 = store.add_batch(d.filter(F.col("doc_id") % 3 == 0), "doc_id")
-    return p1.unionByName(p2).orderBy("i", "j")
+    return p1.unionByName(p2)
 
 
 # Shared CTE chain for the substring-dedup oracles: n-gram strings (the
@@ -613,9 +607,7 @@ def dedup_winnow_pairs(spark, sf_dir):
     from chatdata_spark.operators.winnow import winnow_pairs
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return winnow_pairs(d, "doc_id", "text", k=5, w=4, max_df=8, min_shared=2).orderBy(
-        "id_a", "id_b"
-    )
+    return winnow_pairs(d, "doc_id", "text", k=5, w=4, max_df=8, min_shared=2)
 
 
 @query(
@@ -672,4 +664,4 @@ def dedup_containment_pairs(spark, sf_dir):
         )
     )
     u = d.unionByName(cont)
-    return containment_join(u, "doc_id", "text", k=3, threshold=0.8).orderBy("i", "j")
+    return containment_join(u, "doc_id", "text", k=3, threshold=0.8)

@@ -58,9 +58,10 @@ def _median_split(df, col):
 )
 def store_session_lifecycle(spark, sf_dir):
     """M1-M5 through the versioned stores: create sessions, update a prompt,
-    append chat messages, cascade-delete one session — returns the final
-    per-session message summary. The inputs are fixed literals, so the
-    expected END STATE is statically known: exactly the two surviving
+    append chat messages, cascade-delete one session, vacuum both stores to
+    their last two versions, then list each user's sessions (T2) — returns
+    the final per-session message summary. The inputs are fixed literals,
+    so the expected END STATE is statically known: exactly the two surviving
     sessions with the updated prompt and message counts (a VALUES oracle —
     the mutation chain, not a computation, is what's under test; any
     upsert/update/cascade-delete/read-ordering bug changes the rows)."""
@@ -77,8 +78,14 @@ def store_session_lifecycle(spark, sf_dir):
         mem.append_message("u1?work", typ, msg, ts=100.0 + i)
     mem.append_message("u2?default", "human", "other", ts=200.0)
     sess.delete_session("u1?default", memory=mem)
+    for store in (sess.store, mem.store):
+        store.vacuum(keep_last=2)
 
-    sessions = sess.store.read().select("session_id", "user_id", "system_prompt")
+    sessions = (
+        sess.list_sessions("u1")
+        .unionByName(sess.list_sessions("u2"))
+        .select("session_id", "user_id", "system_prompt")
+    )
     msgs = mem.store.read().groupBy("session_id").agg(
         F.count(F.lit(1)).alias("n_msgs"), F.min("id").alias("first_id")
     )

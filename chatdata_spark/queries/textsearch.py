@@ -230,8 +230,8 @@ def retrieval_funnel_docs(spark, sf_dir):
        question — myscale_without_metadata.py:19-36 template);
     2. keyword screen: BM25 top-60 (rational-idf oracle config);
     3. hybrid fusion: reciprocal-rank fusion → 30-candidate page;
-    4. rerank: cross-encoder-seam scorer (deterministic overlap stub;
-       SPARK_GRAFT_CROSS_ENCODER swaps a real model) → 20;
+    4. rerank: the deterministic overlap scorer, the stand-in for the
+       reference's cross-encoder → 20;
     5. MMR diversification over the page's embeddings → final 10.
 
     100 TB shape: stages 1-2 are the only corpus-sized scans (heap top-k,
@@ -300,7 +300,7 @@ def _funnel_page(spark, sf_dir):
     )
     # 3. hybrid fusion to a bounded page
     fused = rrf_fuse([bm, kn], "doc_id", k0=60, k=30)
-    # 4. rerank the page (cross-encoder seam; stub = overlap scorer).
+    # 4. rerank the page with the overlap scorer.
     # Broadcast the ≤30-row fused page, NOT the corpus (r11 opt, guide
     # §3.1): the old hint built a hash relation over every (doc_id, text)
     # row — harmless at sf0.1 but the wrong side at 100 TB, where the
@@ -524,10 +524,9 @@ def stuff_context_docs(spark, sf_dir):
 )
 def rerank_snippet_search(spark, sf_dir):
     """The retrieval funnel's tail: rerank candidates by the deterministic
-    overlap scorer (the cross-encoder seam's stub — maybe_cross_encoder
-    swaps in a real model via SPARK_GRAFT_CROSS_ENCODER) and attach a
-    9-word highlight snippet centered on the first query-term hit — both
-    scan-stage JVM expressions (operators/textsearch.py:rerank_topk/
+    overlap scorer (the stand-in for the reference's cross-encoder) and
+    attach a 9-word highlight snippet centered on the first query-term
+    hit — both scan-stage JVM expressions (operators/textsearch.py:rerank_topk/
     snippet)."""
     from chatdata_spark.operators.textsearch import rerank_topk, snippet
 

@@ -7,7 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from chatdata_spark.operators.drift import bin_id, fixed_bin_edges, psi_report
+from chatdata_spark.operators.drift import (
+    bin_id,
+    fixed_bin_edges,
+    hist_counts,
+    psi_from_counts,
+    psi_report,
+)
 
 
 def _df(spark, vals):
@@ -47,7 +53,9 @@ def test_psi_flags_a_shift(spark):
 def test_explicit_edges_pin_the_bins(spark):
     ref, cur = _df(spark, range(100)), _df(spark, range(100))
     edges = fixed_bin_edges(0.0, 100.0, 4)
-    rep = psi_report(ref, cur, "v", edges=edges).filter(F.col("bin") >= 0)
+    rc = hist_counts(ref, "v", edges, out="n_ref")
+    cc = hist_counts(cur, "v", edges, out="n_cur")
+    rep = psi_from_counts(rc, cc, len(edges)).filter(F.col("bin") >= 0)
     rows = {r.bin: (r.n_ref, r.n_cur) for r in rep.collect()}
     assert rows == {0: (25, 25), 1: (25, 25), 2: (25, 25), 3: (25, 25)}
 

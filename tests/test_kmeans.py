@@ -147,49 +147,3 @@ def test_quantize_udf_rejects_overflow_magnitude(spark):
 
     with _pytest.raises(Exception, match="bound"):
         quantize_vectors(df, "vec").collect()
-
-
-def test_maximin_init_separates_blobs_regardless_of_id_layout(spark):
-    # Three well-separated blobs; the 3 SMALLEST ids all live in blob 0,
-    # so first_ids seeds degenerate while maximin places one seed per
-    # blob and the final clustering separates them.
-    import numpy as np
-
-    blobs = [(-10.0, 14), (0.0, 13), (10.0, 13)]
-    vecs, order = [], []
-    for b, (center, n) in enumerate(blobs):
-        for j in range(n):
-            vecs.append(np.full(4, center + j * 0.001, dtype=np.float32))
-            order.append(b)
-    vecs = np.array(vecs)  # ids 0..13 are all blob 0
-    df = _make_df(spark, vecs, 3)
-    out = kmeans_fixed_point(df, "id", "vec", k=3, n_iter=2, init="maximin").collect()
-    by_blob = {}
-    for r in out:
-        by_blob.setdefault(order[r.id], set()).add(r.cluster_id)
-    assert all(len(c) == 1 for c in by_blob.values())
-    assert len(set.union(*by_blob.values())) == 3  # one cluster per blob
-
-
-def test_maximin_matches_replay_and_partition_invariant(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((90, 8)).astype(np.float32)
-    ea, ed = kmeans_replay(list(range(90)), vecs, k=4, n_iter=2, init="maximin")
-    expected = sorted((i, int(ea[i]), int(ed[i])) for i in range(90))
-    for parts in (1, 5):
-        got = _collect(
-            kmeans_fixed_point(_make_df(spark, vecs, parts), "id", "vec", k=4, n_iter=2, init="maximin")
-        )
-        assert got == expected, f"maximin diverged from replay at {parts} partitions"
-
-
-def test_unknown_init_rejected(spark):
-    import pytest as _pytest
-
-    df = _make_df(spark, np.ones((4, 2), dtype=np.float32), 1)
-    with _pytest.raises(ValueError, match="unknown init"):
-        kmeans_fixed_point(df, "id", "vec", k=2, init="kmeanspp")
-    with _pytest.raises(ValueError, match="unknown init"):
-        kmeans_replay([1, 2], np.ones((2, 2), dtype=np.float32), k=2, init="rng")

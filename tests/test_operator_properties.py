@@ -790,12 +790,12 @@ _src_rows = st.dictionaries(
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(tgt=_tgt_rows, src=_src_rows, insert=st.booleans(), use_delete=st.booleans())
-def test_merge_into_matches_dict_replay(spark, tgt, src, insert, use_delete):
+@given(tgt=_tgt_rows, src=_src_rows, use_delete=st.booleans())
+def test_merge_into_matches_dict_replay(spark, tgt, src, use_delete):
     """Full MERGE clause semantics vs an independent dict replay: matched +
     delete-cond rows drop, surviving matches update only the assigned
     column (others keep the target value), unmatched targets pass through,
-    and unmatched source rows insert iff insert_not_matched. Covers the
+    and unmatched source rows insert. Covers the
     NULL-condition subtlety: the delete condition references a source
     column, which is NULL for unmatched targets — those must survive."""
     from chatdata_spark.operators.upsert import merge_into
@@ -817,7 +817,6 @@ def test_merge_into_matches_dict_replay(spark, tgt, src, insert, use_delete):
         tdf, sdf, ["k"],
         when_matched_update={"a": F.col("__src_a")},
         when_matched_delete=(F.col("__src_b") % 3 == 0) if use_delete else None,
-        insert_not_matched=insert,
     )
     got = sorted((r.k, r.a, r.b) for r in out.collect())
 
@@ -828,7 +827,7 @@ def test_merge_into_matches_dict_replay(spark, tgt, src, insert, use_delete):
                 del ref[k]
             else:
                 ref[k] = (sa, ref[k][1])
-        elif insert:
+        else:
             ref[k] = (sa, sb)
     want = sorted((k, a, b) for k, (a, b) in ref.items())
     assert got == want

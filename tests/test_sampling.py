@@ -47,19 +47,6 @@ def test_weighted_sample_favors_heavy_rows_and_is_layout_independent(spark):
     assert ids_a == ids_b
 
 
-def test_weighted_sample_stratified_quota(spark):
-    import pyspark.sql.functions as F
-
-    from chatdata_spark.operators.sampling import weighted_sample
-    from tests.conftest import SF_ORACLE
-
-    d = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    s = weighted_sample(d, "doc_id", "n_chars", 5, salt="w", strata_cols=["lang"])
-    per = {r["lang"]: r["n"] for r in s.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    n_langs = d.select("lang").distinct().count()
-    assert len(per) == n_langs and all(v <= 5 for v in per.values())
-
-
 def test_weighted_sample_topn_plan_no_global_sort(spark):
     from chatdata_spark.operators.sampling import weighted_sample
     from tests.conftest import SF_ORACLE

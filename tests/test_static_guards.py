@@ -1,6 +1,7 @@
 """Static guards over the library source: every def is reached by a query
-or a tool, one definition per fixture-table temp view, and one copy of each
-shared step."""
+or a tool, every switch is set by one, the library reads only its four
+environment variables, one definition per fixture-table temp view, and one
+copy of each shared step."""
 
 from __future__ import annotations
 
@@ -35,15 +36,6 @@ _UNREACHED_OK = {
     "chatdata_spark/functions/vector.py::cosine_distance_py": "reference twin of cosine_distance",
     "chatdata_spark/operators/dedup.py::embedding_near_dup": "reference twin: exact pairs for embedding_near_dup_clustered",
     "chatdata_spark/operators/dedup.py::shingle_hashes_col": "reference twin: JVM form of shingle_hashes_udf",
-    # env-gated model seams: bind the reference's models (mpnet,
-    # instructor-xl, a cross-encoder, tiktoken), none installed here
-    "chatdata_spark/functions/embedders.py::register_embedder": "model seam: per-table embedder registry",
-    "chatdata_spark/functions/embedders.py::embedder_udf": "model seam: registry lookup with stub fallback",
-    "chatdata_spark/functions/embedders.py::make_sentence_transformer_factory": "model seam: sentence-transformers embedder",
-    "chatdata_spark/functions/embedders.py::maybe_real_embedder": "model seam: SPARK_GRAFT_EMBED_MODEL",
-    "chatdata_spark/catalog.py::TableConfig.embed_udf": "model seam: a table's bound embedder",
-    "chatdata_spark/functions/text.py::token_count_udf": "model seam: SPARK_GRAFT_TOKENIZER (tiktoken)",
-    "chatdata_spark/operators/textsearch.py::maybe_cross_encoder": "model seam: SPARK_GRAFT_CROSS_ENCODER",
     # the LangChain comparator grammar the self-query parser accepts
     "chatdata_spark/plans/self_query.py::ne": "comparator grammar: ne",
     "chatdata_spark/plans/self_query.py::nin": "comparator grammar: nin",
@@ -52,8 +44,20 @@ _UNREACHED_OK = {
     # maintenance ops kept until a query covers them
     "chatdata_spark/operators/layout.py::zorder_write": "maintenance op: the one layout writer",
     "chatdata_spark/operators/ivf.py::IVFIndex.split_skewed": "maintenance op: IVF skew split",
-    "chatdata_spark/stores/state.py::VersionedParquetStore.vacuum": "maintenance op: version retention",
-    "chatdata_spark/stores/state.py::SessionStore.list_sessions": "maintenance op: list a user's sessions",
+}
+
+# Switches (see _switch_params) that no root sets, each kept for the reason
+# given. A reason names one of the admissible kinds in _SWITCH_REASONS; an
+# entry that is gone or that a root now sets fails the guard.
+_SWITCH_REASONS = ("deployment setting: ", "check on outside input: ", "check on persisted state: ")
+_SWITCH_OK = {
+    "chatdata_spark/session.py::get_spark(shuffle_partitions)": "deployment setting: shuffle width for the host's cores",
+    "chatdata_spark/streaming/stateful.py::stream_distinct(ttl_minutes)": "deployment setting: dedup state retention horizon for an unbounded key domain",
+    "chatdata_spark/plans/vector_sql.py::VectorSQLDialect.translate(must_have_columns)": "deployment setting: the columns a table's retriever projects (TableConfig.must_have_cols)",
+    "chatdata_spark/operators/decontam.py::embedding_decontaminate(max_eval)": "check on outside input: the eval set must be small enough to collect",
+    "chatdata_spark/operators/incdedup.py::IncrementalMinHashStore.__init__(k)": "check on persisted state: a reopened store's shingle size",
+    "chatdata_spark/operators/incdedup.py::IncrementalMinHashStore.__init__(num_hashes)": "check on persisted state: a reopened store's signature length",
+    "chatdata_spark/operators/incdedup.py::IncrementalMinHashStore.__init__(rows_per_band)": "check on persisted state: a reopened store's banding",
 }
 
 
@@ -75,9 +79,13 @@ def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
 
 
-def unreached_defs(pkg: pathlib.Path, root_files) -> dict[str, int]:
-    """``path::name`` -> line of every top-level def and class method under
-    ``pkg`` that no root reaches.
+def _reach(pkg: pathlib.Path, root_files):
+    """Walk the library from its roots. Returns ``(defs, reached, roots)``:
+    ``defs`` maps ``path::name`` of every top-level def and class method
+    under ``pkg`` to ``(name, owner class key, subtrees scanned once
+    reached, line, node)``; ``reached`` holds the keys a root reaches;
+    ``roots`` are the root subtrees (root files and library module-level
+    statements).
 
     Roots: ``@query`` functions (decorator arguments included), module-level
     statements of ``pkg`` and every file in ``root_files``. A def is reached
@@ -85,38 +93,48 @@ def unreached_defs(pkg: pathlib.Path, root_files) -> dict[str, int]:
     reached, and a class's dunder methods and class-level statements count
     as the class. Import aliases in a package ``__init__.py`` are
     re-exports, not callers, so they name nothing."""
-    defs = {}  # key -> (name, owner class key, subtrees scanned once reached, line)
+    defs = {}
+    roots = []
     seen = set()
     for f in root_files:
-        seen |= _names(ast.parse(f.read_text(), filename=str(f)))
+        roots.append(ast.parse(f.read_text(), filename=str(f)))
+        seen |= _names(roots[-1])
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg.parent).as_posix()
         for node in ast.parse(path.read_text(), filename=str(path)).body:
             key = f"{rel}::{getattr(node, 'name', '')}"
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                defs[key] = (node.name, None, [node], node.lineno)
+                defs[key] = (node.name, None, [node], node.lineno, node)
                 if _is_registered_query(node):
                     seen.add(node.name)
             elif isinstance(node, ast.ClassDef):
                 body = [*node.decorator_list, *node.bases, *node.keywords]
                 for st in node.body:
                     if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)) and not _is_dunder(st.name):
-                        defs[f"{key}.{st.name}"] = (st.name, key, [st], st.lineno)
+                        defs[f"{key}.{st.name}"] = (st.name, key, [st], st.lineno, st)
                     else:
                         body.append(st)
-                defs[key] = (node.name, None, body, node.lineno)
+                defs[key] = (node.name, None, body, node.lineno, node)
             else:
+                roots.append(node)
                 seen |= _names(node, aliases=path.name != "__init__.py")
     reached: set[str] = set()
     grew = True
     while grew:
         grew = False
-        for key, (name, owner, body, _) in defs.items():
+        for key, (name, owner, body, *_) in defs.items():
             if key not in reached and name in seen and (owner is None or owner in reached):
                 reached.add(key)
                 for sub in body:
                     seen |= _names(sub)
                 grew = True
+    return defs, reached, roots
+
+
+def unreached_defs(pkg: pathlib.Path, root_files) -> dict[str, int]:
+    """``path::name`` -> line of every top-level def and class method under
+    ``pkg`` that no root reaches (see :func:`_reach`)."""
+    defs, reached, _ = _reach(pkg, root_files)
     return {key: d[3] for key, d in defs.items() if key not in reached}
 
 
@@ -152,8 +170,8 @@ def test_every_library_def_is_reached():
     tools/, perfbench/ or __spark_entry__.py, directly or through other
     reached defs. tests/ is not a root: a def that only tests call (or
     that only such a def calls) fails here unless ``_UNREACHED_OK`` keeps
-    it as a reference twin, an env-gated model seam, the comparator
-    grammar or a named maintenance op."""
+    it as a reference twin, the comparator grammar or a named maintenance
+    op."""
     problems = reachability_problems(PKG, _root_files(), REPO / "tests", _UNREACHED_OK)
     assert not problems, "library reachability:\n" + "\n".join(problems)
 
@@ -181,6 +199,169 @@ def test_reachability_reports_test_only_code_and_stale_entries(tmp_path):
         "pkg/mod.py::helper (line 6) is reached by no root",
         "pkg/mod.py::only_tested (line 9) is reached by no root",
     ]
+
+
+def _switch_params(fn) -> dict[str, int | None]:
+    """The switches of def ``fn``: each defaulted parameter that the test
+    of an ``if``, ``elif``, ``while`` or conditional expression in ``fn``
+    names, mapped to its positional index (None when keyword-only)."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    defaulted = {p.arg: i for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)}
+    defaulted |= {p.arg: None for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+    tested = set()
+    for node in ast.walk(fn):
+        if isinstance(node, (ast.If, ast.While, ast.IfExp)):
+            tested |= {n.id for n in ast.walk(node.test) if isinstance(n, ast.Name)}
+    return {p: i for p, i in defaulted.items() if p in tested}
+
+
+def unset_switches(pkg: pathlib.Path, root_files) -> dict[str, int]:
+    """``path::def(param)`` -> line of every switch (:func:`_switch_params`)
+    of a reached top-level def, class method or ``__init__`` under ``pkg``
+    that no call sets (an unreached def answers to the reachability rule).
+    Only calls in roots and reached library code count (see
+    :func:`_reach`); a call sets a switch when it passes it by keyword or
+    position, or forwards ``*args``/``**kwargs``. Callees are matched by
+    name (a class by its name, for its ``__init__``); a name the library
+    defines twice is skipped."""
+    defs, reached, roots = _reach(pkg, root_files)
+    by_name: dict[str, list] = {}  # called name -> [(switch key prefix, def, self offset)]
+    for key, (name, owner, _, _, node) in defs.items():
+        if isinstance(node, ast.ClassDef):
+            init = [st for st in node.body if isinstance(st, ast.FunctionDef) and st.name == "__init__"]
+            by_name.setdefault(name, []).append((f"{key}.__init__", init[0] if init else None, 1))
+        else:
+            static = any(getattr(d, "id", None) == "staticmethod" for d in node.decorator_list)
+            by_name.setdefault(name, []).append((key, node, int(owner is not None and not static)))
+    sets: dict[str, set] = {}  # called name -> positions and keywords some call passes
+    for tree in [*roots, *(sub for key in reached for sub in defs[key][2])]:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            got = sets.setdefault(name, set())
+            for i, arg in enumerate(call.args):
+                got.add("*" if isinstance(arg, ast.Starred) else i)
+            got |= {kw.arg or "**" for kw in call.keywords}
+    out = {}
+    for name, targets in by_name.items():
+        if len(targets) != 1 or targets[0][1] is None:
+            continue
+        prefix, fn, offset = targets[0]
+        if prefix.removesuffix(".__init__") not in reached:
+            continue
+        got = sets.get(name, set())
+        for param, i in _switch_params(fn).items():
+            if param in got or "**" in got or (i is not None and ({i - offset, "*"} & got)):
+                continue
+            out[f"{prefix}({param})"] = fn.lineno
+    return out
+
+
+def switch_problems(pkg, root_files, allow: dict[str, str]) -> list[str]:
+    """Unset switches missing from ``allow``, plus every ``allow`` entry
+    that is stale (no such switch, or a root now sets it) or whose reason
+    is not one of the admissible kinds."""
+    unset = unset_switches(pkg, root_files)
+    problems = [f"{key} (line {line}) is set by no root" for key, line in unset.items() if key not in allow]
+    for key, reason in allow.items():
+        if key not in unset:
+            problems.append(f"switch entry {key}: no such unset switch")
+        elif not reason.startswith(_SWITCH_REASONS):
+            problems.append(f"switch entry {key}: reason must start with one of {_SWITCH_REASONS}")
+    return problems
+
+
+def test_every_switch_is_set_by_a_root():
+    """A defaulted parameter that picks a branch (a switch) is set by some
+    call in a root or reached library code; otherwise the branch it
+    guards runs only under tests, a fork next to the one path the queries
+    take. Exceptions sit on ``_SWITCH_OK``, each a deployment setting, a
+    check on outside input or a check on persisted state."""
+    problems = switch_problems(PKG, _root_files(), _SWITCH_OK)
+    assert not problems, "library switches:\n" + "\n".join(problems)
+
+
+def test_switch_guard_reports_test_only_switch_and_stale_entry(tmp_path):
+    """The switch rule on a planted package: a switch only a test sets, a
+    stale ``_SWITCH_OK`` entry and an entry without an admissible reason
+    are reported; a switch a query sets by keyword, one it sets by
+    position, an ``__init__`` and a method switch set through the class and
+    the instance, and an allowlisted switch are not. The test-only switch
+    passes once its test is counted as a root."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "from pkg.registry import query\n\n"
+        "def by_kw(x, fast=False):\n    return 1 if fast else 2\n\n"
+        "def by_pos(x, mode=None):\n    if mode:\n        return 1\n    return 2\n\n"
+        "def only_tested(x, scorer=None):\n    if scorer is not None:\n        return scorer(x)\n    return x\n\n"
+        "def setting(x, cores=4):\n    while cores > 4:\n        cores -= 1\n    return x\n\n"
+        "def handy(x, strict=False):\n    return x if strict else 0\n\n"
+        "class Store:\n    def __init__(self, k=3):\n        self.k = k if k else 1\n\n"
+        "    def get(self, n=0):\n        return n if n else None\n\n"
+        "@query('q')\ndef q():\n"
+        "    return by_kw(1, fast=True) + by_pos(1, 'a') + only_tested(1) + setting(1)"
+        " + handy(1) + Store(4).get(2)\n"
+    )
+    test = tmp_path / "test_mod.py"
+    test.write_text("from pkg.mod import only_tested\n\nonly_tested(1, scorer=abs)\n")
+    allow = {
+        "pkg/mod.py::setting(cores)": "deployment setting: host cores",
+        "pkg/mod.py::handy(strict)": "convenience",
+        "pkg/mod.py::gone(flag)": "deployment setting: stale",
+    }
+    stale_and_bad = [
+        f"switch entry pkg/mod.py::handy(strict): reason must start with one of {_SWITCH_REASONS}",
+        "switch entry pkg/mod.py::gone(flag): no such unset switch",
+    ]
+    assert sorted(switch_problems(pkg, [], allow)) == sorted(
+        ["pkg/mod.py::only_tested(scorer) (line 11) is set by no root", *stale_and_bad]
+    )
+    assert sorted(switch_problems(pkg, [test], allow)) == sorted(stale_and_bad)
+
+
+def _is_environ(node) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+        isinstance(node, ast.Name) and node.id == "environ"
+    )
+
+
+def env_reads(paths) -> set[str]:
+    """Names of the environment variables the files in ``paths`` read:
+    ``os.environ.get/[]/setdefault/pop``, ``os.getenv`` and ``in
+    os.environ``. A read whose name is not a string literal counts as
+    ``<dynamic>``."""
+    out = set()
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            f = getattr(node, "func", None)
+            if isinstance(f, ast.Attribute) and (
+                f.attr == "getenv" or (f.attr in ("get", "setdefault", "pop") and _is_environ(f.value))
+            ):
+                key = node.args[0] if node.args else None
+            elif isinstance(node, ast.Subscript) and _is_environ(node.value):
+                key = node.slice
+            elif isinstance(node, ast.Compare) and any(_is_environ(c) for c in node.comparators):
+                key = node.left
+            else:
+                continue
+            out.add(key.value if isinstance(key, ast.Constant) else "<dynamic>")
+    return out
+
+
+def test_library_reads_only_its_environment_variables():
+    """The library reads four environment variables: the fixture dir, the
+    core count, the driver heap and the oracle fixture dir. A new knob
+    (a model name, a feature flag) would be a second path that only its
+    setter runs."""
+    assert env_reads(_library_files()) == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_ORACLE_SF",
+    }
 
 
 def test_fixture_views_are_registered_only_in_catalog():

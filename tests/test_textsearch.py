@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd  # module-top: pandas_udf type hints resolve against it
 import pyspark.sql.functions as F
 import pytest
 
@@ -113,28 +112,6 @@ def test_stuff_context_budget_semantics(spark):
     # first doc alone over budget -> empty context
     out = stuff_context(df, "text", order, max_tokens=2).collect()[0]
     assert out.n_docs == 0 and out.n_tokens == 0 and out.context == ""
-
-    # injected token counter (the BPE seam contract): constant 10/doc
-    const = F.udf(lambda s: 10, "int")
-    out = stuff_context(df, "text", order, max_tokens=20, token_count=lambda c: const(c)).collect()[0]
-    assert out.n_docs == 2
-
-
-def test_rerank_topk_injected_scorer_overrides_stub(spark):
-    """The cross-encoder seam end-to-end through a Spark plan: an injected
-    Arrow scorer's ordering wins over the overlap stub (shortest text
-    scores highest here), with the id tie-break intact."""
-    from chatdata_spark.operators.textsearch import rerank_topk
-
-    rows = [(1, "long text with many words here"), (2, "short"), (3, "mid size text")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    @F.pandas_udf("double")
-    def inverse_len(texts: pd.Series) -> pd.Series:
-        return pd.Series([1.0 / len(t) for t in texts])
-
-    got = [r.doc_id for r in rerank_topk(df, "doc_id", "text", "ignored", k=3, scorer=inverse_len).collect()]
-    assert got == [2, 3, 1]
 
 
 def test_stuff_context_doc_template_ref_ids(spark):
